@@ -12,13 +12,18 @@ works in shared memory.  Here that state becomes *data*: a
 ``distances(node, dist)`` DataFrame carried across iterations
 (SURVEY §1.3), updated with union + groupBy-min.
 
-Scale posture: each iteration is (frontier ⋈ edges) → groupBy-min → join
-against distances.  The frontier is usually far smaller than the edge set,
-so the frontier side is broadcast when small; ``localCheckpoint`` per
-iteration truncates lineage (otherwise plan size grows linearly and the
-scheduler collapses long before data size matters).  For web-scale graphs
-the edges DataFrame would be pre-partitioned/bucketed by ``src`` so every
-iteration's join reuses the same partitioning instead of reshuffling.
+Scale posture: ``sssp`` and ``connected_components`` run on the one
+fixpoint driver, ``mapreduce.iterate_until_fixpoint``.  It reads the edge
+table once per solve — an eager checkpoint, as the reference loads its
+graph into memory once — so no round re-scans or re-unions the source.
+Each round is (frontier ⋈ edges) → one aggregation on ``node`` whose
+shuffle partition count the driver sizes from the materialised edge bytes
+(1 for small graphs, ``spark.sql.shuffle.partitions`` at scale).  The
+frontier is usually far smaller than the edge set, so sssp broadcasts it
+and the edge table never shuffles.  The driver's periodic eager
+checkpoint truncates lineage (otherwise plan size grows linearly and the
+scheduler collapses long before data size matters) and carries the
+convergence probe on the same job.
 """
 
 from __future__ import annotations
@@ -26,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..mapreduce import Static, iterate_until_fixpoint
 from ..sources import load_table
 
 
@@ -39,11 +45,8 @@ def undirected(edges: DataFrame) -> DataFrame:
     )
 
 
-# Edge count above which the per-round state merge switches from the
-# one-join full-outer to the delta-pruned two-join form (see sssp
-# docstring).  Well below this, rounds are scheduler-bound and measured
-# 2x FASTER with fewer stages; well above it, shuffle volume dominates
-# and rewriting the whole state every round is the scale killer.
+# Edge count at which ``state_merge="auto"`` switches from the join-free
+# ``union_agg`` merge to the delta-pruned ``delta`` merge (see sssp).
 _DELTA_MERGE_EDGE_THRESHOLD = 10_000_000
 
 
@@ -54,8 +57,6 @@ def sssp(
     max_iterations: int = 100,
     checkpoint_every: int = 2,
     state_merge: str = "auto",
-    hops_per_round: int = 1,
-    probe: str = "observe",
     trace: list | None = None,
 ) -> DataFrame:
     """Single-source shortest paths by frontier relaxation to fixpoint.
@@ -64,238 +65,112 @@ def sssp(
     unreached sentinel (reference uses 2^30, ``main.cpp:11``) is expressed
     as absence — unreachable nodes simply have no row.
 
-    Per-iteration dataflow (one MapReduce round of the reference):
-      candidates = frontier ⋈ edges on node==src        (map: relax B3)
+    Per-round dataflow (one MapReduce round of the reference):
+      candidates = broadcast(frontier) ⋈ edges on node==src  (map: relax B3)
                    → (dst, frontier.dist + weight)
-      best       = candidates groupBy dst min            (reduce: min B2)
-      state'     = merge(state, best); frontier' = improved rows
+      state'     = merge(state, min candidate per node)      (reduce: min B2)
+      frontier'  = the improved rows of state'
 
-    State-merge strategy (``state_merge``): three correct forms with
-    different cost profiles, chosen by regime —
-    - ``"union_agg"`` (r11, the small-graph default): NO join at all —
-      state rows and relaxation candidates union into ONE aggregation
-      per round (min over everything = the new dist; min over
-      state-tagged rows = the old dist; improved ≡ new < old, with
-      new-node rows having no old).  One exchange per round where
-      full_outer paid the groupBy exchange AND the join's two; same
-      fixpoint by the same monotone-min argument (Dijkstra differential
-      runs it).  A/B on the 18k graph (interleaved min-of-3):
-      ~0.87× of full_outer under load, and strictly fewer stages per
-      round — the direct continuation of the full_outer finding below.
-    - ``"full_outer"``: one join, fewest stages per round among the
-      join forms.  A/B-measured **2× faster on the 18k-node graph**
-      (min 7.4 s vs 15.1 s over interleaved runs) than delta because at
-      this scale every round is scheduler-bound: per-round stage count
-      is the cost, data volume is noise.
-    - ``"delta"``: state LEFT JOIN best (AQE broadcasts the shrinking
-      per-round delta, so the big state side stops shuffling) plus
-      best ANTI state-keys for newly reached nodes.  One more stage per
-      round — which is exactly what the small-graph regime cannot
-      afford — but at billion-node state the full-outer's
-      whole-state-reshuffle-per-round is the scale killer and the delta
-      form prunes it.
+    ``state_merge`` picks one of two merges with the same fixpoint (both
+    run by the Dijkstra differential in tests/test_graph.py):
+    - ``"union_agg"``: no join — state rows and candidates union into one
+      aggregation per round; min over everything is the new dist, min over
+      the state-tagged rows the old one, improved ≡ new < old (or new node).
+      One exchange per round: the small-graph form, where rounds are
+      scheduler-bound.
+    - ``"delta"``: state LEFT JOIN the per-node best candidate, plus the
+      best candidates ANTI the state keys for newly reached nodes.  AQE
+      broadcasts the shrinking delta, so at billion-node state the state
+      side stops reshuffling every round.
     - ``"auto"`` (default): ``union_agg`` below
-      ``_DELTA_MERGE_EDGE_THRESHOLD`` edges, ``delta`` above — decided
-      from a one-time count of the (already materialized) edge table.
-    Both forms reach the identical fixpoint; the Dijkstra differential
-    (tests/test_graph.py) runs BOTH.
+      ``_DELTA_MERGE_EDGE_THRESHOLD`` edges, ``delta`` at or above it.
 
-    Scheduler-cost discipline (dominant at small per-round data): state is
-    checkpointed and probed for convergence only every ``checkpoint_every``
-    rounds, ONE blocking job per probe window.  Two probe spellings
-    (``probe``), both one-job:
-    - ``"observe"`` (default since r5): an ``Observation`` improved-count
-      metric rides the EAGER checkpoint's materialization job, read on
-      the driver for free — the probe computes nothing the checkpoint
-      was not already computing, and the checkpoint is fully persisted
-      by its own job.  A/B at the 18k syn graph
-      (tools/measure_sssp_probe.py, fixpoint parity asserted first):
-      measured a WASH — min 0.97-0.98× / median 1.03-1.06× across two
-      interleaved min-of-5/8 sessions, i.e. inside host noise, which is
-      itself informative: both spellings are one job per probe window,
-      so the round cost floor is the per-round stage scheduling, not
-      the probe.  Kept as default for the robustness win at cost
-      parity (below), honestly NOT as a speedup.
-    - ``"isEmpty"``: LAZY checkpoint materialized by a
-      ``filter(improved).isEmpty()`` probe.  Kept as the r3/r4 baseline
-      and differential spelling; its limit-1 probe can materialize only
-      part of the checkpoint, leaving stragglers to a later round's
-      recompute — the eager+observe form retires exactly that hazard.
-    Extra rounds past convergence are no-ops
-    (empty frontier produces no candidates), so the fixpoint is unchanged;
-    lineage depth is bounded by ``checkpoint_every``, keeping plan size
-    O(1) in iteration count.
-
-    ``hops_per_round=2`` relaxes TWO edge hops per scheduled round
-    (candidates = frontier⋈edges ∪ (frontier⋈edges)⋈edges, one shared
-    min): the frontier advances ≥2 BFS levels per round, so a
-    diameter-D graph converges in ~D/2 rounds — attacking the same
-    scheduler-bound regime the full-outer merge targets, where round
-    COUNT is the cost, not per-round bytes.  Candidate volume grows by
-    the average-degree factor on the second hop; the same monotone-min
-    argument gives the identical fixpoint (every 2-hop path is two
-    1-hop relaxations applied in one round — Dijkstra differential runs
-    this variant too).  A/B at the 18k syn graph in SCALE.md; keep 1
-    (the default) where per-round candidate volume, not round count,
-    dominates — i.e. at real scale.
-
-    ``trace`` (measurement hook, ``tools/measure_sssp_iterations.py``):
-    a list that receives one ``(iteration, probe_window_seconds,
-    n_improved)`` tuple per PROBE under the ``observe`` spelling — with
-    ``checkpoint_every=1`` that is a true per-round wall + frontier-size
-    breakdown (the SCALE.md scheduler-floor evidence).  ``None`` (the
-    default) adds zero work.
+    The loop, the checkpoint/probe cadence (``checkpoint_every``) and the
+    ``trace`` hook are the driver's: see ``mapreduce.iterate_until_fixpoint``.
     """
-    import time as _time
-
-    window_t0 = _time.perf_counter()
+    if state_merge not in ("auto", "union_agg", "delta"):
+        raise ValueError(
+            f"state_merge must be 'auto', 'union_agg' or 'delta', got {state_merge!r}"
+        )
     edges = edges.select(
         F.col("src").cast("long"),
         F.col("dst").cast("long"),
         F.col("weight").cast("double"),
     )
-    if state_merge not in ("auto", "union_agg", "full_outer", "delta"):
-        raise ValueError(
-            "state_merge must be 'auto', 'union_agg', 'full_outer' or "
-            f"'delta', got {state_merge!r}"
-        )
-    if hops_per_round not in (1, 2):
-        raise ValueError(f"hops_per_round must be 1 or 2, got {hops_per_round!r}")
-    if probe not in ("observe", "isEmpty"):
-        raise ValueError(f"probe must be 'observe' or 'isEmpty', got {probe!r}")
-    if state_merge == "auto":
-        state_merge = (
-            "delta"
-            if edges.count() >= _DELTA_MERGE_EDGE_THRESHOLD
-            else "union_agg"
-        )
-    state = spark.createDataFrame(
-        [(source, 0.0, True)], "node LONG, dist DOUBLE, improved BOOLEAN"
-    ).localCheckpoint(eager=True)
 
-    for it in range(max_iterations):
+    def step(state: DataFrame, static: Static) -> DataFrame:
+        e = static.df
         frontier = state.filter("improved").select("node", "dist")
-        # map phase: relax all out-edges of the frontier.  The frontier is
-        # typically tiny relative to edges — broadcast it so the big edge
-        # table never shuffles.
+        # the frontier is typically tiny relative to the edges — broadcast
+        # it so the edge table never shuffles
         candidates = (
             F.broadcast(frontier)
-            .join(edges, frontier.node == edges.src, "inner")
+            .join(e, frontier.node == e.src, "inner")
             .select(
                 F.col("dst").alias("node"),
                 (F.col("dist") + F.col("weight")).alias("cand"),
             )
         )
-        if hops_per_round == 2:
-            # second relaxation in the same round: extend every 1-hop
-            # candidate by one more edge; the shared min below collapses
-            # both hop sets.  No pre-min before the second join — at the
-            # scheduler-bound scale this targets, an extra shuffle costs
-            # more than avg-degree× duplicate candidates.
-            hop2 = (
-                F.broadcast(candidates)
-                .join(edges, candidates.node == edges.src, "inner")
-                .select(
-                    F.col("dst").alias("node"),
-                    (F.col("cand") + F.col("weight")).alias("cand"),
-                )
+        merge = state_merge
+        if merge == "auto":
+            merge = (
+                "delta" if static.rows >= _DELTA_MERGE_EDGE_THRESHOLD else "union_agg"
             )
-            candidates = candidates.unionByName(hop2)
-        if state_merge == "union_agg":
-            # no join: state rows ride the same aggregation that reduces
-            # the candidates — min over everything is the merged dist,
-            # min over the state-tagged rows recovers the old dist, and
-            # improved ≡ merged < old (old NULL ⇒ newly reached).  ONE
-            # exchange per round; identical fixpoint (each branch of the
-            # full_outer CASE maps 1:1 onto an aggregate row here).
+        if merge == "union_agg":
             merged = (
                 state.select(
-                    "node",
-                    F.col("dist").alias("cand"),
-                    F.lit(True).alias("is_state"),
+                    "node", F.col("dist").alias("cand"), F.lit(True).alias("is_state")
                 )
                 .unionByName(
-                    candidates.select(
-                        "node", "cand", F.lit(False).alias("is_state")
-                    )
+                    candidates.select("node", "cand", F.lit(False).alias("is_state"))
                 )
+                .repartition(static.partitions, "node")
                 .groupBy("node")
                 .agg(
                     F.min("cand").alias("dist"),
-                    F.min(
-                        F.when(F.col("is_state"), F.col("cand"))
-                    ).alias("_old"),
+                    F.min(F.when(F.col("is_state"), F.col("cand"))).alias("_old"),
                 )
             )
-            state = merged.select(
+            return merged.select(
                 "node",
                 "dist",
-                (
-                    F.col("_old").isNull() | (F.col("dist") < F.col("_old"))
-                ).alias("improved"),
+                (F.col("_old").isNull() | (F.col("dist") < F.col("_old"))).alias(
+                    "improved"
+                ),
             )
-        elif state_merge == "full_outer":
-            # reduce phase: min candidate per node (map-side partial min
-            # free), then the one full-outer merge join
-            best = candidates.groupBy("node").agg(F.min("cand").alias("cand"))
-            state = (
-                state.select("node", "dist")
-                .join(best, "node", "full_outer")
-                .select(
-                    "node",
-                    F.least("dist", "cand").alias("dist"),
-                    (
-                        F.col("cand").isNotNull()
-                        & (F.col("dist").isNull() | (F.col("cand") < F.col("dist")))
-                    ).alias("improved"),
-                )
+        # delta: every state row appears exactly once in `touched`, every
+        # newly reached node exactly once in `fresh`
+        best = (
+            candidates.repartition(static.partitions, "node")
+            .groupBy("node")
+            .agg(F.min("cand").alias("cand"))
+        )
+        touched = (
+            state.select("node", "dist")
+            .join(best, "node", "left")
+            .select(
+                "node",
+                F.least("dist", "cand").alias("dist"),
+                (F.col("cand").isNotNull() & (F.col("cand") < F.col("dist"))).alias(
+                    "improved"
+                ),
             )
-        else:
-            # delta-pruned merge: every state row appears exactly once in
-            # `touched`, every new node exactly once in `fresh` — same
-            # fixpoint, state side unshuffled once AQE broadcasts the
-            # shrinking delta.
-            best = candidates.groupBy("node").agg(F.min("cand").alias("cand"))
-            touched = (
-                state.select("node", "dist")
-                .join(best, "node", "left")
-                .select(
-                    "node",
-                    F.least("dist", "cand").alias("dist"),
-                    (
-                        F.col("cand").isNotNull() & (F.col("cand") < F.col("dist"))
-                    ).alias("improved"),
-                )
-            )
-            fresh = best.join(state.select("node"), "node", "left_anti").select(
-                "node", F.col("cand").alias("dist"), F.lit(True).alias("improved")
-            )
-            state = touched.unionByName(fresh)
-        if (it + 1) % checkpoint_every == 0:
-            if probe == "observe":
-                from pyspark.sql import Observation
+        )
+        fresh = best.join(state.select("node"), "node", "left_anti").select(
+            "node", F.col("cand").alias("dist"), F.lit(True).alias("improved")
+        )
+        return touched.unionByName(fresh)
 
-                obs = Observation()
-                state = state.observe(
-                    obs,
-                    F.sum(F.col("improved").cast("long")).alias("n_improved"),
-                ).localCheckpoint(eager=True)
-                n_improved = obs.get["n_improved"]
-                if trace is not None:
-                    trace.append(
-                        (
-                            it,
-                            round(_time.perf_counter() - window_t0, 3),
-                            int(n_improved or 0),
-                        )
-                    )
-                    window_t0 = _time.perf_counter()
-                if not n_improved:
-                    break
-            else:
-                state = state.localCheckpoint(eager=False)
-                if state.filter("improved").isEmpty():
-                    break
+    state = iterate_until_fixpoint(
+        step,
+        lambda _: spark.createDataFrame(
+            [(source, 0.0, True)], "node LONG, dist DOUBLE, improved BOOLEAN"
+        ),
+        edges,
+        max_iterations,
+        checkpoint_every,
+        trace,
+    )
     return state.select("node", "dist")
 
 
@@ -377,32 +252,33 @@ def connected_components(
     max_iterations: int = 100,
     checkpoint_every: int = 2,
 ) -> DataFrame:
-    """Connected components by min-label propagation to fixpoint — the
-    second consumer of the iterative harness (same state-with-improved-flag
-    shape as ``sssp``, same lazy-checkpoint/probe-every-k scheduler
-    discipline): every node starts labeled with itself; each round nodes
-    adopt the smallest label among themselves and their neighbors;
-    converged when no label changes.  Returns ``(node, component)`` where
-    component is the smallest node id in the component.
+    """Connected components by min-label propagation to fixpoint, on the
+    same driver as ``sssp`` (``mapreduce.iterate_until_fixpoint``): every
+    node starts labeled with itself; each round nodes adopt the smallest
+    label among themselves and their neighbors; converged when no label
+    changes.  Returns ``(node, component)`` where component is the
+    smallest node id in the component.
 
-    Rounds needed = graph diameter; the large-graph refinement is
-    large-star/small-star (alternating pointer-doubling), which cuts rounds
-    to O(log n) — same dataflow primitives, so the harness carries over.
+    Rounds needed = graph diameter; ``connected_components_star`` is the
+    O(log n)-round refinement for long-diameter graphs.
     """
     edges = edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
-    # both endpoints: on already-undirected (doubled) input this is the
-    # same set as src alone, but a raw directed list with dst-only nodes
-    # still gets a row per node
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    state = nodes.select(
-        "node", F.col("node").alias("lbl"), F.lit(True).alias("improved")
-    ).localCheckpoint(eager=True)
 
-    for it in range(max_iterations):
+    def initial(e: DataFrame) -> DataFrame:
+        # both endpoints: on already-undirected (doubled) input this is the
+        # same set as src alone, but a raw directed list with dst-only nodes
+        # still gets a row per node
+        nodes = (
+            e.select(F.col("src").alias("node"))
+            .unionByName(e.select(F.col("dst").alias("node")))
+            .distinct()
+        )
+        return nodes.select(
+            "node", F.col("node").alias("lbl"), F.lit(True).alias("improved")
+        )
+
+    def step(state: DataFrame, static: Static) -> DataFrame:
+        e = static.df
         frontier = state.filter("improved").select("node", "lbl")
         # NO forced broadcast of the frontier (round-2 verdict item 4):
         # unlike SSSP, whose frontier starts at one node, min-label
@@ -411,11 +287,15 @@ def connected_components(
         # OOM on a billion-node graph.  AQE sees the real frontier size
         # at runtime and broadcasts the later (shrunken) frontiers on its
         # own; the large early rounds take the shuffle join they need.
-        msgs = frontier.join(
-            edges, frontier.node == edges.src, "inner"
-        ).select(F.col("dst").alias("node"), F.col("lbl").alias("cand"))
-        best = msgs.groupBy("node").agg(F.min("cand").alias("cand"))
-        state = (
+        msgs = frontier.join(e, frontier.node == e.src, "inner").select(
+            F.col("dst").alias("node"), F.col("lbl").alias("cand")
+        )
+        best = (
+            msgs.repartition(static.partitions, "node")
+            .groupBy("node")
+            .agg(F.min("cand").alias("cand"))
+        )
+        return (
             state.select("node", "lbl")
             .join(best, "node", "left")
             .select(
@@ -426,10 +306,10 @@ def connected_components(
                 ),
             )
         )
-        if (it + 1) % checkpoint_every == 0:
-            state = state.localCheckpoint(eager=False)
-            if state.filter("improved").isEmpty():
-                break
+
+    state = iterate_until_fixpoint(
+        step, initial, edges, max_iterations, checkpoint_every
+    )
     return state.select("node", F.col("lbl").alias("component"))
 
 
@@ -554,20 +434,20 @@ def pagerank(
     checkpoint_every: int = 4,
     round_to: int | None = None,
 ) -> DataFrame:
-    """PageRank with a fixed iteration count — the third consumer of the
-    iterative harness, and the canonical 'big sparse matvec per round'
-    workload: contribs = ranks ⋈ edges (rank/outdegree to each neighbor),
-    partial-aggregated sum per dst, affine update.
+    """PageRank with a fixed iteration count — the canonical 'big sparse
+    matvec per round' workload: contribs = ranks ⋈ edges (rank/outdegree
+    to each neighbor), partial-aggregated sum per dst, affine update.
 
     Formula per round: rank'(v) = (1-d)/N + d·Σ_{u→v} rank(u)/outdeg(u);
     dangling-node mass is dropped (every node of the corpus graphs has
     out-edges, and the serial differential in tests/test_graph.py applies
     the identical rule).  At scale the edge table is the big operand —
     pre-partitioned/bucketed by src it never reshuffles; ranks (one row
-    per node) shuffle once per round on the dst aggregation.  Lineage is
-    truncated on the same every-k lazy-checkpoint cadence as SSSP/CC, but
-    with NO emptiness probe (fixed iterations ⇒ no convergence job at
-    all).  Float sums make the raw result reduction-order-dependent at
+    per node) shuffle once per round on the dst aggregation.  The static
+    operand ``adj`` is materialised once, as the fixpoint driver does for
+    SSSP/CC; the loop stays its own because it runs a fixed round count
+    with NO convergence probe, truncating lineage with an every-k lazy
+    checkpoint.  Float sums make the raw result reduction-order-dependent at
     the last ulp; ``round_to`` fixes that by re-quantizing the rank
     vector to a decimal grid after every affine update (a ≤5·10^-13
     per-round perturbation), which collapses reduction-order ulp noise
@@ -701,7 +581,9 @@ def connected_components_star(
     join edges to parents, per-node min over (own parent ∪ neighbor
     parents), re-point — every step a broadcast-free shuffle on the node
     key, partial-aggregated, O(E) per round.  Converged when no parent
-    changes (probed with the same lazy-checkpoint discipline as ``sssp``).
+    changes (an ``isEmpty`` probe over the changed parents; the state is a
+    parent forest with no improved flag, so this loop is not on the
+    fixpoint driver).
     Returns ``(node, component)`` with component = min node id, identical
     contract to ``connected_components`` (differential-tested against it).
     """

@@ -1140,8 +1140,8 @@ FROM batch b LEFT JOIN matched m ON m.asset_id = b.id
 
 
 
-def _funnel_image_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
-    """One PNG per DOCUMENT (doc_id < ``_PHASH_BASE``) for the
+def _funnel_image_fixture_dir(sf_dir: str, doc_ids: list[int]) -> str:
+    """One PNG per DOCUMENT (``doc_ids``: doc_id < ``_PHASH_BASE``) for the
     multimodal curation funnel: doc d's image derives from base_doc =
     d - d%4 with pert = d%4 under the "phf" salt — every 4-doc group
     shares one base image family (pert 1 = the brightness shift, hash
@@ -1159,7 +1159,6 @@ def _funnel_image_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
         ".fixtures",
         f"phf_{tag}",
     )
-    doc_ids = _phash_doc_ids(spark, sf_dir)
     assets = [(d, d - d % 4, d % 4, "phf") for d in doc_ids]
     _write_phash_assets(out_dir, assets)
     return out_dir
@@ -1379,10 +1378,10 @@ def _afp_batch_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
     return out_dir
 
 
-def _funnel_audio_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
-    """One WAV per DOCUMENT (doc_id < ``_AFP_BASE``) for the multimodal
-    curation funnel: doc d's clip derives from base_doc = d - d%8 with
-    pert = d%4 under the "auf" salt — every EIGHT-doc group shares one
+def _funnel_audio_fixture_dir(sf_dir: str, doc_ids: list[int]) -> str:
+    """One WAV per DOCUMENT (``doc_ids``: doc_id < ``_AFP_BASE``) for the
+    multimodal curation funnel: doc d's clip derives from base_doc = d - d%8
+    with pert = d%4 under the "auf" salt — every EIGHT-doc group shares one
     base clip family (pert 1 = the gain shift, fingerprint IDENTICAL to
     the base; perts 2/3 = one-window re-records <= 2 bits), while
     different groups stay md5-decorrelated.  The audio groups
@@ -1403,7 +1402,6 @@ def _funnel_audio_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
         ".fixtures",
         f"auf_{tag}",
     )
-    doc_ids = _fixture_doc_ids(spark, sf_dir, _AFP_BASE)
     assets = [(d, d - d % 8, d % 4, "auf") for d in doc_ids]
     _write_afp_assets(out_dir, assets)
     return out_dir

@@ -807,12 +807,19 @@ def _curation_funnel(
     from concurrent.futures import ThreadPoolExecutor
 
     from .dedup import banded_signatures
+    from .multimodal import _AFP_BASE, _PHASH_BASE, _fixture_doc_ids
+
+    # the fixtures' doc ids resolve HERE, on the calling thread: the
+    # lookup goes through load_table, which gets/sets/restores session
+    # confs and so must never run from the decode threads
+    img_ids = _fixture_doc_ids(spark, sf_dir, _PHASH_BASE) if image_stage else []
+    aud_ids = _fixture_doc_ids(spark, sf_dir, _AFP_BASE) if audio_stage else []
 
     def _eager_img_hashes():
         from ..sources.readers import read_binary_dir
         from .multimodal import _funnel_image_fixture_dir, phash_hashes
 
-        fixture = _funnel_image_fixture_dir(spark, sf_dir)
+        fixture = _funnel_image_fixture_dir(sf_dir, img_ids)
         files = read_binary_dir(spark, fixture, glob="*.png")
         return phash_hashes(
             files.select(
@@ -827,7 +834,7 @@ def _curation_funnel(
         from ..sources.readers import read_binary_dir
         from .multimodal import _funnel_audio_fixture_dir, audio_fingerprints
 
-        afixture = _funnel_audio_fixture_dir(spark, sf_dir)
+        afixture = _funnel_audio_fixture_dir(sf_dir, aud_ids)
         afiles = read_binary_dir(spark, afixture, glob="*.wav")
         return audio_fingerprints(
             afiles.select(

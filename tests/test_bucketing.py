@@ -6,12 +6,44 @@ test proves the engine's layout path produces that plan."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
 from firebird_mapreduce_spark.plans import count_exchanges, plan_string
 from firebird_mapreduce_spark.sources import load_table
 from tests.conftest import SF_SMOKE
+
+
+def _minhash_spread(batch) -> int:
+    """1 iff the minhash kernel's scale-adaptive spread fires on ``batch``
+    — fewer input partitions than ``defaultParallelism``, the rule
+    ``operators.dedup.minhash_signatures`` applies — else 0, so a pin
+    that counts the spread holds at any core count."""
+    src = batch.select("doc_id", "text")
+    return int(
+        src.rdd.getNumPartitions() < batch.sparkSession.sparkContext.defaultParallelism
+    )
+
+
+def _assert_spread_split(df, fixed: int, spreads: int, plan: str) -> None:
+    """Exact exchange pin for a plan whose kernels spread their input
+    round-robin to ``defaultParallelism`` partitions: ``fixed`` exchanges
+    that never depend on the core count, plus ``spreads``
+    RoundRobinPartitioning(par) exchanges.  On one core a spread plans as
+    SinglePartition, which ``count_exchanges`` does not count."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    found = [
+        int(k)
+        for k in re.findall(
+            r"Exchange RoundRobinPartitioning\((\d+)\)", plan_string(df, "simple")
+        )
+    ]
+    want = spreads if par > 1 else 0
+    assert found == [par] * want, f"spreads={found} (expected {want} x {par})"
+    n = count_exchanges(df)
+    assert n == fixed + want, f"exchanges={n} (expected {fixed + want})\n{plan}"
 
 
 @pytest.fixture(scope="module")
@@ -164,6 +196,7 @@ def test_dedup_incremental_bucketed_corpus_side_shuffle_free(spark):
     than the plain spelling under the same strategy — the corpus side's
     shuffles are the ones that disappear."""
     from firebird_mapreduce_spark.operators.dedup import (
+        augmented_documents,
         dedup_incremental,
         dedup_incremental_bucketed,
     )
@@ -183,18 +216,21 @@ def test_dedup_incremental_bucketed_corpus_side_shuffle_free(spark):
         # BOTH corpus tables must be consumed through bucketed scans —
         # a regression that un-buckets either one drops this to 1
         assert plan.count("Bucketed: true") == 2, plan
-        # exchange count pinned EXACTLY, not relatively: 5 = the four
+        # exchange count pinned EXACTLY, not relatively: the four
         # batch-side shuffles (md5-probe side, banded-probe side, the
         # near-set distinct, the report join) plus the minhash kernel's
-        # scale-adaptive round-robin spread (r12: visible since the
-        # signature checkpoint left the single-consumer probe path —
-        # batch-sized, and absent entirely on pre-split production
-        # input) and NOTHING on the corpus sides; the plain spelling's
-        # 6 includes the two corpus-side shuffles this layout exists
-        # to eliminate.  A reintroduced corpus-side Exchange fails the
-        # == even if still below 6.
-        nb, np_ = count_exchanges(bucketed), count_exchanges(plain)
-        assert nb == 5, f"bucketed={nb} (expected 5)\n{plan}"
+        # scale-adaptive round-robin spread iff it fires on this host
+        # (r12: visible since the signature checkpoint left the
+        # single-consumer probe path — batch-sized, and absent entirely
+        # on pre-split production input) and NOTHING on the corpus
+        # sides; the plain spelling's 6 includes the two corpus-side
+        # shuffles this layout exists to eliminate.  A reintroduced
+        # corpus-side Exchange fails the ==.
+        batch = augmented_documents(spark, SF_SMOKE).filter(
+            F.col("doc_id") >= 100000
+        )
+        _assert_spread_split(bucketed, 4, _minhash_spread(batch), plan)
+        np_ = count_exchanges(plain)
         assert np_ == 6, f"plain={np_} (expected 6)"
     finally:
         if prev is None:
@@ -270,13 +306,16 @@ def test_tworound_fold_appends_delta_and_stays_corpus_shuffle_free(spark):
         df = dedup_incremental_tworound(spark, SF_SMOKE)
         plan = plan_string(df, "formatted")
         assert plan.count("Bucketed: true") == 2, plan
-        # 5 = ingest 2's four batch-side shuffles (md5-probe side,
+        # ingest 2's four batch-side shuffles (md5-probe side,
         # banded-probe side, near-set distinct, report join) plus the
-        # minhash kernel's scale-adaptive spread (see the
-        # dedup_incremental_bucketed pin); ingest 1 rides its
-        # localCheckpoint.  A corpus-side Exchange breaks ==.
-        n = count_exchanges(df)
-        assert n == 5, f"exchanges={n} (expected 5)\n{plan}"
+        # minhash kernel's scale-adaptive spread iff it fires on the
+        # ingest-2 batch (see the dedup_incremental_bucketed pin);
+        # ingest 1 rides its localCheckpoint.  A corpus-side Exchange
+        # breaks ==.
+        batch2 = tworound_documents(spark, SF_SMOKE).filter(
+            F.col("doc_id") >= 200000
+        )
+        _assert_spread_split(df, 4, _minhash_spread(batch2), plan)
     finally:
         if prev is None:
             spark.conf.unset(key)
@@ -382,8 +421,8 @@ def test_ivfpq_incremental_fold_state_and_plan(spark):
         # join exchange both vanish; the two folded state tables stay
         # bucketed-scanned (the corpus side remains exchange-free)
         assert plan.count("Bucketed: true") == 2, plan
-        n = count_exchanges(df)
-        assert n == 9, f"exchanges={n} (expected 9)\n{plan}"
+        # 9 on more than one core: 7 fixed plus two round-robin spreads
+        _assert_spread_split(df, 7, 2, plan)
     finally:
         if prev is None:
             spark.conf.unset(key)
@@ -449,7 +488,6 @@ def test_semantic_incremental_fold_state_and_plan(spark):
         # still exchange-free
         assert plan.count("Bucketed: true") == 2, plan
         assert plan.count("Bucketed: false") == 2, plan
-        n = count_exchanges(df)
         # r8: 12 -> 10 — _assign_to_centroids now BROADCASTS the k·d
         # centroid side (its join key d has few distinct values, so the
         # old shuffle join both serialized and cost two exchanges).
@@ -458,8 +496,10 @@ def test_semantic_incremental_fold_state_and_plan(spark):
         # driver-sized aggregate class, never corpus reshuffles).
         # r11: 12 -> 11 — the ingest-2 enrollment's join/aggregate
         # exchanges collapse into the map-only kernel (its only
-        # exchange is the scale-adaptive local spread of the batch)
-        assert n == 11, f"exchanges={n} (expected 11)\n{plan}"
+        # exchange is the scale-adaptive local spread of the batch).
+        # The 11 is on more than one core: 8 fixed plus three
+        # round-robin spreads of one-partition inputs.
+        _assert_spread_split(df, 8, 3, plan)
     finally:
         if prev is None:
             spark.conf.unset(key)
@@ -546,12 +586,12 @@ def test_ingest_screen_exchanges_batch_side_only(spark):
         df = ingest_screen_multimodal(spark, SF_SMOKE)
         plan = plan_string(df, "formatted")
         assert plan.count("Bucketed: true") == 8, plan
-        n = count_exchanges(df)
         # 22 -> 23 with the r12 single-consumer checkpoint removal:
         # the text screen's kernel (and its scale-adaptive spread) now
         # rides the report job inline instead of hiding behind the
-        # signature checkpoint — still batch-side only
-        assert n == 23, f"exchanges={n} (expected 23)\n{plan}"
+        # signature checkpoint — still batch-side only.  The spread is
+        # a round-robin exchange only on more than one core.
+        _assert_spread_split(df, 22, 1, plan)
     finally:
         if prev is None:
             spark.conf.unset(key)

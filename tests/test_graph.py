@@ -49,42 +49,33 @@ def dijkstra(edges: list[tuple[int, int, float]], source: int) -> dict[int, floa
 
 
 @pytest.mark.parametrize("source", [0, 2, 7])
-@pytest.mark.parametrize(
-    "merge,hops",
-    [
-        ("union_agg", 1),
-        ("full_outer", 1),
-        ("delta", 1),
-        ("union_agg", 2),
-        ("full_outer", 2),
-        ("delta", 2),
-    ],
-)
-def test_sssp_small_graph(spark, source, merge, hops):
-    """Both state-merge strategies AND both hops-per-round settings must
-    reach the identical Dijkstra fixpoint (the adaptive default picks the
-    merge by graph size; 2-hop relaxation halves round count on
-    scheduler-bound graphs)."""
+@pytest.mark.parametrize("checkpoint_every", [1, 2])
+@pytest.mark.parametrize("merge", ["union_agg", "delta"])
+def test_sssp_small_graph(spark, source, checkpoint_every, merge):
+    """Both state merges must reach the identical Dijkstra fixpoint, with
+    the driver probing every round and every second round (a probe window
+    that ends past convergence must not change the answer)."""
     edges = undirected(
         spark.createDataFrame(SMALL_GRAPH_EDGES, "src INT, dst INT, weight DOUBLE")
     )
     result = {
         r["node"]: r["dist"]
         for r in sssp(
-            spark, edges, source, state_merge=merge, hops_per_round=hops
+            spark, edges, source, checkpoint_every=checkpoint_every, state_merge=merge
         ).collect()
     }
     assert result == dijkstra(SMALL_GRAPH_EDGES, source)
 
 
 def test_sssp_rejects_unknown_state_merge(spark):
-    """A typo'd strategy string must fail fast with ValueError, not
-    silently fall through to one of the branches (ADVICE r3)."""
+    """A typo'd or removed strategy string must fail fast with ValueError,
+    not silently fall through to one of the branches (ADVICE r3)."""
     edges = undirected(
         spark.createDataFrame(SMALL_GRAPH_EDGES, "src INT, dst INT, weight DOUBLE")
     )
-    with pytest.raises(ValueError, match="state_merge"):
-        sssp(spark, edges, 0, state_merge="ful_outer")
+    for bad in ("ful_outer", "full_outer"):
+        with pytest.raises(ValueError, match="state_merge"):
+            sssp(spark, edges, 0, state_merge=bad)
 
 
 def test_sssp_syn_scale_vs_dijkstra(spark):
@@ -191,20 +182,3 @@ def test_star_cc_matches_label_prop_and_converges_log_rounds(spark):
     }
     assert set(out) == set(range(400))
     assert set(out.values()) == {0}
-
-
-def test_sssp_probe_spellings_reach_identical_fixpoint(spark):
-    """Both convergence-probe spellings — the eager-checkpoint observe()
-    metric (r5 default) and the lazy-checkpoint isEmpty() baseline —
-    must reach the identical fixpoint (the A/B tool asserts this at 18k
-    nodes; this pins it in the suite on the oracle graph)."""
-    from firebird_mapreduce_spark.operators.graph import (
-        derived_nation_graph,
-        sssp,
-    )
-    from tests.conftest import SF_SMOKE
-
-    edges = derived_nation_graph(spark, SF_SMOKE)
-    a = {r.node: r.dist for r in sssp(spark, edges, 0, probe="observe").collect()}
-    b = {r.node: r.dist for r in sssp(spark, edges, 0, probe="isEmpty").collect()}
-    assert a == b and len(a) == 25

@@ -73,14 +73,50 @@ def test_count_by_key_matches_sql(spark):
 
 
 def test_iterate_until_fixpoint_terminates(spark):
-    """Halving working set: 64 -> 32 -> ... -> empty."""
-    init = spark.createDataFrame([(i,) for i in range(64)], "v int")
+    """The driver's contract: the static operand is materialised once and
+    sized (rows, and 1 round partition at this size), the state counts up
+    to its cap and then stops improving, and the driver stops at the first
+    probe that sees no improved row — so the terminating round depends on
+    the probe cadence, while the result does not."""
+    cap = 5
+    seen = []
 
-    def step(df):
-        return df.filter(F.col("v") % 2 == 0).select((F.col("v") / 2).cast("int").alias("v"))
+    def step(state, static):
+        seen.append(static)
+        nxt = F.col("v") + 1
+        return state.select(
+            F.least(nxt, F.lit(cap)).alias("v"), (nxt <= cap).alias("improved")
+        )
 
-    final = iterate_until_fixpoint(step, init, max_iterations=20)
-    assert final.count() >= 1  # last non-empty set is returned
+    def initial(static_df):
+        return static_df.filter("id = 0").select(
+            F.col("id").alias("v"), F.lit(True).alias("improved")
+        )
+
+    # rounds 0..4 improve (v = 1..5); round 5 is the first with none
+    for every, last_round in ((1, 5), (2, 5), (4, 7)):
+        trace: list = []
+        seen.clear()
+        final = iterate_until_fixpoint(
+            step, initial, spark.range(10), max_iterations=20,
+            checkpoint_every=every, trace=trace,
+        )
+        assert [r["v"] for r in final.collect()] == [cap]
+        assert [it for it, _, _ in trace] == list(
+            range(every - 1, last_round + 1, every)
+        )
+        assert trace[-1][2] == 0 and all(n == 1 for _, _, n in trace[:-1])
+        assert len(seen) == last_round + 1
+        # one materialised operand, handed to every round
+        assert len({id(s.df) for s in seen}) == 1
+        assert {(s.rows, s.partitions) for s in seen} == {(10, 1)}
+    # a cap on rounds stops the driver even without convergence
+    trace = []
+    final = iterate_until_fixpoint(
+        step, initial, spark.range(10), max_iterations=3, trace=trace
+    )
+    assert [r["v"] for r in final.collect()] == [3]
+    assert [it for it, _, _ in trace] == [0, 1, 2]
 
 
 def test_salted_agg_equals_plain(spark):

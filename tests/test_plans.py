@@ -209,15 +209,10 @@ def test_cc_round1_no_forced_frontier_broadcast(spark):
 
 
 def test_sssp_state_merge_strategies(spark):
-    """Round-2 verdict item 9, amended by round-3 measurement: the
-    DELTA merge (state-side shuffle pruned: left join + LeftAnti, no
-    FullOuter) is the large-state shape, but A/B on the 18k graph showed
-    it 2× SLOWER there — small-graph rounds are scheduler-bound and pay
-    per-round stages, not bytes.  So the merge is adaptive: auto picks
-    union_agg below the edge threshold (r11 — NO merge join at all: one
-    union + aggregate per round, the fewest-stages continuation of the
-    full_outer finding) and delta above it; all three plans are pinned
-    here and every fixpoint is Dijkstra-differential-tested in
+    """The two state merges plan as designed: ``delta`` is the large-state
+    shape (state-side shuffle pruned: left join + LeftAnti), ``union_agg``
+    — what ``auto`` picks on a small graph — has NO merge join at all, one
+    union + aggregate per round.  Both fixpoints are Dijkstra-checked in
     test_graph.py."""
     from firebird_mapreduce_spark.operators.graph import (
         derived_nation_graph,
@@ -231,23 +226,94 @@ def test_sssp_state_merge_strategies(spark):
     )
     assert "FullOuter" not in delta_plan, delta_plan
     assert "LeftAnti" in delta_plan, delta_plan
-    fo_plan = plan_string(
-        sssp(
-            spark, edges, source=0, max_iterations=1, state_merge="full_outer"
-        ),
-        "simple",
+    for merge in ("union_agg", "auto"):
+        plan = plan_string(
+            sssp(spark, edges, source=0, max_iterations=1, state_merge=merge),
+            "simple",
+        )
+        assert "FullOuter" not in plan, plan
+        assert "LeftAnti" not in plan, plan
+        assert "Union" in plan, plan
+        # the relax join (broadcast frontier ⋈ edges) remains; no
+        # sort-merge join anywhere in the round plan
+        assert "SortMergeJoin" not in plan, plan
+
+
+def _round_agg_partitions(plan: str) -> list[int]:
+    """Partition counts of the plan's explicit ``repartition(n, node)``
+    exchanges (n = 1 plans as ``SinglePartition``)."""
+    import re
+
+    found = re.findall(
+        r"Exchange (?:SinglePartition|hashpartitioning\(node#\d+L?, (\d+)\)), "
+        r"REPARTITION_BY_NUM",
+        plan,
     )
-    assert "FullOuter" in fo_plan, fo_plan
-    assert "LeftAnti" not in fo_plan, fo_plan
-    auto_plan = plan_string(
-        sssp(spark, edges, source=0, max_iterations=1), "simple"
-    )  # tiny graph -> auto resolves to union_agg: NO merge join at all
-    assert "FullOuter" not in auto_plan, auto_plan
-    assert "LeftAnti" not in auto_plan, auto_plan
-    assert "Union" in auto_plan, auto_plan
-    # the relax join (broadcast frontier ⋈ edges) remains; the MERGE
-    # join is gone — no sort-merge join anywhere in the round plan
-    assert "SortMergeJoin" not in auto_plan, auto_plan
+    return [int(n) if n else 1 for n in found]
+
+
+def test_sssp_round_reads_materialised_edges_and_sizes_its_shuffle(
+    spark, tmp_path
+):
+    """The fixpoint driver reads the edge table once per solve: after the
+    first checkpoint a round's plan scans the materialised operand, never
+    the edge-list file.  The round's aggregation shuffles into exactly the
+    partition count the size rule gives — materialised edge bytes (rows ×
+    32: an 8-byte row header plus src, dst and weight at 8 bytes each)
+    over the advisory partition size, clamped to [1, shuffle partitions] —
+    whatever the core count."""
+    import math
+
+    from firebird_mapreduce_spark.operators.graph import sssp
+    from firebird_mapreduce_spark.sources.readers import read_edge_list
+
+    path = tmp_path / "small.graph"
+    pairs = [(2, 0, 1), (2, 0, 10), (4, 0, 1), (4, 0, 1), (7, 0, 14), (8, 0, 9)]
+    path.write_text(
+        "10 6\n" + "".join(f"{s} {d} {w}\n" for s, d, w in pairs)
+    )
+    rows = 2 * len(pairs)  # the reader's undirected doubling
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    prev = spark.conf.get(key, None)
+    try:
+        for advisory in (None, "100b", "1b"):
+            if advisory is not None:
+                spark.conf.set(key, advisory)
+            size = spark._jvm.org.apache.spark.network.util.JavaUtils
+            want = max(
+                1,
+                min(cap, math.ceil(rows * 32 / size.byteStringAsBytes(
+                    spark.conf.get(key)
+                ))),
+            )
+            for merge in ("union_agg", "delta"):
+                df = sssp(
+                    spark,
+                    read_edge_list(spark, str(path)),
+                    # from node 7 the round-1 probe still sees improved
+                    # rows, so round 2 plans over the round-1 checkpoint
+                    source=7,
+                    max_iterations=3,
+                    state_merge=merge,
+                )
+                plan = plan_string(df, "simple")
+                assert "FileScan" not in plan, plan
+                assert "Scan ExistingRDD" in plan, plan
+                # delta's per-node best feeds two joins, so its exchange
+                # appears twice in the static plan
+                assert set(_round_agg_partitions(plan)) == {want}, (
+                    advisory,
+                    plan,
+                )
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+    # the sizes exercised: the default keeps a small graph on one
+    # partition, and the clamp holds at the session's cap
+    assert want == cap
 
 
 def test_kmeans_seed_init_scale_safe(spark):
