@@ -12,8 +12,9 @@ works in shared memory.  Here that state becomes *data*: a
 ``distances(node, dist)`` DataFrame carried across iterations
 (SURVEY §1.3), updated with union + groupBy-min.
 
-Scale posture: ``sssp`` and ``connected_components`` run on the one
-fixpoint driver, ``mapreduce.iterate_until_fixpoint``.  It reads the edge
+Scale posture: ``sssp``, ``connected_components`` and
+``connected_components_star`` run on the one fixpoint driver,
+``mapreduce.iterate_until_fixpoint``.  It reads the edge
 table once per solve — an eager checkpoint, as the reference loads its
 graph into memory once — so no round re-scans or re-unions the source.
 Each round is (frontier ⋈ edges) → one aggregation on ``node`` whose
@@ -572,82 +573,73 @@ def connected_components_star(
     long path graph = thousands of rounds; star-contraction collapses it
     in a handful).
 
-    State is a parent forest ``(node, parent)``.  Each round:
-      large-star: every node's neighbors that are LARGER than the node's
-        parent re-attach to that parent (computed per edge endpoint with
-        a groupBy-min over neighbor parents);
-      small-star: symmetric, for smaller neighbors.
-    Implemented as two identical dataflow steps on the parent table —
-    join edges to parents, per-node min over (own parent ∪ neighbor
-    parents), re-point — every step a broadcast-free shuffle on the node
-    key, partial-aggregated, O(E) per round.  Converged when no parent
-    changes (an ``isEmpty`` probe over the changed parents; the state is a
-    parent forest with no improved flag, so this loop is not on the
-    fixpoint driver).
+    State is a parent forest ``(node, parent, improved)`` on the same
+    fixpoint driver as ``connected_components``
+    (``mapreduce.iterate_until_fixpoint``).  Each round every node adopts
+    the minimum parent among itself and all its neighbours' parents (a
+    conservative union of the large-star and small-star moves: monotone,
+    and it still doubles pointer shortcuts), then parents are compressed
+    one hop (parent := parent's parent); ``improved`` is
+    ``parent != old parent``.  Every step is a broadcast-free shuffle on
+    the node key, partial-aggregated, O(E) per round.  The static operand
+    is the symmetric non-self-loop edge list plus one ``(n, n)`` self-pair
+    per endpoint, so ``initial`` derives every node from it — self-loop-
+    and dst-only nodes included — and a self-pair never lowers a parent.
     Returns ``(node, component)`` with component = min node id, identical
     contract to ``connected_components`` (differential-tested against it).
     """
     edges = edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
-    # symmetric non-self-loop edge list; nodes derived from BOTH raw
-    # endpoints so self-loop-only and dst-only nodes still get a
-    # component row (= themselves), matching connected_components
     no_loop = edges.filter(F.col("src") != F.col("dst"))
+    endpoints = edges.select(F.col("src").alias("n")).unionByName(
+        edges.select(F.col("dst").alias("n"))
+    )
     sym = (
         no_loop.unionByName(
             no_loop.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    parent = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .select("node", F.col("node").alias("parent"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iterations):
-        # one combined "star" round: every node adopts the minimum parent
-        # among itself and ALL its neighbors' parents (a conservative
-        # union of large-star+small-star moves — monotone, and still
-        # doubles pointer-shortcuts each round), then parents are
-        # path-compressed one hop (parent := parent's parent).
-        nbr_parent = (
-            sym.join(parent, sym.dst == parent.node)
-            .select(sym.src.alias("node"), F.col("parent").alias("cand"))
+        .unionByName(
+            endpoints.select(F.col("n").alias("src"), F.col("n").alias("dst"))
         )
-        best = nbr_parent.groupBy("node").agg(F.min("cand").alias("cand"))
-        stepped = (
-            parent.join(best, "node", "left")
+        .distinct()
+    )
+
+    def initial(e: DataFrame) -> DataFrame:
+        return (
+            e.select(F.col("src").alias("node"))
+            .distinct()
             .select(
-                "node",
-                F.least(
-                    "parent", F.coalesce("cand", F.col("parent"))
-                ).alias("parent"),
+                "node", F.col("node").alias("parent"), F.lit(True).alias("improved")
             )
+        )
+
+    def step(state: DataFrame, static: Static) -> DataFrame:
+        e, parent = static.df, state.select("node", "parent")
+        best = (
+            e.join(parent, e.dst == parent.node)
+            .select(e.src.alias("node"), F.col("parent").alias("cand"))
+            .repartition(static.partitions, "node")
+            .groupBy("node")
+            .agg(F.min("cand").alias("cand"))
+        )
+        # every node has its self-pair, so every node has a candidate
+        stepped = parent.join(best, "node").select(
+            "node",
+            F.least("parent", "cand").alias("parent"),
+            F.col("parent").alias("old"),
         )
         # pointer doubling: parent <- parent(parent)
         p2 = stepped.select(
             F.col("node").alias("pnode"), F.col("parent").alias("pparent")
         )
-        doubled = (
-            stepped.join(p2, stepped.parent == p2.pnode, "left")
-            .select(
-                "node",
-                F.coalesce("pparent", "parent").alias("parent"),
-            )
-            .localCheckpoint(eager=False)
+        doubled = F.coalesce("pparent", "parent")
+        return stepped.join(p2, stepped.parent == p2.pnode, "left").select(
+            "node",
+            doubled.alias("parent"),
+            (doubled != F.col("old")).alias("improved"),
         )
-        changed = (
-            doubled.join(
-                parent.select("node", F.col("parent").alias("old")), "node"
-            )
-            .filter(F.col("parent") != F.col("old"))
-        )
-        parent = doubled
-        if changed.isEmpty():
-            break
-    return parent.select("node", F.col("parent").alias("component"))
+
+    state = iterate_until_fixpoint(step, initial, sym, max_iterations)
+    return state.select("node", F.col("parent").alias("component"))
 
 
 def connected_components_star_query(spark: SparkSession, sf_dir: str) -> DataFrame:

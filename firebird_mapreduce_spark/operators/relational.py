@@ -329,15 +329,22 @@ def corpus_tag(sf_dir: str, *tables: str) -> str:
     return hashlib.md5("|".join(tags).encode()).hexdigest()[:8]
 
 
+def warehouse_uri(spark: SparkSession) -> str:
+    """``spark.sql.warehouse.dir`` with its URI scheme kept (``file:/…``,
+    ``hdfs://nn/…``): the form a Hadoop FileSystem call needs, which
+    resolves a scheme-less path against ``fs.defaultFS`` instead."""
+    return spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
+
+
 def warehouse_path(spark: SparkSession) -> str:
     """Local filesystem path of ``spark.sql.warehouse.dir`` — the one
     place layout tables AND the embedded JDBC endpoint resolve it, so
-    any future hardening lands everywhere at once."""
+    any future hardening lands everywhere at once.  Drops the scheme:
+    only for local-file writers; remote-aware code uses
+    ``warehouse_uri``."""
     from urllib.parse import urlparse
 
-    return urlparse(
-        spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    ).path
+    return urlparse(warehouse_uri(spark)).path
 
 
 # (applicationId, table) pairs this process has already built-or-found:

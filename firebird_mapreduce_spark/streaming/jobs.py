@@ -1320,16 +1320,21 @@ def _snapshot_bucketed_state(
       100 TB posture), with the plain ``shutil`` fast path kept for
       local paths.  The empty table is created by DDL (``CLUSTERED
       BY``), not an empty-DataFrame write — no Spark job per table.
-    - CONTRACT ASSERTED, not assumed: every copied file must parse a
-      writer bucket id below ``n_buckets`` from its name; a base that
-      is not a bare bucketed-table scan (or bucketed differently)
-      fails loudly here instead of committing a snapshot whose bucket
-      metadata lies about its files."""
+    - The destination keeps the warehouse URI's scheme
+      (``warehouse_uri``): the stale table directory is deleted through
+      the Hadoop FileSystem API on a non-local warehouse (``shutil``
+      only for ``file:``), and the copy gets the full-scheme path.
+    - What is checked: every copied file must parse a writer bucket id
+      below ``n_buckets`` from its ``inputFiles()`` name, so an
+      unbucketed base or one bucketed wider fails loudly.  Nothing
+      checks that ``base`` is a bare scan: a filtered or projected frame
+      over a table bucketed this way passes, and the snapshot copies
+      its whole files."""
     import re
     import shutil
     from urllib.parse import urlparse
 
-    from ..operators.relational import warehouse_path
+    from ..operators.relational import warehouse_uri
 
     global _BUCKET_FILE_PAT
     if _BUCKET_FILE_PAT is None:
@@ -1346,10 +1351,15 @@ def _snapshot_bucketed_state(
                 "as the snapshot"
             )
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    dst = os.path.join(warehouse_path(spark), tbl)
+    dst = f"{warehouse_uri(spark).rstrip('/')}/{tbl}"
+    dst_path = urlparse(dst).path
+    local_dst = urlparse(dst).scheme in ("", "file")
     # the warehouse DIRECTORY outlives the in-memory catalog (the
     # ensure_layout_table discipline)
-    shutil.rmtree(dst, ignore_errors=True)
+    if local_dst:
+        shutil.rmtree(dst_path, ignore_errors=True)
+    else:
+        _hadoop_delete(spark, dst)
     cols = ", ".join(
         f"`{f.name}` {f.dataType.simpleString()}" for f in base.schema.fields
     )
@@ -1359,17 +1369,22 @@ def _snapshot_bucketed_state(
         f"CLUSTERED BY ({key_list}) SORTED BY ({key_list}) "
         f"INTO {n_buckets} BUCKETS"
     )
-    local = all(
-        urlparse(f).scheme in ("", "file") for f in src_files
-    ) and urlparse(dst).scheme in ("", "file")
-    if local:
-        os.makedirs(dst, exist_ok=True)
+    if local_dst and all(urlparse(f).scheme in ("", "file") for f in src_files):
+        os.makedirs(dst_path, exist_ok=True)
         for f in src_files:
             path = urlparse(f).path
-            shutil.copy(path, os.path.join(dst, os.path.basename(path)))
-    else:  # pragma: no cover - exercised by the fake-FS unit test
+            shutil.copy(path, os.path.join(dst_path, os.path.basename(path)))
+    else:
         _hadoop_copy_files(spark, src_files, dst)
     spark.catalog.refreshTable(tbl)
+
+
+def _hadoop_delete(spark: SparkSession, uri: str) -> None:
+    """Recursively delete ``uri`` (absent is fine) through the Hadoop
+    FileSystem API — ``shutil.rmtree``'s counterpart on a non-local
+    warehouse, where a POSIX call would target the driver's disk."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(uri)
+    path.getFileSystem(spark._jsc.hadoopConfiguration()).delete(path, True)
 
 
 def _hadoop_copy_files(

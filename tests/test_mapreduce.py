@@ -3,6 +3,11 @@ successor to the reference's virtual-function API (firebird.h:248-249)."""
 
 from __future__ import annotations
 
+import datetime as dt
+from decimal import Decimal
+
+import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from firebird_mapreduce_spark.mapreduce import (
@@ -64,6 +69,244 @@ def test_map_only_flatmap(spark):
         "tok string",
     )
     assert sorted(r["tok"] for r in out.collect()) == ["x", "y"]
+
+
+# The emit normaliser's contract, pinned as the values Spark collects from
+# the records a user callable emits.  Each case: (records emitted for a
+# chunk whose column v holds [1, 2], output schema, expected rows for
+# map_only, expected rows for map_reduce); an expected str is a fragment
+# of the error Spark raises.  The two differ only where Spark itself does:
+# mapInPandas ignores result columns past the schema's width, while
+# applyInPandas rejects any extra column.
+_EMIT_CASES = {
+    "extra_key": (
+        lambda c: [{"a": v, "x": "extra"} for v in c["v"]],
+        "a int",
+        [(1,), (2,)],
+        "RESULT_COLUMN_NAMES_MISMATCH",
+    ),
+    "key_absent_everywhere": (
+        lambda c: [{"a": v} for v in c["v"]],
+        "a int, b int",
+        "RESULT_COLUMN_NAMES_MISMATCH",
+        "RESULT_COLUMN_NAMES_MISMATCH",
+    ),
+    "key_absent_from_first": (
+        lambda c: [{"a": 1}, {"a": 2, "b": 20}],
+        "a int, b int",
+        [(1, None), (2, 20)],
+        [(1, None), (2, 20)],
+    ),
+    "float_for_int": (
+        lambda c: [{"a": float(v)} for v in c["v"]],
+        "a int",
+        [(1,), (2,)],
+        [(1,), (2,)],
+    ),
+    "fractional_float_for_int": (
+        lambda c: [{"a": v + 0.5} for v in c["v"]],
+        "a int",
+        "unsafe conversions",
+        "unsafe conversions",
+    ),
+    "none": (
+        lambda c: [{"a": None, "s": None}, {"a": 2, "s": "x"}],
+        "a int, s string",
+        [(None, None), (2, "x")],
+        [(None, None), (2, "x")],
+    ),
+    "str_for_int": (
+        lambda c: [{"a": str(v)} for v in c["v"]],
+        "a int",
+        [(1,), (2,)],
+        [(1,), (2,)],
+    ),
+    "swapped_key_order": (
+        lambda c: [{"s": "x", "a": v} for v in c["v"]],
+        "a int, s string",
+        [(1, "x"), (2, "x")],
+        [(1, "x"), (2, "x")],
+    ),
+    "date_decimal_array": (
+        lambda c: [
+            {"d": dt.date(2024, 1, v), "m": Decimal("1.25") * v, "xs": [v, v + 1]}
+            for v in c["v"]
+        ],
+        "d date, m decimal(10,2), xs array<int>",
+        [
+            (dt.date(2024, 1, 1), Decimal("1.25"), [1, 2]),
+            (dt.date(2024, 1, 2), Decimal("2.50"), [2, 3]),
+        ],
+        [
+            (dt.date(2024, 1, 1), Decimal("1.25"), [1, 2]),
+            (dt.date(2024, 1, 2), Decimal("2.50"), [2, 3]),
+        ],
+    ),
+    "naive_datetime": (
+        lambda c: [{"t": dt.datetime(2024, 1, 1, 12, v)} for v in c["v"]],
+        "t timestamp",
+        [(dt.datetime(2024, 1, 1, 12, 1),), (dt.datetime(2024, 1, 1, 12, 2),)],
+        [(dt.datetime(2024, 1, 1, 12, 1),), (dt.datetime(2024, 1, 1, 12, 2),)],
+    ),
+    "numpy_scalars": (
+        lambda c: [
+            {"a": v, "f": v / np.float32(2), "b": v > 1} for v in c["v"].to_numpy()
+        ],
+        "a long, f double, b boolean",
+        [(1, 0.5, False), (2, 1.0, True)],
+        [(1, 0.5, False), (2, 1.0, True)],
+    ),
+}
+
+
+def _run_emit(spark, api: str, emit, schema: str) -> list[tuple]:
+    """Run ``emit`` as the map of ``map_only`` or as the reduce of
+    ``map_reduce`` over one chunk / one group holding v = [1, 2] in order,
+    so the collected rows keep the emitted order."""
+    df = spark.range(1, 3, numPartitions=1).selectExpr("CAST(id AS INT) AS v")
+    if api == "map_only":
+        out = map_only(df, lambda chunk: emit(chunk.sort_values("v")), schema)
+    else:
+        out = map_reduce(
+            df, lambda chunk: ({"v": v, "k": 0} for v in chunk["v"]),
+            "v int, k int", ["k"],
+            lambda key, group: emit(group.sort_values("v")), schema,
+        )
+    return [tuple(r) for r in out.collect()]
+
+
+@pytest.mark.parametrize("case", list(_EMIT_CASES))
+@pytest.mark.parametrize("api", ["map_only", "map_reduce"])
+def test_emit_normaliser_parity(spark, api, case):
+    """map_only's map and map_reduce's reduce turn emitted dicts into the
+    same rows and the same errors as ``pd.DataFrame.from_records`` did:
+    columns are the emitted keys, a key missing from some records is null
+    there, and coercion to the declared types (and its errors) is
+    Spark's."""
+    emit, schema, want_map_only, want_map_reduce = _EMIT_CASES[case]
+    want = want_map_only if api == "map_only" else want_map_reduce
+    if isinstance(want, str):
+        with pytest.raises(Exception, match=want):
+            _run_emit(spark, api, emit, schema)
+    else:
+        assert _run_emit(spark, api, emit, schema) == want
+
+
+def test_columnar_emit_equals_dict_emit(spark):
+    """A map or reduce that returns one pandas frame (columnar emit) gives
+    the rows its per-record dict spelling gives."""
+    import pandas as pd
+
+    df = spark.range(200).selectExpr("CAST(id % 7 AS INT) AS k", "CAST(id AS INT) AS v")
+
+    def map_dicts(chunk):
+        for k, v in zip(chunk["k"], chunk["v"]):
+            yield {"k": k, "v": v * 2}
+
+    def map_frame(chunk):
+        return pd.DataFrame({"k": chunk["k"], "v": chunk["v"] * 2})
+
+    def reduce_dicts(key, group):
+        yield {"k": key[0], "n": len(group), "total": int(group["v"].sum())}
+
+    def reduce_frame(key, group):
+        return pd.DataFrame(
+            {"k": [key[0]], "n": [len(group)], "total": [group["v"].sum()]}
+        )
+
+    def run(map_fn, reduce_fn):
+        out = map_reduce(
+            df, map_fn, "k int, v int", ["k"], reduce_fn,
+            "k int, n long, total long",
+        )
+        return sorted(map(tuple, out.collect()))
+
+    want = run(map_dicts, reduce_dicts)
+    assert len(want) == 7 and sum(n for _, n, _ in want) == 200
+    assert run(map_frame, reduce_frame) == want
+    assert run(map_frame, reduce_dicts) == want
+    assert sorted(map(tuple, map_only(df, map_frame, "k int, v int").collect())) == (
+        sorted(map(tuple, map_only(df, map_dicts, "k int, v int").collect()))
+    )
+
+
+def test_emit_frame_builds_uniform_dicts_without_from_records(monkeypatch):
+    """A batch of dicts that all carry the same keys takes the Arrow path,
+    not ``from_records``; its columns keep the first record's key order."""
+    import pandas as pd
+
+    from firebird_mapreduce_spark.mapreduce import make_emit_frame
+
+    def refuse(*args, **kwargs):
+        raise AssertionError("from_records called")
+
+    monkeypatch.setattr(pd.DataFrame, "from_records", refuse)
+    frame = make_emit_frame()(({"s": str(v), "a": v} for v in range(3)))
+    assert list(frame.columns) == ["s", "a"]
+    assert frame.to_dict("list") == {"s": ["0", "1", "2"], "a": [0, 1, 2]}
+
+
+def test_map_reduce_closures_ship_without_the_package(spark, monkeypatch, tmp_path):
+    """The map and reduce closures ``map_reduce`` hands to Spark pickle by
+    value: loaded in a fresh interpreter that cannot import this package,
+    they still run.  A normaliser pickled by reference (a module-level
+    helper) fails here with ModuleNotFoundError."""
+    import os
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    df = spark.range(4).selectExpr("CAST(id AS INT) AS v")
+    frame_cls, grouped_cls = type(df), type(df.groupBy("v"))
+    shipped = {}
+    real_map, real_apply = frame_cls.mapInPandas, grouped_cls.applyInPandas
+
+    def capture_map(self, func, schema, *args, **kwargs):
+        shipped["map"] = func
+        return real_map(self, func, schema, *args, **kwargs)
+
+    def capture_apply(self, func, schema):
+        shipped["reduce"] = func
+        return real_apply(self, func, schema)
+
+    monkeypatch.setattr(frame_cls, "mapInPandas", capture_map)
+    monkeypatch.setattr(grouped_cls, "applyInPandas", capture_apply)
+
+    def map_fn(chunk):
+        for v in chunk["v"]:
+            yield {"k": v % 2, "v": v}
+
+    def reduce_fn(key, group):
+        yield {"k": key[0], "n": len(group)}
+
+    map_reduce(df, map_fn, "k int, v int", ["k"], reduce_fn, "k int, n long")
+    pickled = tmp_path / "closures.pkl"
+    pickled.write_bytes(cloudpickle.dumps((shipped["map"], shipped["reduce"])))
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = f"""
+import os, sys
+sys.path = [p for p in sys.path
+            if os.path.abspath(p or os.getcwd()) != {repo!r}]
+import importlib.util
+assert importlib.util.find_spec("firebird_mapreduce_spark") is None
+import pickle
+import pandas as pd
+map_c, reduce_c = pickle.loads(open({str(pickled)!r}, "rb").read())
+mapped = pd.concat(map_c(iter([pd.DataFrame({{"v": [1, 2, 3]}})])))
+print(mapped.to_dict("list"))
+print(reduce_c((1,), mapped[mapped["k"] == 1]).to_dict("list"))
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=120,
+    )
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.splitlines() == [
+        "{'k': [1, 0, 1], 'v': [1, 2, 3]}",
+        "{'k': [1], 'n': [2]}",
+    ]
 
 
 def test_count_by_key_matches_sql(spark):

@@ -1452,3 +1452,55 @@ def test_snapshot_seeder_contract_and_hadoop_copy_path(spark, tmp_path):
     )
     copied = dst_dir / "part-0_00003.c000.parquet"
     assert copied.read_bytes() == b"payload"
+
+
+def test_snapshot_seeder_keeps_remote_warehouse_scheme(spark, monkeypatch, tmp_path):
+    """On a non-``file:`` warehouse the seeder's destination keeps the
+    URI scheme: the stale table directory is deleted and the files are
+    copied through the Hadoop FileSystem API at ``hdfs://…/<table>``, not
+    at a scheme-less path that would resolve against ``fs.defaultFS`` or
+    the driver's local disk.  The Hadoop calls are recorded, not run; the
+    delete helper itself is exercised on a ``file:`` directory."""
+    from firebird_mapreduce_spark.streaming import jobs
+
+    calls = []
+    # the path part sits under tmp_path, so a scheme-dropping regression
+    # writes there, not at the host's root
+    warehouse = f"hdfs://namenode:8020{tmp_path}/warehouse"
+    monkeypatch.setattr(R, "warehouse_uri", lambda spark: warehouse + "/")
+    monkeypatch.setattr(
+        jobs, "_hadoop_delete", lambda spark, uri: calls.append(("delete", uri))
+    )
+    monkeypatch.setattr(
+        jobs,
+        "_hadoop_copy_files",
+        lambda spark, files, dst: calls.append(("copy", sorted(files), dst)),
+    )
+    spark.sql("DROP TABLE IF EXISTS snap_uri_base")
+    (
+        spark.range(16)
+        .selectExpr("CAST(id AS STRING) AS h")
+        .repartition(8, "h")
+        .write.bucketBy(8, "h")
+        .sortBy("h")
+        .saveAsTable("snap_uri_base")
+    )
+    try:
+        base = spark.table("snap_uri_base")
+        jobs._snapshot_bucketed_state(spark, base, "snap_uri_probe", ("h",))
+        dst = f"{warehouse}/snap_uri_probe"
+        assert calls == [
+            ("delete", dst),
+            ("copy", sorted(base.inputFiles()), dst),
+        ]
+    finally:
+        spark.sql("DROP TABLE IF EXISTS snap_uri_probe")
+        spark.sql("DROP TABLE IF EXISTS snap_uri_base")
+
+    monkeypatch.undo()
+    stale = tmp_path / "stale"
+    (stale / "sub").mkdir(parents=True)
+    (stale / "sub" / "part-0.parquet").write_bytes(b"x")
+    jobs._hadoop_delete(spark, f"file:{stale}")
+    assert not stale.exists()
+    jobs._hadoop_delete(spark, f"file:{stale}")  # absent is fine
