@@ -583,12 +583,17 @@ def _phash_doc_ids(spark: SparkSession, sf_dir: str) -> list[int]:
 _FIXTURE_READY: set[tuple[str, str]] = set()
 
 
-def _assets_spec_sig(assets: list, version: str) -> str:
+def _assets_spec_sig(assets: list, *payload_code) -> str:
+    """md5 over the asset spec and the source (``inspect.getsource``) of
+    every module or function that shapes the payload bytes, so an edit
+    to the encoder or the sample generator invalidates the marker."""
     import hashlib
+    import inspect
 
-    return hashlib.md5(
-        f"{version}|{sorted(assets)!r}".encode()
-    ).hexdigest()
+    h = hashlib.md5(repr(sorted(assets)).encode())
+    for obj in payload_code:
+        h.update(inspect.getsource(obj).encode())
+    return h.hexdigest()
 
 
 def _assets_marker_ok(
@@ -600,8 +605,8 @@ def _assets_marker_ok(
     encode-and-compare loop, which was re-deriving every payload on
     EVERY query construction (measured ~0.5-0.9 s per media-query
     build at sf0.1).  The slow path still runs — and rewrites the
-    marker — whenever the spec, the encoder version, or the file set
-    changes."""
+    marker — whenever the spec, the source of the code that shapes the
+    payload bytes (``_assets_spec_sig``), or the file set changes."""
     import json
 
     key = (out_dir, sig)
@@ -635,11 +640,11 @@ def _write_phash_assets(
 ) -> None:
     """Write one 32x32 block-constant PNG per (asset_id, doc_id, pert,
     salt) row, with the shared idempotence + stale-prune discipline."""
-    from ..functions.png import png_encode
+    from ..functions import png
 
     os.makedirs(out_dir, exist_ok=True)
     expected = {f"asset_{aid:07d}.png" for aid, _, _, _ in assets}
-    sig = _assets_spec_sig(assets, "png-mixed-v1")
+    sig = _assets_spec_sig(assets, png, _phash_grid, _write_phash_assets)
     if _assets_marker_ok(out_dir, "png", expected, sig):
         return
     for name in os.listdir(out_dir):
@@ -652,7 +657,9 @@ def _write_phash_assets(
             for x in range(_PHASH_SIDE):
                 g = grid[y // 4][x // 4]
                 rgb += bytes((g, g, g))
-        payload = png_encode(_PHASH_SIDE, _PHASH_SIDE, bytes(rgb), filter_mode="mixed")
+        payload = png.png_encode(
+            _PHASH_SIDE, _PHASH_SIDE, bytes(rgb), filter_mode="mixed"
+        )
         path = os.path.join(out_dir, f"asset_{aid:07d}.png")
         if os.path.exists(path):
             with open(path, "rb") as fh:
@@ -1247,11 +1254,11 @@ def _write_afp_assets(
     """Write one square-wave WAV per (asset_id, doc_id, pert, salt) row,
     with the shared idempotence + stale-prune discipline (marker fast
     path shared with the PNG writer — see ``_assets_marker_ok``)."""
-    from ..functions.wav import wav_encode
+    from ..functions import wav
 
     os.makedirs(out_dir, exist_ok=True)
     expected = {f"asset_{aid:07d}.wav" for aid, _, _, _ in assets}
-    sig = _assets_spec_sig(assets, "wav-v1")
+    sig = _assets_spec_sig(assets, wav, _afp_amplitudes, _write_afp_assets)
     if _assets_marker_ok(out_dir, "wav", expected, sig):
         return
     for name in os.listdir(out_dir):
@@ -1262,7 +1269,7 @@ def _write_afp_assets(
         samples = [
             a if i % 2 == 0 else -a for a in amps for i in range(_AFP_WIN)
         ]
-        payload = wav_encode(_AFP_RATE, samples)
+        payload = wav.wav_encode(_AFP_RATE, samples)
         path = os.path.join(out_dir, f"asset_{aid:07d}.wav")
         if os.path.exists(path):
             with open(path, "rb") as fh:

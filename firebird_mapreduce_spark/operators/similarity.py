@@ -40,9 +40,11 @@ def cosine_topk(
 ) -> DataFrame:
     """Exact brute-force cosine top-k against a literal query vector.
 
-    The query vector is baked into the plan as an array literal (the
-    broadcast-a-scalar pattern); ordering ties broken by id so the result
-    is deterministic."""
+    The query vector is baked into the plan as an array of ``F.lit``
+    elements.  Those literals are compiled into the scoring stage's
+    generated code, so each distinct query vector compiles its own class;
+    the registered queries all use the fixed ``QUERY_VEC_ID``'s vector.
+    Ordering ties broken by id so the result is deterministic."""
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     scored = embeddings.select(
         F.col(id_col),
@@ -3995,34 +3997,43 @@ def sq8_codes(emb: DataFrame) -> DataFrame:
     )
 
 
+# The symmetric SQ8 score of a coded row (maxabs, codes) against the
+# broadcast query row (q_maxabs, q_codes): exact BIGINT dot, then ONE
+# mirrored rescale ``round(maxabs · q_maxabs · dot / 127², 6)`` — the
+# oracle SQL's operation order, so Spark and DuckDB agree bit-for-bit.
+# One parsed expression names only columns: no query value is inlined
+# into the generated code.
+SQ8_SCORE_SQL = (
+    "round(maxabs * q_maxabs * CAST(aggregate(zip_with(codes, q_codes,"
+    " (a, b) -> CAST(a AS BIGINT) * CAST(b AS BIGINT)), CAST(0 AS BIGINT),"
+    f" (acc, v) -> acc + v) AS DOUBLE) / CAST({SQ8_DENOM} AS DOUBLE), 6)"
+)
+
+
 def sq8_score_topk(coded: DataFrame, query_id: int, k: int) -> DataFrame:
     """Top-k by symmetric SQ8 score over a PRE-CODED (vec_id, maxabs,
     codes) frame: exact BIGINT integer dot in the hot loop, one mirrored
-    final rescale ``round(maxabs_a · maxabs_q · dot / 127², 6)``, ranked
-    (sim DESC, vec_id ASC) — the serving-path tail shared by the inline
-    and persisted-table spellings."""
+    final rescale (``SQ8_SCORE_SQL``), ranked (sim DESC, vec_id ASC) —
+    the serving-path tail shared by the inline and persisted-table
+    spellings.
+
+    Query-independent scoring stage: the query id is a literal only in
+    the 1-row query-side filter.  The query row carries its own id
+    (``q_id``) into the broadcast, and self is dropped by the column
+    comparison ``vec_id != q_id`` after the cross join, so the scan-side
+    ``BroadcastNestedLoopJoin`` stage generates the same Java for every
+    query and a served query reuses the already compiled (and JIT-warm)
+    class instead of compiling its own.  Pinned by
+    ``tests/test_plans.py::test_sq8_scoring_stage_code_is_query_independent``."""
     q = coded.filter(F.col("vec_id") == query_id).select(
-        F.col("maxabs").alias("q_maxabs"), F.col("codes").alias("q_codes")
-    )
-    scored = coded.filter(F.col("vec_id") != query_id).crossJoin(F.broadcast(q))
-    dot_int = F.aggregate(
-        F.zip_with(
-            F.col("codes"),
-            F.col("q_codes"),
-            lambda a, b: a.cast("long") * b.cast("long"),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    sim = F.round(
-        F.col("maxabs")
-        * F.col("q_maxabs")
-        * dot_int.cast("double")
-        / F.lit(SQ8_DENOM),
-        6,
+        F.col("vec_id").alias("q_id"),
+        F.col("maxabs").alias("q_maxabs"),
+        F.col("codes").alias("q_codes"),
     )
     return (
-        scored.select("vec_id", sim.alias("sim_sq8"))
+        coded.crossJoin(F.broadcast(q))
+        .filter(F.col("vec_id") != F.col("q_id"))
+        .select("vec_id", F.expr(SQ8_SCORE_SQL).alias("sim_sq8"))
         .orderBy(F.desc("sim_sq8"), F.asc("vec_id"))
         .limit(k)
     )
@@ -4216,24 +4227,8 @@ def embedding_sq8_knn_incremental(
         F.col("maxabs").alias("q_maxabs"),
         F.col("codes").alias("q_codes"),
     )
-    dot_int = F.aggregate(
-        F.zip_with(
-            F.col("codes"),
-            F.col("q_codes"),
-            lambda a, b: a.cast("long") * b.cast("long"),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    sim = F.round(
-        F.col("maxabs")
-        * F.col("q_maxabs")
-        * dot_int.cast("double")
-        / F.lit(SQ8_DENOM),
-        6,
-    )
     scored = state.crossJoin(F.broadcast(q)).select(
-        "q_id", "vec_id", sim.alias("sim_sq8")
+        "q_id", "vec_id", F.expr(SQ8_SCORE_SQL).alias("sim_sq8")
     )
     w = Window.partitionBy("q_id").orderBy(
         F.desc("sim_sq8"), F.asc("vec_id")

@@ -1,6 +1,7 @@
 """Plan inspection and scale-posture assertions."""
 
 from .audit import (
+    codegen_stages,
     count_exchanges,
     has_broadcast_hash_join,
     has_pushed_filter,
@@ -16,4 +17,5 @@ __all__ = [
     "count_exchanges",
     "read_schema_columns",
     "wholestage_codegen_count",
+    "codegen_stages",
 ]

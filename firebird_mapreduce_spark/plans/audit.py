@@ -8,7 +8,8 @@ does the planning and these helpers make its decisions *testable*:
 - column pruning reaching the reader (``ReadSchema``),
 - small dimensions broadcast (``BroadcastHashJoin``),
 - shuffle counts (``Exchange``) bounded per query,
-- expressions inside whole-stage codegen.
+- expressions inside whole-stage codegen, and the Java each stage
+  generates (``codegen_stages``).
 
 ``tests/test_plans.py`` asserts these on the declared queries, so a
 regression that silently de-optimizes a plan (e.g. a UDF blocking
@@ -74,3 +75,16 @@ def wholestage_codegen_count(df: DataFrame) -> int:
     """Number of whole-stage-codegen spans; wider/fewer is better."""
     plan = plan_string(df, "simple")
     return len(set(re.findall(r"\*\((\d+)\)", plan)))
+
+
+def codegen_stages(df: DataFrame) -> list[tuple[str, str]]:
+    """``(stage header, generated Java source)`` for every whole-stage
+    codegen stage of ``df``'s executed plan.  Runs ``df.collect()`` first:
+    under AQE the stages exist only in the finalised plan.  The header is
+    the stage's subtree (join conditions included); equal sources for two
+    plans mean the second reuses the first's compiled class."""
+    df.collect()
+    jvm = df._sc._jvm  # type: ignore[attr-defined]
+    debug = getattr(jvm.org.apache.spark.sql.execution.debug, "package")
+    seq = debug.codegenStringSeq(df._jdf.queryExecution().executedPlan())
+    return [(seq.apply(i)._1(), seq.apply(i)._2()) for i in range(seq.length())]

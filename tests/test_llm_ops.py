@@ -223,6 +223,30 @@ def test_binary_fixture_prunes_stale_assets(spark):
     assert M.binary_file_meta(spark, SF_SMOKE).count() == 64
 
 
+def test_asset_marker_signature_tracks_encoder_source(tmp_path):
+    """The PNG/WAV fixture marker is keyed on the encoder's source: an
+    edited encoder changes the signature, so the writer re-encodes
+    instead of serving stale asset bytes under an old marker."""
+    import importlib.util
+
+    from firebird_mapreduce_spark.functions import png, wav
+
+    assets = [(10, 1, 0, "ph"), (11, 1, 1, "ph")]
+    path = tmp_path / "encoder.py"
+
+    def sig_of(body):
+        path.write_text(f"def encode(x):\n    return {body}\n")
+        spec = importlib.util.spec_from_file_location("encoder", path)
+        mod = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(mod)
+        return M._assets_spec_sig(assets, mod)
+
+    assert sig_of("x + 1") == sig_of("x + 1")
+    assert sig_of("x + 1") != sig_of("x * 2 + 1")
+    assert M._assets_spec_sig(assets, png) != M._assets_spec_sig(assets, wav)
+    assert M._assets_spec_sig(assets, png) != M._assets_spec_sig(assets[:1], png)
+
+
 def test_multimodal_decoder_gate():
     assert M.decoder_available("image") is False  # no PIL in container
     assert M.decoder_available("png") is True  # pure-stdlib codec always ships

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from firebird_mapreduce_spark.operators import relational as R
 from firebird_mapreduce_spark.plans import (
+    codegen_stages,
     count_exchanges,
     has_broadcast_hash_join,
     has_pushed_filter,
@@ -52,6 +53,39 @@ def test_q1_single_shuffle_and_codegen(spark):
     # AQE shows codegen spans only on the finalized plan — execute first
     df.collect()
     assert wholestage_codegen_count(df) >= 1
+
+
+def test_sq8_scoring_stage_code_is_query_independent(spark, tmp_path):
+    """The SQ8 scan-side stage generates the same Java for every query:
+    the query id reaches it as the broadcast row's ``q_id`` column, not as
+    a literal, so a new query reuses the compiled scoring class."""
+    import re
+
+    from firebird_mapreduce_spark.operators.similarity import (
+        sq8_codes,
+        sq8_score_topk,
+    )
+
+    emb = spark.createDataFrame(
+        [(i, [float((i * 7 + j * 3) % 11 - 5) for j in range(8)]) for i in range(40)],
+        "vec_id long, embedding array<float>",
+    )
+    # a stored code table, as the persisted SQ8 index is, so the scan
+    # side's filters compile into the scoring stage
+    sq8_codes(emb).write.parquet(str(tmp_path / "codes"))
+    coded = spark.read.parquet(str(tmp_path / "codes"))
+
+    def scoring_stage(query_id):
+        (stage,) = [
+            (header, src)
+            for header, src in codegen_stages(sq8_score_topk(coded, query_id, 3))
+            if "BroadcastNestedLoopJoin" in header.splitlines()[0]
+        ]
+        return stage
+
+    header, src = scoring_stage(3)
+    assert re.search(r"vec_id#\d+L = q_id#\d+L", header.splitlines()[0])
+    assert scoring_stage(17)[1] == src
 
 
 def test_topk_uses_take_ordered(spark):
