@@ -20,13 +20,16 @@ memory — 1000 × 10 MB images per batch is an OOM, not a tuning problem.
 from __future__ import annotations
 
 import os
+import sys
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import png, wav
 from ..sources import load_table
+from ..sources.fixtures import materialise
 from ..sources.readers import read_binary_dir
 
 # Schema for a multimodal asset table: metadata columns first (queryable
@@ -145,48 +148,40 @@ def binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _binary_fixture_dir(spark: SparkSession, sf_dir: str, n_assets: int = 64) -> str:
-    """Materialize a deterministic on-disk binary fixture: one ``.bin``
-    file per document with ``doc_id < n_assets``, bytes = the UTF-8 text.
-    Idempotent and derived purely from the corpus, so the DuckDB oracle can
-    reproduce every file's length and md5 from the ``documents`` table.
-    Written under the repo (never into the read-only test data)."""
-    import hashlib
+# assets per on-disk media fixture: documents with doc_id below these
+_BINARY_ASSETS = 64
+_PNG_ASSETS = 48
+_WAV_ASSETS = 48
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".fixtures",
-        f"binary_{tag}",
+
+def _binary_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
+    """One ``.bin`` file per document with ``doc_id < _BINARY_ASSETS``,
+    bytes = the UTF-8 text, so the DuckDB oracle reproduces every file's
+    length and md5 from the ``documents`` table."""
+
+    def write(out_dir: str) -> None:
+        rows = (
+            load_table(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") < _BINARY_ASSETS)
+            .select("doc_id", "text")
+            .collect()  # _BINARY_ASSETS tiny rows — fixture setup, not a data path
+        )
+        for row in rows:
+            name = f"asset_{int(row['doc_id']):05d}.bin"
+            with open(os.path.join(out_dir, name), "wb") as fh:
+                fh.write(row["text"].encode("utf-8"))
+
+    ids = _fixture_doc_ids(spark, sf_dir, _BINARY_ASSETS)
+    return materialise(
+        "binary",
+        (sf_dir,),
+        ".bin",
+        [f"asset_{d:05d}.bin" for d in ids],
+        write,
+        spec=sorted(ids),
+        code=(sys.modules[__name__],),
+        corpus=(sf_dir, "documents"),
     )
-    rows = (
-        load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < n_assets)
-        .select("doc_id", "text")
-        .collect()  # n_assets tiny rows — fixture setup, not a data path
-    )
-    os.makedirs(out_dir, exist_ok=True)
-    expected = {f"asset_{int(row['doc_id']):05d}.bin" for row in rows}
-    # prune stale assets first: if n_assets shrinks or a regenerated
-    # corpus drops doc_ids, leftover asset_*.bin files would still be
-    # globbed by binary_file_meta and break the oracle's row count with a
-    # confusing mismatch (ADVICE round 2)
-    for name in os.listdir(out_dir):
-        if name.endswith(".bin") and name not in expected:
-            os.remove(os.path.join(out_dir, name))
-    for row in rows:
-        path = os.path.join(out_dir, f"asset_{int(row['doc_id']):05d}.bin")
-        payload = row["text"].encode("utf-8")
-        # compare CONTENT, not just size: a regenerated corpus with
-        # equal-length text would otherwise leave stale fixture bytes and
-        # fail the md5 oracle confusingly
-        if os.path.exists(path):
-            with open(path, "rb") as fh:
-                if fh.read() == payload:
-                    continue
-        with open(path, "wb") as fh:
-            fh.write(payload)
-    return out_dir
 
 
 def binary_file_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -225,8 +220,6 @@ def fake_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (pure-stdlib PNG codec always; Pillow preferred when importable)
 # ---------------------------------------------------------------------------
 
-_PNG_ASSETS = 48
-
 
 def _png_dims(doc_id: int) -> tuple[int, int, int]:
     """Deterministic (width, height, gray level) per asset — arithmetic a
@@ -235,40 +228,20 @@ def _png_dims(doc_id: int) -> tuple[int, int, int]:
     return 8 + doc_id % 24, 8 + (doc_id * 7) % 24, doc_id % 256
 
 
+def _png_payload(doc_id: int) -> bytes:
+    w, h, level = _png_dims(doc_id)
+    return png.png_encode(w, h, bytes([level]) * (w * h * 3), filter_mode="mixed")
+
+
 def _png_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
     """Materialize deterministic REAL PNG files (one per doc_id <
     ``_PNG_ASSETS``): valid signature, CRC-checked chunks, zlib IDAT, and
     a per-row filter cycle (0..4) so decoding must run every unfilter
     path.  Dimensions and the constant gray level derive from doc_id
-    (``_png_dims``), which is what makes the decode oracle-checkable.
-    Same idempotence + stale-prune discipline as ``_binary_fixture_dir``."""
-    import hashlib
-
-    from ..functions.png import png_encode
-
-    tag = hashlib.md5(f"png|{sf_dir}".encode()).hexdigest()[:8]
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".fixtures",
-        f"png_{tag}",
-    )
-    doc_ids = _fixture_doc_ids(spark, sf_dir, _PNG_ASSETS)
-    os.makedirs(out_dir, exist_ok=True)
-    expected = {f"asset_{d:05d}.png" for d in doc_ids}
-    for name in os.listdir(out_dir):
-        if name.endswith(".png") and name not in expected:
-            os.remove(os.path.join(out_dir, name))
-    for doc_id in doc_ids:
-        w, h, level = _png_dims(doc_id)
-        payload = png_encode(w, h, bytes([level]) * (w * h * 3), filter_mode="mixed")
-        path = os.path.join(out_dir, f"asset_{doc_id:05d}.png")
-        if os.path.exists(path):
-            with open(path, "rb") as fh:
-                if fh.read() == payload:
-                    continue
-        with open(path, "wb") as fh:
-            fh.write(payload)
-    return out_dir
+    (``_png_dims``), which is what makes the decode oracle-checkable."""
+    ids = _fixture_doc_ids(spark, sf_dir, _PNG_ASSETS)
+    payloads = {f"asset_{d:05d}.png": (d,) for d in ids}
+    return _asset_fixture("png", sf_dir, ".png", payloads, _png_payload, png)
 
 
 def decode_png_features(df: DataFrame, content_col: str = "content") -> DataFrame:
@@ -373,9 +346,6 @@ def image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_WAV_ASSETS = 48
-
-
 def _wav_props(doc_id: int) -> tuple[int, int, int]:
     """Deterministic (sample_rate, n_samples, amplitude) per asset —
     doc_id arithmetic a SQL oracle re-derives.  Samples alternate
@@ -384,38 +354,17 @@ def _wav_props(doc_id: int) -> tuple[int, int, int]:
     return 8000 + (doc_id % 8) * 1000, 256 + (doc_id % 512), (doc_id % 100) * 100
 
 
+def _wav_payload(doc_id: int) -> bytes:
+    rate, n, amp = _wav_props(doc_id)
+    return wav.wav_encode(rate, [amp if i % 2 == 0 else -amp for i in range(n)])
+
+
 def _wav_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
     """Materialize deterministic REAL WAV files (RIFF/fmt/data chunks,
-    16-bit PCM square waves) for doc_id < ``_WAV_ASSETS`` — same
-    idempotence + stale-prune discipline as the PNG fixture."""
-    import hashlib
-
-    from ..functions.wav import wav_encode
-
-    tag = hashlib.md5(f"wav|{sf_dir}".encode()).hexdigest()[:8]
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".fixtures",
-        f"wav_{tag}",
-    )
-    doc_ids = _fixture_doc_ids(spark, sf_dir, _WAV_ASSETS)
-    os.makedirs(out_dir, exist_ok=True)
-    expected = {f"asset_{d:05d}.wav" for d in doc_ids}
-    for name in os.listdir(out_dir):
-        if name.endswith(".wav") and name not in expected:
-            os.remove(os.path.join(out_dir, name))
-    for doc_id in doc_ids:
-        rate, n, amp = _wav_props(doc_id)
-        samples = [amp if i % 2 == 0 else -amp for i in range(n)]
-        payload = wav_encode(rate, samples)
-        path = os.path.join(out_dir, f"asset_{doc_id:05d}.wav")
-        if os.path.exists(path):
-            with open(path, "rb") as fh:
-                if fh.read() == payload:
-                    continue
-        with open(path, "wb") as fh:
-            fh.write(payload)
-    return out_dir
+    16-bit PCM square waves, ``_wav_props``) for doc_id < ``_WAV_ASSETS``."""
+    ids = _fixture_doc_ids(spark, sf_dir, _WAV_ASSETS)
+    payloads = {f"asset_{d:05d}.wav": (d,) for d in ids}
+    return _asset_fixture("wav", sf_dir, ".wav", payloads, _wav_payload, wav)
 
 
 def audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -527,22 +476,12 @@ def _phash_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
     decode runs every unfilter path.  Assets: every document with
     doc_id < ``_PHASH_BASE`` contributes a base image (id = doc_id*10);
     every 4th also a brightness-shifted near-copy (id+1) and every 8th a
-    one-block retouch (id+2) — the planted near-dup classes.  Same
-    idempotence + stale-prune discipline as the PNG/WAV fixtures."""
-    import hashlib
-
-    tag = hashlib.md5(f"phash|{sf_dir}".encode()).hexdigest()[:8]
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".fixtures",
-        f"phash_{tag}",
-    )
+    one-block retouch (id+2) — the planted near-dup classes."""
     doc_ids = _phash_doc_ids(spark, sf_dir)
     assets = [(d * 10, d, 0, "ph") for d in doc_ids]
     assets += [(d * 10 + 1, d, 1, "ph") for d in doc_ids if d % 4 == 0]
     assets += [(d * 10 + 2, d, 2, "ph") for d in doc_ids if d % 8 == 0]
-    _write_phash_assets(out_dir, assets)
-    return out_dir
+    return _phash_assets_dir("phash", sf_dir, assets)
 
 
 _FIXTURE_IDS_CACHE: dict[tuple, list[int]] = {}
@@ -550,8 +489,8 @@ _FIXTURE_IDS_CACHE: dict[tuple, list[int]] = {}
 
 def _fixture_doc_ids(spark: SparkSession, sf_dir: str, below: int) -> list[int]:
     """The document ids a fixture derives its assets from — ONE collect
-    loop shared by every fixture builder (PNG, WAV, phash, audio
-    fingerprint), so a future change to the id rule cannot silently
+    loop shared by every media fixture builder (binary, PNG, WAV, phash,
+    audio fingerprint), so a future change to the id rule cannot silently
     desynchronize a fixture from its oracle's ids CTE.  A tiny driver
     fetch by construction, never a data path.  Memoized per
     (path, mtime, size, below) — the ``corpus_tag`` stat-signature
@@ -578,96 +517,46 @@ def _phash_doc_ids(spark: SparkSession, sf_dir: str) -> list[int]:
     return _fixture_doc_ids(spark, sf_dir, _PHASH_BASE)
 
 
-# fixture dirs whose asset-spec signature this process has already
-# verified — repeated query CONSTRUCTIONS skip even the marker stat
-_FIXTURE_READY: set[tuple[str, str]] = set()
+def _asset_fixture(
+    kind: str, sf_dir: str, suffix: str, payloads: dict, encode, codec
+) -> str:
+    """``.fixtures/<kind>_<tag>`` through ``sources.fixtures.materialise``:
+    one file per ``payloads`` entry (name -> ``encode(*args)``), signed by
+    the entries, the ``codec`` module's source and this module's (the
+    payload functions, sample generators and their constants)."""
+
+    def write(out_dir: str) -> None:
+        for name, args in payloads.items():
+            with open(os.path.join(out_dir, name), "wb") as fh:
+                fh.write(encode(*args))
+
+    return materialise(
+        kind,
+        (sf_dir,),
+        suffix,
+        payloads,
+        write,
+        spec=sorted(payloads.items()),
+        code=(codec, sys.modules[__name__]),
+    )
 
 
-def _assets_spec_sig(assets: list, *payload_code) -> str:
-    """md5 over the asset spec and the source (``inspect.getsource``) of
-    every module or function that shapes the payload bytes, so an edit
-    to the encoder or the sample generator invalidates the marker."""
-    import hashlib
-    import inspect
-
-    h = hashlib.md5(repr(sorted(assets)).encode())
-    for obj in payload_code:
-        h.update(inspect.getsource(obj).encode())
-    return h.hexdigest()
+def _phash_payload(doc_id: int, pert: int, salt: str) -> bytes:
+    grid = _phash_grid(doc_id, pert, salt)
+    rgb = bytearray()
+    for y in range(_PHASH_SIDE):
+        for x in range(_PHASH_SIDE):
+            g = grid[y // 4][x // 4]
+            rgb += bytes((g, g, g))
+    return png.png_encode(_PHASH_SIDE, _PHASH_SIDE, bytes(rgb), filter_mode="mixed")
 
 
-def _assets_marker_ok(
-    out_dir: str, suffix: str, expected: set[str], sig: str
-) -> bool:
-    """Fast idempotence path shared by the PNG and WAV asset writers
-    (r12): a ``_marker.json`` recording the asset-SPEC signature plus an
-    exact file-set match short-circuits the per-asset
-    encode-and-compare loop, which was re-deriving every payload on
-    EVERY query construction (measured ~0.5-0.9 s per media-query
-    build at sf0.1).  The slow path still runs — and rewrites the
-    marker — whenever the spec, the source of the code that shapes the
-    payload bytes (``_assets_spec_sig``), or the file set changes."""
-    import json
-
-    key = (out_dir, sig)
-    if key in _FIXTURE_READY:
-        return True
-    marker = os.path.join(out_dir, "_marker.json")
-    if not os.path.exists(marker):
-        return False
-    try:
-        with open(marker) as fh:
-            meta = json.load(fh)
-    except (OSError, ValueError):
-        return False
-    have = {f for f in os.listdir(out_dir) if f.endswith(f".{suffix}")}
-    if meta.get("sig") == sig and have == expected:
-        _FIXTURE_READY.add(key)
-        return True
-    return False
-
-
-def _assets_marker_write(out_dir: str, sig: str) -> None:
-    import json
-
-    with open(os.path.join(out_dir, "_marker.json"), "w") as fh:
-        json.dump({"sig": sig}, fh)
-    _FIXTURE_READY.add((out_dir, sig))
-
-
-def _write_phash_assets(
-    out_dir: str, assets: list[tuple[int, int, int, str]]
-) -> None:
-    """Write one 32x32 block-constant PNG per (asset_id, doc_id, pert,
-    salt) row, with the shared idempotence + stale-prune discipline."""
-    from ..functions import png
-
-    os.makedirs(out_dir, exist_ok=True)
-    expected = {f"asset_{aid:07d}.png" for aid, _, _, _ in assets}
-    sig = _assets_spec_sig(assets, png, _phash_grid, _write_phash_assets)
-    if _assets_marker_ok(out_dir, "png", expected, sig):
-        return
-    for name in os.listdir(out_dir):
-        if name.endswith(".png") and name not in expected:
-            os.remove(os.path.join(out_dir, name))
-    for aid, doc_id, pert, salt in assets:
-        grid = _phash_grid(doc_id, pert, salt)
-        rgb = bytearray()
-        for y in range(_PHASH_SIDE):
-            for x in range(_PHASH_SIDE):
-                g = grid[y // 4][x // 4]
-                rgb += bytes((g, g, g))
-        payload = png.png_encode(
-            _PHASH_SIDE, _PHASH_SIDE, bytes(rgb), filter_mode="mixed"
-        )
-        path = os.path.join(out_dir, f"asset_{aid:07d}.png")
-        if os.path.exists(path):
-            with open(path, "rb") as fh:
-                if fh.read() == payload:
-                    continue
-        with open(path, "wb") as fh:
-            fh.write(payload)
-    _assets_marker_write(out_dir, sig)
+def _phash_assets_dir(
+    kind: str, sf_dir: str, assets: list[tuple[int, int, int, str]]
+) -> str:
+    """One ``_phash_payload`` PNG per (asset_id, doc_id, pert, salt) row."""
+    payloads = {f"asset_{aid:07d}.png": (d, pert, salt) for aid, d, pert, salt in assets}
+    return _asset_fixture(kind, sf_dir, ".png", payloads, _phash_payload, png)
 
 
 def phash_hashes(assets: DataFrame, content_col: str = "content") -> DataFrame:
@@ -804,21 +693,12 @@ def _phash_batch_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
     genuinely new images (the "phb" md5 salt decorrelates them from the
     whole corpus).  Separate directory from the corpus fixture so the
     batch scan never re-reads corpus files."""
-    import hashlib
-
-    tag = hashlib.md5(f"phashb|{sf_dir}".encode()).hexdigest()[:8]
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".fixtures",
-        f"phashb_{tag}",
-    )
     doc_ids = _phash_doc_ids(spark, sf_dir)
     assets = [
         (d * 10 + 5, d, 3, "ph") if d % 3 == 0 else (d * 10 + 5, d, 0, "phb")
         for d in doc_ids
     ]
-    _write_phash_assets(out_dir, assets)
-    return out_dir
+    return _phash_assets_dir("phashb", sf_dir, assets)
 
 
 def _phash_band_keys(hashes: DataFrame) -> DataFrame:
@@ -1158,17 +1038,8 @@ def _funnel_image_fixture_dir(sf_dir: str, doc_ids: list[int]) -> str:
     keep ~1 doc per surviving group.  Same grid arithmetic
     (``_phash_grid``) and writer as the dedup fixtures, so the oracle
     re-derives every hash relationally."""
-    import hashlib
-
-    tag = hashlib.md5(f"phf|{sf_dir}".encode()).hexdigest()[:8]
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".fixtures",
-        f"phf_{tag}",
-    )
     assets = [(d, d - d % 4, d % 4, "phf") for d in doc_ids]
-    _write_phash_assets(out_dir, assets)
-    return out_dir
+    return _phash_assets_dir("phf", sf_dir, assets)
 
 
 # ---------------------------------------------------------------------------
@@ -1230,54 +1101,26 @@ def _afp_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
     equals its ``_afp_amplitudes`` value exactly in integer arithmetic.
     Assets mirror the phash families: every doc_id < ``_AFP_BASE``
     contributes a base clip (id = doc_id*10), every 4th also a
-    gain-shifted copy (id+1) and every 8th a one-window edit (id+2).
-    Same idempotence + stale-prune discipline as the PNG/WAV fixtures."""
-    import hashlib
-
-    tag = hashlib.md5(f"afp|{sf_dir}".encode()).hexdigest()[:8]
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".fixtures",
-        f"afp_{tag}",
-    )
+    gain-shifted copy (id+1) and every 8th a one-window edit (id+2)."""
     doc_ids = _fixture_doc_ids(spark, sf_dir, _AFP_BASE)
     assets = [(d * 10, d, 0, "au") for d in doc_ids]
     assets += [(d * 10 + 1, d, 1, "au") for d in doc_ids if d % 4 == 0]
     assets += [(d * 10 + 2, d, 2, "au") for d in doc_ids if d % 8 == 0]
-    _write_afp_assets(out_dir, assets)
-    return out_dir
+    return _afp_assets_dir("afp", sf_dir, assets)
 
 
-def _write_afp_assets(
-    out_dir: str, assets: list[tuple[int, int, int, str]]
-) -> None:
-    """Write one square-wave WAV per (asset_id, doc_id, pert, salt) row,
-    with the shared idempotence + stale-prune discipline (marker fast
-    path shared with the PNG writer — see ``_assets_marker_ok``)."""
-    from ..functions import wav
+def _afp_payload(doc_id: int, pert: int, salt: str) -> bytes:
+    amps = _afp_amplitudes(doc_id, pert, salt)
+    samples = [a if i % 2 == 0 else -a for a in amps for i in range(_AFP_WIN)]
+    return wav.wav_encode(_AFP_RATE, samples)
 
-    os.makedirs(out_dir, exist_ok=True)
-    expected = {f"asset_{aid:07d}.wav" for aid, _, _, _ in assets}
-    sig = _assets_spec_sig(assets, wav, _afp_amplitudes, _write_afp_assets)
-    if _assets_marker_ok(out_dir, "wav", expected, sig):
-        return
-    for name in os.listdir(out_dir):
-        if name.endswith(".wav") and name not in expected:
-            os.remove(os.path.join(out_dir, name))
-    for aid, doc_id, pert, salt in assets:
-        amps = _afp_amplitudes(doc_id, pert, salt)
-        samples = [
-            a if i % 2 == 0 else -a for a in amps for i in range(_AFP_WIN)
-        ]
-        payload = wav.wav_encode(_AFP_RATE, samples)
-        path = os.path.join(out_dir, f"asset_{aid:07d}.wav")
-        if os.path.exists(path):
-            with open(path, "rb") as fh:
-                if fh.read() == payload:
-                    continue
-        with open(path, "wb") as fh:
-            fh.write(payload)
-    _assets_marker_write(out_dir, sig)
+
+def _afp_assets_dir(
+    kind: str, sf_dir: str, assets: list[tuple[int, int, int, str]]
+) -> str:
+    """One ``_afp_payload`` WAV per (asset_id, doc_id, pert, salt) row."""
+    payloads = {f"asset_{aid:07d}.wav": (d, pert, salt) for aid, d, pert, salt in assets}
+    return _asset_fixture(kind, sf_dir, ".wav", payloads, _afp_payload, wav)
 
 
 def audio_fingerprints(assets: DataFrame, content_col: str = "content") -> DataFrame:
@@ -1368,21 +1211,12 @@ def _afp_batch_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
     md5 salt decorrelates them from the whole corpus).  Separate
     directory so the batch scan never re-reads corpus files — the
     ``_phash_batch_fixture_dir`` discipline on the audio tier."""
-    import hashlib
-
-    tag = hashlib.md5(f"afpb|{sf_dir}".encode()).hexdigest()[:8]
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".fixtures",
-        f"afpb_{tag}",
-    )
     doc_ids = _fixture_doc_ids(spark, sf_dir, _AFP_BASE)
     assets = [
         (d * 10 + 5, d, 3, "au") if d % 3 == 0 else (d * 10 + 5, d, 0, "aub")
         for d in doc_ids
     ]
-    _write_afp_assets(out_dir, assets)
-    return out_dir
+    return _afp_assets_dir("afpb", sf_dir, assets)
 
 
 def _funnel_audio_fixture_dir(sf_dir: str, doc_ids: list[int]) -> str:
@@ -1401,17 +1235,8 @@ def _funnel_audio_fixture_dir(sf_dir: str, doc_ids: list[int]) -> str:
     the image stage could not.  Same amplitude arithmetic
     (``_afp_amplitudes``) and writer as the dedup fixtures, so the
     oracle re-derives every fingerprint relationally."""
-    import hashlib
-
-    tag = hashlib.md5(f"auf|{sf_dir}".encode()).hexdigest()[:8]
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".fixtures",
-        f"auf_{tag}",
-    )
     assets = [(d, d - d % 8, d % 4, "auf") for d in doc_ids]
-    _write_afp_assets(out_dir, assets)
-    return out_dir
+    return _afp_assets_dir("auf", sf_dir, assets)
 
 
 def _ingest_image_batch_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -1425,21 +1250,12 @@ def _ingest_image_batch_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
     doc whose image flags — the image tier's own disposition — while
     d%8 == 0 is an EXACT-text doc whose image also flags, pinning the
     disposition precedence."""
-    import hashlib
-
-    tag = hashlib.md5(f"igb|{sf_dir}".encode()).hexdigest()[:8]
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".fixtures",
-        f"igb_{tag}",
-    )
     doc_ids = _fixture_doc_ids(spark, sf_dir, _PHASH_BASE)
     assets = [
         (d, d, 3, "ph") if d % 8 in (0, 2) else (d, d, 0, "igb")
         for d in doc_ids
     ]
-    _write_phash_assets(out_dir, assets)
-    return out_dir
+    return _phash_assets_dir("igb", sf_dir, assets)
 
 
 def _ingest_audio_batch_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -1450,21 +1266,12 @@ def _ingest_audio_batch_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
     salt).  d%8 == 3 is a NEW-text doc (audio is the only tier that
     flags it); d%8 == 1 is a NEAR-text doc whose audio also flags —
     the near > audio precedence pin."""
-    import hashlib
-
-    tag = hashlib.md5(f"agb|{sf_dir}".encode()).hexdigest()[:8]
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".fixtures",
-        f"agb_{tag}",
-    )
     doc_ids = _fixture_doc_ids(spark, sf_dir, _AFP_BASE)
     assets = [
         (d, d, 3, "au") if d % 8 in (1, 3) else (d, d, 0, "agb")
         for d in doc_ids
     ]
-    _write_afp_assets(out_dir, assets)
-    return out_dir
+    return _afp_assets_dir("agb", sf_dir, assets)
 
 
 def _ingest2_image_batch_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -1475,21 +1282,12 @@ def _ingest2_image_batch_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
     the batch-2 image flags IFF ingest 1's image was folded into the
     state — the fold probe, image edition.  The rest are genuinely new
     ("igb2" salt)."""
-    import hashlib
-
-    tag = hashlib.md5(f"igb2|{sf_dir}".encode()).hexdigest()[:8]
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".fixtures",
-        f"igb2_{tag}",
-    )
     doc_ids = _fixture_doc_ids(spark, sf_dir, _PHASH_BASE)
     assets = [
         (d, d, 2, "igb") if d % 8 == 7 else (d, d, 0, "igb2")
         for d in doc_ids
     ]
-    _write_phash_assets(out_dir, assets)
-    return out_dir
+    return _phash_assets_dir("igb2", sf_dir, assets)
 
 
 def _ingest2_audio_batch_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -1497,21 +1295,12 @@ def _ingest2_audio_batch_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
     d % 8 == 6 carry a pert-2 one-window re-record of the "agb" family
     (their own deterministically-kept ingest-1 clip) — the audio fold
     probe; the rest genuinely new ("agb2" salt)."""
-    import hashlib
-
-    tag = hashlib.md5(f"agb2|{sf_dir}".encode()).hexdigest()[:8]
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".fixtures",
-        f"agb2_{tag}",
-    )
     doc_ids = _fixture_doc_ids(spark, sf_dir, _AFP_BASE)
     assets = [
         (d, d, 2, "agb") if d % 8 == 6 else (d, d, 0, "agb2")
         for d in doc_ids
     ]
-    _write_afp_assets(out_dir, assets)
-    return out_dir
+    return _afp_assets_dir("agb2", sf_dir, assets)
 
 
 def _afp_state_tables(

@@ -347,10 +347,35 @@ def warehouse_path(spark: SparkSession) -> str:
     return urlparse(warehouse_uri(spark)).path
 
 
+def drop_warehouse_entries(
+    spark: SparkSession, prefixes: tuple[str, ...], keep: str | None = None
+) -> None:
+    """Delete every local warehouse entry whose name starts with one of
+    ``prefixes``, except ``keep`` — directories and regular files
+    alike.  A stale entry outlives the in-memory catalog: a fresh session
+    does not list it, and ``saveAsTable`` onto it fails with
+    LOCATION_ALREADY_EXISTS.  Best-effort: an entry a concurrent run
+    removes first is skipped."""
+    import contextlib
+    import shutil
+
+    root = warehouse_path(spark)
+    if not os.path.isdir(root):
+        return
+    for name in os.listdir(root):
+        if name.startswith(prefixes) and name != keep:
+            path = os.path.join(root, name)
+            if os.path.isdir(path):
+                shutil.rmtree(path, ignore_errors=True)
+            else:
+                with contextlib.suppress(FileNotFoundError):
+                    os.remove(path)
+
+
 # (applicationId, table) pairs this process has already built-or-found:
-# skip the per-call catalog sweep (listTables + a tableExists RPC per
-# orphaned warehouse dir — measured ~1.8 s/query on the r8 PQ serving
-# path, which makes 7 ensure calls).  The fast path still confirms the
+# skip the per-call catalog sweep (listTables + tableExists RPCs —
+# measured ~1.8 s/query on the r8 PQ serving path, which makes 7 ensure
+# calls).  The fast path still confirms the
 # table EXISTS (one cheap RPC), so an in-process drop — the folded-state
 # crash-guard rebuild — falls through to the full path.  Session-scoped
 # by applicationId: a new session re-verifies once, and the stale-corpus
@@ -369,12 +394,7 @@ def ensure_layout_table(
     layout (bucketed, Hive-partitioned): write ``build()`` as
     ``{prefix}{tag}`` with ``configure_writer`` applied if it does not
     exist, dropping stale same-prefix tables from older corpora and
-    orphaned warehouse directories (the warehouse DIRECTORY outlives the
-    in-memory catalog: a fresh session sees tableExists == False while
-    the managed location from a previous session still exists, and
-    saveAsTable then fails with LOCATION_ALREADY_EXISTS)."""
-    import shutil
-
+    orphaned warehouse entries (``drop_warehouse_entries``)."""
     tbl = f"{prefix}{tag}"
     key = (spark.sparkContext.applicationId, tbl)
     if key in _LAYOUT_READY:
@@ -384,12 +404,9 @@ def ensure_layout_table(
     for t in spark.catalog.listTables():
         if t.name.startswith(prefix) and t.name != tbl:
             spark.sql(f"DROP TABLE IF EXISTS {t.name}")
-    warehouse = warehouse_path(spark)
-    if os.path.isdir(warehouse):
-        for d in os.listdir(warehouse):
-            if d.startswith(prefix) and not spark.catalog.tableExists(d):
-                shutil.rmtree(os.path.join(warehouse, d), ignore_errors=True)
-    if not spark.catalog.tableExists(tbl):
+    exists = spark.catalog.tableExists(tbl)
+    drop_warehouse_entries(spark, (prefix,), keep=tbl if exists else None)
+    if not exists:
         configure_writer(build().write.mode("overwrite")).saveAsTable(tbl)
     _LAYOUT_READY.add(key)
     return spark.table(tbl)

@@ -1567,34 +1567,17 @@ _RETIRED_SWEPT: set[str] = set()
 
 
 def _drop_retired_pq_tables(spark: SparkSession) -> None:
-    import os
-    import shutil
-
-    from .relational import warehouse_path
+    from .relational import drop_warehouse_entries
 
     app = spark.sparkContext.applicationId
     if app in _RETIRED_SWEPT:
         return
     for t in spark.catalog.listTables():
-        if any(t.name.startswith(p) for p in _RETIRED_PQ_PREFIXES):
+        if t.name.startswith(_RETIRED_PQ_PREFIXES):
             spark.sql(f"DROP TABLE IF EXISTS {t.name}")
     # a fresh session's in-memory catalog does not list a PREVIOUS
-    # session's saveAsTable output, so also sweep the warehouse
-    # directories themselves (the ensure_layout_table orphan discipline;
-    # rmtree silently no-ops on regular files under ignore_errors, so
-    # handle both entry kinds — the _versioned_index_table split)
-    root = warehouse_path(spark)
-    if os.path.isdir(root):
-        for d in os.listdir(root):
-            if any(d.startswith(p) for p in _RETIRED_PQ_PREFIXES):
-                path = os.path.join(root, d)
-                if os.path.isdir(path):
-                    shutil.rmtree(path, ignore_errors=True)
-                else:
-                    import contextlib
-
-                    with contextlib.suppress(FileNotFoundError):
-                        os.remove(path)
+    # session's saveAsTable output, so also sweep the warehouse itself
+    drop_warehouse_entries(spark, _RETIRED_PQ_PREFIXES)
     _RETIRED_SWEPT.add(app)
 
 
@@ -2902,31 +2885,15 @@ def _versioned_index_table(
     corpus-sized, so an orphan is real disk), then open the
     content-tagged ``VersionedParquetTable`` whose commit log is the
     consumer-facing version pointer."""
-    import contextlib
     import os
-    import shutil
 
     from ..sources.versioned import VersionedParquetTable
-    from .relational import corpus_tag, warehouse_path
+    from .relational import corpus_tag, drop_warehouse_entries, warehouse_path
 
-    tag = corpus_tag(sf_dir, "embeddings")
-    root = warehouse_path(spark)
-    if os.path.isdir(root):
-        for d in os.listdir(root):
-            if d.startswith(prefix) and d != f"{prefix}{tag}":
-                path = os.path.join(root, d)
-                # total sweep: rmtree silently no-ops on regular files
-                # under ignore_errors, so handle both entry kinds
-                if os.path.isdir(path):
-                    shutil.rmtree(path, ignore_errors=True)
-                else:
-                    # best-effort like the rmtree branch: a concurrent
-                    # run on the same warehouse can win the race between
-                    # listdir and this remove
-                    with contextlib.suppress(FileNotFoundError):
-                        os.remove(path)
+    tbl = f"{prefix}{corpus_tag(sf_dir, 'embeddings')}"
+    drop_warehouse_entries(spark, (prefix,), keep=tbl)
     return VersionedParquetTable(
-        os.path.join(root, f"{prefix}{tag}"),
+        os.path.join(warehouse_path(spark), tbl),
         key_cols=key_cols or ["cluster", "d"],
     )
 

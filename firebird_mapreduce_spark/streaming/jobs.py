@@ -14,7 +14,9 @@ throughput delta in SCALE.md).
 
 from __future__ import annotations
 
+import inspect
 import os
+import sys
 from collections.abc import Iterator
 from contextlib import contextmanager as _contextmanager
 from typing import Any
@@ -23,6 +25,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from ..sources.fixtures import materialise
 
 # events stream schemas: ``ts`` is read as raw int64 when the parquet
 # stores TIMESTAMP(NANOS) (Spark cannot scan nanos natively — converted
@@ -96,9 +100,7 @@ def _events_split_dir(
     older rows than file i+1, so no row is ever behind the watermark its
     predecessors advanced — exactly the arrival pattern of a healthy
     production source.  (Deliberately LATE arrivals are crafted per-test,
-    not here.)  Idempotent: a marker records the source file's md5; stale
-    split files from an older corpus are pruned before rewrite.  Written
-    under the repo's .fixtures, never into the read-only test data.
+    not here.)
 
     ``flush_batches`` > 0 appends that many single-row SENTINEL batches
     (user_id −1, −2, …; event time far past the corpus) after the data
@@ -108,86 +110,73 @@ def _events_split_dir(
     lagged) timeout callbacks actually fire.  Sentinel users are
     negative, so consumers filter ``user_id >= 0``.  Production analogue:
     a source heartbeat/punctuation event."""
-    import hashlib
-    import json
-
     src = os.path.join(sf_dir, "events.parquet")
-    with open(src, "rb") as fh:
-        src_md5 = hashlib.md5(fh.read()).hexdigest()
-    tag = hashlib.md5(f"{sf_dir}|{n_files}|{flush_batches}".encode()).hexdigest()[:8]
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".fixtures",
-        f"events_split_{tag}",
+
+    def write(out_dir: str) -> None:
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        table = pq.read_table(src)
+        # ts-major, event_id-minor sort: deterministic file boundaries
+        order = pc.sort_indices(
+            table, sort_keys=[("ts", "ascending"), ("event_id", "ascending")]
+        )
+        table = table.take(order)
+        n = table.num_rows
+        base_mtime = os.path.getmtime(src)
+        for i in range(n_files):
+            lo = (n * i) // n_files
+            hi = (n * (i + 1)) // n_files
+            path = os.path.join(out_dir, f"part_{i:03d}.parquet")
+            # parquet format 2.6 (the pyarrow default) round-trips the
+            # source's timestamp physical type, so the split files carry the
+            # original table's exact ts unit (the stream reader re-detects it
+            # from the split dir's own footer either way)
+            pq.write_table(table.slice(lo, hi - lo), path)
+            # strictly increasing mtimes: FileStreamSource orders files by
+            # modification time, which fixes the batch order
+            os.utime(path, (base_mtime + i, base_mtime + i))
+        if flush_batches:
+            import datetime
+
+            import pyarrow as pa
+
+            max_ts = pc.max(table.column("ts")).as_py()
+            for i in range(flush_batches):
+                if isinstance(max_ts, int):  # TIMESTAMP(NANOS) read as int64
+                    flush_ts = max_ts + (30 + i) * 86_400 * 1_000_000_000
+                else:
+                    flush_ts = max_ts + datetime.timedelta(days=30 + i)
+                row = {
+                    "event_id": -1_000_000 - i,
+                    "ts": flush_ts,
+                    "user_id": -(i + 1),
+                    "event_type": "flush",
+                    "value": 0.0,
+                    "props": "{}",
+                }
+                flush_tbl = pa.Table.from_pylist(
+                    [{k: row.get(k) for k in table.schema.names}],
+                    schema=table.schema,
+                )
+                path = os.path.join(out_dir, f"flush_{i:03d}.parquet")
+                pq.write_table(flush_tbl, path)
+                os.utime(
+                    path, (base_mtime + n_files + i, base_mtime + n_files + i)
+                )
+
+    files = [f"part_{i:03d}.parquet" for i in range(n_files)]
+    files += [f"flush_{i:03d}.parquet" for i in range(flush_batches)]
+    return materialise(
+        "events_split",
+        (sf_dir, n_files, flush_batches),
+        ".parquet",
+        files,
+        write,
+        spec=(n_files, flush_batches),
+        code=(sys.modules[__name__],),
+        corpus=(sf_dir, "events"),
     )
-    marker = os.path.join(out_dir, "_marker.json")
-    expected = {f"part_{i:03d}.parquet" for i in range(n_files)} | {
-        f"flush_{i:03d}.parquet" for i in range(flush_batches)
-    }
-    if os.path.exists(marker):
-        with open(marker) as fh:
-            meta = json.load(fh)
-        have = {f for f in os.listdir(out_dir) if f.endswith(".parquet")}
-        if meta.get("src_md5") == src_md5 and have == expected:
-            return out_dir
-    os.makedirs(out_dir, exist_ok=True)
-    # prune anything not in the expected set (stale n_files / old corpus)
-    for f in os.listdir(out_dir):
-        if f.endswith(".parquet") and f not in expected:
-            os.remove(os.path.join(out_dir, f))
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    table = pq.read_table(src)
-    # ts-major, event_id-minor sort: deterministic file boundaries
-    order = pc.sort_indices(
-        table, sort_keys=[("ts", "ascending"), ("event_id", "ascending")]
-    )
-    table = table.take(order)
-    n = table.num_rows
-    base_mtime = os.path.getmtime(src)
-    for i in range(n_files):
-        lo = (n * i) // n_files
-        hi = (n * (i + 1)) // n_files
-        path = os.path.join(out_dir, f"part_{i:03d}.parquet")
-        # parquet format 2.6 (the pyarrow default) round-trips the
-        # source's timestamp physical type, so the split files carry the
-        # original table's exact ts unit (the stream reader re-detects it
-        # from the split dir's own footer either way)
-        pq.write_table(table.slice(lo, hi - lo), path)
-        # strictly increasing mtimes: FileStreamSource orders files by
-        # modification time, which fixes the batch order
-        os.utime(path, (base_mtime + i, base_mtime + i))
-    if flush_batches:
-        import datetime
-
-        import pyarrow as pa
-
-        max_ts = pc.max(table.column("ts")).as_py()
-        for i in range(flush_batches):
-            if isinstance(max_ts, int):  # TIMESTAMP(NANOS) read as int64
-                flush_ts = max_ts + (30 + i) * 86_400 * 1_000_000_000
-            else:
-                flush_ts = max_ts + datetime.timedelta(days=30 + i)
-            row = {
-                "event_id": -1_000_000 - i,
-                "ts": flush_ts,
-                "user_id": -(i + 1),
-                "event_type": "flush",
-                "value": 0.0,
-                "props": "{}",
-            }
-            flush_tbl = pa.Table.from_pylist(
-                [{k: row.get(k) for k in table.schema.names}], schema=table.schema
-            )
-            path = os.path.join(out_dir, f"flush_{i:03d}.parquet")
-            pq.write_table(flush_tbl, path)
-            os.utime(
-                path, (base_mtime + n_files + i, base_mtime + n_files + i)
-            )
-    with open(marker, "w") as fh:
-        json.dump({"src_md5": src_md5, "n_files": n_files}, fh)
-    return out_dir
 
 
 def stream_events_multibatch(
@@ -1062,50 +1051,35 @@ def _doc_batches_split_dir(
     discipline on the documents table, shared by every streaming twin
     of a multi-ingest batch query (one world derivation per pair — the
     streaming spelling must never re-spell the fixture).  Written via
-    single-partition Spark writes; idempotent via a source-md5 marker;
-    stale files pruned."""
+    single-partition Spark writes."""
     import glob as _glob
-    import hashlib
-    import json
     import shutil
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    with open(src, "rb") as fh:
-        src_md5 = hashlib.md5(fh.read()).hexdigest()
-    tag = hashlib.md5(f"{salt}|{sf_dir}".encode()).hexdigest()[:8]
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".fixtures",
-        f"docs_split_{tag}",
+    def write(out_dir: str) -> None:
+        world = world_fn(spark, sf_dir)
+        base_mtime = os.path.getmtime(os.path.join(sf_dir, "documents.parquet"))
+        for i, (lo, hi) in enumerate(splits):
+            batch = world.filter(F.col("doc_id") >= lo)
+            if hi is not None:
+                batch = batch.filter(F.col("doc_id") < hi)
+            tmp = os.path.join(out_dir, f"_tmp_{i}")
+            batch.coalesce(1).write.mode("overwrite").parquet(tmp)
+            part = _glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
+            path = os.path.join(out_dir, f"ingest_{i:03d}.parquet")
+            shutil.move(part, path)
+            shutil.rmtree(tmp, ignore_errors=True)
+            os.utime(path, (base_mtime + i, base_mtime + i))
+
+    return materialise(
+        "docs_split",
+        (salt, sf_dir),
+        ".parquet",
+        [f"ingest_{i:03d}.parquet" for i in range(len(splits))],
+        write,
+        spec=splits,
+        code=(sys.modules[__name__], world_fn, inspect.getmodule(world_fn)),
+        corpus=(sf_dir, "documents"),
     )
-    marker = os.path.join(out_dir, "_marker.json")
-    expected = {f"ingest_{i:03d}.parquet" for i in range(len(splits))}
-    if os.path.exists(marker):
-        with open(marker) as fh:
-            meta = json.load(fh)
-        have = {f for f in os.listdir(out_dir) if f.endswith(".parquet")}
-        if meta.get("src_md5") == src_md5 and have == expected:
-            return out_dir
-    os.makedirs(out_dir, exist_ok=True)
-    for f in os.listdir(out_dir):
-        if f.endswith(".parquet") and f not in expected:
-            os.remove(os.path.join(out_dir, f))
-    world = world_fn(spark, sf_dir)
-    base_mtime = os.path.getmtime(src)
-    for i, (lo, hi) in enumerate(splits):
-        batch = world.filter(F.col("doc_id") >= lo)
-        if hi is not None:
-            batch = batch.filter(F.col("doc_id") < hi)
-        tmp = os.path.join(out_dir, f"_tmp_{i}")
-        batch.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = _glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        path = os.path.join(out_dir, f"ingest_{i:03d}.parquet")
-        shutil.move(part, path)
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.utime(path, (base_mtime + i, base_mtime + i))
-    with open(marker, "w") as fh:
-        json.dump({"src_md5": src_md5}, fh)
-    return out_dir
 
 
 def _strinc_apply_batch(

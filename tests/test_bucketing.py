@@ -556,6 +556,46 @@ def test_compact_bucketed_table_one_file_per_bucket(spark):
     os.unlink(marker)
 
 
+def test_layout_sweep_removes_stale_dirs_and_files(spark, monkeypatch):
+    """``ensure_layout_table``'s warehouse sweep removes every stale
+    same-prefix entry, a leftover regular file as well as a directory,
+    and keeps the current table when a new session first meets it."""
+    import os
+    import shutil
+
+    from firebird_mapreduce_spark.operators import relational as R
+
+    prefix = "fb_sweep_t_"
+    root = R.warehouse_path(spark)
+    stale_dir = os.path.join(root, f"{prefix}olddir")
+    stale_file = os.path.join(root, f"{prefix}oldfile")
+    os.makedirs(stale_dir, exist_ok=True)
+    with open(os.path.join(stale_dir, "part-0.parquet"), "w") as fh:
+        fh.write("stale")
+    with open(stale_file, "w") as fh:
+        fh.write("stale")
+    try:
+        R.ensure_layout_table(spark, prefix, "cur", lambda: spark.range(3), lambda w: w)
+        assert not os.path.exists(stale_dir)
+        assert not os.path.exists(stale_file)
+        # a new session's first encounter sweeps again with the table live
+        monkeypatch.setattr(R, "_LAYOUT_READY", set())
+        with open(stale_file, "w") as fh:
+            fh.write("stale")
+
+        def no_rebuild():
+            raise AssertionError("the current table must be kept")
+
+        kept = R.ensure_layout_table(spark, prefix, "cur", no_rebuild, lambda w: w)
+        assert kept.count() == 3
+        assert not os.path.exists(stale_file)
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {prefix}cur")
+        shutil.rmtree(stale_dir, ignore_errors=True)
+        if os.path.exists(stale_file):
+            os.remove(stale_file)
+
+
 def test_ingest_screen_exchanges_batch_side_only(spark):
     """The unified multimodal ingest screen (r9; semantic tier r11):
     the corpus state tables (text hash/bands, image hash/bands, audio

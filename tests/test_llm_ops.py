@@ -224,12 +224,13 @@ def test_binary_fixture_prunes_stale_assets(spark):
 
 
 def test_asset_marker_signature_tracks_encoder_source(tmp_path):
-    """The PNG/WAV fixture marker is keyed on the encoder's source: an
-    edited encoder changes the signature, so the writer re-encodes
-    instead of serving stale asset bytes under an old marker."""
+    """The fixture marker is keyed on the encoder's source: an edited
+    encoder changes the signature, so the writer re-encodes instead of
+    serving stale asset bytes under an old marker."""
     import importlib.util
 
     from firebird_mapreduce_spark.functions import png, wav
+    from firebird_mapreduce_spark.sources.fixtures import signature
 
     assets = [(10, 1, 0, "ph"), (11, 1, 1, "ph")]
     path = tmp_path / "encoder.py"
@@ -239,12 +240,48 @@ def test_asset_marker_signature_tracks_encoder_source(tmp_path):
         spec = importlib.util.spec_from_file_location("encoder", path)
         mod = importlib.util.module_from_spec(spec)
         spec.loader.exec_module(mod)
-        return M._assets_spec_sig(assets, mod)
+        return signature(assets, (mod,))
 
     assert sig_of("x + 1") == sig_of("x + 1")
     assert sig_of("x + 1") != sig_of("x * 2 + 1")
-    assert M._assets_spec_sig(assets, png) != M._assets_spec_sig(assets, wav)
-    assert M._assets_spec_sig(assets, png) != M._assets_spec_sig(assets[:1], png)
+    assert signature(assets, (png,)) != signature(assets, (wav,))
+    assert signature(assets, (png,)) != signature(assets[:1], (png,))
+
+
+def test_fixture_rebuilds_after_a_failed_write(tmp_path, monkeypatch):
+    """A writer that crashes part-way must not leave a fixture the next
+    call serves: with one file missing the builder rewrites under the
+    same signature, the encoder writes a half-made first file and then
+    raises, and the following call must rebuild that file."""
+    import os
+    import shutil
+
+    from firebird_mapreduce_spark.functions import png
+
+    sf_dir, ids = str(tmp_path), [0, 1, 2, 3]  # sf_dir only tags the dir
+    out = M._funnel_image_fixture_dir(sf_dir, ids)
+    try:
+        first = os.path.join(out, "asset_0000000.png")
+        with open(first, "rb") as fh:
+            good = fh.read()
+        os.remove(first)
+        calls = []
+
+        def crash(*args, **kwargs):
+            calls.append(args)
+            if len(calls) > 1:
+                raise RuntimeError("writer crashed")
+            return b"half-written"
+
+        monkeypatch.setattr(png, "png_encode", crash)
+        with pytest.raises(RuntimeError, match="writer crashed"):
+            M._funnel_image_fixture_dir(sf_dir, ids)
+        monkeypatch.undo()
+        assert M._funnel_image_fixture_dir(sf_dir, ids) == out
+        with open(first, "rb") as fh:
+            assert fh.read() == good
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
 
 
 def test_multimodal_decoder_gate():

@@ -1504,3 +1504,43 @@ def test_snapshot_seeder_keeps_remote_warehouse_scheme(spark, monkeypatch, tmp_p
     jobs._hadoop_delete(spark, f"file:{stale}")
     assert not stale.exists()
     jobs._hadoop_delete(spark, f"file:{stale}")  # absent is fine
+
+
+def test_doc_split_fixture_tracks_world_function_source(spark):
+    """The document stream split is signed by the source of the world
+    function that shapes its rows: the same salt and splits with a world
+    whose source differs must rebuild, not serve the old world's rows
+    under a marker that only tracked the corpus bytes."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from firebird_mapreduce_spark.streaming.jobs import _doc_batches_split_dir
+
+    def world_a(sp, sd):
+        return sp.range(4).selectExpr("id AS doc_id", "'a' AS text")
+
+    def world_b(sp, sd):
+        return sp.range(4).selectExpr("id AS doc_id", "'b' AS text")
+
+    splits = ((0, 2), (2, None))
+    out = _doc_batches_split_dir(spark, SF_SMOKE, "world_src_test", world_a, splits)
+    try:
+        assert (
+            _doc_batches_split_dir(spark, SF_SMOKE, "world_src_test", world_b, splits)
+            == out
+        )
+        rows = [
+            (f, r["doc_id"], r["text"])
+            for f in sorted(os.listdir(out))
+            if f.endswith(".parquet")
+            for r in pq.read_table(os.path.join(out, f)).to_pylist()
+        ]
+        assert sorted(rows) == [
+            ("ingest_000.parquet", 0, "b"),
+            ("ingest_000.parquet", 1, "b"),
+            ("ingest_001.parquet", 2, "b"),
+            ("ingest_001.parquet", 3, "b"),
+        ]
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
