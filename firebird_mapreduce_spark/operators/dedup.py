@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hashing import exploded_word_shingles, simhash16, tokens
-from ..sources import load_table
+from ..sources import load_table, undirected
 
 # SQL fragment shared with the oracles in __spark_entry__.py: the augmented
 # corpus (original ∪ near-copy ∪ exact copy).
@@ -595,11 +595,8 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = augmented_documents(spark, sf_dir)
     pairs = dedup_minhash_lsh(spark, sf_dir)
-    edges = pairs.select(
-        F.col("a_id").alias("src"), F.col("b_id").alias("dst")
-    )
-    edges = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    edges = undirected(
+        pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
     )
     comp = connected_components(spark, edges)
     return (

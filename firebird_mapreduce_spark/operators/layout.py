@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 _AUTO_BUCKETED_SCAN_LOCK = threading.Lock()
 
 from ..functions.zorder import z2, z3, z4
+from ..session import session_confs
 from ..sources import load_table
 
 
@@ -394,20 +395,15 @@ def compact_bucketed_table(
     callers may compact different tables from threads safely."""
     tmp = f"{tbl}__compact"
     spark.sql(f"DROP TABLE IF EXISTS {tmp}")
-    auto = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    with _AUTO_BUCKETED_SCAN_LOCK:
-        prev = spark.conf.get(auto)
-        spark.conf.set(auto, "false")
-        try:
-            (
-                spark.table(tbl)
-                .repartition(n_buckets, *key_cols)
-                .write.bucketBy(n_buckets, *key_cols)
-                .sortBy(*key_cols)
-                .saveAsTable(tmp)
-            )
-        finally:
-            spark.conf.set(auto, prev)
+    auto = {"spark.sql.sources.bucketing.autoBucketedScan.enabled": "false"}
+    with _AUTO_BUCKETED_SCAN_LOCK, session_confs(spark, auto):
+        (
+            spark.table(tbl)
+            .repartition(n_buckets, *key_cols)
+            .write.bucketBy(n_buckets, *key_cols)
+            .sortBy(*key_cols)
+            .saveAsTable(tmp)
+        )
     spark.sql(f"DROP TABLE {tbl}")
     spark.sql(f"ALTER TABLE {tmp} RENAME TO {tbl}")
     return bucketed_table_file_count(spark, tbl)

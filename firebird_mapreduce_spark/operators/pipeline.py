@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import exploded_word_shingles, tokens
-from ..sources import load_table
+from ..sources import load_table, undirected
 
 # Shared regexes — Java (Spark) and RE2 (DuckDB) read these identically:
 # character classes, bounded repetition, no backrefs/lookaround.
@@ -1372,9 +1372,8 @@ def split_leakage_after_dedup(
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = minhash_pairs(docs.select("doc_id", "text"))
-    edges = pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
-    edges = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    edges = undirected(
+        pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
     )
     comp = connected_components(spark, edges)
     clusters = (
@@ -1915,6 +1914,16 @@ def ingest2_batch_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(prefixed("y"))
         .alias("text"),
     ).select((F.col("doc_id") + 700000).alias("doc_id"), "text")
+
+
+def ingest_deliveries_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Both unified deliveries' documents in one frame — the world the
+    multimodal crawl's stream split carves by doc_id range.  Named here,
+    beside the two batch functions, so the split's fixture signature
+    covers this module's source."""
+    return ingest_batch_docs(spark, sf_dir).unionByName(
+        ingest2_batch_docs(spark, sf_dir)
+    )
 
 
 def ingest_tworound_multimodal(

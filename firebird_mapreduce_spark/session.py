@@ -17,6 +17,7 @@ a 1000-executor cluster:
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -53,3 +54,22 @@ def get_session(app_name: str = "firebird-mapreduce-spark", **overrides: str) ->
     for key, value in confs.items():
         builder = builder.config(key, value)
     return builder.getOrCreate()
+
+
+@contextmanager
+def session_confs(spark: SparkSession, confs: dict[str, str]):
+    """Set session confs for the ``with`` body and restore them (unset if
+    previously unset) on success AND failure — the one save/restore of
+    session-global confs: a reader or job must not leave them mutated,
+    or later unrelated reads in the same session change behaviour."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, old in prev.items():
+            if old is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, old)

@@ -15,6 +15,7 @@ from .readers import (
     read_csv,
     read_json,
     read_parquet,
+    undirected,
     write_parquet,
 )
 
@@ -26,5 +27,6 @@ __all__ = [
     "read_csv",
     "read_json",
     "read_parquet",
+    "undirected",
     "write_parquet",
 ]

@@ -18,7 +18,6 @@ import inspect
 import os
 import sys
 from collections.abc import Iterator
-from contextlib import contextmanager as _contextmanager
 from typing import Any
 
 import pandas as pd
@@ -26,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..session import session_confs
 from ..sources.fixtures import materialise
 
 # events stream schemas: ``ts`` is read as raw int64 when the parquet
@@ -58,9 +58,9 @@ def _events_file_stream(
     execution time is set (and restored) by ``run_stream_to_memory``, not
     here: a plan builder must not mutate session state it cannot restore
     (same discipline as ``sources.readers.load_table``)."""
-    from ..sources.readers import _nanos_timestamp_cols
+    from ..sources.readers import _timestamp_col_classes
 
-    nanos = "ts" in _nanos_timestamp_cols(probe_path)
+    nanos = "ts" in _timestamp_col_classes(probe_path)[0]
     reader = spark.readStream.schema(
         _EVENTS_NANOS_SCHEMA if nanos else _EVENTS_MICROS_SCHEMA
     ).option("pathGlobFilter", glob)
@@ -827,26 +827,6 @@ ROCKSDB_PROVIDER = (
 )
 
 
-@_contextmanager
-def _session_confs(spark: SparkSession, confs: dict[str, str]):
-    """Set session confs for the lifetime of a streaming replay and
-    restore them (unset if previously unset) on success AND failure —
-    the one shared spelling of the save/restore dance every replay
-    harness in this module needs (a second inline copy already drifted
-    once)."""
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, old in prev.items():
-            if old is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, old)
-
-
 def run_stream_to_memory(
     df: DataFrame,
     name: str,
@@ -876,7 +856,7 @@ def run_stream_to_memory(
         confs["spark.sql.streaming.stateStore.providerClass"] = (
             state_store_provider
         )
-    with _session_confs(spark, confs):
+    with session_confs(spark, confs):
         query = (
             df.writeStream.format("memory")
             .queryName(name)
@@ -928,7 +908,7 @@ def _additive_mv_replay(
             table.apply_additive_batch(delta_fn(batch_df), batch_id, sum_cols)
 
         events = stream_events_multibatch(spark, sf_dir)
-        with _session_confs(
+        with session_confs(
             spark, {"spark.sql.legacy.parquet.nanosAsLong": "true"}
         ):
             q = (
@@ -1033,6 +1013,22 @@ def _docs_split_dir(spark: SparkSession, sf_dir: str) -> str:
         "docsplit",
         tworound_documents,
         ((100000, 200000), (200000, None)),
+    )
+
+
+def _mm_split_dir(spark: SparkSession, sf_dir: str) -> str:
+    """Materialize the unified crawl's two deliveries as a 2-file stream
+    source: file 0 = delivery 1 (doc_id in [600000, 700000)), file 1 =
+    delivery 2 (doc_id >= 700000), the content from
+    ``operators.pipeline.ingest_deliveries_docs``."""
+    from ..operators.pipeline import ingest_deliveries_docs
+
+    return _doc_batches_split_dir(
+        spark,
+        sf_dir,
+        "mmsplit",
+        ingest_deliveries_docs,
+        ((600000, 700000), (700000, None)),
     )
 
 
@@ -1638,7 +1634,6 @@ def stream_ingest_multimodal_query(
         _afp_state_tables,
         _phash_state_tables,
     )
-    from ..operators.pipeline import ingest2_batch_docs, ingest_batch_docs
     from ..operators.relational import corpus_tag, warehouse_path
     from ..operators.similarity import _semantic_state_tables
 
@@ -1672,15 +1667,7 @@ def stream_ingest_multimodal_query(
             cent=cent,
         )
 
-    sdir = _doc_batches_split_dir(
-        spark,
-        sf_dir,
-        "mmsplit",
-        lambda sp, sd: ingest_batch_docs(sp, sd).unionByName(
-            ingest2_batch_docs(sp, sd)
-        ),
-        ((600000, 700000), (700000, None)),
-    )
+    sdir = _mm_split_dir(spark, sf_dir)
     stream = (
         spark.readStream.schema("doc_id bigint, text string")
         .option("maxFilesPerTrigger", 1)

@@ -50,32 +50,18 @@ def dijkstra(edges: list[tuple[int, int, float]], source: int) -> dict[int, floa
 
 @pytest.mark.parametrize("source", [0, 2, 7])
 @pytest.mark.parametrize("checkpoint_every", [1, 2])
-@pytest.mark.parametrize("merge", ["union_agg", "delta"])
-def test_sssp_small_graph(spark, source, checkpoint_every, merge):
-    """Both state merges must reach the identical Dijkstra fixpoint, with
-    the driver probing every round and every second round (a probe window
-    that ends past convergence must not change the answer)."""
+def test_sssp_small_graph(spark, source, checkpoint_every):
+    """SSSP must reach the Dijkstra fixpoint with the driver probing every
+    round and every second round (a probe window that ends past
+    convergence must not change the answer)."""
     edges = undirected(
         spark.createDataFrame(SMALL_GRAPH_EDGES, "src INT, dst INT, weight DOUBLE")
     )
     result = {
         r["node"]: r["dist"]
-        for r in sssp(
-            spark, edges, source, checkpoint_every=checkpoint_every, state_merge=merge
-        ).collect()
+        for r in sssp(spark, edges, source, checkpoint_every=checkpoint_every).collect()
     }
     assert result == dijkstra(SMALL_GRAPH_EDGES, source)
-
-
-def test_sssp_rejects_unknown_state_merge(spark):
-    """A typo'd or removed strategy string must fail fast with ValueError,
-    not silently fall through to one of the branches (ADVICE r3)."""
-    edges = undirected(
-        spark.createDataFrame(SMALL_GRAPH_EDGES, "src INT, dst INT, weight DOUBLE")
-    )
-    for bad in ("ful_outer", "full_outer"):
-        with pytest.raises(ValueError, match="state_merge"):
-            sssp(spark, edges, 0, state_merge=bad)
 
 
 def test_sssp_syn_scale_vs_dijkstra(spark):
@@ -161,9 +147,7 @@ def test_star_cc_matches_label_prop_and_converges_log_rounds(spark):
     }
     # label propagation walks src->dst only; symmetrize to compare on
     # undirected semantics (star symmetrizes internally)
-    sym = syn.unionByName(
-        syn.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    sym = undirected(syn)
     label = {
         r["node"]: r["component"]
         for r in connected_components(

@@ -242,11 +242,11 @@ def test_cc_round1_no_forced_frontier_broadcast(spark):
     assert "ResolvedHint" not in plan and "UnresolvedHint" not in plan, plan
 
 
-def test_sssp_state_merge_strategies(spark):
-    """The two state merges plan as designed: ``delta`` is the large-state
-    shape (state-side shuffle pruned: left join + LeftAnti), ``union_agg``
-    — what ``auto`` picks on a small graph — has NO merge join at all, one
-    union + aggregate per round.  Both fixpoints are Dijkstra-checked in
+def test_sssp_round_is_one_union_aggregate(spark):
+    """An SSSP round merges with no join: state and candidates union into
+    one aggregate behind exactly one ``repartition(n, node)`` exchange.
+    The relax join (broadcast frontier ⋈ edges) is the round's only join,
+    and it never sort-merges.  The fixpoint is Dijkstra-checked in
     test_graph.py."""
     from firebird_mapreduce_spark.operators.graph import (
         derived_nation_graph,
@@ -254,23 +254,11 @@ def test_sssp_state_merge_strategies(spark):
     )
 
     edges = derived_nation_graph(spark, SF_SMOKE)
-    delta_plan = plan_string(
-        sssp(spark, edges, source=0, max_iterations=1, state_merge="delta"),
-        "simple",
-    )
-    assert "FullOuter" not in delta_plan, delta_plan
-    assert "LeftAnti" in delta_plan, delta_plan
-    for merge in ("union_agg", "auto"):
-        plan = plan_string(
-            sssp(spark, edges, source=0, max_iterations=1, state_merge=merge),
-            "simple",
-        )
-        assert "FullOuter" not in plan, plan
-        assert "LeftAnti" not in plan, plan
-        assert "Union" in plan, plan
-        # the relax join (broadcast frontier ⋈ edges) remains; no
-        # sort-merge join anywhere in the round plan
-        assert "SortMergeJoin" not in plan, plan
+    plan = plan_string(sssp(spark, edges, source=0, max_iterations=1), "simple")
+    assert "Union" in plan, plan
+    for join in ("LeftAnti", "LeftOuter", "FullOuter", "SortMergeJoin"):
+        assert join not in plan, (join, plan)
+    assert len(_round_agg_partitions(plan)) == 1, plan
 
 
 def _round_agg_partitions(plan: str) -> list[int]:
@@ -321,25 +309,18 @@ def test_sssp_round_reads_materialised_edges_and_sizes_its_shuffle(
                     spark.conf.get(key)
                 ))),
             )
-            for merge in ("union_agg", "delta"):
-                df = sssp(
-                    spark,
-                    read_edge_list(spark, str(path)),
-                    # from node 7 the round-1 probe still sees improved
-                    # rows, so round 2 plans over the round-1 checkpoint
-                    source=7,
-                    max_iterations=3,
-                    state_merge=merge,
-                )
-                plan = plan_string(df, "simple")
-                assert "FileScan" not in plan, plan
-                assert "Scan ExistingRDD" in plan, plan
-                # delta's per-node best feeds two joins, so its exchange
-                # appears twice in the static plan
-                assert set(_round_agg_partitions(plan)) == {want}, (
-                    advisory,
-                    plan,
-                )
+            df = sssp(
+                spark,
+                read_edge_list(spark, str(path)),
+                # from node 7 the round-1 probe still sees improved rows,
+                # so round 2 plans over the round-1 checkpoint
+                source=7,
+                max_iterations=3,
+            )
+            plan = plan_string(df, "simple")
+            assert "FileScan" not in plan, plan
+            assert "Scan ExistingRDD" in plan, plan
+            assert set(_round_agg_partitions(plan)) == {want}, (advisory, plan)
     finally:
         if prev is None:
             spark.conf.unset(key)

@@ -1544,3 +1544,26 @@ def test_doc_split_fixture_tracks_world_function_source(spark):
         ]
     finally:
         shutil.rmtree(out, ignore_errors=True)
+
+
+def test_mm_split_fixture_signs_the_pipeline_module(spark, monkeypatch):
+    """The multimodal crawl's stream split is shaped by the two delivery
+    functions in ``operators/pipeline.py``, so that module's source must be
+    among the split's signature inputs — an edit to either delivery then
+    rebuilds the split instead of serving it stale."""
+    import inspect
+
+    from firebird_mapreduce_spark.streaming import jobs
+
+    seen = {}
+
+    def fake_materialise(kind, key, suffix, files, write, **kw):
+        seen.update(kw)
+        return "unused"
+
+    monkeypatch.setattr(jobs, "materialise", fake_materialise)
+    jobs._mm_split_dir(spark, SF_SMOKE)
+    sources = {os.path.normpath(inspect.getsourcefile(obj)) for obj in seen["code"]}
+    assert any(
+        p.endswith(os.path.join("operators", "pipeline.py")) for p in sources
+    ), sources
