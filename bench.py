@@ -116,6 +116,9 @@ HEADLINE = [
     "dpp_join_events",
     # r6: the split cure — 2-nearest-cluster membership for candidates
     "dedup_semantic_multiassign",
+    # re-entered from RETIRED: its parameter slots became similarity
+    # module constants, so its source changed (its plan did not)
+    "dedup_semantic",
     # r6: two-ingest incremental dedup with the state fold — run 0 pays
     # the one-time state-table writes, runs 1+ are the amortized screens
     "dedup_incremental_tworound",
@@ -219,7 +222,6 @@ RETIRED = {
     "bigram_logprob": "unigram_logprob covers the LM-scoring shape",
     "dedup_incremental": "dedup_incremental_bucketed is the at-scale spelling",
     "dedup_ngram_jaccard": "dedup_minhash_lsh covers shingle-based near-dup",
-    "dedup_semantic": "dedup_semantic_multiassign supersets the candidate rule",
     "heavy_hitters_tokens": "heavy_hitters_mixed is the forced-compression case",
     "quality_filter_c4": "both curation funnels run the same rule gate",
     "skewed_rank_events": "skew_join_events covers the skew family",
@@ -250,7 +252,6 @@ RETIRED_SOURCE_MD5 = {
     "bigram_logprob": "cafd33af145842e2b155f2cf53ce5cb6",
     "dedup_incremental": "90f1f64a082f9283574449857ee2aa65",
     "dedup_ngram_jaccard": "9410e20b3ea2ee8765a0fab823c783d7",
-    "dedup_semantic": "c44e6d00b3d146be5c50367d1bf0bfe9",
     "heavy_hitters_tokens": "450a42d559fa8771a54e6ee8c606311a",
     "quality_filter_c4": "ed98c0a2f688520a8169d30dbf3d15bc",
     "skewed_rank_events": "797c9ddcab6d8547382e87a096dc09c8",

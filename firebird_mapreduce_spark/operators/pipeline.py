@@ -694,7 +694,6 @@ def _semantic_stage_dropped(
     pairs`` shared verbatim, the ``_modal_neardup_dropped`` discipline
     on the vector tier)."""
     from .similarity import (
-        N_CENTROIDS,
         NEARDUP_TABLES,
         SEMANTIC_THRESHOLD,
         _assign_to_centroids_arrays,
@@ -706,12 +705,8 @@ def _semantic_stage_dropped(
     )
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    assign_c = ensure_kmeans_exact_table(
-        spark, sf_dir, "raw", emb, N_CENTROIDS, 3
-    )
-    cent = ensure_centroid_table(
-        spark, sf_dir, "raw", emb, assign_c, N_CENTROIDS, 3
-    )
+    assign_c = ensure_kmeans_exact_table(spark, sf_dir, "raw", emb)
+    cent = ensure_centroid_table(spark, sf_dir, "raw", emb, assign_c)
     fam = surviving.select(
         "doc_id", (F.col("doc_id") - F.col("doc_id") % 4).alias("vec_id")
     )
@@ -1058,7 +1053,7 @@ def curation_pipeline_full_oracle_sql(
         _PHASH_THRESHOLD,
     )
     from .similarity import (
-        SEMANTIC_THRESHOLD,
+        KMEANS_ITERATIONS,
         _kmeans_exact_cte_chain,
         _sql_enroll,
         _sql_final_centroids,
@@ -1070,7 +1065,8 @@ def curation_pipeline_full_oracle_sql(
     if semantic_stage:
         chain = _kmeans_exact_cte_chain(cte_prefix="sx", with_kw=False)
         sem_ctes = f"""{chain.lstrip(",").lstrip()},
-        sxcf AS MATERIALIZED ({_sql_final_centroids("sxcomp", "sxa3")}),
+        sxcf AS MATERIALIZED ({_sql_final_centroids(
+            "sxcomp", f"sxa{KMEANS_ITERATIONS}")}),
         fsvec AS MATERIALIZED (
             SELECT n.doc_id AS vec_id,
                    list_transform(range(0, len(e.embedding)), j ->
@@ -1091,8 +1087,7 @@ def curation_pipeline_full_oracle_sql(
             FROM fssig a JOIN fssig b
               ON a.cluster = b.cluster AND a.tbl = b.tbl
              AND a.sig = b.sig AND a.vec_id < b.vec_id),
-        fsmatch AS MATERIALIZED ({_sql_semantic_match("fscand", "fsvec",
-                                         SEMANTIC_THRESHOLD)}),
+        fsmatch AS MATERIALIZED ({_sql_semantic_match("fscand", "fsvec")}),
         sem AS MATERIALIZED (SELECT * FROM nd
                 WHERE doc_id NOT IN (SELECT vec_id FROM fsmatch)),"""
         sem_cnt_cte = (
@@ -1565,7 +1560,6 @@ def _crawl_semantic_parts(
     cent: DataFrame,
     state_bands: DataFrame,
     state_vecs: DataFrame,
-    threshold: float,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """One delivery's SEMANTIC screen parts: (assign, band_keys,
     sem_rep) — exact-decimal assign-only enrollment against the
@@ -1599,9 +1593,7 @@ def _crawl_semantic_parts(
         "cluster",
         NEARDUP_TABLES,
     )
-    rep = _semantic_screen(
-        keys, assign, state_bands, state_vecs, bvecs, threshold
-    ).select(
+    rep = _semantic_screen(keys, assign, state_bands, state_vecs, bvecs).select(
         F.col("vec_id").alias("doc_id"), (~F.col("kept")).alias("semantic_hit")
     )
     return assign, keys, rep
@@ -1664,8 +1656,7 @@ def ingest_screen_multimodal(
         _ingest_image_batch_fixture_dir,
         _phash_state_tables,
     )
-    from .similarity import SEMANTIC_THRESHOLD, _semantic_state_tables
-    from .similarity import _drift_trigger_frame
+    from .similarity import _drift_trigger_frame, _semantic_state_tables
 
     batch = ingest_batch_docs(spark, sf_dir)
     corpus_hashes, corpus_bands = _text_state_tables(spark, sf_dir, k, bands)
@@ -1679,10 +1670,8 @@ def ingest_screen_multimodal(
         spark, sf_dir
     )
     b1v = ingest_embedding_batch(spark, sf_dir)
-    a1, _, sem_rep = _crawl_semantic_parts(
-        b1v, cent, sem_bands, sem_vecs, SEMANTIC_THRESHOLD
-    )
-    drift = _drift_trigger_frame(sem_score, a1, 1.5)
+    a1, _, sem_rep = _crawl_semantic_parts(b1v, cent, sem_bands, sem_vecs)
+    drift = _drift_trigger_frame(sem_score, a1)
     return _multimodal_screen(
         batch,
         (corpus_hashes, corpus_bands),
@@ -1999,7 +1988,6 @@ def ingest_tworound_multimodal(
     )
     from .relational import corpus_tag
     from .similarity import (
-        SEMANTIC_THRESHOLD,
         _drift_trigger_frame,
         _semantic_state_tables,
         semantic_param_tag,
@@ -2020,9 +2008,7 @@ def ingest_tworound_multimodal(
         spark, _ingest_audio_batch_fixture_dir(spark, sf_dir), "wav"
     )
     b1v = ingest_embedding_batch(spark, sf_dir)
-    a1, keys1, sem_rep1 = _crawl_semantic_parts(
-        b1v, cent, semb, semv, SEMANTIC_THRESHOLD
-    )
+    a1, keys1, sem_rep1 = _crawl_semantic_parts(b1v, cent, semb, semv)
     r1 = _multimodal_screen(
         b1,
         (th, tb),
@@ -2147,9 +2133,7 @@ def ingest_tworound_multimodal(
         spark, _ingest2_audio_batch_fixture_dir(spark, sf_dir), "wav"
     )
     b2v = ingest2_embedding_batch(spark, sf_dir)
-    a2, _, sem_rep2 = _crawl_semantic_parts(
-        b2v, cent, fsemb, fsemv, SEMANTIC_THRESHOLD
-    )
+    a2, _, sem_rep2 = _crawl_semantic_parts(b2v, cent, fsemb, fsemv)
     r2 = _multimodal_screen(
         b2,
         (fh, fb),
@@ -2163,8 +2147,8 @@ def ingest_tworound_multimodal(
         sem_rep=sem_rep2,
     )
     # the post-fold drift evaluation, per ingest against ITS score state
-    d1 = _drift_trigger_frame(sems, a1, 1.5)
-    d2 = _drift_trigger_frame(fsems, a2, 1.5)
+    d1 = _drift_trigger_frame(sems, a1)
+    d2 = _drift_trigger_frame(fsems, a2)
     return (
         r1.select(F.lit(1).alias("ingest"), "*")
         .crossJoin(d1)

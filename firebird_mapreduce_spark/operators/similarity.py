@@ -28,7 +28,31 @@ from ..sources import load_table
 # Fixed query vector owner + result size for the declared queries.
 QUERY_VEC_ID = 0
 TOP_K = 10
-N_CENTROIDS = 10
+
+# The persisted index tier's one parameter set.  Every warehouse table
+# name (``kmx_raw_10x3_``, ``semidx_10x3_``, ``kmx_pqs_16x16x3_``, ...)
+# and every ``*_ORACLE_SQL`` derives from these constants, so another
+# value is another index and another oracle — never a per-call argument
+# that would drift from both.
+N_CENTROIDS = 10  # coarse k-means cells
+KMEANS_ITERATIONS = 3  # exact-decimal Lloyd's rounds of the coarse fit
+SEMANTIC_THRESHOLD = 0.9  # SemDeDup rounded-cosine duplicate cut
+REFIT_RATIO = 1.5  # drift ratio past which a refit is recommended
+IVF_NPROBE = 3  # registered probe count of the multiprobe/IVFPQ queries
+PQ_M = 16  # subspaces (4 dims each over the 64-dim corpus)
+PQ_KSUB = 16  # centroids per sub-codebook -> 4-bit codes, 8 bytes/vector
+PQ_ITERATIONS = 3
+PQ_DSUB = 64 // PQ_M  # dims per sub-vector slice (+1 indicator component)
+PQ_CANDIDATES = 100  # ADC survivors handed to the exact rerank
+# b2 vectors with vec_id % PQINC_QUERY_MOD < 2 probe the folded indexes
+# (one even near-copy-of-corpus and one odd near-copy-of-an-ingest-1
+# vector per 50 — a deterministic sample so the declared query measures
+# the probe plan, not answer-writing over the whole batch; a production
+# run executes the same per-query plan for every batch vector).
+PQINC_QUERY_MOD = 50
+# table-name segments: the coarse fit and the PQ sub-codebook fit
+_COARSE_TAG = f"{N_CENTROIDS}x{KMEANS_ITERATIONS}"
+_PQ_TAG = f"{PQ_M}x{PQ_KSUB}x{PQ_ITERATIONS}"
 
 
 def cosine_topk(
@@ -802,7 +826,7 @@ def _exact_centroids(comp: DataFrame, assign: DataFrame) -> DataFrame:
 
 
 def _kmeans_exact_fit(
-    emb: DataFrame, k: int = N_CENTROIDS, iterations: int = 3
+    emb: DataFrame, k: int = N_CENTROIDS, iterations: int = KMEANS_ITERATIONS
 ) -> tuple[DataFrame, DataFrame]:
     """The bit-reproducible Lloyd's schedule, returning the pieces its
     consumers compose: ``(assignments, comp)`` where assignments =
@@ -816,7 +840,9 @@ def _kmeans_exact_fit(
     variant would replay the whole iteration lineage in the serving
     plan (measured 11 → 2 static exchanges in the multiprobe query).
     See ``embedding_kmeans_exact``'s docstring for why every reduction
-    is order-independent (decimal sums, struct-min tie-breaks)."""
+    is order-independent (decimal sums, struct-min tie-breaks).  The
+    coarse index fits the defaults; the PQ sub-codebooks fit
+    ``PQ_M·PQ_KSUB`` clusters over ``PQ_ITERATIONS`` rounds."""
     # spread the components across the session's full parallelism BEFORE
     # checkpointing: a small source (one parquet split — always true for
     # the sampled PQ fit) otherwise pins every round's comp⋈centroid
@@ -875,14 +901,12 @@ def _kmeans_exact_fit(
     return final, comp
 
 
-def _kmeans_exact_assign(
-    emb: DataFrame, k: int = N_CENTROIDS, iterations: int = 3
-) -> DataFrame:
-    """``_kmeans_exact_fit``'s assignment table alone — the entry point
-    shared by ``embedding_kmeans_exact`` (cluster summary),
-    ``embedding_knn_ivf_fitted`` (IVF coarse quantizer) and
-    ``dedup_semantic`` (SemDeDup clustering)."""
-    return _kmeans_exact_fit(emb, k, iterations)[0]
+def _kmeans_exact_assign(emb: DataFrame) -> DataFrame:
+    """The coarse ``_kmeans_exact_fit``'s assignment table alone — what
+    ``ensure_kmeans_exact_table`` persists for ``embedding_kmeans_exact``
+    (cluster summary), the fitted IVF probes and ``dedup_semantic``
+    (SemDeDup clustering)."""
+    return _kmeans_exact_fit(emb)[0]
 
 
 def _quantized_components(emb: DataFrame) -> DataFrame:
@@ -897,21 +921,29 @@ def _quantized_components(emb: DataFrame) -> DataFrame:
     ).select("vec_id", "d", F.round(F.col("vf").cast("double"), 6).alias("v"))
 
 
+def _index_table(
+    spark: SparkSession, sf_dir: str, prefix: str, keys: list[str], build
+) -> DataFrame:
+    """One persisted index artifact: the warehouse table ``prefix`` +
+    the embeddings content tag, ``bucketBy(8, *keys)``, written once per
+    corpus by ``build`` (``relational.ensure_bucketed_table``)."""
+    from .relational import corpus_tag, ensure_bucketed_table
+
+    return ensure_bucketed_table(
+        spark, prefix, corpus_tag(sf_dir, "embeddings"), 8, keys, build
+    )
+
+
 def ensure_kmeans_exact_table(
-    spark: SparkSession,
-    sf_dir: str,
-    source_name: str,
-    emb: DataFrame,
-    k: int = N_CENTROIDS,
-    iterations: int = 3,
+    spark: SparkSession, sf_dir: str, source_name: str, emb: DataFrame
 ) -> DataFrame:
     """The exact-k-means assignment PERSISTED as a bucketed warehouse
     table — "the fit is the one-time index build" made literal: the
-    first call per (corpus, source, k, iterations) runs the
-    bit-reproducible Lloyd's schedule and writes (vec_id, cluster,
-    dist2) ``bucketBy(8, vec_id)``; every subsequent consumer — the
-    cluster summary, both fitted-IVF probes, SemDeDup's banding join —
-    READS the index instead of refitting (the ``dedup_exact_bucketed``
+    first call per (corpus, source) runs the bit-reproducible Lloyd's
+    schedule (``N_CENTROIDS`` × ``KMEANS_ITERATIONS``) and writes
+    (vec_id, cluster, dist2) ``bucketBy(8, vec_id)``; every subsequent
+    consumer — the cluster summary, both fitted-IVF probes, SemDeDup's
+    banding join — READS the index instead of refitting (the ``dedup_exact_bucketed``
     pay-once machinery; idempotent via the embeddings content tag, so a
     regenerated corpus refits and stale indexes are dropped).  The fit
     is deterministic (that is the whole point of the exact-decimal
@@ -919,16 +951,19 @@ def ensure_kmeans_exact_table(
     pinned in test_llm_ops.py.  ``source_name`` keys the augmentation
     variant ("raw" vs the planted "sem" corpus), which the content tag
     alone cannot see because both derive from the same parquet."""
-    from .relational import corpus_tag, ensure_bucketed_table
-
-    tag = corpus_tag(sf_dir, "embeddings")
-    return ensure_bucketed_table(
+    return _index_table(
         spark,
-        f"kmx_{source_name}_{k}x{iterations}_",
-        tag,
-        8,
+        sf_dir,
+        f"kmx_{source_name}_{_COARSE_TAG}_",
         ["vec_id"],
-        lambda: _kmeans_exact_fit(emb, k, iterations)[0],
+        lambda: _kmeans_exact_assign(emb),
+    )
+
+
+def _centroids_of(emb: DataFrame, assign: DataFrame) -> DataFrame:
+    """Final centroids (cluster, d, m) of a persisted assignment."""
+    return _exact_centroids(
+        _quantized_components(emb), assign.select("vec_id", "cluster")
     )
 
 
@@ -938,8 +973,6 @@ def ensure_centroid_table(
     source_name: str,
     emb: DataFrame,
     assign: DataFrame,
-    k: int = N_CENTROIDS,
-    iterations: int = 3,
 ) -> DataFrame:
     """The FINAL centroids (cluster, d, m) persisted alongside the
     assignment index — the second index artifact.  Every serving query
@@ -951,27 +984,16 @@ def ensure_centroid_table(
     corpus scale) and every probe scheduler / ADC table / enrollment
     join broadcasts it.  Same content-tag idempotence as the assignment
     table; cached ≡ recomputed is pinned in test_llm_ops.py."""
-    from .relational import corpus_tag, ensure_bucketed_table
-
-    tag = corpus_tag(sf_dir, "embeddings")
-    return ensure_bucketed_table(
+    return _index_table(
         spark,
-        f"kmxc_{source_name}_{k}x{iterations}_",
-        tag,
-        8,
+        sf_dir,
+        f"kmxc_{source_name}_{_COARSE_TAG}_",
         ["d"],
-        lambda: _exact_centroids(
-            _quantized_components(emb), assign.select("vec_id", "cluster")
-        ),
+        lambda: _centroids_of(emb, assign),
     )
 
 
-def embedding_kmeans_exact(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = N_CENTROIDS,
-    iterations: int = 3,
-) -> DataFrame:
+def embedding_kmeans_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Declared query (oracle-backed): Lloyd's k-means made
     BIT-REPRODUCIBLE across engines — the companion to the rows-only
     ``embedding_kmeans``, proving the iteration *schedule* (not just
@@ -998,8 +1020,7 @@ def embedding_kmeans_exact(
     ``kmeans_fit`` (array columns + broadcast centroids, float sums) —
     exactness here is what certifies that path's algorithm."""
     final = ensure_kmeans_exact_table(
-        spark, sf_dir, "raw", load_table(spark, sf_dir, "embeddings"), k,
-        iterations,
+        spark, sf_dir, "raw", load_table(spark, sf_dir, "embeddings")
     )
     return final.groupBy("cluster").agg(
         F.count(F.lit(1)).cast("long").alias("n_vectors"),
@@ -1007,12 +1028,7 @@ def embedding_kmeans_exact(
     )
 
 
-def embedding_knn_ivf_fitted(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = N_CENTROIDS,
-    iterations: int = 3,
-) -> DataFrame:
+def embedding_knn_ivf_fitted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN whose coarse quantizer IS the k-means fit — the
     composition the `embedding_knn_ivf` docstring promises ("in
     production k-means fitted"), demonstrated and oracle-backed: the
@@ -1041,27 +1057,17 @@ def embedding_knn_ivf_fitted(
     # the fit is the index build — read the persisted assignment table
     # (built once per corpus by ensure_kmeans_exact_table), reused by
     # both the query-bucket lookup and the probe filter
-    assign = ensure_kmeans_exact_table(spark, sf_dir, "raw", emb, k, iterations)
+    assign = ensure_kmeans_exact_table(spark, sf_dir, "raw", emb)
     qcluster = F.broadcast(
         assign.filter(F.col("vec_id") == QUERY_VEC_ID).select("cluster")
     )
     probed = assign.filter(F.col("vec_id") != QUERY_VEC_ID).join(
         qcluster, "cluster"
     )
-    query_vec = _query_vector(spark, sf_dir, QUERY_VEC_ID)
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    return (
-        probed.join(emb.select("vec_id", "embedding"), "vec_id")
-        .select(
-            "vec_id",
-            F.round(cosine_similarity(F.col("embedding"), q), 6).alias("sim"),
-        )
-        .orderBy(F.col("sim").desc(), F.col("vec_id").asc())
-        .limit(TOP_K)
+    return cosine_topk(
+        probed.join(emb.select("vec_id", "embedding"), "vec_id"),
+        _query_vector(spark, sf_dir, QUERY_VEC_ID),
     )
-
-
-SEMANTIC_THRESHOLD = 0.9
 
 
 def _name_tag(value: float) -> str:
@@ -1118,12 +1124,7 @@ SEMANTIC_CORPUS_SQL = """
 
 
 def dedup_semantic(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = N_CENTROIDS,
-    iterations: int = 3,
-    threshold: float = SEMANTIC_THRESHOLD,
-    nassign: int = 1,
+    spark: SparkSession, sf_dir: str, nassign: int = 1
 ) -> DataFrame:
     """SemDeDup-style SEMANTIC deduplication — the embedding tier of the
     dedup ladder (exact → n-gram → MinHash → SimHash → semantic): two
@@ -1143,8 +1144,8 @@ def dedup_semantic(
        giant cluster never goes all-pairs (candidates ≈ Σ_buckets
        |bucket|², bucket ≈ |cluster|/256);
     3. **rerank + keep-min-id** — exact-cosine on candidates, pairs at
-       ``round(sim, 6) >= threshold`` are semantic duplicates, and each
-       vector with any smaller-id match is dropped in favor of that
+       ``round(sim, 6) >= SEMANTIC_THRESHOLD`` are semantic duplicates,
+       and each vector with any smaller-id match is dropped in favor of that
        smallest id (``dup_of``), the deterministic SemDeDup keep rule.
 
     Output: one disposition row per corpus vector — (vec_id, cluster,
@@ -1180,9 +1181,7 @@ def dedup_semantic(
     sem = semantic_corpus(spark, sf_dir)
     # the fit is the index build — persisted once per corpus ("sem"
     # keys the augmented source), read by the banding join + the report
-    assign = ensure_kmeans_exact_table(
-        spark, sf_dir, "sem", sem, k, iterations
-    )
+    assign = ensure_kmeans_exact_table(spark, sf_dir, "sem", sem)
     if nassign <= 1:
         member = assign.select("vec_id", "cluster")
     else:
@@ -1191,8 +1190,6 @@ def dedup_semantic(
         # alongside the assignment with the same pay-once machinery —
         # deterministic by the exact-decimal scoring + (dist2, cluster)
         # rank, hash-verified end to end by the multiassign oracle
-        from .relational import corpus_tag, ensure_bucketed_table
-
         def build_member() -> DataFrame:
             from pyspark.sql import Window
 
@@ -1223,11 +1220,10 @@ def dedup_semantic(
                 .select("vec_id", "cluster")
             )
 
-        member = ensure_bucketed_table(
+        member = _index_table(
             spark,
-            f"kmx_member_sem_{k}x{iterations}x{nassign}_",
-            corpus_tag(sf_dir, "embeddings"),
-            8,
+            sf_dir,
+            f"kmx_member_sem_{_COARSE_TAG}x{nassign}_",
             ["vec_id"],
             build_member,
         )
@@ -1235,7 +1231,7 @@ def dedup_semantic(
     cand = _banded_candidate_pairs(tagged, "cluster", NEARDUP_TABLES)
     matched = (
         _rerank_candidate_pairs(cand, sem)
-        .filter(F.col("sim") >= F.lit(threshold))
+        .filter(F.col("sim") >= F.lit(SEMANTIC_THRESHOLD))
         .groupBy("b_id")
         .agg(F.min("a_id").alias("dup_of"))
         .withColumnRenamed("b_id", "vec_id")
@@ -1269,12 +1265,7 @@ def dedup_semantic_multiassign(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_semantic(spark, sf_dir, nassign=2)
 
 
-def _dedup_semantic_oracle_sql(
-    k: int = N_CENTROIDS,
-    iterations: int = 3,
-    threshold: float = SEMANTIC_THRESHOLD,
-    nassign: int = 1,
-) -> str:
+def _dedup_semantic_oracle_sql(nassign: int = 1) -> str:
     """DuckDB replica of ``dedup_semantic``: the exact-k-means chain over
     the augmented source, the salted md5-parity SRP banding keyed on
     (cluster, table, sig), exact-cosine threshold, keep-min-id.  With
@@ -1282,28 +1273,28 @@ def _dedup_semantic_oracle_sql(
     nassign nearest final centroids (the multi-assignment cure),
     replaying ``dedup_semantic``'s member table exactly."""
     chain = _kmeans_exact_cte_chain(
-        k, iterations, source="sem", prefix=f"sem AS ({SEMANTIC_CORPUS_SQL}), "
+        source="sem", prefix=f"sem AS ({SEMANTIC_CORPUS_SQL}), "
     )
-    t = iterations + 1
+    it = KMEANS_ITERATIONS
     if nassign <= 1:
         extra = ""
-        member = f"SELECT vec_id, cluster FROM a{iterations}"
+        member = f"SELECT vec_id, cluster FROM a{it}"
     else:
         # final-centroid recompute + all-cluster exact distances +
         # QUALIFY rank <= nassign — the multi-assignment member table,
         # the same CTEs the multiprobe oracle uses for its scheduler
         extra = f""",
-c{t} AS (
+c{it + 1} AS (
     SELECT a.cluster, comp.d,
            CAST(sum(CAST(comp.v AS DECIMAL(18,9))) AS DOUBLE) / count(*) AS m
-    FROM comp JOIN a{iterations} a USING (vec_id)
+    FROM comp JOIN a{it} a USING (vec_id)
     GROUP BY a.cluster, comp.d
 ),
 alldist AS (
     SELECT comp.vec_id, c.cluster,
            sum(CAST((comp.v - c.m) * (comp.v - c.m) AS DECIMAL(28,15)))
                AS dist2
-    FROM comp JOIN c{t} c USING (d)
+    FROM comp JOIN c{it + 1} c USING (d)
     GROUP BY comp.vec_id, c.cluster
 )"""
         member = f"""SELECT vec_id, cluster FROM alldist
@@ -1338,25 +1329,44 @@ matched AS (
     WHERE list_sum(list_transform(ea.embedding, x -> x*x)) > 0
       AND list_sum(list_transform(eb.embedding, x -> x*x)) > 0
       AND round(list_cosine_similarity(ea.embedding, eb.embedding), 6)
-          >= {threshold}
+          >= {SEMANTIC_THRESHOLD}
     GROUP BY c.b_id)
 SELECT a.vec_id, a.cluster, m.dup_of IS NULL AS kept, m.dup_of
-FROM a{iterations} a LEFT JOIN matched m USING (vec_id)
+FROM a{it} a LEFT JOIN matched m USING (vec_id)
 """
 
 
+def _probe_cells(emb: DataFrame, cent: DataFrame, nprobe: int) -> DataFrame:
+    """The multiprobe scheduler: the ``nprobe`` cells whose persisted
+    final centroids are nearest the query vector by exact-decimal
+    squared distance, ties to the smaller cluster id."""
+    qdist = (
+        _quantized_components(emb.filter(F.col("vec_id") == QUERY_VEC_ID))
+        .join(F.broadcast(cent), "d")
+        .select(
+            "cluster",
+            ((F.col("v") - F.col("m")) * (F.col("v") - F.col("m")))
+            .cast("decimal(28,15)")
+            .alias("term"),
+        )
+        .groupBy("cluster")
+        .agg(F.sum("term").alias("dist2"))
+    )
+    return (
+        qdist.orderBy(F.col("dist2").asc(), F.col("cluster").asc())
+        .limit(nprobe)
+        .select("cluster")
+    )
+
+
 def embedding_knn_ivf_multiprobe(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = N_CENTROIDS,
-    iterations: int = 3,
-    nprobe: int = 3,
+    spark: SparkSession, sf_dir: str, nprobe: int = IVF_NPROBE
 ) -> DataFrame:
     """Multi-probe fitted IVF — the standard cure for the r5 honest
     finding that SINGLE-probe recall on this near-isotropic corpus is
     0.2-0.4 (SCALE.md): instead of scanning only the cluster that owns
     the query's vector, score the query against the FINAL fitted
-    centroids (the c_{iterations+1} table, exact-decimal distances so
+    centroids (the c_{KMEANS_ITERATIONS+1} table, exact-decimal distances so
     the probe choice is engine-reproducible) and scan the ``nprobe``
     nearest clusters, then exact-cosine rerank the union.  Measured on
     this corpus (tools/measure_ivf_fitted.py sweep, full surface in
@@ -1367,7 +1377,7 @@ def embedding_knn_ivf_multiprobe(
     structure), so they scatter across many cells — on a corpus whose
     neighbors are actual near-duplicates the first few probes capture
     nearly everything, which is why nprobe is the standard IVF dial.
-    The registered default nprobe=3 keeps the declared query a strict
+    The registered default ``IVF_NPROBE`` = 3 keeps the declared query a strict
     probe-scheduler demonstration rather than a recall promise.
 
     Everything stays oracle-backed like ``embedding_knn_ivf_fitted``:
@@ -1388,38 +1398,15 @@ def embedding_knn_ivf_multiprobe(
     # a function of the final assignment alone), so the serving plan
     # reads two tiny tables instead of replaying fit lineage OR running
     # a corpus-sized centroid aggregate per query
-    assign = ensure_kmeans_exact_table(spark, sf_dir, "raw", emb, k, iterations)
-    cent = ensure_centroid_table(spark, sf_dir, "raw", emb, assign, k, iterations)
-    qdist = (
-        _quantized_components(emb.filter(F.col("vec_id") == QUERY_VEC_ID))
-        .join(F.broadcast(cent), "d")
-        .select(
-            "cluster",
-            ((F.col("v") - F.col("m")) * (F.col("v") - F.col("m")))
-            .cast("decimal(28,15)")
-            .alias("term"),
-        )
-        .groupBy("cluster")
-        .agg(F.sum("term").alias("dist2"))
-    )
-    probes = (
-        qdist.orderBy(F.col("dist2").asc(), F.col("cluster").asc())
-        .limit(nprobe)
-        .select("cluster")
-    )
+    assign = ensure_kmeans_exact_table(spark, sf_dir, "raw", emb)
+    cent = ensure_centroid_table(spark, sf_dir, "raw", emb, assign)
+    probes = _probe_cells(emb, cent, nprobe)
     probed = assign.filter(F.col("vec_id") != QUERY_VEC_ID).join(
         F.broadcast(probes), "cluster"
     )
-    query_vec = _query_vector(spark, sf_dir, QUERY_VEC_ID)
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    return (
-        probed.join(emb.select("vec_id", "embedding"), "vec_id")
-        .select(
-            "vec_id",
-            F.round(cosine_similarity(F.col("embedding"), q), 6).alias("sim"),
-        )
-        .orderBy(F.col("sim").desc(), F.col("vec_id").asc())
-        .limit(TOP_K)
+    return cosine_topk(
+        probed.join(emb.select("vec_id", "embedding"), "vec_id"),
+        _query_vector(spark, sf_dir, QUERY_VEC_ID),
     )
 
 
@@ -1429,10 +1416,6 @@ def embedding_knn_ivf_multiprobe(
 # corpus-sized; PQ codes are m small integers per vector.
 # ---------------------------------------------------------------------------
 
-PQ_M = 16  # subspaces (4 dims each over the 64-dim corpus)
-PQ_KSUB = 16  # centroids per sub-codebook -> 4-bit codes, 8 bytes/vector
-PQ_ITERATIONS = 3
-PQ_CANDIDATES = 100  # ADC survivors handed to the exact rerank
 _PQ_INDICATOR = 100.0  # subspace-indicator magnitude (see _pq_subvectors)
 # md5-prefix cut for the codebook TRAINING sample (first hex char of
 # md5(vec_id) in this set -> a deterministic 1/8 of the corpus): the
@@ -1468,42 +1451,41 @@ def _pq_fit_sample(emb: DataFrame) -> DataFrame:
     )
 
 
-def _pq_subvectors(emb: DataFrame, m: int = PQ_M) -> DataFrame:
+def _pq_subvectors(emb: DataFrame) -> DataFrame:
     """The derived sub-vector relation ONE exact-k-means fit trains all
-    ``m`` sub-codebooks on: row (vec_id·m + s) carries subspace ``s``'s
-    64/m-dim slice plus one INDICATOR component ``s·100`` — cross-
-    subspace squared distance then starts at 100² ≫ any within-subspace
-    distance on unit-norm data, and the ``sub_id % (m·ksub)`` seed puts
-    only same-subspace rows in each initial cluster (sub_id ≡ c mod m·ksub
-    ⇒ sub_id ≡ c mod m), so every cluster is subspace-pure at round 0 and
-    provably stays pure through Lloyd's — one fit, m independent
-    codebooks, no per-subspace driver loop (purity pinned in
-    test_llm_ops.py)."""
-    d_sub = 64 // m
+    m = ``PQ_M`` sub-codebooks on: row (vec_id·m + s) carries subspace
+    ``s``'s ``PQ_DSUB``-dim slice plus one INDICATOR component ``s·100``
+    — cross-subspace squared distance then starts at 100² ≫ any
+    within-subspace distance on unit-norm data, and the
+    ``sub_id % (m·ksub)`` seed puts only same-subspace rows in each
+    initial cluster (sub_id ≡ c mod m·ksub ⇒ sub_id ≡ c mod m), so every
+    cluster is subspace-pure at round 0 and provably stays pure through
+    Lloyd's — one fit, m independent codebooks, no per-subspace driver
+    loop (purity pinned in test_llm_ops.py)."""
     s = F.col("s")
     slice_cast = F.transform(
-        F.slice(F.col("embedding"), s * d_sub + F.lit(1), d_sub),
+        F.slice(F.col("embedding"), s * PQ_DSUB + F.lit(1), PQ_DSUB),
         lambda x: x.cast("double"),
     )
     return emb.select(
         "vec_id",
         "embedding",
-        F.explode(F.array(*[F.lit(i) for i in range(m)])).alias("s"),
+        F.explode(F.array(*[F.lit(i) for i in range(PQ_M)])).alias("s"),
     ).select(
-        (F.col("vec_id") * m + s).alias("vec_id"),
+        (F.col("vec_id") * PQ_M + s).alias("vec_id"),
         F.concat(
             slice_cast, F.array((s * F.lit(_PQ_INDICATOR)).cast("double"))
         ).alias("embedding"),
     )
 
 
-def _pq_scores_arrays(sub: DataFrame, cent: DataFrame, dims: int = 5) -> DataFrame:
+def _pq_scores_arrays(sub: DataFrame, cent: DataFrame) -> DataFrame:
     """ALL (sub-vector, cluster) exact-decimal squared distances in ARRAY
     form — the shared scoring pass of the assign-only encoder and the
-    incremental ADC lookup table: the k·dims centroid table pivots to
-    broadcast-sized arrays, each sub-vector scores its k candidate
-    clusters with a FIXED-WIDTH exact-decimal term sum (``dims`` =
-    d_sub+1 = 5 explicit adds of DECIMAL(28,15) terms — precision grows
+    incremental ADC lookup table: the k·(d_sub+1) centroid table pivots
+    to broadcast-sized arrays, each sub-vector scores its k candidate
+    clusters with a FIXED-WIDTH exact-decimal term sum (``PQ_DSUB`` + 1
+    = 5 explicit adds of DECIMAL(28,15) terms — precision grows
     one digit per add, no rescale, so the sum is exact and
     reduction-order-free like the grouped ``F.sum``).  This is what
     makes full-corpus encoding an O(N·m·k) map-side pass instead of a
@@ -1531,21 +1513,21 @@ def _pq_scores_arrays(sub: DataFrame, cent: DataFrame, dims: int = 5) -> DataFra
         lambda a, b: ((a - b) * (a - b)).cast("decimal(28,15)"),
     )
     dist2 = F.element_at(terms, 1)
-    for i in range(2, dims + 1):
+    for i in range(2, PQ_DSUB + 2):
         dist2 = dist2 + F.element_at(terms, i)
     return pairs.select(
         "vec_id", "cluster", dist2.cast("decimal(38,15)").alias("dist2")
     )
 
 
-def _pq_assign_arrays(sub: DataFrame, cent: DataFrame, dims: int = 5) -> DataFrame:
+def _pq_assign_arrays(sub: DataFrame, cent: DataFrame) -> DataFrame:
     """Assign-only encoding in ARRAY form — value-identical to
     ``_assign_to_centroids`` (the exploded spelling; equality pinned in
     test_llm_ops.py): ``_pq_scores_arrays``'s exact-decimal pair scores
     reduced by one partially-aggregated struct-min per sub-vector.  The
     reason the sampled-fit + assign-only index build is >5x cheaper than
     the old full-corpus fit (SCALE.md)."""
-    scored = _pq_scores_arrays(sub, cent, dims)
+    scored = _pq_scores_arrays(sub, cent)
     return (
         scored.groupBy("vec_id")
         .agg(F.min(F.struct("dist2", "cluster")).alias("s"))
@@ -1582,12 +1564,7 @@ def _drop_retired_pq_tables(spark: SparkSession) -> None:
 
 
 def ensure_pq_centroid_table(
-    spark: SparkSession,
-    sf_dir: str,
-    emb: DataFrame,
-    m: int = PQ_M,
-    ksub: int = PQ_KSUB,
-    iterations: int = PQ_ITERATIONS,
+    spark: SparkSession, sf_dir: str, emb: DataFrame
 ) -> DataFrame:
     """The FINAL sub-codebook centroids (cluster, d, m) from the
     SAMPLED exact-decimal fit, persisted — the PQ index's first
@@ -1596,31 +1573,27 @@ def ensure_pq_centroid_table(
     2011 — at 100 TB codebook training must not scale with the corpus),
     its assignment is persisted bucketed (``kmx_pqfit_``), and the
     centroid recompute reads sample-sized inputs only."""
-    from .relational import corpus_tag, ensure_bucketed_table
-
     _drop_retired_pq_tables(spark)
-    tag = corpus_tag(sf_dir, "embeddings")
-    sample_sub = _pq_subvectors(_pq_fit_sample(emb), m)
-    fit = ensure_bucketed_table(
+    sample_sub = _pq_subvectors(_pq_fit_sample(emb))
+    k = PQ_M * PQ_KSUB
+    fit = _index_table(
         spark,
-        f"kmx_pqfit_{m}x{ksub}x{iterations}_",
-        tag,
-        8,
+        sf_dir,
+        f"kmx_pqfit_{_PQ_TAG}_",
         ["vec_id"],
-        lambda: _kmeans_exact_fit(sample_sub, m * ksub, iterations)[0],
+        lambda: _kmeans_exact_fit(sample_sub, k, PQ_ITERATIONS)[0],
     )
-    return ensure_centroid_table(
-        spark, sf_dir, f"pqs{m}x{ksub}", sample_sub, fit, m * ksub, iterations
+    return _index_table(
+        spark,
+        sf_dir,
+        f"kmxc_pqs{PQ_M}x{PQ_KSUB}_{k}x{PQ_ITERATIONS}_",
+        ["d"],
+        lambda: _centroids_of(sample_sub, fit),
     )
 
 
 def ensure_pq_codes_table(
-    spark: SparkSession,
-    sf_dir: str,
-    emb: DataFrame,
-    m: int = PQ_M,
-    ksub: int = PQ_KSUB,
-    iterations: int = PQ_ITERATIONS,
+    spark: SparkSession, sf_dir: str, emb: DataFrame
 ) -> DataFrame:
     """The full-corpus PQ CODE TABLE persisted as the second index
     artifact — (sub_id, cluster, dist2) by ASSIGN-ONLY encoding of every
@@ -1630,27 +1603,18 @@ def ensure_pq_codes_table(
     FULL corpus (the repo's only full-corpus superlinear cost — 131.6 s
     run-0 at sf0.1); the sampled fit + array-form assign-only encode
     caps index-build cost at any scale (VERDICT r7 item 2)."""
-    from .relational import corpus_tag, ensure_bucketed_table
-
-    cent = ensure_pq_centroid_table(spark, sf_dir, emb, m, ksub, iterations)
-    tag = corpus_tag(sf_dir, "embeddings")
-    return ensure_bucketed_table(
+    cent = ensure_pq_centroid_table(spark, sf_dir, emb)
+    return _index_table(
         spark,
-        f"kmx_pqs_{m}x{ksub}x{iterations}_",
-        tag,
-        8,
+        sf_dir,
+        f"kmx_pqs_{_PQ_TAG}_",
         ["vec_id"],
-        lambda: _pq_assign_arrays(_pq_subvectors(emb, m), cent, 64 // m + 1),
+        lambda: _pq_assign_arrays(_pq_subvectors(emb), cent),
     )
 
 
 def encode_pq_batch(
-    spark: SparkSession,
-    sf_dir: str,
-    batch: DataFrame,
-    m: int = PQ_M,
-    ksub: int = PQ_KSUB,
-    pq_iterations: int = PQ_ITERATIONS,
+    spark: SparkSession, sf_dir: str, batch: DataFrame
 ) -> DataFrame:
     """Assign-only PQ ENCODING of a new vector batch against the
     PERSISTED sub-codebooks — the code table's maintenance path, the
@@ -1668,15 +1632,15 @@ def encode_pq_batch(
     (the quantization-robustness property that makes incremental
     encoding trustworthy between refits)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cent = ensure_pq_centroid_table(spark, sf_dir, emb, m, ksub, pq_iterations)
-    coded = _pq_assign_arrays(_pq_subvectors(batch, m), cent, 64 // m + 1)
+    cent = ensure_pq_centroid_table(spark, sf_dir, emb)
+    coded = _pq_assign_arrays(_pq_subvectors(batch), cent)
     # two-stage select: the sub_id must be renamed BEFORE deriving the
     # original id and subspace from it (the lateral-alias pitfall)
     return coded.select(
         F.col("vec_id").alias("sub_id"), "cluster", "dist2"
     ).select(
-        F.expr(f"sub_id div {m}").alias("vec_id"),
-        (F.col("sub_id") % m).alias("s"),
+        F.expr(f"sub_id div {PQ_M}").alias("vec_id"),
+        (F.col("sub_id") % PQ_M).alias("s"),
         "cluster",
         F.round(F.col("dist2").cast("double"), 6).alias("dist2"),
     )
@@ -1685,18 +1649,13 @@ def encode_pq_batch(
 def embedding_knn_ivfpq(
     spark: SparkSession,
     sf_dir: str,
-    k: int = N_CENTROIDS,
-    iterations: int = 3,
-    m: int = PQ_M,
-    ksub: int = PQ_KSUB,
-    pq_iterations: int = PQ_ITERATIONS,
-    nprobe: int = 3,
+    nprobe: int = IVF_NPROBE,
     n_candidates: int = PQ_CANDIDATES,
 ) -> DataFrame:
     """IVF + PRODUCT QUANTIZATION ANN — the memory-bounded serving path
     (Jégou et al., "Product Quantization for Nearest Neighbor Search",
     2011): at 100 TB the IVF candidate payload cannot be float64 arrays
-    (the index would be corpus-sized); PQ stores each vector as ``m``
+    (the index would be corpus-sized); PQ stores each vector as ``PQ_M``
     sub-codebook ids — here 16 4-bit codes = 8 BYTES per vector vs 512
     (64×; m chose the measured recall knee: 4/8/16 subspaces give
     0.1/0.4/0.9 full-corpus recall@10 at C=100 on this corpus, the
@@ -1736,25 +1695,9 @@ def embedding_knn_ivfpq(
     ever fetched — the fetch pattern PQ exists to buy."""
     emb = load_table(spark, sf_dir, "embeddings")
     # coarse index + probe scheduler (shared with embedding_knn_ivf_multiprobe)
-    coarse = ensure_kmeans_exact_table(spark, sf_dir, "raw", emb, k, iterations)
-    cent = ensure_centroid_table(spark, sf_dir, "raw", emb, coarse, k, iterations)
-    qdist = (
-        _quantized_components(emb.filter(F.col("vec_id") == QUERY_VEC_ID))
-        .join(F.broadcast(cent), "d")
-        .select(
-            "cluster",
-            ((F.col("v") - F.col("m")) * (F.col("v") - F.col("m")))
-            .cast("decimal(28,15)")
-            .alias("term"),
-        )
-        .groupBy("cluster")
-        .agg(F.sum("term").alias("dist2"))
-    )
-    probes = (
-        qdist.orderBy(F.col("dist2").asc(), F.col("cluster").asc())
-        .limit(nprobe)
-        .select("cluster")
-    )
+    coarse = ensure_kmeans_exact_table(spark, sf_dir, "raw", emb)
+    cent = ensure_centroid_table(spark, sf_dir, "raw", emb, coarse)
+    probes = _probe_cells(emb, cent, nprobe)
     in_probes = (
         coarse.filter(F.col("vec_id") != QUERY_VEC_ID)
         .join(F.broadcast(probes), "cluster")
@@ -1762,17 +1705,17 @@ def embedding_knn_ivfpq(
     )
     # PQ codes + final (sampled-fit) sub-centroids + the query's ADC
     # lookup table
-    pq_assign = ensure_pq_codes_table(spark, sf_dir, emb, m, ksub, pq_iterations)
-    pq_cent = ensure_pq_centroid_table(spark, sf_dir, emb, m, ksub, pq_iterations)
+    pq_assign = ensure_pq_codes_table(spark, sf_dir, emb)
+    pq_cent = ensure_pq_centroid_table(spark, sf_dir, emb)
     # the query's sub-vectors derived FROM the constant (filter the query
     # row, then slice), not vec_id < m — which silently assumed
     # QUERY_VEC_ID == 0 (sub ids are orig·m + s)
-    query_subs = _pq_subvectors(emb.filter(F.col("vec_id") == QUERY_VEC_ID), m)
+    query_subs = _pq_subvectors(emb.filter(F.col("vec_id") == QUERY_VEC_ID))
     qd = (
         _quantized_components(query_subs)
         .join(F.broadcast(pq_cent), "d")
         .select(
-            (F.col("vec_id") % m).alias("s"),
+            (F.col("vec_id") % PQ_M).alias("s"),
             "cluster",
             ((F.col("v") - F.col("m")) * (F.col("v") - F.col("m")))
             .cast("decimal(28,15)")
@@ -1782,8 +1725,8 @@ def embedding_knn_ivfpq(
         .agg(F.sum("term").alias("dist2"))
     )
     codes = pq_assign.select(
-        F.expr(f"vec_id div {m}").alias("ovec"),
-        (F.col("vec_id") % m).alias("s"),
+        F.expr(f"vec_id div {PQ_M}").alias("ovec"),
+        (F.col("vec_id") % PQ_M).alias("s"),
         "cluster",
     )
     adc = (
@@ -1795,52 +1738,39 @@ def embedding_knn_ivfpq(
     cand = adc.orderBy(F.col("adc").asc(), F.col("ovec").asc()).limit(
         n_candidates
     )
-    query_vec = _query_vector(spark, sf_dir, QUERY_VEC_ID)
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    return (
-        cand.join(emb.select("vec_id", "embedding"), cand["ovec"] == F.col("vec_id"))
-        .select(
-            "vec_id",
-            F.round(cosine_similarity(F.col("embedding"), q), 6).alias("sim"),
-        )
-        .orderBy(F.col("sim").desc(), F.col("vec_id").asc())
-        .limit(TOP_K)
+    return cosine_topk(
+        cand.join(emb.select("vec_id", "embedding"), cand["ovec"] == F.col("vec_id")),
+        _query_vector(spark, sf_dir, QUERY_VEC_ID),
     )
 
 
 def _pq_fit_cte_chain(
-    m: int = PQ_M,
-    ksub: int = PQ_KSUB,
-    pq_iterations: int = PQ_ITERATIONS,
-    source: str = "embeddings",
-    cte_prefix: str = "pq",
-    lead: str = "",
+    source: str = "embeddings", cte_prefix: str = "pq", lead: str = ""
 ) -> str:
     """Continuation-form CTE block shared by the IVFPQ oracles: the full
     sub-vector relation (``{cte_prefix}allsub``), its deterministic fit
     sample (``{cte_prefix}sub`` — the ``_pq_fit_sample`` twin), and the
     prefix-renamed exact-k-means chain over the sample (ends at
-    ``{cte_prefix}a{pq_iterations}``).  ``source`` names the
+    ``{cte_prefix}a{PQ_ITERATIONS}``).  ``source`` names the
     (vec_id, embedding) relation the sub-vectors derive from and
     ``lead`` injects the CTEs defining it — the ``_kmeans_exact_cte_
     chain`` convention, so TWO sub-codebook fits can coexist in one
     statement (the ``pq_index_refit`` oracle)."""
     p = cte_prefix
-    d_sub = 64 // m
     pqsub = f"""{lead}{p}allsub AS (
-    SELECT vec_id * {m} + s.s AS vec_id,
+    SELECT vec_id * {PQ_M} + s.s AS vec_id,
            vec_id AS orig_id,
-           list_transform(range(0, {d_sub}),
-               j -> CAST(embedding[s.s * {d_sub} + j + 1] AS DOUBLE))
+           list_transform(range(0, {PQ_DSUB}),
+               j -> CAST(embedding[s.s * {PQ_DSUB} + j + 1] AS DOUBLE))
            || [CAST(s.s * {_PQ_INDICATOR} AS DOUBLE)] AS embedding
-    FROM {source}, range(0, {m}) s(s)
+    FROM {source}, range(0, {PQ_M}) s(s)
 ), {p}sub AS (
     SELECT vec_id, embedding FROM {p}allsub
     WHERE {PQ_FIT_SAMPLE_SQL_T.format(col="orig_id")}
 ), """
     return _kmeans_exact_cte_chain(
-        m * ksub,
-        pq_iterations,
+        PQ_M * PQ_KSUB,
+        PQ_ITERATIONS,
         source=f"{p}sub",
         prefix=pqsub,
         cte_prefix=p,
@@ -1848,16 +1778,14 @@ def _pq_fit_cte_chain(
     )
 
 
-def _pq_codes_ctes(m: int = PQ_M, pq_iterations: int = PQ_ITERATIONS) -> str:
-    """Continuation CTEs shared by the IVFPQ oracles: the final sampled
-    sub-centroids (``pqc{pt}``), the full sub-vector components
-    (``pqallcomp``) and the assign-only full-corpus code table
-    (``pqcodes`` — the ``_pq_assign_arrays`` twin)."""
-    pt = pq_iterations + 1
-    return f"""pqc{pt} AS (
+# Continuation CTEs shared by the IVFPQ oracles: the final sampled
+# sub-centroids (``pqc{PQ_ITERATIONS + 1}``), the full sub-vector
+# components (``pqallcomp``) and the assign-only full-corpus code table
+# (``pqcodes`` — the ``_pq_assign_arrays`` twin).
+_PQ_CODES_CTES = f"""pqc{PQ_ITERATIONS + 1} AS (
     SELECT a.cluster, comp.d,
            CAST(sum(CAST(comp.v AS DECIMAL(18,9))) AS DOUBLE) / count(*) AS m
-    FROM pqcomp comp JOIN pqa{pq_iterations} a USING (vec_id)
+    FROM pqcomp comp JOIN pqa{PQ_ITERATIONS} a USING (vec_id)
     GROUP BY a.cluster, comp.d
 ),
 pqallcomp AS (
@@ -1870,22 +1798,14 @@ pqcodes AS (
         SELECT cb.vec_id, c.cluster,
                sum(CAST((cb.v - c.m) * (cb.v - c.m) AS DECIMAL(28,15)))
                    AS dist2
-        FROM pqallcomp cb JOIN pqc{pt} c USING (d)
+        FROM pqallcomp cb JOIN pqc{PQ_ITERATIONS + 1} c USING (d)
         GROUP BY cb.vec_id, c.cluster)
     QUALIFY row_number() OVER (
         PARTITION BY vec_id ORDER BY dist2, cluster) = 1
 )"""
 
 
-def _knn_ivfpq_oracle_sql(
-    k: int = N_CENTROIDS,
-    iterations: int = 3,
-    m: int = PQ_M,
-    ksub: int = PQ_KSUB,
-    pq_iterations: int = PQ_ITERATIONS,
-    nprobe: int = 3,
-    n_candidates: int = PQ_CANDIDATES,
-) -> str:
+def _knn_ivfpq_oracle_sql() -> str:
     """DuckDB replica of ``embedding_knn_ivfpq``: the coarse chain + the
     prefix-renamed sub-codebook chain over the DETERMINISTIC FIT SAMPLE
     side by side, final-centroid recomputes for both, assign-only
@@ -1893,15 +1813,15 @@ def _knn_ivfpq_oracle_sql(
     fit means codes are no longer the fit's own assignment), the
     (dist2, cluster) probe pick, exact-decimal ADC sums with the
     (adc, vec_id) top-C cut, exact rerank."""
-    t = iterations + 1
-    pt = pq_iterations + 1
-    coarse = _kmeans_exact_cte_chain(k, iterations)
-    pq_chain = _pq_fit_cte_chain(m, ksub, pq_iterations)
-    return f"""{coarse}{pq_chain},
+    it = KMEANS_ITERATIONS
+    t = it + 1
+    pt = PQ_ITERATIONS + 1
+    m = PQ_M
+    return f"""{_kmeans_exact_cte_chain()}{_pq_fit_cte_chain()},
 c{t} AS (
     SELECT a.cluster, comp.d,
            CAST(sum(CAST(comp.v AS DECIMAL(18,9))) AS DOUBLE) / count(*) AS m
-    FROM comp JOIN a{iterations} a USING (vec_id)
+    FROM comp JOIN a{it} a USING (vec_id)
     GROUP BY a.cluster, comp.d
 ),
 qdc AS (
@@ -1912,11 +1832,11 @@ qdc AS (
     WHERE comp.vec_id = 0
     GROUP BY c.cluster
 ),
-probes AS (SELECT cluster FROM qdc ORDER BY dist2, cluster LIMIT {nprobe}),
+probes AS (SELECT cluster FROM qdc ORDER BY dist2, cluster LIMIT {IVF_NPROBE}),
 inprobe AS (
-    SELECT a.vec_id FROM a{iterations} a JOIN probes USING (cluster)
+    SELECT a.vec_id FROM a{it} a JOIN probes USING (cluster)
     WHERE a.vec_id <> 0),
-{_pq_codes_ctes(m, pq_iterations)},
+{_PQ_CODES_CTES},
 pqqd AS (
     SELECT comp.vec_id % {m} AS s, c.cluster,
            sum(CAST((comp.v - c.m) * (comp.v - c.m) AS DECIMAL(28,15)))
@@ -1934,7 +1854,7 @@ adc AS (
     JOIN inprobe i ON i.vec_id = c.ovec
     JOIN pqqd q ON q.s = c.s AND q.cluster = c.cluster
     GROUP BY c.ovec),
-cand AS (SELECT vec_id FROM adc ORDER BY adc, vec_id LIMIT {n_candidates}),
+cand AS (SELECT vec_id FROM adc ORDER BY adc, vec_id LIMIT {PQ_CANDIDATES}),
 qv AS (SELECT embedding::DOUBLE[] AS v FROM embeddings WHERE vec_id = 0)
 SELECT c.vec_id,
        round(list_cosine_similarity(e.embedding::DOUBLE[], qv.v), 6) AS sim
@@ -2220,13 +2140,12 @@ def _semantic_screen(
     state_bands: DataFrame,
     state_vecs: DataFrame,
     batch_vecs: DataFrame,
-    threshold: float,
 ) -> DataFrame:
     """One ingest's screen: batch banding keys probe the state's banding
     table on (cluster, tbl, sig) — a batch×state MEMBERSHIP join, never a
     self-join — candidates exact-cosine reranked, each batch vector with
-    any state partner at sim >= threshold flagged dup_of the smallest
-    such id.  The rerank resolves a-side ids against the BUCKETED state
+    any state partner at sim >= ``SEMANTIC_THRESHOLD`` flagged dup_of the
+    smallest such id.  The rerank resolves a-side ids against the BUCKETED state
     vector table and b-side ids against the in-plan batch (disjoint id
     universes), so no corpus-sized union is ever shuffled.
     Output: (vec_id, cluster, dist2, kept, dup_of)."""
@@ -2241,7 +2160,7 @@ def _semantic_screen(
     )
     matched = (
         _rerank_candidate_pairs(cand, state_vecs, batch_vecs)
-        .filter(F.col("sim") >= F.lit(threshold))
+        .filter(F.col("sim") >= F.lit(SEMANTIC_THRESHOLD))
         .groupBy("b_id")
         .agg(F.min("a_id").alias("dup_of"))
         .withColumnRenamed("b_id", "vec_id")
@@ -2255,9 +2174,7 @@ def _semantic_screen(
     )
 
 
-def _drift_trigger_frame(
-    fit_side: DataFrame, batch_side: DataFrame, refit_ratio: float
-) -> DataFrame:
+def _drift_trigger_frame(fit_side: DataFrame, batch_side: DataFrame) -> DataFrame:
     """The stored-dist2 DRIFT TRIGGER as a 1-row frame (drift_ratio,
     refit_recommended) — the ``pq_index_refit``/``semantic_index_drift``
     trigger expression factored out so the incremental LOOPS evaluate it
@@ -2265,7 +2182,7 @@ def _drift_trigger_frame(
     surfaces drift; a trigger nobody evaluates catches nothing).  Both
     inputs carry STORED enrollment/encode dist2 — never a re-encode per
     report: mean(batch dist2) / mean(fit-side dist2), rounded 6 dp, then
-    flagged past ``refit_ratio``.  Two driver-sized aggregates + a 1×1
+    flagged past ``REFIT_RATIO``.  Two driver-sized aggregates + a 1×1
     cross join (the drift-ratio pattern every refit query uses)."""
 
     def mean(df: DataFrame, name: str) -> DataFrame:
@@ -2280,30 +2197,33 @@ def _drift_trigger_frame(
         .crossJoin(mean(batch_side, "b"))
         .select(F.round(F.col("b") / F.col("f"), 6).alias("drift_ratio"))
         .withColumn(
-            "refit_recommended", F.col("drift_ratio") > F.lit(refit_ratio)
+            "refit_recommended", F.col("drift_ratio") > F.lit(REFIT_RATIO)
         )
     )
 
 
-def semantic_param_tag(
-    k: int = N_CENTROIDS,
-    iterations: int = 3,
-    threshold: float = SEMANTIC_THRESHOLD,
-) -> str:
+def semantic_param_tag() -> str:
     """The semantic tier's all-parameters table-name segment
-    (``{k}x{iterations}x{threshold}``) — ONE spelling for every
-    consumer of the tier's folded state (the tworound crawl's ``mmr2_``
-    tables, the streaming loop's ``strmm_sem*`` tables), so two
-    spellings can never drift and silently reuse state folded under
-    different parameters."""
-    return f"{k}x{iterations}x{_name_tag(threshold)}"
+    (``{N_CENTROIDS}x{KMEANS_ITERATIONS}x{SEMANTIC_THRESHOLD}``) — ONE
+    spelling for every consumer of the tier's folded state
+    (``dedup_semantic_incremental``'s ``semvf_`` tables, the tworound
+    crawl's ``mmr2_`` tables, the streaming loop's ``strmm_sem*``
+    tables), so a changed constant renames the state instead of silently
+    reusing state folded under the old parameters."""
+    return f"{_COARSE_TAG}x{_name_tag(SEMANTIC_THRESHOLD)}"
+
+
+def _corpus_band_rows(corpus: DataFrame, assign: DataFrame) -> DataFrame:
+    """The corpus SRP banding keys under the coarse assignment — the
+    day-0 ``semv_bands_`` table and the base of every folded band state."""
+    tagged = _with_srp_sigs(corpus, NEARDUP_TABLES).join(
+        assign.select("vec_id", "cluster"), "vec_id"
+    )
+    return _sig_keys(tagged, "cluster", NEARDUP_TABLES)
 
 
 def _semantic_state_tables(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = N_CENTROIDS,
-    iterations: int = 3,
+    spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, DataFrame, DataFrame]:
     """The SEMANTIC tier's persisted day-0 corpus state — (corpus,
     assign, cent, bands, vecs, score): the double-cast corpus vectors,
@@ -2316,51 +2236,30 @@ def _semantic_state_tables(
     both unified ingest queries, the streaming crawl seeder) so the
     vector-tier screening state cannot drift between them — the
     ``_text_state_tables`` discipline on the semantic tier."""
-    from .relational import corpus_tag, ensure_bucketed_table
-
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     as_double = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     corpus = emb.select("vec_id", as_double.alias("embedding"))
-    assign = ensure_kmeans_exact_table(spark, sf_dir, "raw", emb, k, iterations)
-    cent = ensure_centroid_table(spark, sf_dir, "raw", emb, assign, k, iterations)
-    tag = corpus_tag(sf_dir, "embeddings")
-
-    def corpus_band_rows() -> DataFrame:
-        tagged = _with_srp_sigs(corpus, NEARDUP_TABLES).join(
-            assign.select("vec_id", "cluster"), "vec_id"
-        )
-        return _sig_keys(tagged, "cluster", NEARDUP_TABLES)
-
-    bands_tbl = ensure_bucketed_table(
+    assign = ensure_kmeans_exact_table(spark, sf_dir, "raw", emb)
+    cent = ensure_centroid_table(spark, sf_dir, "raw", emb, assign)
+    bands_tbl = _index_table(
         spark,
-        f"semv_bands_{k}x{iterations}_",
-        tag,
-        8,
+        sf_dir,
+        f"semv_bands_{_COARSE_TAG}_",
         ["blk", "tbl", "sig"],
-        corpus_band_rows,
+        lambda: _corpus_band_rows(corpus, assign),
     )
-    vecs_tbl = ensure_bucketed_table(
-        spark, "semv_vecs_", tag, 8, ["vec_id"], lambda: corpus
-    )
-    score_tbl = ensure_bucketed_table(
+    vecs_tbl = _index_table(spark, sf_dir, "semv_vecs_", ["vec_id"], lambda: corpus)
+    score_tbl = _index_table(
         spark,
-        f"semv_score_{k}x{iterations}_",
-        tag,
-        8,
+        sf_dir,
+        f"semv_score_{_COARSE_TAG}_",
         ["vec_id"],
         lambda: _assign_to_centroids_arrays(emb, cent),
     )
     return corpus, assign, cent, bands_tbl, vecs_tbl, score_tbl
 
 
-def dedup_semantic_incremental(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = N_CENTROIDS,
-    iterations: int = 3,
-    threshold: float = SEMANTIC_THRESHOLD,
-    refit_ratio: float = 1.5,
-) -> DataFrame:
+def dedup_semantic_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TWO consecutive EMBEDDING ingests maintained against the persisted
     k-means index — ``dedup_incremental_tworound``'s closed loop applied
     to the vector tier, closing the maintenance gap the r6 verdict named
@@ -2419,15 +2318,9 @@ def dedup_semantic_incremental(
     # the corpus per report would be the exact cost the stored-only
     # rule forbids)
     corpus, assign, cent, v1_bands, v1_vecs, v1_score = (
-        _semantic_state_tables(spark, sf_dir, k, iterations)
+        _semantic_state_tables(spark, sf_dir)
     )
     tag = corpus_tag(sf_dir, "embeddings")
-
-    def corpus_band_rows() -> DataFrame:
-        tagged = _with_srp_sigs(corpus, NEARDUP_TABLES).join(
-            assign.select("vec_id", "cluster"), "vec_id"
-        )
-        return _sig_keys(tagged, "cluster", NEARDUP_TABLES)
 
     # lazy (r12, guide §2.6): every consumer — keys1, the screen, the
     # drift aggregate, the (run-0) fold deltas — runs inside or after
@@ -2445,29 +2338,25 @@ def dedup_semantic_incremental(
     # lazy for the same reason: the folds write semvf_* tables, which
     # r1's plan never reads (it probes the day-0 semv_* state), so
     # there is no read-your-own-writes hazard to pin against
-    r1 = _semantic_screen(
-        keys1, a1, v1_bands, v1_vecs, b1, threshold
-    ).localCheckpoint(eager=False)
+    r1 = _semantic_screen(keys1, a1, v1_bands, v1_vecs, b1).localCheckpoint(
+        eager=False
+    )
     kept_ids = r1.filter(F.col("kept")).select("vec_id")
     kept1 = b1.join(kept_ids, "vec_id")
 
     # the fold: survivors' band keys + vectors appended once, crash-guarded.
-    # BOTH prefixes carry every parameter that determines the folded
-    # contents — k and iterations (the banding's cluster assignment) AND
-    # threshold (which batch vectors survive to be folded) — so invoking
-    # with different parameters forces a rebuild instead of silently
-    # reusing a delta folded under the old parameters (and the two state
-    # tables can never go mutually inconsistent, one rebuilt for new
-    # parameters while the other reuses the old fold); the same
-    # all-parameters keying discipline as ensure_centroid_table's name.
-    param_tag = f"{k}x{iterations}x{_name_tag(threshold)}"
+    # Every prefix carries semantic_param_tag — the constants that
+    # determine the folded contents (the banding's cluster assignment and
+    # which batch vectors survive) — so a changed constant rebuilds the
+    # state instead of silently reusing a delta folded under the old one.
+    param_tag = semantic_param_tag()
     v2_bands = _ensure_folded_state(
         spark,
         f"semvf_bands_{param_tag}_",
         tag,
         8,
         ["blk", "tbl", "sig"],
-        corpus_band_rows,
+        lambda: _corpus_band_rows(corpus, assign),
         lambda: _sig_keys(
             _with_srp_sigs(kept1, NEARDUP_TABLES).join(
                 a1.select("vec_id", "cluster"), "vec_id"
@@ -2509,10 +2398,10 @@ def dedup_semantic_incremental(
         "cluster",
         NEARDUP_TABLES,
     )
-    r2 = _semantic_screen(keys2, a2, v2_bands, v2_vecs, b2, threshold)
+    r2 = _semantic_screen(keys2, a2, v2_bands, v2_vecs, b2)
     # the post-fold drift evaluation, per ingest against ITS state
-    d1 = _drift_trigger_frame(v1_score, a1, refit_ratio)
-    d2 = _drift_trigger_frame(v2_score, a2, refit_ratio)
+    d1 = _drift_trigger_frame(v1_score, a1)
+    d2 = _drift_trigger_frame(v2_score, a2)
     return (
         r1.select(F.lit(1).alias("ingest"), "*")
         .crossJoin(d1)
@@ -2520,24 +2409,8 @@ def dedup_semantic_incremental(
     )
 
 
-# b2 vectors with vec_id % PQINC_QUERY_MOD < 2 probe the folded PQ index
-# (one even near-copy-of-corpus and one odd near-copy-of-an-ingest-1
-# vector per 50 — a deterministic sample so the declared query measures
-# the probe plan, not answer-writing over the whole batch; a production
-# run executes the same per-query plan for every batch vector).
-PQINC_QUERY_MOD = 50
-
-
 def embedding_knn_ivfpq_incremental(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = N_CENTROIDS,
-    iterations: int = 3,
-    m: int = PQ_M,
-    ksub: int = PQ_KSUB,
-    pq_iterations: int = PQ_ITERATIONS,
-    query_mod: int = PQINC_QUERY_MOD,
-    refit_ratio: float = 1.5,
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """The PQ tier's MAINTENANCE LOOP as a declared query (VERDICT r7
     item 1 — the last member of the incremental family: text
@@ -2584,22 +2457,21 @@ def embedding_knn_ivfpq_incremental(
     never re-encoded and the index never rebuilt (drift decides refits:
     ``semantic_index_refit``, now flagged by this loop's own trigger)."""
     from .dedup import _ensure_folded_state
-    from .relational import corpus_tag, ensure_bucketed_table
+    from .relational import corpus_tag
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     _, b1, b2 = incremental_embedding_batches(spark, sf_dir)
-    assign = ensure_kmeans_exact_table(spark, sf_dir, "raw", emb, k, iterations)
-    cent = ensure_centroid_table(spark, sf_dir, "raw", emb, assign, k, iterations)
-    pq_cent = ensure_pq_centroid_table(spark, sf_dir, emb, m, ksub, pq_iterations)
+    assign = ensure_kmeans_exact_table(spark, sf_dir, "raw", emb)
+    cent = ensure_centroid_table(spark, sf_dir, "raw", emb, assign)
+    pq_cent = ensure_pq_centroid_table(spark, sf_dir, emb)
     tag = corpus_tag(sf_dir, "embeddings")
-    dims = 64 // m + 1
 
     def split_codes(codes: DataFrame) -> DataFrame:
         # two-stage select: rename BEFORE deriving (the lateral-alias
         # pitfall encode_pq_batch documents)
         return codes.select(F.col("vec_id").alias("sub_id"), "cluster").select(
-            F.expr(f"sub_id div {m}").alias("ovec"),
-            (F.col("sub_id") % m).alias("s"),
+            F.expr(f"sub_id div {PQ_M}").alias("ovec"),
+            (F.col("sub_id") % PQ_M).alias("s"),
             "cluster",
         )
 
@@ -2607,20 +2479,17 @@ def embedding_knn_ivfpq_incremental(
     # the pq_index_refit discipline): the shared corpus code table and
     # b1's assign-only encode persisted WITH dist2 — the fold's code
     # delta then splits from the stored table instead of re-encoding
-    codes_corpus = ensure_pq_codes_table(
-        spark, sf_dir, emb, m, ksub, pq_iterations
-    )
-    codes_b1 = ensure_bucketed_table(
+    codes_corpus = ensure_pq_codes_table(spark, sf_dir, emb)
+    codes_b1 = _index_table(
         spark,
-        f"pqvinc_b1d_{m}x{ksub}x{pq_iterations}_",
-        tag,
-        8,
+        sf_dir,
+        f"pqvinc_b1d_{_PQ_TAG}_",
         ["vec_id"],
-        lambda: _pq_assign_arrays(_pq_subvectors(b1, m), pq_cent, dims),
+        lambda: _pq_assign_arrays(_pq_subvectors(b1), pq_cent),
     )
     state_codes = _ensure_folded_state(
         spark,
-        f"pqvinc_codes_{m}x{ksub}x{pq_iterations}_",
+        f"pqvinc_codes_{_PQ_TAG}_",
         tag,
         8,
         ["ovec"],
@@ -2630,7 +2499,7 @@ def embedding_knn_ivfpq_incremental(
     )
     state_cells = _ensure_folded_state(
         spark,
-        f"pqvinc_cells_{k}x{iterations}_",
+        f"pqvinc_cells_{_COARSE_TAG}_",
         tag,
         8,
         ["cluster"],
@@ -2640,7 +2509,7 @@ def embedding_knn_ivfpq_incremental(
         ),
         compact=True,
     )
-    q = b2.filter(F.col("vec_id") % query_mod < 2)
+    q = b2.filter(F.col("vec_id") % PQINC_QUERY_MOD < 2)
     q_cells = _assign_to_centroids_arrays(q, cent).select(
         F.col("vec_id").alias("q_id"), "cluster"
     )
@@ -2651,15 +2520,15 @@ def embedding_knn_ivfpq_incremental(
     # sub-centroids, restricted to each subspace's own clusters (codes
     # are subspace-pure, so cross-subspace rows can never join)
     qd = (
-        _pq_scores_arrays(_pq_subvectors(q, m), pq_cent, dims)
+        _pq_scores_arrays(_pq_subvectors(q), pq_cent)
         .select(F.col("vec_id").alias("sub_id"), "cluster", "dist2")
         .select(
-            F.expr(f"sub_id div {m}").alias("q_id"),
-            (F.col("sub_id") % m).alias("s"),
+            F.expr(f"sub_id div {PQ_M}").alias("q_id"),
+            (F.col("sub_id") % PQ_M).alias("s"),
             "cluster",
             "dist2",
         )
-        .filter((F.col("cluster") % m) == F.col("s"))
+        .filter((F.col("cluster") % PQ_M) == F.col("s"))
     )
     adc = (
         cand.join(state_codes, "ovec")
@@ -2678,20 +2547,10 @@ def embedding_knn_ivfpq_incremental(
     )
     # the post-fold drift evaluation: folded delta's stored encode mean
     # vs the corpus code table's stored mean — two aggregates, no encode
-    return top1.crossJoin(
-        _drift_trigger_frame(codes_corpus, codes_b1, refit_ratio)
-    )
+    return top1.crossJoin(_drift_trigger_frame(codes_corpus, codes_b1))
 
 
-def _knn_ivfpq_incremental_oracle_sql(
-    k: int = N_CENTROIDS,
-    iterations: int = 3,
-    m: int = PQ_M,
-    ksub: int = PQ_KSUB,
-    pq_iterations: int = PQ_ITERATIONS,
-    query_mod: int = PQINC_QUERY_MOD,
-    refit_ratio: float = 1.5,
-) -> str:
+def _knn_ivfpq_incremental_oracle_sql() -> str:
     """DuckDB replica of ``embedding_knn_ivfpq_incremental``: coarse
     chain + final centroids, sampled PQ chain + full-corpus codes (the
     shared IVFPQ CTE helpers), both batch constructions (the shared
@@ -2699,65 +2558,39 @@ def _knn_ivfpq_incremental_oracle_sql(
     encodings, the fold as pure SQL (state = corpus ∪ b1), the sampled
     ingest-2 ADC probe, and the in-loop drift trigger (stored-encode
     means, ratio, flag — the r10 surfacing)."""
-    t = iterations + 1
-    pt = pq_iterations + 1
-    d_sub = 64 // m
-    coarse = _kmeans_exact_cte_chain(k, iterations)
-    pq_chain = _pq_fit_cte_chain(m, ksub, pq_iterations)
+    it = KMEANS_ITERATIONS
+    t = it + 1
+    pt = PQ_ITERATIONS + 1
+    m = PQ_M
 
-    def enroll(comp: str, cent: str) -> str:
-        return f"""
-    SELECT vec_id, cluster, dist2 FROM (
-        SELECT cb.vec_id, c.cluster,
-               sum(CAST((cb.v - c.m) * (cb.v - c.m) AS DECIMAL(28,15)))
-                   AS dist2
-        FROM {comp} cb JOIN {cent} c USING (d)
-        GROUP BY cb.vec_id, c.cluster)
-    QUALIFY row_number() OVER (
-        PARTITION BY vec_id ORDER BY dist2, cluster) = 1"""
-
-    def comps(src: str) -> str:
-        return f"""
-    SELECT vec_id, generate_subscripts(embedding, 1) AS d,
-           round(CAST(unnest(embedding) AS DOUBLE), 6) AS v
-    FROM {src}"""
-
-    def subrel(src: str) -> str:
-        return f"""
-    SELECT vec_id * {m} + s.s AS vec_id,
-           list_transform(range(0, {d_sub}),
-               j -> CAST(embedding[s.s * {d_sub} + j + 1] AS DOUBLE))
-           || [CAST(s.s * {_PQ_INDICATOR} AS DOUBLE)] AS embedding
-    FROM {src}, range(0, {m}) s(s)"""
-
-    return f"""{coarse}{pq_chain},
+    return f"""{_kmeans_exact_cte_chain()}{_pq_fit_cte_chain()},
 c{t} AS (
     SELECT a.cluster, comp.d,
            CAST(sum(CAST(comp.v AS DECIMAL(18,9))) AS DOUBLE) / count(*) AS m
-    FROM comp JOIN a{iterations} a USING (vec_id)
+    FROM comp JOIN a{it} a USING (vec_id)
     GROUP BY a.cluster, comp.d
 ),
-{_pq_codes_ctes(m, pq_iterations)},
+{_PQ_CODES_CTES},
 b1 AS ({_INC_B1_SQL}),
 b2 AS ({_INC_B2_SQL}),
-compb1 AS ({comps("b1")}),
-a_b1 AS ({enroll("compb1", f"c{t}")}),
-b1sub AS ({subrel("b1")}),
-b1subcomp AS ({comps("b1sub")}),
-b1codes AS ({enroll("b1subcomp", f"pqc{pt}")}),
+compb1 AS ({_sql_components("b1")}),
+a_b1 AS ({_sql_enroll("compb1", f"c{t}")}),
+b1sub AS ({_sql_subvectors("b1")}),
+b1subcomp AS ({_sql_components("b1sub")}),
+b1codes AS ({_sql_enroll("b1subcomp", f"pqc{pt}")}),
 state_cells AS (
-    SELECT vec_id, cluster FROM a{iterations}
+    SELECT vec_id, cluster FROM a{it}
     UNION ALL
     SELECT vec_id, cluster FROM a_b1),
 state_codes AS (
     SELECT vec_id // {m} AS ovec, vec_id % {m} AS s, cluster FROM pqcodes
     UNION ALL
     SELECT vec_id // {m}, vec_id % {m}, cluster FROM b1codes),
-q AS (SELECT * FROM b2 WHERE vec_id % {query_mod} < 2),
-compq AS ({comps("q")}),
-a_q AS ({enroll("compq", f"c{t}")}),
-qsub AS ({subrel("q")}),
-qsubcomp AS ({comps("qsub")}),
+q AS (SELECT * FROM b2 WHERE vec_id % {PQINC_QUERY_MOD} < 2),
+compq AS ({_sql_components("q")}),
+a_q AS ({_sql_enroll("compq", f"c{t}")}),
+qsub AS ({_sql_subvectors("q")}),
+qsubcomp AS ({_sql_components("qsub")}),
 qd AS (
     SELECT comp.vec_id // {m} AS q_id, comp.vec_id % {m} AS s,
            c.cluster,
@@ -2784,28 +2617,19 @@ fitd AS (
 batd AS (
     SELECT round(CAST(sum(dist2) AS DOUBLE) / count(*), 6) AS mean
     FROM b1codes),
-drift AS (
-    SELECT round(b.mean / f.mean, 6) AS drift_ratio,
-           round(b.mean / f.mean, 6) > {refit_ratio} AS refit_recommended
-    FROM fitd f CROSS JOIN batd b)
+drift AS ({crawl_semantic_drift_cte("fitd", "batd")})
 SELECT q_id, ovec AS nn_id, round(CAST(adc AS DOUBLE), 6) AS adc,
        d.drift_ratio, d.refit_recommended
 FROM top1 CROSS JOIN drift d
 """
 
 
-def semantic_index_drift(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = N_CENTROIDS,
-    iterations: int = 3,
-    refit_ratio: float = 1.5,
-) -> DataFrame:
+def semantic_index_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The REFIT TRIGGER for the assign-only regime: compare the mean
     squared enrollment distance of an incoming batch against the
     fit-time mean stored in the persisted index.  A batch drawn from the
     fit distribution enrolls at ≈ the fit mean; a drifted batch enrolls
-    farther, and past ``refit_ratio`` the answer is a refit, not more
+    farther, and past ``REFIT_RATIO`` the answer is a refit, not more
     enrollment.  HONEST magnitude on THIS corpus (measured at sf0.1):
     ingest 1's near-copy half enrolls at 0.9492 vs fit 0.9487 (ratio
     1.0005 — in-distribution, as it should) and the negated half at
@@ -2814,14 +2638,14 @@ def semantic_index_drift(
     directional mass, so even a SIGN FLIP barely raises dist2.  On an
     embedding distribution with real cluster structure (tight cells —
     the case where assign-only enrollment is trusted in the first
-    place) an out-of-distribution batch blows the ratio out; the 1.5
-    default is calibrated for that regime, not this fixture.
+    place) an out-of-distribution batch blows the ratio out;
+    ``REFIT_RATIO`` is calibrated for that regime, not this fixture.
     Unregistered helper (the declared query is the dedup); asserted
     directionally in test_llm_ops.py and quantified in SCALE.md."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     _, b1, _ = incremental_embedding_batches(spark, sf_dir)
-    assign = ensure_kmeans_exact_table(spark, sf_dir, "raw", emb, k, iterations)
-    cent = ensure_centroid_table(spark, sf_dir, "raw", emb, assign, k, iterations)
+    assign = ensure_kmeans_exact_table(spark, sf_dir, "raw", emb)
+    cent = ensure_centroid_table(spark, sf_dir, "raw", emb, assign)
     a1 = _assign_to_centroids_arrays(b1, cent)
     # the fit-side baseline is RE-SCORED against the persisted FINAL
     # centroids (one corpus _assign_to_centroids pass), not read from the
@@ -2844,7 +2668,7 @@ def semantic_index_drift(
         .withColumn(
             "drift_ratio", F.col("batch_mean_dist2") / F.col("fit_mean_dist2")
         )
-        .withColumn("refit_recommended", F.col("drift_ratio") > refit_ratio)
+        .withColumn("refit_recommended", F.col("drift_ratio") > REFIT_RATIO)
     )
 
 
@@ -2898,13 +2722,7 @@ def _versioned_index_table(
     )
 
 
-def semantic_index_refit(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = N_CENTROIDS,
-    iterations: int = 3,
-    refit_ratio: float = 1.5,
-) -> DataFrame:
+def semantic_index_refit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DRIFT → REFIT → SWAP: the index lifecycle closed (VERDICT r7
     item 3 — ``semantic_index_drift`` fired and nothing consumed it).
     One oracle-backed query demonstrating the full loop on the
@@ -2952,24 +2770,19 @@ def semantic_index_refit(
         ),
     )
     batch = drifted_embedding_batch(spark, sf_dir)
-    vtab = _versioned_index_table(spark, sf_dir, f"semidx_{k}x{iterations}_")
+    vtab = _versioned_index_table(spark, sf_dir, f"semidx_{_COARSE_TAG}_")
     latest = vtab.latest_version()  # commit-log versions are 0-based
     if latest is None:
         # v1 = the shared corpus index artifacts, committed (log v0)
-        assign = ensure_kmeans_exact_table(
-            spark, sf_dir, "raw", emb, k, iterations
-        )
-        cent1 = ensure_centroid_table(
-            spark, sf_dir, "raw", emb, assign, k, iterations
-        )
-        vtab.commit(cent1)
+        assign = ensure_kmeans_exact_table(spark, sf_dir, "raw", emb)
+        vtab.commit(ensure_centroid_table(spark, sf_dir, "raw", emb, assign))
         latest = 0
     if latest == 0:
         # the refit: fit v2 over corpus ∪ batch ALONGSIDE the live v1,
         # then one atomic commit is the cutover (resumable: a crash
         # before the commit leaves v1 live and this branch re-runs)
         union = corpus.unionByName(batch)
-        fit2, comp2 = _kmeans_exact_fit(union, k, iterations)
+        fit2, comp2 = _kmeans_exact_fit(union)
         cent2 = _exact_centroids(comp2, fit2.select("vec_id", "cluster"))
         vtab.commit(cent2)
 
@@ -3002,7 +2815,7 @@ def semantic_index_refit(
                 ),
             )
             .withColumn(
-                "refit_recommended", F.col("drift_ratio") > F.lit(refit_ratio)
+                "refit_recommended", F.col("drift_ratio") > F.lit(REFIT_RATIO)
             )
         )
 
@@ -3011,14 +2824,7 @@ def semantic_index_refit(
     )
 
 
-def pq_index_refit(
-    spark: SparkSession,
-    sf_dir: str,
-    m: int = PQ_M,
-    ksub: int = PQ_KSUB,
-    pq_iterations: int = PQ_ITERATIONS,
-    refit_ratio: float = 1.5,
-) -> DataFrame:
+def pq_index_refit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PQ CODEBOOK lifecycle closed (VERDICT r8 item 1 —
     ``semantic_index_refit``'s drift→refit→swap loop on the PQ tier,
     the one maintenance loop still open after r8):
@@ -3077,16 +2883,11 @@ def pq_index_refit(
         ),
     )
     batch = drifted_embedding_batch(spark, sf_dir)
-    vtab = _versioned_index_table(
-        spark, sf_dir, f"pqidx_{m}x{ksub}x{pq_iterations}_"
-    )
+    vtab = _versioned_index_table(spark, sf_dir, f"pqidx_{_PQ_TAG}_")
     latest = vtab.latest_version()  # commit-log versions are 0-based
     if latest is None:
         # v1 = the shared sampled-fit sub-codebooks, committed (log v0)
-        cent1 = ensure_pq_centroid_table(
-            spark, sf_dir, emb, m, ksub, pq_iterations
-        )
-        vtab.commit(cent1)
+        vtab.commit(ensure_pq_centroid_table(spark, sf_dir, emb))
         latest = 0
     if latest == 0:
         # the refit: v2 sub-codebooks over corpus ∪ batch ALONGSIDE the
@@ -3094,41 +2895,34 @@ def pq_index_refit(
         # is the cutover (resumable: a crash before the commit leaves
         # v1 live and this branch re-runs)
         union = corpus.unionByName(batch)
-        sub2 = _pq_subvectors(_pq_fit_sample(union), m)
-        fit2, comp2 = _kmeans_exact_fit(sub2, m * ksub, pq_iterations)
+        sub2 = _pq_subvectors(_pq_fit_sample(union))
+        fit2, comp2 = _kmeans_exact_fit(sub2, PQ_M * PQ_KSUB, PQ_ITERATIONS)
         cent2 = _exact_centroids(comp2, fit2.select("vec_id", "cluster"))
         vtab.commit(cent2)
-    dims = 64 // m + 1
-    from .relational import corpus_tag, ensure_bucketed_table
-
-    tag = corpus_tag(sf_dir, "embeddings")
     # the four encode passes, all persisted pay-once (the trigger reads
     # STORED encode dist2): v1-corpus = the shared code table; v1-batch
     # and v2-union written at cutover; v2-batch = a filter of the union
-    codes1 = ensure_pq_codes_table(spark, sf_dir, emb, m, ksub, pq_iterations)
-    bat1 = ensure_bucketed_table(
+    codes1 = ensure_pq_codes_table(spark, sf_dir, emb)
+    bat1 = _index_table(
         spark,
-        f"pqr_b1_{m}x{ksub}x{pq_iterations}_",
-        tag,
-        8,
+        sf_dir,
+        f"pqr_b1_{_PQ_TAG}_",
         ["vec_id"],
         lambda: _pq_assign_arrays(
-            _pq_subvectors(batch, m), vtab.read(spark, version=0), dims
+            _pq_subvectors(batch), vtab.read(spark, version=0)
         ),
     )
-    fit2 = ensure_bucketed_table(
+    fit2 = _index_table(
         spark,
-        f"pqr_f2_{m}x{ksub}x{pq_iterations}_",
-        tag,
-        8,
+        sf_dir,
+        f"pqr_f2_{_PQ_TAG}_",
         ["vec_id"],
         lambda: _pq_assign_arrays(
-            _pq_subvectors(corpus.unionByName(batch), m),
+            _pq_subvectors(corpus.unionByName(batch)),
             vtab.read(spark, version=1),
-            dims,
         ),
     )
-    bat2 = fit2.filter(F.col("vec_id") >= 500000 * m)
+    bat2 = fit2.filter(F.col("vec_id") >= 500000 * PQ_M)
 
     def mean_of(coded: DataFrame) -> DataFrame:
         return coded.agg(
@@ -3157,7 +2951,7 @@ def pq_index_refit(
                 ),
             )
             .withColumn(
-                "refit_recommended", F.col("drift_ratio") > F.lit(refit_ratio)
+                "refit_recommended", F.col("drift_ratio") > F.lit(REFIT_RATIO)
             )
             .select(
                 "version",
@@ -3173,15 +2967,14 @@ def pq_index_refit(
     return report(1, codes1, bat1).unionByName(report(2, fit2, bat2))
 
 
-def _semantic_index_refit_oracle_sql(
-    k: int = N_CENTROIDS, iterations: int = 3, refit_ratio: float = 1.5
-) -> str:
+def _semantic_index_refit_oracle_sql() -> str:
     """DuckDB replica of ``semantic_index_refit``: the corpus chain and
     the prefix-renamed corpus∪batch chain side by side, final-centroid
     recomputes for both, the four enrollment scores (same-generation
     means), ratios and the refit flag."""
-    t = iterations + 1
-    chain1 = _kmeans_exact_cte_chain(k, iterations)
+    it = KMEANS_ITERATIONS
+    t = it + 1
+    chain1 = _kmeans_exact_cte_chain()
     rsrc = f"""batch AS ({DRIFTED_BATCH_SQL}),
 rsrc AS (
     SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE))
@@ -3191,34 +2984,20 @@ rsrc AS (
     SELECT vec_id, embedding FROM batch
 ), """
     chain2 = _kmeans_exact_cte_chain(
-        k, iterations, source="rsrc", prefix=rsrc, cte_prefix="r", with_kw=False
+        source="rsrc", prefix=rsrc, cte_prefix="r", with_kw=False
     )
-
-    def mean(comp: str, cent: str) -> str:
-        return f"""
-    SELECT CAST(count(*) AS BIGINT) AS n,
-           round(CAST(sum(dist2) AS DOUBLE) / count(*), 6) AS mean_dist2
-    FROM (
-        SELECT vec_id, dist2 FROM (
-            SELECT cb.vec_id, c.cluster,
-                   sum(CAST((cb.v - c.m) * (cb.v - c.m) AS DECIMAL(28,15)))
-                       AS dist2
-            FROM {comp} cb JOIN {cent} c USING (d)
-            GROUP BY cb.vec_id, c.cluster)
-        QUALIFY row_number() OVER (
-            PARTITION BY vec_id ORDER BY dist2, cluster) = 1)"""
 
     return f"""{chain1}{chain2},
 c{t} AS (
     SELECT a.cluster, comp.d,
            CAST(sum(CAST(comp.v AS DECIMAL(18,9))) AS DOUBLE) / count(*) AS m
-    FROM comp JOIN a{iterations} a USING (vec_id)
+    FROM comp JOIN a{it} a USING (vec_id)
     GROUP BY a.cluster, comp.d
 ),
 rc{t} AS (
     SELECT a.cluster, comp.d,
            CAST(sum(CAST(comp.v AS DECIMAL(18,9))) AS DOUBLE) / count(*) AS m
-    FROM rcomp comp JOIN ra{iterations} a USING (vec_id)
+    FROM rcomp comp JOIN ra{it} a USING (vec_id)
     GROUP BY a.cluster, comp.d
 ),
 compb AS (
@@ -3226,39 +3005,33 @@ compb AS (
            round(CAST(unnest(embedding) AS DOUBLE), 6) AS v
     FROM batch
 ),
-fit1 AS ({mean("comp", f"c{t}")}),
-bat1 AS ({mean("compb", f"c{t}")}),
-fit2 AS ({mean("rcomp", f"rc{t}")}),
-bat2 AS ({mean("compb", f"rc{t}")})
+fit1 AS ({_sql_enroll_mean("comp", f"c{t}")}),
+bat1 AS ({_sql_enroll_mean("compb", f"c{t}")}),
+fit2 AS ({_sql_enroll_mean("rcomp", f"rc{t}")}),
+bat2 AS ({_sql_enroll_mean("compb", f"rc{t}")})
 SELECT 1 AS version, f.n AS n_fit, b.n AS n_batch,
        f.mean_dist2 AS fit_mean_dist2, b.mean_dist2 AS batch_mean_dist2,
        round(b.mean_dist2 / f.mean_dist2, 6) AS drift_ratio,
-       round(b.mean_dist2 / f.mean_dist2, 6) > {refit_ratio}
+       round(b.mean_dist2 / f.mean_dist2, 6) > {REFIT_RATIO}
            AS refit_recommended
 FROM fit1 f CROSS JOIN bat1 b
 UNION ALL
 SELECT 2, f.n, b.n, f.mean_dist2, b.mean_dist2,
        round(b.mean_dist2 / f.mean_dist2, 6),
-       round(b.mean_dist2 / f.mean_dist2, 6) > {refit_ratio}
+       round(b.mean_dist2 / f.mean_dist2, 6) > {REFIT_RATIO}
 FROM fit2 f CROSS JOIN bat2 b
 """
 
 
-def _pq_index_refit_oracle_sql(
-    m: int = PQ_M,
-    ksub: int = PQ_KSUB,
-    pq_iterations: int = PQ_ITERATIONS,
-    refit_ratio: float = 1.5,
-) -> str:
+def _pq_index_refit_oracle_sql() -> str:
     """DuckDB replica of ``pq_index_refit``: the corpus sub-codebook
     chain and the prefix-renamed corpus∪batch chain side by side (both
     over their deterministic fit samples — ``_pq_fit_cte_chain``'s
     source/prefix parameterization), final sub-centroid recomputes for
     both, and the four assign-only encode means (same-generation
     discipline), ratios and the refit flag."""
-    pt = pq_iterations + 1
-    d_sub = 64 // m
-    chain1 = _pq_fit_cte_chain(m, ksub, pq_iterations)
+    pt = PQ_ITERATIONS + 1
+    chain1 = _pq_fit_cte_chain()
     usrc = f"""usrc AS (
     SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE))
         AS embedding
@@ -3266,63 +3039,29 @@ def _pq_index_refit_oracle_sql(
     UNION ALL
     SELECT vec_id, embedding FROM batch
 ), """
-    chain2 = _pq_fit_cte_chain(
-        m, ksub, pq_iterations, source="usrc", cte_prefix="rpq", lead=usrc
-    )
-
-    def cent(p: str) -> str:
-        return f"""
-    SELECT a.cluster, comp.d,
-           CAST(sum(CAST(comp.v AS DECIMAL(18,9))) AS DOUBLE) / count(*) AS m
-    FROM {p}comp comp JOIN {p}a{pq_iterations} a USING (vec_id)
-    GROUP BY a.cluster, comp.d"""
-
-    def comps(src: str) -> str:
-        return f"""
-    SELECT vec_id, generate_subscripts(embedding, 1) AS d,
-           round(CAST(unnest(embedding) AS DOUBLE), 6) AS v
-    FROM {src}"""
-
-    def mean(comp: str, c: str) -> str:
-        return f"""
-    SELECT CAST(count(*) AS BIGINT) AS n,
-           round(CAST(sum(dist2) AS DOUBLE) / count(*), 6) AS mean_dist2
-    FROM (
-        SELECT vec_id, dist2 FROM (
-            SELECT cb.vec_id, c.cluster,
-                   sum(CAST((cb.v - c.m) * (cb.v - c.m) AS DECIMAL(28,15)))
-                       AS dist2
-            FROM {comp} cb JOIN {c} c USING (d)
-            GROUP BY cb.vec_id, c.cluster)
-        QUALIFY row_number() OVER (
-            PARTITION BY vec_id ORDER BY dist2, cluster) = 1)"""
+    chain2 = _pq_fit_cte_chain(source="usrc", cte_prefix="rpq", lead=usrc)
 
     return f"""WITH batch AS ({DRIFTED_BATCH_SQL}){chain1}{chain2},
-pqc{pt} AS ({cent("pq")}),
-rpqc{pt} AS ({cent("rpq")}),
-pqallcomp AS ({comps("pqallsub")}),
-rpqallcomp AS ({comps("rpqallsub")}),
-bsub AS (
-    SELECT vec_id * {m} + s.s AS vec_id,
-           list_transform(range(0, {d_sub}),
-               j -> CAST(embedding[s.s * {d_sub} + j + 1] AS DOUBLE))
-           || [CAST(s.s * {_PQ_INDICATOR} AS DOUBLE)] AS embedding
-    FROM batch, range(0, {m}) s(s)),
-bcomp AS ({comps("bsub")}),
-fit1 AS ({mean("pqallcomp", f"pqc{pt}")}),
-bat1 AS ({mean("bcomp", f"pqc{pt}")}),
-fit2 AS ({mean("rpqallcomp", f"rpqc{pt}")}),
-bat2 AS ({mean("bcomp", f"rpqc{pt}")})
+pqc{pt} AS ({_sql_final_centroids("pqcomp", f"pqa{PQ_ITERATIONS}")}),
+rpqc{pt} AS ({_sql_final_centroids("rpqcomp", f"rpqa{PQ_ITERATIONS}")}),
+pqallcomp AS ({_sql_components("pqallsub")}),
+rpqallcomp AS ({_sql_components("rpqallsub")}),
+bsub AS ({_sql_subvectors("batch")}),
+bcomp AS ({_sql_components("bsub")}),
+fit1 AS ({_sql_enroll_mean("pqallcomp", f"pqc{pt}")}),
+bat1 AS ({_sql_enroll_mean("bcomp", f"pqc{pt}")}),
+fit2 AS ({_sql_enroll_mean("rpqallcomp", f"rpqc{pt}")}),
+bat2 AS ({_sql_enroll_mean("bcomp", f"rpqc{pt}")})
 SELECT 1 AS version, f.n AS n_fit, b.n AS n_batch,
        f.mean_dist2 AS fit_mean_dist2, b.mean_dist2 AS batch_mean_dist2,
        round(b.mean_dist2 / f.mean_dist2, 6) AS drift_ratio,
-       round(b.mean_dist2 / f.mean_dist2, 6) > {refit_ratio}
+       round(b.mean_dist2 / f.mean_dist2, 6) > {REFIT_RATIO}
            AS refit_recommended
 FROM fit1 f CROSS JOIN bat1 b
 UNION ALL
 SELECT 2, f.n, b.n, f.mean_dist2, b.mean_dist2,
        round(b.mean_dist2 / f.mean_dist2, 6),
-       round(b.mean_dist2 / f.mean_dist2, 6) > {refit_ratio}
+       round(b.mean_dist2 / f.mean_dist2, 6) > {REFIT_RATIO}
 FROM fit2 f CROSS JOIN bat2 b
 """
 
@@ -3366,10 +3105,11 @@ def _sql_enroll(comp: str, cent: str) -> str:
         PARTITION BY vec_id ORDER BY dist2, cluster) = 1"""
 
 
-def _sql_semantic_match(cand: str, vecs: str, threshold: float) -> str:
+def _sql_semantic_match(cand: str, vecs: str) -> str:
     """CTE body: exact-cosine verify of banded candidates — (vec_id,
-    dup_of = min matching a_id) at sim >= threshold, zero-norm vectors
-    excluded — the DuckDB twin of ``_semantic_screen``'s rerank tail."""
+    dup_of = min matching a_id) at sim >= ``SEMANTIC_THRESHOLD``,
+    zero-norm vectors excluded — the DuckDB twin of ``_semantic_screen``'s
+    rerank tail."""
     return f"""
     SELECT c.b_id AS vec_id, min(c.a_id) AS dup_of
     FROM {cand} c
@@ -3378,8 +3118,45 @@ def _sql_semantic_match(cand: str, vecs: str, threshold: float) -> str:
     WHERE list_sum(list_transform(ea.embedding, x -> x*x)) > 0
       AND list_sum(list_transform(eb.embedding, x -> x*x)) > 0
       AND round(list_cosine_similarity(ea.embedding, eb.embedding), 6)
-          >= {threshold}
+          >= {SEMANTIC_THRESHOLD}
     GROUP BY c.b_id"""
+
+
+def _sql_components(src: str) -> str:
+    """CTE body: the 6-dp-quantized exploded (vec_id, d, v) components of
+    ``src`` — the DuckDB twin of ``_quantized_components``."""
+    return f"""
+    SELECT vec_id, generate_subscripts(embedding, 1) AS d,
+           round(CAST(unnest(embedding) AS DOUBLE), 6) AS v
+    FROM {src}"""
+
+
+def _sql_subvectors(src: str) -> str:
+    """CTE body: the PQ sub-vector relation of ``src`` — the DuckDB twin
+    of ``_pq_subvectors``."""
+    return f"""
+    SELECT vec_id * {PQ_M} + s.s AS vec_id,
+           list_transform(range(0, {PQ_DSUB}),
+               j -> CAST(embedding[s.s * {PQ_DSUB} + j + 1] AS DOUBLE))
+           || [CAST(s.s * {_PQ_INDICATOR} AS DOUBLE)] AS embedding
+    FROM {src}, range(0, {PQ_M}) s(s)"""
+
+
+def _sql_enroll_mean(comp: str, cent: str) -> str:
+    """CTE body: (n, mean_dist2) of ``comp``'s assign-only enrollment
+    against ``cent`` — one side of a refit oracle's drift ratio."""
+    return f"""
+    SELECT CAST(count(*) AS BIGINT) AS n,
+           round(CAST(sum(dist2) AS DOUBLE) / count(*), 6) AS mean_dist2
+    FROM (
+        SELECT vec_id, dist2 FROM (
+            SELECT cb.vec_id, c.cluster,
+                   sum(CAST((cb.v - c.m) * (cb.v - c.m) AS DECIMAL(28,15)))
+                       AS dist2
+            FROM {comp} cb JOIN {cent} c USING (d)
+            GROUP BY cb.vec_id, c.cluster)
+        QUALIFY row_number() OVER (
+            PARTITION BY vec_id ORDER BY dist2, cluster) = 1)"""
 
 
 def _sql_final_centroids(comp: str, assign: str) -> str:
@@ -3394,12 +3171,17 @@ def _sql_final_centroids(comp: str, assign: str) -> str:
     GROUP BY a.cluster, comp.d"""
 
 
-def _dedup_semantic_incremental_oracle_sql(
-    k: int = N_CENTROIDS,
-    iterations: int = 3,
-    threshold: float = SEMANTIC_THRESHOLD,
-    refit_ratio: float = 1.5,
-) -> str:
+def crawl_semantic_drift_cte(fit: str, bat: str) -> str:
+    """CTE body: (drift_ratio, refit_recommended) from two 1-row mean
+    CTEs — the ``_drift_trigger_frame`` expression in SQL, shared by
+    both crawl oracles and the incremental semantic and PQ oracles."""
+    return f"""
+    SELECT round(b.mean / f.mean, 6) AS drift_ratio,
+           round(b.mean / f.mean, 6) > {REFIT_RATIO} AS refit_recommended
+    FROM {fit} f CROSS JOIN {bat} b"""
+
+
+def _dedup_semantic_incremental_oracle_sql() -> str:
     """DuckDB replica of ``dedup_semantic_incremental``: the raw-corpus
     exact-k-means chain, the final-centroid recompute, both batch
     constructions (perturb in a subquery, re-id outside — the
@@ -3409,20 +3191,14 @@ def _dedup_semantic_incremental_oracle_sql(
     trigger — per-ingest stored-enrollment means against that ingest's
     state (day-0 corpus score for ingest 1, folded score for ingest 2),
     ratio and flag (the r10 surfacing)."""
-    chain = _kmeans_exact_cte_chain(k, iterations)
-    t = iterations + 1
-
-    def sigs(src: str, member: str) -> str:
-        return _sql_srp_sigs(src, member)
+    it = KMEANS_ITERATIONS
+    t = it + 1
 
     def enroll(comp: str) -> str:
         return _sql_enroll(comp, f"c{t}")
 
-    def screen(cand: str, vecs: str) -> str:
-        return _sql_semantic_match(cand, vecs, threshold)
-
-    return f"""{chain},
-c{t} AS ({_sql_final_centroids("comp", f"a{iterations}")}),
+    return f"""{_kmeans_exact_cte_chain()},
+c{t} AS ({_sql_final_centroids("comp", f"a{it}")}),
 corpus AS (
     SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE))
         AS embedding
@@ -3442,16 +3218,16 @@ compb2 AS (
 ),
 a_b1 AS ({enroll("compb1")}),
 a_b2 AS ({enroll("compb2")}),
-memc AS (SELECT vec_id, cluster FROM a{iterations}),
-sigc AS ({sigs("corpus", "memc")}),
-sigb1 AS ({sigs("b1", "a_b1")}),
-sigb2 AS ({sigs("b2", "a_b2")}),
+memc AS (SELECT vec_id, cluster FROM a{it}),
+sigc AS ({_sql_srp_sigs("corpus", "memc")}),
+sigb1 AS ({_sql_srp_sigs("b1", "a_b1")}),
+sigb2 AS ({_sql_srp_sigs("b2", "a_b2")}),
 cand1 AS (
     SELECT DISTINCT s.vec_id AS a_id, b.vec_id AS b_id
     FROM sigb1 b JOIN sigc s
       ON s.cluster = b.cluster AND s.tbl = b.tbl AND s.sig = b.sig),
 vecs1 AS (SELECT * FROM corpus UNION ALL SELECT * FROM b1),
-m1 AS ({screen("cand1", "vecs1")}),
+m1 AS ({_sql_semantic_match("cand1", "vecs1")}),
 r1 AS (
     SELECT a.vec_id, a.cluster, round(CAST(a.dist2 AS DOUBLE), 6) AS dist2,
            m.dup_of IS NULL AS kept, m.dup_of
@@ -3471,7 +3247,7 @@ vecs2 AS (
     SELECT v.* FROM b1 v JOIN kept1 USING (vec_id)
     UNION ALL
     SELECT * FROM b2),
-m2 AS ({screen("cand2", "vecs2")}),
+m2 AS ({_sql_semantic_match("cand2", "vecs2")}),
 r2 AS (
     SELECT a.vec_id, a.cluster, round(CAST(a.dist2 AS DOUBLE), 6) AS dist2,
            m.dup_of IS NULL AS kept, m.dup_of
@@ -3491,14 +3267,8 @@ fit2d AS (
 bat2d AS (
     SELECT round(CAST(sum(dist2) AS DOUBLE) / count(*), 6) AS mean
     FROM a_b2),
-drift1 AS (
-    SELECT round(b.mean / f.mean, 6) AS drift_ratio,
-           round(b.mean / f.mean, 6) > {refit_ratio} AS refit_recommended
-    FROM fit1d f CROSS JOIN bat1d b),
-drift2 AS (
-    SELECT round(b.mean / f.mean, 6) AS drift_ratio,
-           round(b.mean / f.mean, 6) > {refit_ratio} AS refit_recommended
-    FROM fit2d f CROSS JOIN bat2d b)
+drift1 AS ({crawl_semantic_drift_cte("fit1d", "bat1d")}),
+drift2 AS ({crawl_semantic_drift_cte("fit2d", "bat2d")})
 SELECT 1 AS ingest, r1.*, d.drift_ratio, d.refit_recommended
 FROM r1 CROSS JOIN drift1 d
 UNION ALL
@@ -3509,7 +3279,7 @@ FROM r2 CROSS JOIN drift2 d
 
 def _kmeans_exact_cte_chain(
     k: int = N_CENTROIDS,
-    iterations: int = 3,
+    iterations: int = KMEANS_ITERATIONS,
     source: str = "embeddings",
     prefix: str = "",
     cte_prefix: str = "",
@@ -3526,7 +3296,9 @@ def _kmeans_exact_cte_chain(
     ``cte_prefix`` renames every chain CTE so TWO independent fits can
     coexist in one statement (the IVFPQ oracle runs the coarse chain and
     the sub-codebook chain side by side); ``with_kw=False`` emits a
-    continuation (leading comma body) instead of a full WITH head."""
+    continuation (leading comma body) instead of a full WITH head.  The
+    defaults are the coarse fit; ``_pq_fit_cte_chain`` passes the PQ
+    sub-codebook fit's."""
     p = cte_prefix
     rounds = "".join(
         f""",
@@ -3559,28 +3331,27 @@ def _kmeans_exact_cte_chain(
 {p}a0 AS (SELECT vec_id, vec_id % {k} AS cluster FROM {source}){rounds}"""
 
 
-def _kmeans_exact_oracle_sql(k: int = N_CENTROIDS, iterations: int = 3) -> str:
+def _kmeans_exact_oracle_sql() -> str:
     """DuckDB replica of ``embedding_kmeans_exact`` — the shared schedule
     chain plus the per-cluster summary."""
-    return f"""{_kmeans_exact_cte_chain(k, iterations)}
+    return f"""{_kmeans_exact_cte_chain()}
 SELECT cluster, CAST(count(*) AS BIGINT) AS n_vectors,
        round(CAST(sum(dist2) AS DOUBLE), 6) AS inertia
-FROM a{iterations} GROUP BY cluster
+FROM a{KMEANS_ITERATIONS} GROUP BY cluster
 """
 
 
-def _knn_ivf_fitted_oracle_sql(
-    k: int = N_CENTROIDS, iterations: int = 3
-) -> str:
+def _knn_ivf_fitted_oracle_sql() -> str:
     """DuckDB replica of ``embedding_knn_ivf_fitted`` — the shared
     schedule chain, then probe the query's own cluster and exact-cosine
     rerank to top-10 (same rounding and tie-break as the Spark side)."""
-    return f"""{_kmeans_exact_cte_chain(k, iterations)},
+    it = KMEANS_ITERATIONS
+    return f"""{_kmeans_exact_cte_chain()},
 qv AS (SELECT embedding::DOUBLE[] AS v FROM embeddings WHERE vec_id = 0),
-qb AS (SELECT cluster FROM a{iterations} WHERE vec_id = 0)
+qb AS (SELECT cluster FROM a{it} WHERE vec_id = 0)
 SELECT a.vec_id,
        round(list_cosine_similarity(e.embedding::DOUBLE[], qv.v), 6) AS sim
-FROM a{iterations} a
+FROM a{it} a
 JOIN qb USING (cluster)
 JOIN embeddings e ON e.vec_id = a.vec_id
 CROSS JOIN qv
@@ -3589,19 +3360,19 @@ ORDER BY sim DESC, a.vec_id LIMIT 10
 """
 
 
-def _knn_ivf_multiprobe_oracle_sql(
-    k: int = N_CENTROIDS, iterations: int = 3, nprobe: int = 3
-) -> str:
+def _knn_ivf_multiprobe_oracle_sql() -> str:
     """DuckDB replica of ``embedding_knn_ivf_multiprobe`` — the shared
-    schedule chain, the final-centroid recompute (the c{iterations+1}
-    CTE, same SQL as the in-loop rounds), exact-decimal query→centroid
-    scores, (dist2, cluster)-ordered probe pick, union rerank."""
-    t = iterations + 1
-    return f"""{_kmeans_exact_cte_chain(k, iterations)},
+    schedule chain, the final-centroid recompute (the
+    c{KMEANS_ITERATIONS+1} CTE, same SQL as the in-loop rounds),
+    exact-decimal query→centroid scores, (dist2, cluster)-ordered probe
+    pick, union rerank."""
+    it = KMEANS_ITERATIONS
+    t = it + 1
+    return f"""{_kmeans_exact_cte_chain()},
 c{t} AS (
     SELECT a.cluster, comp.d,
            CAST(sum(CAST(comp.v AS DECIMAL(18,9))) AS DOUBLE) / count(*) AS m
-    FROM comp JOIN a{iterations} a USING (vec_id)
+    FROM comp JOIN a{it} a USING (vec_id)
     GROUP BY a.cluster, comp.d
 ),
 qd AS (
@@ -3612,11 +3383,11 @@ qd AS (
     WHERE comp.vec_id = 0
     GROUP BY c.cluster
 ),
-probes AS (SELECT cluster FROM qd ORDER BY dist2, cluster LIMIT {nprobe}),
+probes AS (SELECT cluster FROM qd ORDER BY dist2, cluster LIMIT {IVF_NPROBE}),
 qv AS (SELECT embedding::DOUBLE[] AS v FROM embeddings WHERE vec_id = 0)
 SELECT a.vec_id,
        round(list_cosine_similarity(e.embedding::DOUBLE[], qv.v), 6) AS sim
-FROM a{iterations} a
+FROM a{it} a
 JOIN probes USING (cluster)
 JOIN embeddings e ON e.vec_id = a.vec_id
 CROSS JOIN qv
@@ -3637,12 +3408,7 @@ PQ_INDEX_REFIT_ORACLE_SQL = _pq_index_refit_oracle_sql()
 KNN_IVFPQ_ORACLE_SQL = _knn_ivfpq_oracle_sql()
 
 
-def crawl_semantic_ctes_pre(
-    b1_sql: str,
-    k: int = N_CENTROIDS,
-    iterations: int = 3,
-    threshold: float = SEMANTIC_THRESHOLD,
-) -> str:
+def crawl_semantic_ctes_pre(b1_sql: str) -> str:
     """CTE continuation (leading comma) for the unified-crawl oracles —
     everything the SEMANTIC tier needs BEFORE the all-tier ``kept1`` is
     known: the raw-corpus exact-k-means chain (``sx``-prefixed so it
@@ -3654,22 +3420,17 @@ def crawl_semantic_ctes_pre(
     (``sxdrift1``).  Every sub-spelling is the shared helper the
     ``dedup_semantic_incremental`` oracle uses, so the crawl's semantic
     tier and the standalone loop can never drift."""
-    chain = _kmeans_exact_cte_chain(
-        k, iterations, cte_prefix="sx", with_kw=False
-    )
+    chain = _kmeans_exact_cte_chain(cte_prefix="sx", with_kw=False)
     return f"""{chain},
-sxcf AS ({_sql_final_centroids("sxcomp", f"sxa{iterations}")}),
+sxcf AS ({_sql_final_centroids("sxcomp", f"sxa{KMEANS_ITERATIONS}")}),
 sxcorp AS (
     SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE))
         AS embedding
     FROM embeddings),
 sxb1 AS ({b1_sql}),
-sxcb1 AS (
-    SELECT vec_id, generate_subscripts(embedding, 1) AS d,
-           round(CAST(unnest(embedding) AS DOUBLE), 6) AS v
-    FROM sxb1),
+sxcb1 AS ({_sql_components("sxb1")}),
 sxab1 AS ({_sql_enroll("sxcb1", "sxcf")}),
-sxmemc AS (SELECT vec_id, cluster FROM sxa{iterations}),
+sxmemc AS (SELECT vec_id, cluster FROM sxa{KMEANS_ITERATIONS}),
 sxsigc AS ({_sql_srp_sigs("sxcorp", "sxmemc")}),
 sxsigb1 AS ({_sql_srp_sigs("sxb1", "sxab1")}),
 sxcand1 AS (
@@ -3677,7 +3438,7 @@ sxcand1 AS (
     FROM sxsigb1 b JOIN sxsigc s
       ON s.cluster = b.cluster AND s.tbl = b.tbl AND s.sig = b.sig),
 sxvecs1 AS (SELECT * FROM sxcorp UNION ALL SELECT * FROM sxb1),
-sxm1 AS ({_sql_semantic_match("sxcand1", "sxvecs1", threshold)}),
+sxm1 AS ({_sql_semantic_match("sxcand1", "sxvecs1")}),
 sxacorp AS ({_sql_enroll("sxcomp", "sxcf")}),
 sxfit1 AS (
     SELECT round(CAST(sum(dist2) AS DOUBLE) / count(*), 6) AS mean
@@ -3687,24 +3448,7 @@ sxbat1 AS (
     FROM sxab1)"""
 
 
-def crawl_semantic_drift_cte(
-    fit: str, bat: str, refit_ratio: float = 1.5
-) -> str:
-    """CTE body: (drift_ratio, refit_recommended) from two 1-row mean
-    CTEs — the ``_drift_trigger_frame`` expression in SQL, shared by
-    both crawl oracles and the semantic-incremental oracle's spelling."""
-    return f"""
-    SELECT round(b.mean / f.mean, 6) AS drift_ratio,
-           round(b.mean / f.mean, 6) > {refit_ratio} AS refit_recommended
-    FROM {fit} f CROSS JOIN {bat} b"""
-
-
-def crawl_semantic_ctes_post(
-    b2_sql: str,
-    kept_cte: str = "kept1",
-    iterations: int = 3,
-    threshold: float = SEMANTIC_THRESHOLD,
-) -> str:
+def crawl_semantic_ctes_post(b2_sql: str, kept_cte: str = "kept1") -> str:
     """CTE continuation for the TWOROUND crawl oracle — the semantic
     tier AFTER the all-tier ``kept_cte`` (doc_id) is known: the FOLD as
     pure SQL (band state 2 = corpus sigs ∪ ingest-1 keeps' sigs; vector
@@ -3714,10 +3458,7 @@ def crawl_semantic_ctes_post(
     drift frame inputs (``sxfit2``/``sxbat2`` — the folded baseline)."""
     return f""",
 sxb2 AS ({b2_sql}),
-sxcb2 AS (
-    SELECT vec_id, generate_subscripts(embedding, 1) AS d,
-           round(CAST(unnest(embedding) AS DOUBLE), 6) AS v
-    FROM sxb2),
+sxcb2 AS ({_sql_components("sxb2")}),
 sxab2 AS ({_sql_enroll("sxcb2", "sxcf")}),
 sxsigb2 AS ({_sql_srp_sigs("sxb2", "sxab2")}),
 sxstate2 AS (
@@ -3734,7 +3475,7 @@ sxvecs2 AS (
     SELECT v.* FROM sxb1 v JOIN {kept_cte} kk ON v.vec_id = kk.doc_id
     UNION ALL
     SELECT * FROM sxb2),
-sxm2 AS ({_sql_semantic_match("sxcand2", "sxvecs2", threshold)}),
+sxm2 AS ({_sql_semantic_match("sxcand2", "sxvecs2")}),
 sxfit2 AS (
     SELECT round(CAST(sum(dist2) AS DOUBLE) / count(*), 6) AS mean
     FROM (SELECT dist2 FROM sxacorp
@@ -4128,12 +3869,7 @@ def hybrid_retrieval_rrf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _hybrid_rrf_from_dense(spark, sf_dir, dense_top)
 
 
-def embedding_sq8_knn_incremental(
-    spark: SparkSession,
-    sf_dir: str,
-    query_mod: int = PQINC_QUERY_MOD,
-    k: int = TOP_K,
-) -> DataFrame:
+def embedding_sq8_knn_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SQ8 serving tier's maintenance loop (r11 — VERDICT r10 item
     7): TWO consecutive embedding ingests against the persisted code
     table —
@@ -4146,17 +3882,16 @@ def embedding_sq8_knn_incremental(
                 state (``_ensure_folded_state``: <= 1 file per bucket,
                 threshold compaction, crash-guard marker);
       serve     a deterministic sample of ingest 2 (vec_id %
-                ``query_mod`` < 2 — the ``PQINC_QUERY_MOD`` probe
-                discipline: the declared query measures the serving
-                plan, not answer-writing over the whole batch)
-                quantizes inline and runs the symmetric integer-dot
-                top-``k`` against the FOLDED state: odd queries
+                ``PQINC_QUERY_MOD`` < 2 — the declared query measures
+                the serving plan, not answer-writing over the whole
+                batch) quantizes inline and runs the symmetric
+                integer-dot top-``TOP_K`` against the FOLDED state: odd queries
                 (near-copies of b1's negated survivors) find their
                 ingest-1 parents at the top precisely because the fold
                 happened — the stale-index failure the tworound
                 contract exists to catch.
 
-    Output: (q_id, vec_id, sim_sq8) — each sampled query's top-k over
+    Output: (q_id, vec_id, sim_sq8) — each sampled query's top-10 over
     corpus ∪ ingest 1.  The DuckDB oracle replays both batch
     constructions (the shared ``_INC_B1_SQL``/``_INC_B2_SQL``), the
     quantization, the fold (state = corpus ∪ b1) and the per-query
@@ -4189,7 +3924,7 @@ def embedding_sq8_knn_incremental(
         lambda: sq8_codes(b1),
         compact=True,
     )
-    q = sq8_codes(b2.filter(F.col("vec_id") % query_mod < 2)).select(
+    q = sq8_codes(b2.filter(F.col("vec_id") % PQINC_QUERY_MOD < 2)).select(
         F.col("vec_id").alias("q_id"),
         F.col("maxabs").alias("q_maxabs"),
         F.col("codes").alias("q_codes"),
@@ -4202,14 +3937,12 @@ def embedding_sq8_knn_incremental(
     )
     return (
         scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
+        .filter(F.col("rn") <= TOP_K)
         .select("q_id", "vec_id", "sim_sq8")
     )
 
 
-def _sq8_knn_incremental_oracle_sql(
-    query_mod: int = PQINC_QUERY_MOD, k: int = TOP_K
-) -> str:
+def _sq8_knn_incremental_oracle_sql() -> str:
     """DuckDB replica of ``embedding_sq8_knn_incremental``: both batch
     constructions (shared SQL), the fold as pure SQL (state = corpus ∪
     b1), the SQ8 quantization spelling of ``EMBEDDING_SQ8_KNN_ORACLE_
@@ -4236,7 +3969,7 @@ qcoded AS (
                AS q_codes
     FROM (SELECT vec_id, embedding AS v,
                  list_max(list_transform(embedding, x -> abs(x))) AS maxabs
-          FROM b2 WHERE vec_id % {query_mod} < 2)
+          FROM b2 WHERE vec_id % {PQINC_QUERY_MOD} < 2)
     WHERE maxabs > 0)
 SELECT q.q_id, c.vec_id,
        round(c.maxabs * q.q_maxabs
@@ -4246,7 +3979,7 @@ SELECT q.q_id, c.vec_id,
              / 16129.0, 6) AS sim_sq8
 FROM scoded c CROSS JOIN qcoded q
 QUALIFY row_number() OVER (
-    PARTITION BY q.q_id ORDER BY sim_sq8 DESC, c.vec_id ASC) <= {k}
+    PARTITION BY q.q_id ORDER BY sim_sq8 DESC, c.vec_id ASC) <= {TOP_K}
 """
 
 

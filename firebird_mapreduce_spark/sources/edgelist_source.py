@@ -18,8 +18,8 @@ has no built-in reader for:
   on src/dst/weight are fully absorbed into the Python read loop, so
   filtered rows never cross the Python→JVM Arrow boundary — the win
   pushdown exists for in a Python source.
-- **Undirected doubling** as a source option, mirroring the reference
-  loader's edge doubling (``main.cpp:92-93``).
+- **Undirected**: every edge line yields its mirrored row too, as the
+  reference loader doubles edges (``main.cpp:92-93``).
 """
 
 from __future__ import annotations
@@ -75,7 +75,6 @@ class EdgeListReader(DataSourceReader):
         self.path = options.get("path")
         if not self.path:
             raise ValueError("edgelist source requires a path")
-        self.undirected = str(options.get("undirected", "true")).lower() == "true"
         self.num_partitions = int(options.get("numPartitions", "4"))
         self.pushed: list[tuple[type, str, float]] = []
 
@@ -128,13 +127,9 @@ class EdgeListReader(DataSourceReader):
                 if len(parts) != 3:
                     continue  # blank/trailing line
                 src, dst, weight = int(parts[0]), int(parts[1]), float(parts[2])
-                row = (src, dst, weight)
-                if self._keep(row):
-                    yield row
-                if self.undirected:
-                    back = (dst, src, weight)
-                    if self._keep(back):
-                        yield back
+                for row in ((src, dst, weight), (dst, src, weight)):
+                    if self._keep(row):
+                        yield row
 
 
 def register(spark) -> None:

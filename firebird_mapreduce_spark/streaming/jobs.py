@@ -1445,11 +1445,7 @@ def _strmm_apply_batch(
         ingest2_embedding_batch,
         ingest_embedding_batch,
     )
-    from ..operators.similarity import (
-        SEMANTIC_THRESHOLD,
-        _drift_trigger_frame,
-        _semantic_state_tables,
-    )
+    from ..operators.similarity import _drift_trigger_frame, _semantic_state_tables
 
     bdir = os.path.join(report_dir, f"batch_{batch_id:05d}")
     if os.path.exists(os.path.join(bdir, "_SUCCESS")):
@@ -1477,12 +1473,10 @@ def _strmm_apply_batch(
     # keeps the function directly drivable by the retry unit tests.
     if cent is None:
         cent = _semantic_state_tables(spark, sf_dir)[2]
-    assign, keys, sem_rep = _crawl_semantic_parts(
-        bvecs, cent, sb, sv, SEMANTIC_THRESHOLD
-    )
+    assign, keys, sem_rep = _crawl_semantic_parts(bvecs, cent, sb, sv)
     # the in-loop drift trigger: this delivery's enrollment vs the
     # STORED score state as of this trigger (two 1-row aggregates)
-    drift = _drift_trigger_frame(ss, assign, 1.5)
+    drift = _drift_trigger_frame(ss, assign)
     rep = _multimodal_screen(
         bdf,
         (th, tb),

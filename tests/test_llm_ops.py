@@ -1357,7 +1357,7 @@ def test_pq_assign_arrays_equals_exploded_assign(spark):
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
     cent = S.ensure_pq_centroid_table(spark, SF_SMOKE, emb)
-    sub = S._pq_subvectors(emb.filter(F.col("vec_id") < 40), S.PQ_M)
+    sub = S._pq_subvectors(emb.filter(F.col("vec_id") < 40))
     arrays = {
         r["vec_id"]: (r["cluster"], str(r["dist2"]))
         for r in S._pq_assign_arrays(sub, cent).collect()
@@ -1553,7 +1553,7 @@ def test_ingest_screen_dispositions_and_precedence(spark):
     }
     assert len(drift) == 1, drift
     ratio, flag = next(iter(drift))
-    assert not flag and 0.5 < ratio < 1.5, drift
+    assert not flag and 0.5 < ratio < S.REFIT_RATIO, drift
 
 
 def test_ingest_tworound_fold_proofs_all_tiers(spark):
@@ -1685,7 +1685,7 @@ def test_drift_trigger_evaluated_inside_loops(spark):
     assert set(pairs) == {1, 2}, "drift columns not constant per ingest"
     for i in (1, 2):
         assert not pairs[i]["refit_recommended"], pairs[i]
-        assert 0.5 < pairs[i]["drift_ratio"] < 1.5, pairs[i]
+        assert 0.5 < pairs[i]["drift_ratio"] < S.REFIT_RATIO, pairs[i]
     pq = {
         tuple(r)
         for r in S.embedding_knn_ivfpq_incremental(spark, SF_SMOKE)
@@ -1700,21 +1700,17 @@ def test_drift_trigger_evaluated_inside_loops(spark):
     emb = load_table(spark, SF_SMOKE, "embeddings").select(
         "vec_id", "embedding"
     )
-    assign = S.ensure_kmeans_exact_table(
-        spark, SF_SMOKE, "raw", emb, S.N_CENTROIDS, 3
-    )
-    cent = S.ensure_centroid_table(
-        spark, SF_SMOKE, "raw", emb, assign, S.N_CENTROIDS, 3
-    )
+    assign = S.ensure_kmeans_exact_table(spark, SF_SMOKE, "raw", emb)
+    cent = S.ensure_centroid_table(spark, SF_SMOKE, "raw", emb, assign)
     tag = corpus_tag(SF_SMOKE, "embeddings")
     baseline = spark.table(f"semv_score_{S.N_CENTROIDS}x3_{tag}")
     drifted = S._assign_to_centroids(
         S._quantized_components(S.drifted_embedding_batch(spark, SF_SMOKE)),
         cent,
     )
-    flag = S._drift_trigger_frame(baseline, drifted, 1.5).collect()[0]
+    flag = S._drift_trigger_frame(baseline, drifted).collect()[0]
     assert flag["refit_recommended"], flag
-    assert flag["drift_ratio"] > 1.5, flag
+    assert flag["drift_ratio"] > S.REFIT_RATIO, flag
 
 
 def test_sq8_codes_bounded_and_recall_vs_exact(spark):

@@ -62,7 +62,6 @@ def main() -> None:
     )
     from firebird_mapreduce_spark.operators.similarity import (
         NEARDUP_TABLES,
-        SEMANTIC_THRESHOLD,
         _assign_to_centroids,
         _drift_trigger_frame,
         _quantized_components,
@@ -128,15 +127,13 @@ def main() -> None:
     timeit(
         spark,
         "sem_full_parts_rep",
-        lambda: _crawl_semantic_parts(
-            bvecs, cent, semb, semv, SEMANTIC_THRESHOLD
-        )[2],
+        lambda: _crawl_semantic_parts(bvecs, cent, semb, semv)[2],
         runs,
     )
 
     def drift_only():
         a1 = _assign_to_centroids(_quantized_components(bvecs), cent)
-        return _drift_trigger_frame(sems, a1, 1.5)
+        return _drift_trigger_frame(sems, a1)
 
     timeit(spark, "sem_drift", drift_only, runs)
 
