@@ -37,6 +37,10 @@ _DEFAULT_CONFS: dict[str, str] = {
     # keep parquet scans well-split at scale
     "spark.sql.files.maxPartitionBytes": "128m",
     "spark.sql.parquet.filterPushdown": "true",
+    # Python data sources (sources/edgelist_source.py) absorb filters in
+    # their read loop; Spark 4.1 gates that, and a reader implementing
+    # pushFilters fails with the gate closed
+    "spark.sql.python.filterPushdown.enabled": "true",
     "spark.driver.memory": "8g",
     "spark.ui.enabled": "false",
 }

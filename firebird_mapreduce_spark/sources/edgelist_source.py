@@ -134,8 +134,8 @@ class EdgeListReader(DataSourceReader):
 
 def register(spark) -> None:
     """Idempotently register the format with a session.  Python-source
-    filter pushdown ships flag-gated in Spark 4.1; a reader that
-    implements ``pushFilters`` hard-errors with the flag off, so
-    registration turns it on (runtime conf, session-scoped)."""
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    filter pushdown ships flag-gated in Spark 4.1 and a reader that
+    implements ``pushFilters`` hard-errors with the flag off; the engine
+    session turns it on (``session._DEFAULT_CONFS``), so registering
+    changes no session conf."""
     spark.dataSource.register(EdgeListDataSource)

@@ -64,6 +64,56 @@ def test_sssp_small_graph(spark, source, checkpoint_every):
     assert result == dijkstra(SMALL_GRAPH_EDGES, source)
 
 
+def test_sssp_builds_no_frame_from_python_data(spark, monkeypatch, tmp_path):
+    """An sssp solve builds every frame in the JVM: a frame from Python-side
+    data plans as a scan over a Python RDD, whose checkpoint job waits on
+    forked Python workers.  With both ways of building one made to raise,
+    a solve over a file-read edge table still reaches the Dijkstra
+    fixpoint."""
+    from pyspark import SparkContext
+
+    from firebird_mapreduce_spark.sources.readers import read_edge_list
+
+    path = tmp_path / "small.graph"
+    path.write_text(
+        "10 6\n" + "".join(f"{s} {d} {w}\n" for s, d, w in SMALL_GRAPH_EDGES)
+    )
+    edges = read_edge_list(spark, str(path))
+
+    def refuse(*args, **kwargs):
+        raise AssertionError("frame built from Python-side data")
+
+    monkeypatch.setattr(spark, "createDataFrame", refuse)
+    monkeypatch.setattr(SparkContext, "parallelize", refuse)
+    result = {r["node"]: r["dist"] for r in sssp(spark, edges, 7).collect()}
+    assert result == dijkstra(SMALL_GRAPH_EDGES, 7)
+
+
+def test_graph_solves_leave_no_temp_view(spark):
+    """A round is one ``spark.sql`` statement whose formatter binds each
+    frame as a uniquely named ``_pyspark_*`` temporary view; every solve
+    must drop all of them."""
+    from firebird_mapreduce_spark.operators.graph import (
+        connected_components,
+        connected_components_star,
+        derived_component_graph,
+    )
+
+    def views():
+        return {
+            t.name
+            for t in spark.catalog.listTables()
+            if t.name.startswith("_pyspark_")
+        }
+
+    before = views()
+    sssp(spark, derived_nation_graph(spark, SF_SMOKE), 0).collect()
+    cc_edges = derived_component_graph(spark, SF_SMOKE)
+    connected_components(spark, cc_edges).collect()
+    connected_components_star(spark, cc_edges).collect()
+    assert views() == before == set()
+
+
 def test_sssp_syn_scale_vs_dijkstra(spark):
     """The reference's own end-to-end test at its exact scale: SSSP over a
     syn.graph-shaped 18 K-node graph (the canonical generator in

@@ -234,6 +234,19 @@ def test_edgelist_datasource_filter_pushdown_absorbs_comparisons(spark, tmp_path
     assert reader.pushed == [(EqualTo, "src", 0)]
 
 
+def test_edgelist_register_changes_no_session_conf(spark):
+    """Registering the edge-list format only registers it: the Python
+    filter-pushdown gate is an engine-session default, so a session that
+    closed it keeps it closed after ``register``."""
+    from firebird_mapreduce_spark.session import session_confs
+    from firebird_mapreduce_spark.sources.edgelist_source import register
+
+    key = "spark.sql.python.filterPushdown.enabled"
+    with session_confs(spark, {key: "false"}):
+        register(spark)
+        assert spark.conf.get(key) == "false"
+
+
 def test_corrupt_parquet_file_tolerated_when_configured(spark, tmp_path):
     """Operational ingestion posture: with
     ``spark.sql.files.ignoreCorruptFiles`` a scan survives a corrupt
