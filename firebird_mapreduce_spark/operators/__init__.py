@@ -13,4 +13,6 @@
   checks, inverted index, TF-IDF, stratified sampling, quality top-k,
   sequence packing.
 - ``skew``        — salted two-stage aggregation for hot keys.
+- ``fold``        — the crawl fold: the nine-tier spec, the one bucketed
+  append and the settle step every incremental crawl folds through.
 """

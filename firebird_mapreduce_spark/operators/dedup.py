@@ -35,6 +35,8 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import exploded_word_shingles, simhash16, tokens
 from ..sources import load_table, undirected
+# re-exported: the bucketing tests drive the folded-state primitive here
+from .fold import _ensure_folded_state  # noqa: F401
 
 # SQL fragment shared with the oracles in __spark_entry__.py: the augmented
 # corpus (original ∪ near-copy ∪ exact copy).
@@ -865,90 +867,6 @@ def _screen_batch(
     return _disposition_report(exact, near)
 
 
-def _ensure_folded_state(
-    spark: SparkSession,
-    prefix: str,
-    tag: str,
-    n_buckets: int,
-    key_cols: list[str],
-    build_base,
-    build_delta,
-    compact: bool = False,
-    compact_threshold: int = 4,
-) -> DataFrame:
-    """Bucketed state table maintained by CREATE-then-APPEND: the base
-    snapshot is written once, then the ingest delta is APPENDED as
-    additional bucket files (``mode("append")`` with the same
-    ``bucketBy`` keeps the table's bucketing metadata, so consumers
-    still read it exchange-free) — the per-ingest state-update cost is
-    O(delta) data written, never a corpus rewrite.  A fold-complete
-    marker file guards the two-write sequence: a crash between base and
-    delta leaves the marker missing, and the next call drops the half
-    state and rebuilds instead of silently screening against a corpus
-    snapshot that forgot the previous ingest.
-
-    ``compact`` runs ``layout.maybe_compact_bucketed_table`` once after
-    the fold completes: each append leaves O(batch) extra files per
-    bucket, so after K ingests the state is K-way fragmented and every
-    screen pays K file opens per bucket — compaction restores one file
-    per bucket while PRESERVING the bucketing metadata (and therefore
-    the zero-corpus-shuffle screen plans pinned in test_bucketing.py).
-    THRESHOLD-DRIVEN (r10): the rewrite only runs when some bucket
-    exceeds ``compact_threshold`` files, so a daily crawl pays the
-    O(state) rewrite every ~threshold days, not every day — a fresh
-    base+delta fold sits at 2 waves and correctly skips.  A crash
-    mid-compaction lands in the same rebuild path as a crash mid-fold:
-    the table is briefly absent and the marker/tableExists guard
-    rebuilds — the marker semantics survive compaction because the
-    marker is never touched by it."""
-    import os
-
-    from .layout import maybe_compact_bucketed_table
-    from .relational import ensure_layout_table, warehouse_path
-
-    tbl = f"{prefix}{tag}"
-    marker = os.path.join(warehouse_path(spark), f"_{tbl}_folded")
-    # a crash between compaction's tmp write and its DROP/RENAME strands
-    # a full-size __compact duplicate that compact_bucketed_table itself
-    # is never re-entered to clear (table + marker both look healthy) —
-    # sweep it here, the one gate every consumer passes through
-    if compact:
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}__compact")
-    if spark.catalog.tableExists(tbl) and not os.path.exists(marker):
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    if not spark.catalog.tableExists(tbl):
-        if os.path.exists(marker):
-            os.unlink(marker)  # stale marker from a dropped/stale table
-        ensure_layout_table(
-            spark,
-            prefix,
-            tag,
-            build_base,
-            lambda w: w.bucketBy(n_buckets, *key_cols).sortBy(*key_cols),
-        )
-        (
-            # repartition to the bucket spec (same murmur3-pmod hash as
-            # bucket assignment) so each append adds AT MOST ONE file
-            # per bucket — without it a P-partition delta writes up to
-            # P×n_buckets files and a single fold blows straight past
-            # the compaction threshold, degenerating the cadence to
-            # compact-every-ingest.  The exchange is delta-sized (the
-            # batch), never the state.
-            build_delta()
-            .repartition(n_buckets, *key_cols)
-            .write.mode("append")
-            .bucketBy(n_buckets, *key_cols)
-            .sortBy(*key_cols)
-            .saveAsTable(tbl)
-        )
-        open(marker, "w").close()
-        if compact:
-            maybe_compact_bucketed_table(
-                spark, tbl, n_buckets, key_cols, compact_threshold
-            )
-    return spark.table(tbl)
-
-
 def _text_state_tables(
     spark: SparkSession, sf_dir: str, k: int = 16, bands: int = 4
 ) -> tuple[DataFrame, DataFrame]:
@@ -1027,8 +945,8 @@ def dedup_incremental_tworound(
                 against the day-0 bucketed hash/band tables (the SAME
                 shared tables as ``dedup_incremental_bucketed``);
       fold      ingest 1's kept rows are APPENDED into this query's own
-                state tables (``_ensure_folded_state``: base snapshot
-                written once, each ingest appends O(batch) bucket files
+                state tables (``fold.fold_batch``: the day-0 tables
+                copied once, each ingest appends O(batch) bucket files
                 — never a corpus rewrite; separate tables because the
                 shared day-0 ones must stay corpus-only for the sibling
                 query's oracle);
@@ -1053,14 +971,14 @@ def dedup_incremental_tworound(
     the survivors' state rows.  At 100 TB this is the daily-crawl loop:
     state tables live across ingests, each day appends its survivors,
     and no pass ever rescans or reshuffles the corpus."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    from .fold import TEXT, Delivery, fold_batch, prefixes
+    from .relational import corpus_tag
+
     world = tworound_documents(spark, sf_dir)
     batch1 = world.filter(
         (F.col("doc_id") >= 100000) & (F.col("doc_id") < 200000)
     )
     batch2 = world.filter(F.col("doc_id") >= 200000)
-    from .relational import corpus_tag
-
     tag = corpus_tag(sf_dir, "documents")
     v1_hashes, v1_bands = _text_state_tables(spark, sf_dir, k, bands)
     # lazy (r12): the folds write inc2_* tables, never read by r1's
@@ -1068,39 +986,15 @@ def dedup_incremental_tworound(
     r1 = _screen_batch(batch1, v1_hashes, v1_bands, k, bands).localCheckpoint(
         eager=False
     )
-    kept1 = batch1.join(r1.filter(F.col("kept")).select("doc_id"), "doc_id")
-
-    # the fold: survivors' state rows appended once (deltas deduped
-    # within the batch; they cannot overlap day-0 state — a doc whose
-    # hash or band was already present would not have been kept)
-    # compact=True: the daily-crawl state tables are the longest-lived
-    # in the system — fold, then restore one file per bucket so ingest
-    # K+1's screen never pays K file opens per bucket (the small-files
-    # decay compact_bucketed_table documents); row equality and the
-    # zero-corpus-shuffle plan survive, pinned in test_bucketing.py
-    v2_hashes = _ensure_folded_state(
+    # the fold: the day-0 tables plus the survivors' hashes and bands
+    # (they cannot overlap day-0 state — a doc whose hash or band was
+    # already present would not have been kept)
+    v2_hashes, v2_bands = fold_batch(
         spark,
-        f"inc2_hash_{k}x{bands}_",
         tag,
-        8,
-        ["h"],
-        lambda: docs.select(F.md5("text").alias("h")).distinct(),
-        lambda: kept1.select(F.md5("text").alias("h")).distinct(),
-        compact=True,
-    )
-    v2_bands = _ensure_folded_state(
-        spark,
-        f"inc2_bands_{k}x{bands}_",
-        tag,
-        8,
-        ["band", "sig"],
-        lambda: banded_signatures(docs, k, bands, checkpoint=False)
-        .select("band", "sig")
-        .distinct(),
-        lambda: banded_signatures(kept1, k, bands, checkpoint=False)
-        .select("band", "sig")
-        .distinct(),
-        compact=True,
+        zip(prefixes("inc2_", TEXT, k, bands), TEXT, (v1_hashes, v1_bands)),
+        Delivery.text(batch1, k, bands),
+        r1.filter(F.col("kept")).select("doc_id"),
     )
     r2 = _screen_batch(batch2, v2_hashes, v2_bands, k, bands)
     return r1.select(F.lit(1).alias("ingest"), "*").unionByName(

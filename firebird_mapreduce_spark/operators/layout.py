@@ -20,6 +20,10 @@ from pyspark.sql import functions as F
 # window (see its docstring)
 _AUTO_BUCKETED_SCAN_LOCK = threading.Lock()
 
+# the most files any one bucket of a folded state table may hold before
+# maybe_compact_bucketed_table rewrites it to one file per bucket
+COMPACTION_THRESHOLD = 4
+
 from ..functions.zorder import z2, z3, z4
 from ..session import session_confs
 from ..sources import load_table
@@ -326,21 +330,18 @@ def bucket_fragmentation(spark: SparkSession, tbl: str) -> int:
 
 
 def maybe_compact_bucketed_table(
-    spark: SparkSession,
-    tbl: str,
-    n_buckets: int,
-    key_cols: list[str],
-    threshold: int = 4,
+    spark: SparkSession, tbl: str, n_buckets: int, key_cols: list[str]
 ) -> bool:
     """Threshold-driven compaction cadence (VERDICT r9 item 4): compact
-    ``tbl`` only when some bucket holds MORE than ``threshold`` files,
-    so a daily-crawl fold pays the O(state) rewrite every ~``threshold``
-    ingests instead of every ingest — between compactions a screen pays
-    at most ``threshold`` file opens per bucket touched, the bounded
-    read amplification the threshold trades against write cost.
-    Returns whether a compaction ran.  Same caller contract as
-    ``compact_bucketed_table`` (see its Contract paragraph)."""
-    if bucket_fragmentation(spark, tbl) <= threshold:
+    ``tbl`` only when some bucket holds MORE than
+    ``COMPACTION_THRESHOLD`` files, so a daily-crawl fold pays the
+    O(state) rewrite every ~``COMPACTION_THRESHOLD`` ingests instead of
+    every ingest — between compactions a screen pays at most that many
+    file opens per bucket touched, the bounded read amplification the
+    threshold trades against write cost.  Returns whether a compaction
+    ran.  Same caller contract as ``compact_bucketed_table`` (see its
+    Contract paragraph)."""
+    if bucket_fragmentation(spark, tbl) <= COMPACTION_THRESHOLD:
         return False
     compact_bucketed_table(spark, tbl, n_buckets, key_cols)
     return True
@@ -354,7 +355,7 @@ def compact_bucketed_table(
     depend on — ``compact_files``'s discipline for the
     ``saveAsTable``-managed case.
 
-    The folded incremental state tables (``_ensure_folded_state``) grow
+    The folded incremental state tables (``operators.fold``) grow
     by O(batch) bucket files per ingest: after K ingests every bucket is
     K-way fragmented, and each day's screen pays K file opens per bucket
     touched — the small-files decay curve, on the tables that live

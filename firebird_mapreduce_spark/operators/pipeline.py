@@ -1932,9 +1932,8 @@ def ingest_tworound_multimodal(
                 semantic SRP band keys + vectors + stored enrollments,
                 image hashes + band keys, audio fingerprints + band
                 keys — APPEND into this query's own bucketed state
-                tables (``_ensure_folded_state(compact=True)``:
-                O(kept) appends under the crash-guard marker, then
-                compaction restores one file per bucket; separate
+                tables (``fold.fold_batch``: O(kept) appends under the
+                crash-guard marker, threshold compaction; separate
                 tables because the shared day-0 ones must stay
                 corpus-only for the sibling queries' oracles).  A doc's
                 vector/media rows fold IFF the DOC was kept — a
@@ -1969,30 +1968,27 @@ def ingest_tworound_multimodal(
 
     At 100 TB this is the production crawl's day-over-day shape: each
     day screens O(batch) against nine pre-bucketed states, folds
-    O(kept) rows, compacts back to one file per bucket, and never
-    touches corpus-sized data — the full loop the per-tier queries
-    demonstrate piecewise, in one declared query."""
-    from .dedup import (
-        _ensure_folded_state,
-        _text_state_tables,
-        banded_signatures,
-    )
+    O(kept) rows (compacting a table once a bucket passes the
+    threshold), and never touches corpus-sized data — the full loop
+    the per-tier queries demonstrate piecewise, in one declared query."""
+    from .dedup import _text_state_tables
+    from .fold import TIERS, Delivery, fold_batch, prefixes
     from .multimodal import (
         _afp_state_tables,
         _ingest2_audio_batch_fixture_dir,
         _ingest2_image_batch_fixture_dir,
         _ingest_audio_batch_fixture_dir,
         _ingest_image_batch_fixture_dir,
-        _phash_band_keys,
         _phash_state_tables,
     )
     from .relational import corpus_tag
     from .similarity import (
         _drift_trigger_frame,
+        _drop_retired_tables,
         _semantic_state_tables,
-        semantic_param_tag,
     )
 
+    _drop_retired_tables(spark)
     tag = corpus_tag(sf_dir, "documents")
     b1 = ingest_batch_docs(spark, sf_dir)
     b2 = ingest2_batch_docs(spark, sf_dir)
@@ -2000,7 +1996,7 @@ def ingest_tworound_multimodal(
     th, tb = _text_state_tables(spark, sf_dir, k, bands)
     ih, ib = _phash_state_tables(spark, sf_dir)
     ah, ab = _afp_state_tables(spark, sf_dir)
-    corpus, _, cent, semb, semv, sems = _semantic_state_tables(spark, sf_dir)
+    _, _, cent, semb, semv, sems = _semantic_state_tables(spark, sf_dir)
     img1 = _media_batch_fps(
         spark, _ingest_image_batch_fixture_dir(spark, sf_dir), "png"
     )
@@ -2020,111 +2016,28 @@ def ingest_tworound_multimodal(
         bands,
         600000,
         sem_rep=sem_rep1,
-        # lazy (r12): the folds write mmr2_* tables, never read by r1's
+        # lazy (r12): the folds write mmr3_* tables, never read by r1's
         # day-0 probe plan — no read-your-own-writes hazard, and eager
         # only serialized the screen job in front of the fold/union
     ).localCheckpoint(eager=False)
-    kept1_ids = r1.filter(F.col("disposition") == "kept").select("doc_id")
-    kept1_docs = b1.join(kept1_ids, "doc_id")
-    kept1_vids = kept1_ids.select(F.col("doc_id").alias("vec_id"))
-    kept1_bases = kept1_ids.select(
-        (F.col("doc_id") - 600000).alias("asset_id")
-    )
-    # folded batch assets RE-KEY to base*10 + 3 — the corpus fixture
-    # scheme's unused slot (base/gain/retouch take 0/1/2).  The raw doc
-    # id would COLLIDE with a corpus asset id (id 30 is both corpus doc
-    # 3's base asset and batch doc 30's), and _hash_incremental_screen
-    # verifies state hashes by asset_id alone, so one id must never
-    # name two entities.  Output-invisible (the screen reports batch
-    # ids only) and oracle-neutral (the oracle disambiguates by side).
-    def rekey(fps: DataFrame) -> DataFrame:
-        return fps.join(kept1_bases, "asset_id").select(
-            (F.col("asset_id") * 10 + 3).alias("asset_id"), "phash"
-        )
-
-    img1_kept = rekey(img1)
-    aud1_kept = rekey(aud1)
-
-    # the folded states: base = a copy of the day-0 table (pay-once
-    # state reused, no re-decode), delta = the keeps' rows, compacted.
-    # PREFIX GENERATION mmr2_ (r11): the fold contents depend on which
-    # docs the SCREEN keeps, and the five-tier screen keeps a different
-    # set than r10's four-tier one — a warehouse holding r10's mmr_
-    # tables must not satisfy the idempotence guard (the all-parameters
-    # keying discipline applied to the screen version)
-    fh = _ensure_folded_state(
+    # the folded states: each day-0 table copied once (pay-once state
+    # reused, no re-decode) plus the keeps' rows.  GENERATION mmr3_:
+    # the fold contents depend on which docs the five-tier screen keeps
+    # (r11's mmr2_) and on the folded media asset-id rule (doc_id*10+3,
+    # shared with the streaming twin) — a warehouse holding an older
+    # generation must not satisfy the idempotence guard (the
+    # all-parameters keying discipline; retired generations are swept
+    # by _drop_retired_tables)
+    fh, fb, fih, fib, fah, fab, fsemb, fsemv, fsems = fold_batch(
         spark,
-        f"mmr2_hash_{k}x{bands}_",
         tag,
-        8,
-        ["h"],
-        lambda: th,
-        lambda: kept1_docs.select(F.md5("text").alias("h")).distinct(),
-        compact=True,
-    )
-    fb = _ensure_folded_state(
-        spark,
-        f"mmr2_bands_{k}x{bands}_",
-        tag,
-        8,
-        ["band", "sig"],
-        lambda: tb,
-        lambda: banded_signatures(kept1_docs, k, bands, checkpoint=False)
-        .select("band", "sig")
-        .distinct(),
-        compact=True,
-    )
-    fih = _ensure_folded_state(
-        spark, "mmr2_imgh_", tag, 8, ["asset_id"],
-        lambda: ih, lambda: img1_kept, compact=True,
-    )
-    fib = _ensure_folded_state(
-        spark, "mmr2_imgb_", tag, 8, ["band", "bval"],
-        lambda: ib, lambda: _phash_band_keys(img1_kept), compact=True,
-    )
-    fah = _ensure_folded_state(
-        spark, "mmr2_audh_", tag, 8, ["asset_id"],
-        lambda: ah, lambda: aud1_kept, compact=True,
-    )
-    fab = _ensure_folded_state(
-        spark, "mmr2_audb_", tag, 8, ["band", "bval"],
-        lambda: ab, lambda: _phash_band_keys(aud1_kept), compact=True,
-    )
-    # the semantic tier's three folded states (bands / vectors / stored
-    # enrollments) — the dedup_semantic_incremental fold discipline with
-    # the crawl's OWN tables; the prefix carries every parameter that
-    # determines the folded contents (the all-parameters keying rule,
-    # one shared spelling with the streaming loop's tables)
-    sem_tag = semantic_param_tag()
-    fsemb = _ensure_folded_state(
-        spark,
-        f"mmr2_semb_{sem_tag}_",
-        tag,
-        8,
-        ["blk", "tbl", "sig"],
-        lambda: semb,
-        lambda: keys1.join(kept1_vids, "vec_id"),
-        compact=True,
-    )
-    fsemv = _ensure_folded_state(
-        spark,
-        f"mmr2_semv_{sem_tag}_",
-        tag,
-        8,
-        ["vec_id"],
-        lambda: corpus,
-        lambda: b1v.join(kept1_vids, "vec_id"),
-        compact=True,
-    )
-    fsems = _ensure_folded_state(
-        spark,
-        f"mmr2_sems_{sem_tag}_",
-        tag,
-        8,
-        ["vec_id"],
-        lambda: sems,
-        lambda: a1.join(kept1_vids, "vec_id"),
-        compact=True,
+        zip(
+            prefixes("mmr3_", TIERS, k, bands),
+            TIERS,
+            (th, tb, ih, ib, ah, ab, semb, semv, sems),
+        ),
+        Delivery(b1, k, bands, 600000, img1, aud1, b1v, a1, keys1),
+        r1.filter(F.col("disposition") == "kept").select("doc_id"),
     )
     img2 = _media_batch_fps(
         spark, _ingest2_image_batch_fixture_dir(spark, sf_dir), "png"

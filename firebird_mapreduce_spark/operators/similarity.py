@@ -1539,27 +1539,30 @@ def _pq_assign_arrays(sub: DataFrame, cent: DataFrame) -> DataFrame:
     )
 
 
-# Layout prefixes RETIRED by the r8 sampled-fit redesign (the old
-# full-corpus-fit code table and its centroid artifact).  The standard
-# stale-layout sweep only matches the CURRENT prefix, so without this
-# list a warehouse that ran r7 keeps the corpus-sized dead tables
-# forever.  Swept once per session by ensure_pq_centroid_table.
-_RETIRED_PQ_PREFIXES = ("kmx_pq_", "kmxc_pq16x16_")
+# Warehouse prefixes of RETIRED table generations.  The standard
+# stale-layout sweep only matches a CURRENT prefix, so without this list
+# a warehouse that ran an older generation keeps its dead tables forever:
+# the r8 sampled-fit redesign retired the full-corpus-fit PQ code table
+# and its centroid artifact, and the shared folded media asset-id rule
+# retired the tworound crawl's mmr2_ fold generation (tables, warehouse
+# directories and their _mmr2_*_folded markers).  Swept once per session
+# by ensure_pq_centroid_table and ingest_tworound_multimodal.
+_RETIRED_PREFIXES = ("kmx_pq_", "kmxc_pq16x16_", "mmr2_", "_mmr2_")
 _RETIRED_SWEPT: set[str] = set()
 
 
-def _drop_retired_pq_tables(spark: SparkSession) -> None:
+def _drop_retired_tables(spark: SparkSession) -> None:
     from .relational import drop_warehouse_entries
 
     app = spark.sparkContext.applicationId
     if app in _RETIRED_SWEPT:
         return
     for t in spark.catalog.listTables():
-        if t.name.startswith(_RETIRED_PQ_PREFIXES):
+        if t.name.startswith(_RETIRED_PREFIXES):
             spark.sql(f"DROP TABLE IF EXISTS {t.name}")
     # a fresh session's in-memory catalog does not list a PREVIOUS
     # session's saveAsTable output, so also sweep the warehouse itself
-    drop_warehouse_entries(spark, _RETIRED_PQ_PREFIXES)
+    drop_warehouse_entries(spark, _RETIRED_PREFIXES)
     _RETIRED_SWEPT.add(app)
 
 
@@ -1573,7 +1576,7 @@ def ensure_pq_centroid_table(
     2011 — at 100 TB codebook training must not scale with the corpus),
     its assignment is persisted bucketed (``kmx_pqfit_``), and the
     centroid recompute reads sample-sized inputs only."""
-    _drop_retired_pq_tables(spark)
+    _drop_retired_tables(spark)
     sample_sub = _pq_subvectors(_pq_fit_sample(emb))
     k = PQ_M * PQ_KSUB
     fit = _index_table(
@@ -2206,10 +2209,10 @@ def semantic_param_tag() -> str:
     """The semantic tier's all-parameters table-name segment
     (``{N_CENTROIDS}x{KMEANS_ITERATIONS}x{SEMANTIC_THRESHOLD}``) — ONE
     spelling for every consumer of the tier's folded state
-    (``dedup_semantic_incremental``'s ``semvf_`` tables, the tworound
-    crawl's ``mmr2_`` tables, the streaming loop's ``strmm_sem*``
-    tables), so a changed constant renames the state instead of silently
-    reusing state folded under the old parameters."""
+    (``dedup_semantic_incremental``'s ``semvf_`` tables and the
+    semantic stems of ``fold.TIERS``), so a changed constant renames
+    the state instead of silently reusing state folded under the old
+    parameters."""
     return f"{_COARSE_TAG}x{_name_tag(SEMANTIC_THRESHOLD)}"
 
 
@@ -2273,9 +2276,10 @@ def dedup_semantic_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                 an O(|batch|·k·d) broadcast join, NO refit;
       ingest 1  near-copies of corpus vectors (flagged against day-0
                 state) + negated vectors (genuinely new → kept);
-      fold      survivors' banding keys and vectors APPEND into this
-                query's own bucketed state tables (``_ensure_folded_
-                state`` — O(batch) files under the crash-guard marker);
+      fold      survivors' banding keys, vectors and stored enrollments
+                APPEND into this query's own bucketed state tables
+                (``fold.fold_batch`` — O(batch) files under the
+                crash-guard marker);
       ingest 2  near-copies of corpus vectors AND of ingest-1 SURVIVORS
                 — the latter flagged precisely because the fold
                 happened (pinned in test_llm_ops.py against a
@@ -2307,7 +2311,7 @@ def dedup_semantic_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     assign-only (broadcast centroids — no shuffle), screens against
     pre-bucketed band/vector state with batch-side-only exchanges, and
     appends its survivors' O(batch) state rows."""
-    from .dedup import _ensure_folded_state
+    from .fold import SEMANTIC, Delivery, fold_batch
     from .relational import corpus_tag
 
     _, b1, b2 = incremental_embedding_batches(spark, sf_dir)
@@ -2317,8 +2321,8 @@ def dedup_semantic_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pay-once fit-side baseline (same-generation means — re-scoring
     # the corpus per report would be the exact cost the stored-only
     # rule forbids)
-    corpus, assign, cent, v1_bands, v1_vecs, v1_score = (
-        _semantic_state_tables(spark, sf_dir)
+    _, _, cent, v1_bands, v1_vecs, v1_score = _semantic_state_tables(
+        spark, sf_dir
     )
     tag = corpus_tag(sf_dir, "embeddings")
 
@@ -2341,53 +2345,26 @@ def dedup_semantic_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     r1 = _semantic_screen(keys1, a1, v1_bands, v1_vecs, b1).localCheckpoint(
         eager=False
     )
-    kept_ids = r1.filter(F.col("kept")).select("vec_id")
-    kept1 = b1.join(kept_ids, "vec_id")
 
-    # the fold: survivors' band keys + vectors appended once, crash-guarded.
-    # Every prefix carries semantic_param_tag — the constants that
-    # determine the folded contents (the banding's cluster assignment and
-    # which batch vectors survive) — so a changed constant rebuilds the
-    # state instead of silently reusing a delta folded under the old one.
+    # the fold: survivors' band keys, vectors and stored enrollments
+    # (ingest 2's drift baseline then reflects what the index serves
+    # after the fold).  Every prefix carries semantic_param_tag — the
+    # constants that determine the folded contents — so a changed
+    # constant rebuilds the state instead of reusing a stale delta.
     param_tag = semantic_param_tag()
-    v2_bands = _ensure_folded_state(
+    v2_bands, v2_vecs, v2_score = fold_batch(
         spark,
-        f"semvf_bands_{param_tag}_",
         tag,
-        8,
-        ["blk", "tbl", "sig"],
-        lambda: _corpus_band_rows(corpus, assign),
-        lambda: _sig_keys(
-            _with_srp_sigs(kept1, NEARDUP_TABLES).join(
-                a1.select("vec_id", "cluster"), "vec_id"
+        zip(
+            (
+                f"semvf_{stem}_{param_tag}_"
+                for stem in ("bands", "vecs", "score")
             ),
-            "cluster",
-            NEARDUP_TABLES,
+            SEMANTIC,
+            (v1_bands, v1_vecs, v1_score),
         ),
-        compact=True,
-    )
-    v2_vecs = _ensure_folded_state(
-        spark,
-        f"semvf_vecs_{param_tag}_",
-        tag,
-        8,
-        ["vec_id"],
-        lambda: corpus,
-        lambda: kept1,
-        compact=True,
-    )
-    # the folded SCORE state: corpus stored enrollments ∪ the survivors'
-    # stored ingest-1 enrollments — ingest 2's drift baseline reflects
-    # what the index is actually serving after the fold
-    v2_score = _ensure_folded_state(
-        spark,
-        f"semvf_score_{param_tag}_",
-        tag,
-        8,
-        ["vec_id"],
-        lambda: v1_score,
-        lambda: a1.join(kept_ids, "vec_id"),
-        compact=True,
+        Delivery.vectors(b1, a1, keys1),
+        r1.filter(F.col("kept")).select(F.col("vec_id").alias("doc_id")),
     )
 
     a2 = _assign_to_centroids_arrays(b2, cent)
@@ -2456,7 +2433,7 @@ def embedding_knn_ivfpq_incremental(
     immediately findable by the next day's queries — the corpus is
     never re-encoded and the index never rebuilt (drift decides refits:
     ``semantic_index_refit``, now flagged by this loop's own trigger)."""
-    from .dedup import _ensure_folded_state
+    from .fold import _ensure_folded_state
     from .relational import corpus_tag
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -2495,7 +2472,6 @@ def embedding_knn_ivfpq_incremental(
         ["ovec"],
         lambda: split_codes(codes_corpus),
         lambda: split_codes(codes_b1),
-        compact=True,
     )
     state_cells = _ensure_folded_state(
         spark,
@@ -2507,7 +2483,6 @@ def embedding_knn_ivfpq_incremental(
         lambda: _assign_to_centroids_arrays(b1, cent).select(
             "vec_id", "cluster"
         ),
-        compact=True,
     )
     q = b2.filter(F.col("vec_id") % PQINC_QUERY_MOD < 2)
     q_cells = _assign_to_centroids_arrays(q, cent).select(
@@ -2642,19 +2617,15 @@ def semantic_index_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``REFIT_RATIO`` is calibrated for that regime, not this fixture.
     Unregistered helper (the declared query is the dedup); asserted
     directionally in test_llm_ops.py and quantified in SCALE.md."""
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     _, b1, _ = incremental_embedding_batches(spark, sf_dir)
-    assign = ensure_kmeans_exact_table(spark, sf_dir, "raw", emb)
-    cent = ensure_centroid_table(spark, sf_dir, "raw", emb, assign)
+    # the fit-side baseline is the STORED corpus enrollment against the
+    # persisted FINAL centroids (semv_score_), not the fit table's
+    # dist2 — that measured distances to the PREVIOUS round's centroids
+    # c_it while the batch enrolls against c_{it+1}, and mixing the two
+    # generations gave an in-distribution batch a drift_ratio != 1 by
+    # construction.  Both means reference the same centroid generation.
+    _, _, cent, _, _, corpus_score = _semantic_state_tables(spark, sf_dir)
     a1 = _assign_to_centroids_arrays(b1, cent)
-    # the fit-side baseline is RE-SCORED against the persisted FINAL
-    # centroids (one corpus _assign_to_centroids pass), not read from the
-    # fit table's dist2 — the fit table measured distances to the
-    # PREVIOUS round's centroids c_it, while the batch enrolls against
-    # c_{it+1}; mixing the two generations gave an in-distribution batch
-    # a drift_ratio != 1 by construction (a systematic bias in the
-    # trigger).  Both means now reference the same centroid generation.
-    corpus_score = _assign_to_centroids_arrays(emb, cent)
     fit = corpus_score.agg(
         F.count(F.lit(1)).alias("n_fit"),
         F.avg(F.col("dist2").cast("double")).alias("fit_mean_dist2"),
@@ -2666,7 +2637,8 @@ def semantic_index_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         fit.crossJoin(batch)
         .withColumn(
-            "drift_ratio", F.col("batch_mean_dist2") / F.col("fit_mean_dist2")
+            "drift_ratio",
+            F.round(F.col("batch_mean_dist2") / F.col("fit_mean_dist2"), 6),
         )
         .withColumn("refit_recommended", F.col("drift_ratio") > REFIT_RATIO)
     )
@@ -3906,9 +3878,9 @@ def embedding_sq8_knn_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
     TakeOrderedAndProject (the ``embedding_sq8_knn`` shape), or blocks
     by IVF cell first (``embedding_knn_ivfpq_incremental``'s probe)
     when a full code-table scan per query is too much."""
-    from .dedup import _ensure_folded_state
     from pyspark.sql import Window
 
+    from .fold import _ensure_folded_state
     from .relational import corpus_tag
 
     _, b1, b2 = incremental_embedding_batches(spark, sf_dir)
@@ -3922,7 +3894,6 @@ def embedding_sq8_knn_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
         ["vec_id"],
         lambda: corpus_codes,
         lambda: sq8_codes(b1),
-        compact=True,
     )
     q = sq8_codes(b2.filter(F.col("vec_id") % PQINC_QUERY_MOD < 2)).select(
         F.col("vec_id").alias("q_id"),

@@ -10,6 +10,15 @@ stateful operators run on the RocksDB state store provider by default
 (``run_stream_to_memory``; off-heap state is the production posture —
 outputs are provider-independent, A/B-pinned in tests/test_streaming.py,
 throughput delta in SCALE.md).
+
+The two incremental crawls (``stream_dedup_incremental``,
+``stream_ingest_multimodal``) run on one replay driver,
+``_crawl_replay`` (snapshot-seeded state, a reset report sink, a
+one-file-per-trigger split stream), and one per-trigger protocol,
+``_apply_trigger`` (retry guard, commit before fold); each trigger
+folds through ``operators.fold``.  Every foreachBatch replay, the
+additive materialised views' included, runs through ``_drain`` (an
+``availableNow`` run under a scratch checkpoint that is removed).
 """
 
 from __future__ import annotations
@@ -911,17 +920,33 @@ def _additive_mv_replay(
         with session_confs(
             spark, {"spark.sql.legacy.parquet.nanosAsLong": "true"}
         ):
-            q = (
-                events.writeStream.foreachBatch(apply)
-                .option("checkpointLocation", os.path.join(base, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+            _drain(events, apply, prefix)
         rows = select_fn(table.read(spark)).collect()
     finally:
         shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(rows, schema)
+
+
+def _drain(stream: DataFrame, apply, prefix: str) -> None:
+    """Run ``apply(batch_df, batch_id)`` as the ``foreachBatch`` sink
+    over everything ``stream`` holds now (``availableNow``), with its
+    checkpoint in a scratch directory removed afterwards — a declared
+    query must not leak disk per invocation.  The one scratch-checkpoint
+    run every foreachBatch replay uses."""
+    import shutil
+    import tempfile
+
+    scratch = tempfile.mkdtemp(prefix=prefix)
+    try:
+        (
+            stream.writeStream.foreachBatch(apply)
+            .option("checkpointLocation", os.path.join(scratch, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
 
 
 def stream_incremental_agg_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1078,6 +1103,78 @@ def _doc_batches_split_dir(
     )
 
 
+def _apply_trigger(
+    spark: SparkSession,
+    batch_df: DataFrame,
+    batch_id: int,
+    report_dir: str,
+    step,
+) -> None:
+    """The per-trigger protocol both streaming crawls share.  ``step``
+    takes the checkpointed batch and returns ``(report, fold)``: the
+    screen against the state tables AS OF NOW, and the fold to run once
+    the report is committed.
+
+    - Retry guard: a batch_id whose report already carries ``_SUCCESS``
+      is a complete no-op.  Its report committed before the failure, so
+      the fold may or may not have run; a re-screen would read post-fold
+      state, and re-folding set-shaped state is harmless, so both skip.
+    - The batch is checkpointed eagerly: the screen, the commit and the
+      fold all read one materialisation of it.
+    - COMMIT before fold: the report is written with ``ingest =
+      batch_id + 1`` before any append mutates state, which pins the
+      screen to pre-fold state and keeps per-doc rows executor-side (no
+      driver collect); the fold reads the committed report back."""
+    bdir = os.path.join(report_dir, f"batch_{batch_id:05d}")
+    if os.path.exists(os.path.join(bdir, "_SUCCESS")):
+        return
+    rep, fold = step(batch_df.localCheckpoint(eager=True))
+    (
+        rep.select(F.lit(batch_id + 1).cast("int").alias("ingest"), "*")
+        .write.mode("overwrite")
+        .parquet(bdir)
+    )
+    fold(spark.read.parquet(bdir).drop("ingest"))
+
+
+def _crawl_replay(
+    spark: SparkSession,
+    name: str,
+    tag: str,
+    state: dict,
+    bases: tuple[DataFrame, ...],
+    split_dir: str,
+    apply,
+    columns: tuple[str, ...],
+) -> DataFrame:
+    """The replay driver both streaming crawls share: seed every state
+    table as a file-level snapshot of its day-0 base (one file per
+    bucket, so replay-0 fragmentation starts at 1 and the compaction
+    threshold counts ingests; ``_snapshot_bucketed_state``), reset the
+    report sink (it lives in the warehouse beside the state tables),
+    replay the split one file per trigger (``maxFilesPerTrigger=1``)
+    through ``apply(batch_df, batch_id, report_dir)`` under ``_drain``,
+    and read the committed reports back lazily — only what the CALLER
+    collects ever crosses to the driver."""
+    import shutil
+
+    from ..operators.relational import warehouse_path
+
+    for (tbl, tier), base in zip(state.items(), bases):
+        _snapshot_bucketed_state(spark, base, tbl, tier.keys)
+    report_dir = os.path.join(warehouse_path(spark), f"{name}_report_{tag}")
+    shutil.rmtree(report_dir, ignore_errors=True)
+    stream = (
+        spark.readStream.schema("doc_id bigint, text string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(split_dir)
+    )
+    _drain(stream, lambda df, bid: apply(df, bid, report_dir), f"fb_{name}_")
+    return spark.read.parquet(os.path.join(report_dir, "batch_*")).select(
+        *columns
+    )
+
+
 def _strinc_apply_batch(
     spark: SparkSession,
     batch_df: DataFrame,
@@ -1089,78 +1186,23 @@ def _strinc_apply_batch(
     bands: int,
 ) -> None:
     """One micro-batch of the continuous incremental-dedup loop: screen
-    ``batch_df`` against the state tables AS OF NOW, COMMIT the
-    per-batch report to its parquet sink, then fold the kept docs'
-    state rows back into the tables.  Module-level rather than a
-    closure so the retry contract is directly unit-testable
-    (tests/test_streaming.py): a batch_id whose report sink already
-    carries ``_SUCCESS`` is a complete no-op — re-screening would read
-    post-fold state and re-folding would duplicate work, the two
-    failure modes a Structured Streaming foreachBatch retry exposes."""
-    from ..operators.dedup import _screen_batch, banded_signatures
+    the batch against the text state tables, commit the report, fold
+    the kept docs' hashes and bands (``_apply_trigger``'s protocol).
+    Module-level rather than a closure so the retry contract is
+    directly unit-testable (tests/test_streaming.py)."""
+    from ..operators.dedup import _screen_batch
+    from ..operators.fold import TEXT, Delivery, fold_trigger
 
-    bdir = os.path.join(report_dir, f"batch_{batch_id:05d}")
-    if os.path.exists(os.path.join(bdir, "_SUCCESS")):
-        # retried batch: its report committed before the failure, so
-        # the fold below it may or may not have run — skip BOTH (the
-        # state appends are set-shaped, so a half-applied fold is
-        # completed harmlessly by the distinct-append semantics; a
-        # re-screen here would read post-fold state)
-        return
-    bdf = batch_df.localCheckpoint(eager=True)
-    rep = _screen_batch(bdf, spark.table(htbl), spark.table(btbl), k, bands)
-    # COMMIT the report before the fold mutates state: the parquet
-    # write both materializes the screen against pre-fold state and
-    # keeps the per-doc rows executor-side (no driver collect)
-    (
-        rep.select(F.lit(batch_id + 1).cast("int").alias("ingest"), "*")
-        .write.mode("overwrite")
-        .parquet(bdir)
-    )
-    rep = spark.read.parquet(bdir).drop("ingest")
-    kept = bdf.join(rep.filter(F.col("kept")).select("doc_id"), "doc_id")
-    # repartition to the bucket spec FIRST, then dedupe: each append adds
-    # <= 1 file per bucket (the _ensure_folded_state discipline), so the
-    # compaction threshold tracks INGEST COUNT, not the delta's
-    # partitioning — and the dropDuplicates REUSES the repartition's
-    # hash clustering (ADVICE r10: distinct-then-repartition shuffled
-    # the delta twice per trigger on the same key; repartition-first
-    # saves one delta-sized exchange, rows identical)
-    (
-        kept.select(F.md5("text").alias("h"))
-        .repartition(8, "h")
-        .dropDuplicates(["h"])
-        .write.mode("append")
-        .bucketBy(8, "h")
-        .sortBy("h")
-        .saveAsTable(htbl)
-    )
-    (
-        banded_signatures(kept, k, bands, checkpoint=False)
-        .select("band", "sig")
-        .repartition(8, "band", "sig")
-        .dropDuplicates(["band", "sig"])
-        .write.mode("append")
-        .bucketBy(8, "band", "sig")
-        .sortBy("band", "sig")
-        .saveAsTable(btbl)
-    )
-    # the append commits through the MICRO-BATCH's cloned session
-    # and invalidates only ITS relation cache — the outer session
-    # (whose spark.table the next trigger's screen resolves) would
-    # keep serving the pre-fold file listing and silently re-admit
-    # ingest-1 copies; refresh makes the fold visible (caught by
-    # the batch-twin differential during development).  The
-    # threshold-driven compaction keeps a long-running crawl's state
-    # from fragmenting without paying the rewrite every trigger; a
-    # crash in its swap window is covered by this query's
-    # drop-and-reseed-per-replay lifecycle (the
-    # compact_bucketed_table caller contract)
-    from ..operators.layout import maybe_compact_bucketed_table
+    def step(bdf: DataFrame):
+        rep = _screen_batch(bdf, spark.table(htbl), spark.table(btbl), k, bands)
+        return rep, lambda committed: fold_trigger(
+            spark,
+            dict(zip((htbl, btbl), TEXT)),
+            Delivery.text(bdf, k, bands),
+            committed.filter(F.col("kept")).select("doc_id"),
+        )
 
-    for tbl, keys in ((htbl, ["h"]), (btbl, ["band", "sig"])):
-        maybe_compact_bucketed_table(spark, tbl, 8, keys)
-        spark.catalog.refreshTable(tbl)
+    _apply_trigger(spark, batch_df, batch_id, report_dir, step)
 
 
 def stream_dedup_incremental_query(
@@ -1176,24 +1218,11 @@ def stream_dedup_incremental_query(
     precisely because batch 1's fold committed between triggers (the
     tworound contract, continuous edition).
 
-    Mechanics the batch spelling doesn't exercise: each micro-batch's
-    screen report is COMMITTED to a per-batch parquet sink BEFORE the
-    state append (a lazy report would silently re-read post-fold state
-    — the read-your-own-writes hazard every streaming sink with
-    feedback has; a committed write pins the pre-fold result even
-    harder than a localCheckpoint, and it never routes per-doc rows
-    through the driver — the report stays executor-side end to end and
-    the outer session reads the sink back lazily).  The sink's
-    ``_SUCCESS`` marker doubles as the retry guard: a re-invoked
-    batch_id (Structured Streaming retries foreachBatch on failure)
-    finds its committed report and SKIPS both screen and fold, so a
-    retry can neither duplicate report rows nor screen against
-    post-fold state.  The state tables start as a fresh day-0 snapshot
-    per replay (deterministic re-runs), and the stream runs
-    availableNow with a scratch checkpoint that is removed after the
-    replay (a declared query must not leak disk; the report sink lives
-    in the warehouse beside the state tables and is reset per run —
-    the same lifecycle discipline).
+    Mechanics the batch spelling doesn't exercise live in the shared
+    trigger protocol (``_apply_trigger``: report COMMITTED before the
+    fold, whose ``_SUCCESS`` doubles as the retry guard) and replay
+    driver (``_crawl_replay``: fresh day-0 snapshot per replay, scratch
+    checkpoint removed afterwards, lazy read-back of the reports).
 
     At 100 TB this is the continuous crawl: the screen's per-trigger
     cost is O(batch) against pre-bucketed state, the report write is a
@@ -1204,58 +1233,28 @@ def stream_dedup_incremental_query(
     distinct-append (a batch is replayed only until its report
     commits; state re-appends of already-present rows are harmless for
     SET-shaped state)."""
-    import shutil
-    import tempfile
+    from ..operators.dedup import _text_state_tables
+    from ..operators.fold import TEXT, tables
+    from ..operators.relational import corpus_tag
 
-    from ..operators.dedup import (
-        _screen_batch,
-        _text_state_tables,
-        banded_signatures,
-    )
-    from ..operators.relational import corpus_tag, warehouse_path
-
-    day0_h, day0_b = _text_state_tables(spark, sf_dir, k, bands)
     tag = corpus_tag(sf_dir, "documents")
-    htbl = f"strinc_hash_{k}x{bands}_{tag}"
-    btbl = f"strinc_bands_{k}x{bands}_{tag}"
-    for tbl, keys, base in (
-        (htbl, ("h",), day0_h),
-        (btbl, ("band", "sig"), day0_b),
-    ):
-        # seed at one file per bucket so replay-0 fragmentation starts
-        # at 1 and the compaction threshold measures ingests — as a
-        # FILE-LEVEL snapshot of the day-0 base (r11; see
-        # _snapshot_bucketed_state)
-        _snapshot_bucketed_state(spark, base, tbl, keys)
-    report_dir = os.path.join(warehouse_path(spark), f"strinc_report_{tag}")
-    shutil.rmtree(report_dir, ignore_errors=True)  # fresh sink per replay
+    state = tables("strinc_", tag, TEXT, k, bands)
+    htbl, btbl = state
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
+    def apply(batch_df: DataFrame, batch_id: int, report_dir: str) -> None:
         _strinc_apply_batch(
             spark, batch_df, batch_id, report_dir, htbl, btbl, k, bands
         )
 
-    sdir = _docs_split_dir(spark, sf_dir)
-    stream = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(sdir)
-    )
-    base = tempfile.mkdtemp(prefix="fb_strinc_")
-    try:
-        q = (
-            stream.writeStream.foreachBatch(apply)
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    # lazy read-back of the committed per-batch reports: the only thing
-    # that ever crosses to the driver is whatever the CALLER collects
-    return spark.read.parquet(os.path.join(report_dir, "batch_*")).select(
-        "ingest", "doc_id", "is_exact_dup", "is_near_dup", "kept"
+    return _crawl_replay(
+        spark,
+        "strinc",
+        tag,
+        state,
+        _text_state_tables(spark, sf_dir, k, bands),
+        _docs_split_dir(spark, sf_dir),
+        apply,
+        ("ingest", "doc_id", "is_exact_dup", "is_near_dup", "kept"),
     )
 
 
@@ -1383,30 +1382,6 @@ def _hadoop_copy_files(
         )
 
 
-def _strmm_tables(tag: str, k: int, bands: int) -> dict[str, tuple[str, ...]]:
-    """The streaming multimodal loop's NINE state tables: name → bucket
-    keys (text hash + bands, image hash + bands, audio hash + bands,
-    semantic SRP bands + vectors + stored enrollments).  One spelling
-    for the seeder, the per-batch fold, and the relation-cache refresh,
-    so the set cannot drift.  The semantic names carry the tier's own
-    parameters (centroids × iterations × threshold — the
-    all-parameters keying discipline), not the text (k, bands)."""
-    from ..operators.similarity import semantic_param_tag
-
-    sem = semantic_param_tag()
-    return {
-        f"strmm_hash_{k}x{bands}_{tag}": ("h",),
-        f"strmm_bands_{k}x{bands}_{tag}": ("band", "sig"),
-        f"strmm_imgh_{tag}": ("asset_id",),
-        f"strmm_imgb_{tag}": ("band", "bval"),
-        f"strmm_audh_{tag}": ("asset_id",),
-        f"strmm_audb_{tag}": ("band", "bval"),
-        f"strmm_semb_{sem}_{tag}": ("blk", "tbl", "sig"),
-        f"strmm_semv_{sem}_{tag}": ("vec_id",),
-        f"strmm_sems_{sem}_{tag}": ("vec_id",),
-    }
-
-
 def _strmm_apply_batch(
     spark: SparkSession,
     batch_df: DataFrame,
@@ -1416,7 +1391,7 @@ def _strmm_apply_batch(
     tag: str,
     k: int,
     bands: int,
-    cent: DataFrame | None = None,
+    cent: DataFrame,
 ) -> None:
     """One micro-batch of the continuous MULTIMODAL crawl: infer which
     delivery this is from the batch's own id range (never from
@@ -1426,17 +1401,15 @@ def _strmm_apply_batch(
     tables AS OF NOW (``_multimodal_screen`` +
     ``_crawl_semantic_parts``, the same shared functions both batch
     spellings use), evaluate the IN-LOOP drift trigger against the
-    score state as of this trigger, COMMIT the per-batch report, then
-    fold the KEPT docs' rows into every tier's state.  Same retry
-    contract as ``_strinc_apply_batch``: a committed report makes the
-    whole batch a no-op."""
-    from ..operators.dedup import banded_signatures
+    score state as of this trigger, then commit and fold every tier
+    through ``_apply_trigger``'s protocol.  ``cent`` is the persisted
+    centroid frame the query resolves once, outside the stream."""
+    from ..operators.fold import TIERS, Delivery, fold_trigger, tables
     from ..operators.multimodal import (
         _ingest2_audio_batch_fixture_dir,
         _ingest2_image_batch_fixture_dir,
         _ingest_audio_batch_fixture_dir,
         _ingest_image_batch_fixture_dir,
-        _phash_band_keys,
     )
     from ..operators.pipeline import (
         _crawl_semantic_parts,
@@ -1445,142 +1418,52 @@ def _strmm_apply_batch(
         ingest2_embedding_batch,
         ingest_embedding_batch,
     )
-    from ..operators.similarity import _drift_trigger_frame, _semantic_state_tables
+    from ..operators.similarity import _drift_trigger_frame
 
-    bdir = os.path.join(report_dir, f"batch_{batch_id:05d}")
-    if os.path.exists(os.path.join(bdir, "_SUCCESS")):
-        return
-    bdf = batch_df.localCheckpoint(eager=True)
-    # delivery inference: one driver-sized scalar (an aggregate, never
-    # per-doc rows) — ingest 1 lives at +600000, ingest 2 at +700000
-    id_base = (bdf.agg(F.min("doc_id")).first()[0] // 100000) * 100000
-    if id_base == 600000:
-        img_dir = _ingest_image_batch_fixture_dir(spark, sf_dir)
-        aud_dir = _ingest_audio_batch_fixture_dir(spark, sf_dir)
-        bvecs = ingest_embedding_batch(spark, sf_dir)
-    else:
-        img_dir = _ingest2_image_batch_fixture_dir(spark, sf_dir)
-        aud_dir = _ingest2_audio_batch_fixture_dir(spark, sf_dir)
-        bvecs = ingest2_embedding_batch(spark, sf_dir)
-    img_fps = _media_batch_fps(spark, img_dir, "png")
-    aud_fps = _media_batch_fps(spark, aud_dir, "wav")
-    tbls = list(_strmm_tables(tag, k, bands))
-    th, tb, ih, ib, ah, ab, sb, sv, ss = (spark.table(t) for t in tbls)
-    # the persisted centroid table is a pay-once shared artifact (the
-    # seeder built it); the STATE the screen probes is the loop's own.
-    # The query passes the resolved frame in (r12: the per-trigger
-    # ensure chain re-verified five tables per batch); the fallback
-    # keeps the function directly drivable by the retry unit tests.
-    if cent is None:
-        cent = _semantic_state_tables(spark, sf_dir)[2]
-    assign, keys, sem_rep = _crawl_semantic_parts(bvecs, cent, sb, sv)
-    # the in-loop drift trigger: this delivery's enrollment vs the
-    # STORED score state as of this trigger (two 1-row aggregates)
-    drift = _drift_trigger_frame(ss, assign)
-    rep = _multimodal_screen(
-        bdf,
-        (th, tb),
-        (ih, ib),
-        (ah, ab),
-        img_fps,
-        aud_fps,
-        k,
-        bands,
-        id_base,
-        sem_rep=sem_rep,
-    ).crossJoin(drift)
-    # COMMIT the report before any fold mutates state (the strinc
-    # discipline: pre-fold pin + retry guard + no driver collect)
-    (
-        rep.select(F.lit(batch_id + 1).cast("int").alias("ingest"), "*")
-        .write.mode("overwrite")
-        .parquet(bdir)
-    )
-    rep = spark.read.parquet(bdir).drop("ingest")
-    kept_ids = rep.filter(F.col("disposition") == "kept").select("doc_id")
-    kept_docs = bdf.join(kept_ids, "doc_id")
-    kept_vids = kept_ids.select(F.col("doc_id").alias("vec_id"))
-    kept_bases = kept_ids.select((F.col("doc_id") - id_base).alias("asset_id"))
-
-    def rekey(fps: DataFrame) -> DataFrame:
-        # folded batch assets re-key to doc_id*10 + 3: slot 3 is unused
-        # by the corpus fixture scheme (base/gain/retouch take 0/1/2)
-        # and the full doc_id keeps ingest-1 and ingest-2 folds disjoint
-        # — one id must never name two entities in the state hash table
-        return fps.join(kept_bases, "asset_id").select(
-            ((F.col("asset_id") + id_base) * 10 + 3).alias("asset_id"),
-            "phash",
+    def step(bdf: DataFrame):
+        # delivery inference: one driver-sized scalar (an aggregate,
+        # never per-doc rows) — ingest 1 lives at +600000, ingest 2 at
+        # +700000
+        id_base = (bdf.agg(F.min("doc_id")).first()[0] // 100000) * 100000
+        if id_base == 600000:
+            img_dir = _ingest_image_batch_fixture_dir(spark, sf_dir)
+            aud_dir = _ingest_audio_batch_fixture_dir(spark, sf_dir)
+            bvecs = ingest_embedding_batch(spark, sf_dir)
+        else:
+            img_dir = _ingest2_image_batch_fixture_dir(spark, sf_dir)
+            aud_dir = _ingest2_audio_batch_fixture_dir(spark, sf_dir)
+            bvecs = ingest2_embedding_batch(spark, sf_dir)
+        img_fps = _media_batch_fps(spark, img_dir, "png")
+        aud_fps = _media_batch_fps(spark, aud_dir, "wav")
+        state = tables("strmm_", tag, TIERS, k, bands)
+        th, tb, ih, ib, ah, ab, sb, sv, ss = map(spark.table, state)
+        assign, keys, sem_rep = _crawl_semantic_parts(bvecs, cent, sb, sv)
+        # the in-loop drift trigger: this delivery's enrollment vs the
+        # STORED score state as of this trigger (two 1-row aggregates)
+        drift = _drift_trigger_frame(ss, assign)
+        rep = _multimodal_screen(
+            bdf,
+            (th, tb),
+            (ih, ib),
+            (ah, ab),
+            img_fps,
+            aud_fps,
+            k,
+            bands,
+            id_base,
+            sem_rep=sem_rep,
+        ).crossJoin(drift)
+        delivery = Delivery(
+            bdf, k, bands, id_base, img_fps, aud_fps, bvecs, assign, keys
+        )
+        return rep, lambda committed: fold_trigger(
+            spark,
+            state,
+            delivery,
+            committed.filter(F.col("disposition") == "kept").select("doc_id"),
         )
 
-    img_kept, aud_kept = rekey(img_fps), rekey(aud_fps)
-    # (delta, dedup?) per state table — the text deltas dedupe AFTER the
-    # bucket-spec repartition so the dropDuplicates reuses the hash
-    # clustering (one delta exchange per trigger, the _strinc_apply_batch
-    # discipline); the media/semantic deltas are already key-unique
-    deltas = (
-        (kept_docs.select(F.md5("text").alias("h")), True),
-        (banded_signatures(kept_docs, k, bands, checkpoint=False).select("band", "sig"), True),
-        (img_kept, False),
-        (_phash_band_keys(img_kept), False),
-        (aud_kept, False),
-        (_phash_band_keys(aud_kept), False),
-        (keys.join(kept_vids, "vec_id"), False),
-        (bvecs.join(kept_vids, "vec_id"), False),
-        (assign.join(kept_vids, "vec_id"), False),
-    )
-    from concurrent.futures import ThreadPoolExecutor
-
-    from ..operators.layout import maybe_compact_bucketed_table
-
-    def fold_one(tbl: str, delta: DataFrame, dedup: bool) -> None:
-        keys_t = _strmm_tables(tag, k, bands)[tbl]
-        (
-            # bucket-spec repartition: <= 1 file per bucket per append
-            # (the _ensure_folded_state discipline) — without it the
-            # map-only media deltas inherit the checkpoint's
-            # partitioning and one fold writes P×8 files, pushing the
-            # media state past the compaction threshold EVERY trigger
-            (
-                delta.repartition(8, *keys_t).dropDuplicates(list(keys_t))
-                if dedup
-                else delta.repartition(8, *keys_t)
-            )
-            .write.mode("append")
-            .bucketBy(8, *keys_t)
-            .sortBy(*keys_t)
-            .saveAsTable(tbl)
-        )
-
-    # the nine per-tier appends are INDEPENDENT (nine distinct tables,
-    # every delta rooted at the committed report / the checkpointed
-    # batch) — overlap them from a small thread pool (guide §2.6) so one
-    # append's tail back-fills the cores the previous one idled: each
-    # job is a tiny delta write that leaves most of local[32] (or a
-    # cluster) unused, and the retry guarantee is unchanged (a crash
-    # mid-folds leaves a subset applied exactly as the serial loop did;
-    # the committed report skips the batch either way).  Width 6 (r12
-    # A/B at sf0.1: fold-phase 1.80 → 1.45 s/trigger over width 3 —
-    # these jobs are commit-latency-bound, not core-bound, so deeper
-    # overlap keeps paying past the guide's 2-3 rule of thumb)
-    with ThreadPoolExecutor(max_workers=6) as pool:
-        list(
-            pool.map(
-                lambda item: fold_one(item[0], *item[1]),
-                zip(tbls, deltas),
-            )
-        )
-    # compaction probes + relation-cache refresh run SERIALLY after the
-    # pool (ADVICE r11: compact_bucketed_table get/set/restores the
-    # session-global autoBucketedScan conf — two compactions tripping in
-    # the same trigger from pool threads could interleave the restore,
-    # running one compaction's scan un-forced and stranding the conf
-    # 'false' for the rest of the session).  The probes are driver-side
-    # os.walks; only a tripped compaction launches a job, and those are
-    # rare by the threshold cadence — nothing here needed the overlap.
-    for tbl in tbls:
-        keys_t = _strmm_tables(tag, k, bands)[tbl]
-        maybe_compact_bucketed_table(spark, tbl, 8, list(keys_t))
-        spark.catalog.refreshTable(tbl)
+    _apply_trigger(spark, batch_df, batch_id, report_dir, step)
 
 
 def stream_ingest_multimodal_query(
@@ -1605,11 +1488,8 @@ def stream_ingest_multimodal_query(
     batch 1's all-tier fold committed between triggers — the tworound
     contract at integration width, continuous edition.
 
-    Streaming mechanics inherited from ``stream_dedup_incremental``:
-    per-batch report COMMITTED to a parquet sink before the fold
-    (pre-fold pin + retry no-op + no driver collect), fresh day-0
-    state snapshot per replay, availableNow with a scratch checkpoint,
-    relation-cache refresh after every table append.  The delivery's
+    Streaming mechanics are the shared trigger protocol and replay
+    driver (``_apply_trigger``, ``_crawl_replay``).  The delivery's
     media fixture pair is inferred from the batch's own id range, not
     from batch_id — content decides, so a restarted stream that
     renumbers batches still screens each delivery against the right
@@ -1620,22 +1500,16 @@ def stream_ingest_multimodal_query(
     decodes of the delivery's own files, O(kept) state appends, and a
     distributed report sink — no corpus-sized pass and no driver-sized
     per-doc data anywhere."""
-    import shutil
-    import tempfile
-
     from ..operators.dedup import _text_state_tables
-    from ..operators.multimodal import (
-        _afp_state_tables,
-        _phash_state_tables,
-    )
-    from ..operators.relational import corpus_tag, warehouse_path
+    from ..operators.fold import TIERS, tables
+    from ..operators.multimodal import _afp_state_tables, _phash_state_tables
+    from ..operators.relational import corpus_tag
     from ..operators.similarity import _semantic_state_tables
 
     tag = corpus_tag(sf_dir, "documents")
     # the semantic builder also ensures the shared centroid table the
     # per-batch enrollment reads (pay-once, outside the stream); the
-    # resolved centroid frame is passed into every trigger so the
-    # per-batch ensure chain is gone (r12)
+    # resolved centroid frame is passed into every trigger
     _, _, cent, semb0, semv0, sems0 = _semantic_state_tables(spark, sf_dir)
     day0 = (
         *_text_state_tables(spark, sf_dir, k, bands),
@@ -1645,48 +1519,30 @@ def stream_ingest_multimodal_query(
         semv0,
         sems0,
     )
-    tbls = _strmm_tables(tag, k, bands)
-    # seed at one file per bucket via FILE-LEVEL snapshots of the day-0
-    # bases (r11: the old per-replay read→repartition→bucketed-write of
-    # nine corpus-state tables recomputed byte-identical files through
-    # nine shuffles every run — see _snapshot_bucketed_state)
-    for (tbl, keys), base in zip(tbls.items(), day0):
-        _snapshot_bucketed_state(spark, base, tbl, keys)
-    report_dir = os.path.join(warehouse_path(spark), f"strmm_report_{tag}")
-    shutil.rmtree(report_dir, ignore_errors=True)  # fresh sink per replay
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
+    def apply(batch_df: DataFrame, batch_id: int, report_dir: str) -> None:
         _strmm_apply_batch(
-            spark, batch_df, batch_id, report_dir, sf_dir, tag, k, bands,
-            cent=cent,
+            spark, batch_df, batch_id, report_dir, sf_dir, tag, k, bands, cent
         )
 
-    sdir = _mm_split_dir(spark, sf_dir)
-    stream = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(sdir)
-    )
-    base = tempfile.mkdtemp(prefix="fb_strmm_")
-    try:
-        q = (
-            stream.writeStream.foreachBatch(apply)
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.read.parquet(os.path.join(report_dir, "batch_*")).select(
-        "ingest",
-        "doc_id",
-        "is_exact_dup",
-        "is_near_dup",
-        "is_semantic_dup",
-        "is_image_dup",
-        "is_audio_dup",
-        "disposition",
-        "drift_ratio",
-        "refit_recommended",
+    return _crawl_replay(
+        spark,
+        "strmm",
+        tag,
+        tables("strmm_", tag, TIERS, k, bands),
+        day0,
+        _mm_split_dir(spark, sf_dir),
+        apply,
+        (
+            "ingest",
+            "doc_id",
+            "is_exact_dup",
+            "is_near_dup",
+            "is_semantic_dup",
+            "is_image_dup",
+            "is_audio_dup",
+            "disposition",
+            "drift_ratio",
+            "refit_recommended",
+        ),
     )

@@ -1574,16 +1574,18 @@ def test_ingest_tworound_fold_proofs_all_tiers(spark):
     is fresh half-flipped and stays kept.  The NINE folded state
     tables hold day-0 rows + the keeps' delta and stay within the
     compaction threshold per bucket — the r10 cadence contract."""
+    from firebird_mapreduce_spark.operators import fold
     from firebird_mapreduce_spark.operators.layout import (
         bucket_fragmentation,
+    )
+    from firebird_mapreduce_spark.operators.multimodal import (
+        _afp_state_tables,
+        _phash_state_tables,
     )
     from firebird_mapreduce_spark.operators.pipeline import (
         ingest_tworound_multimodal,
     )
     from firebird_mapreduce_spark.operators.relational import corpus_tag
-    from firebird_mapreduce_spark.operators.similarity import (
-        semantic_param_tag,
-    )
 
     out = ingest_tworound_multimodal(spark, SF_SMOKE).collect()
     r1 = {r["doc_id"] - 600000: r for r in out if r["ingest"] == 1}
@@ -1643,20 +1645,25 @@ def test_ingest_tworound_fold_proofs_all_tiers(spark):
         "folded ingest-1 vectors were not flagged"
     )
     tag = corpus_tag(SF_SMOKE, "documents")
-    sem = semantic_param_tag()
-    for t in (
-        f"mmr2_hash_16x4_{tag}",
-        f"mmr2_bands_16x4_{tag}",
-        f"mmr2_imgh_{tag}",
-        f"mmr2_imgb_{tag}",
-        f"mmr2_audh_{tag}",
-        f"mmr2_audb_{tag}",
-        f"mmr2_semb_{sem}_{tag}",
-        f"mmr2_semv_{sem}_{tag}",
-        f"mmr2_sems_{sem}_{tag}",
-    ):
+    folded = fold.tables("mmr3_", tag, fold.TIERS, 16, 4)
+    assert len(folded) == 9
+    for t in folded:
         frag = bucket_fragmentation(spark, t)
         assert 0 < frag <= 4, f"{t}: fragmentation {frag} past threshold"
+    # the folded media assets carry the shared asset-id rule: the
+    # ingest-1 keeps' rows enter the image and audio hash states keyed
+    # doc_id*10 + 3 (the corpus rows keep their own doc*10 + 0/1/2 ids)
+    kept_media = {
+        (d + 600000) * 10 + 3 for d in media if r1[d]["disposition"] == "kept"
+    }
+    assert kept_media
+    day0 = dict(zip(("imgh", "audh"), (_phash_state_tables, _afp_state_tables)))
+    for t, tier in folded.items():
+        if tier.stem in day0:
+            state = day0[tier.stem](spark, SF_SMOKE)[0]
+            base = {r[0] for r in state.select("asset_id").collect()}
+            ids = {r[0] for r in spark.table(t).select("asset_id").collect()}
+            assert ids - base == kept_media, (t, sorted(ids - base)[:5])
 
 
 def test_drift_trigger_evaluated_inside_loops(spark):
