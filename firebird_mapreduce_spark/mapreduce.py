@@ -148,12 +148,15 @@ def _make_map(map_fn: MapFn) -> Callable[[Iterator[pd.DataFrame]], Iterator]:
 
 class Static(NamedTuple):
     """A fixpoint's static operand (e.g. the edge table), materialised
-    once per solve: the checkpointed frame, its row count, and the shuffle
-    partition count sized from it for every round's aggregation."""
+    once per solve: the checkpointed frame, its row count, and what
+    ``_static`` derives from its size for every round — the shuffle
+    partition count of the round's aggregation, and whether the operand
+    is small enough to broadcast."""
 
     df: DataFrame
     rows: int
     partitions: int
+    broadcast: bool
 
 
 def _observed_checkpoint(df: DataFrame, metric) -> tuple[DataFrame, Any]:
@@ -165,21 +168,28 @@ def _observed_checkpoint(df: DataFrame, metric) -> tuple[DataFrame, Any]:
     return df, obs.get["m"]
 
 
-def _round_partitions(df: DataFrame, rows: int) -> int:
-    """Partitions for a round's aggregation: the operand's materialised
-    bytes (``rows`` at Spark's per-row size estimate, an 8-byte header plus
-    each field's default size) over the session's
-    ``spark.sql.adaptive.advisoryPartitionSizeInBytes``, clamped to
-    ``[1, spark.sql.shuffle.partitions]`` — the reducer count follows the
-    input's cardinality, not a constant."""
+def _static(df: DataFrame, rows: int) -> Static:
+    """Size the materialised operand from its bytes: ``rows`` at Spark's
+    per-row size estimate (an 8-byte header plus each field's default
+    size).  A round's aggregation gets those bytes over the session's
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` partitions,
+    clamped to ``[1, spark.sql.shuffle.partitions]`` — the reducer count
+    follows the input's cardinality, not a constant.  The operand may be
+    broadcast when the bytes are at most the session's
+    ``spark.sql.autoBroadcastJoinThreshold`` (never when it is negative):
+    the planner's own rule, applied to the size the driver measured,
+    because the checkpoint of a frame built from Python data carries no
+    statistics, and the planner would sort-merge it at any size."""
     spark = df.sparkSession
     jvm = spark.sparkContext._jvm
     advisory = jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
         spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
     )
-    row_bytes = 8 + df._jdf.schema().defaultSize()
+    size = rows * (8 + df._jdf.schema().defaultSize())
     cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return max(1, min(cap, math.ceil(rows * row_bytes / advisory)))
+    threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    partitions = max(1, min(cap, math.ceil(size / advisory)))
+    return Static(df, rows, partitions, size <= threshold)
 
 
 def iterate_until_fixpoint(
@@ -213,7 +223,7 @@ def iterate_until_fixpoint(
     """
     window_t0 = time.perf_counter()
     static_df, rows = _observed_checkpoint(static, F.count(F.lit(1)))
-    operand = Static(static_df, rows, _round_partitions(static_df, rows))
+    operand = _static(static_df, rows)
     state = initial(static_df).localCheckpoint(eager=True)
     for it in range(max_iterations):
         state = step_fn(state, operand)

@@ -588,10 +588,11 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Composition of two north-star pillars: the LSH banded join produces
     the edge list (never all-pairs), ``operators.graph.connected_components``
-    propagates min-labels to fixpoint (broadcast frontier ⋈ edges, rounds
-    ≈ cluster diameter — planted-duplicate clusters have diameter ≤ 2, and
-    real dedup clusters stay small, so convergence is fast at any corpus
-    size).  The final left join reattaches singleton documents without
+    propagates min-labels to fixpoint (frontier ⋈ edges with no join hint,
+    so the planner picks the join from sizes; rounds ≈ cluster diameter —
+    planted-duplicate clusters have diameter ≤ 2, and real dedup clusters
+    stay small, so convergence is fast at any corpus size).  The final
+    left join reattaches singleton documents without
     densifying: only pair-connected docs enter the iteration."""
     from .graph import connected_components
 

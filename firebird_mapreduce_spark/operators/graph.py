@@ -10,21 +10,23 @@ feeds the output back as the next frontier until it is empty
 array (``main.cpp:59-61``) — map reads it, reduce writes it — which only
 works in shared memory.  Here that state becomes *data*: a
 ``distances(node, dist)`` DataFrame carried across iterations
-(SURVEY §1.3), updated with union + groupBy-min.
+(SURVEY §1.3), updated with one groupBy-min per round.
 
 Scale posture: ``sssp``, ``connected_components`` and
 ``connected_components_star`` run on the one fixpoint driver,
 ``mapreduce.iterate_until_fixpoint``.  It reads the edge
 table once per solve — an eager checkpoint, as the reference loads its
 graph into memory once — so no round re-scans or re-unions the source.
-Each round is (frontier ⋈ edges) → one aggregation on ``node`` whose
-shuffle partition count the driver sizes from the materialised edge bytes
-(1 for small graphs, ``spark.sql.shuffle.partitions`` at scale).  The
-frontier is usually far smaller than the edge set, so sssp broadcasts it
-and the edge table never shuffles.  The driver's periodic eager
-checkpoint truncates lineage (otherwise plan size grows linearly and the
-scheduler collapses long before data size matters) and carries the
-convergence probe on the same job.
+Each round joins the improved nodes to their out-edges, then runs one
+aggregation on ``node`` whose shuffle partition count the driver sizes
+from the materialised edge bytes (1 for small graphs,
+``spark.sql.shuffle.partitions`` at scale).  From the same bytes the
+driver decides whether the edges fit the session's broadcast threshold;
+if they do, an sssp round broadcasts them, and since the edge operand is
+the same in every round, one broadcast serves a whole probe window.  The
+driver's periodic eager checkpoint truncates lineage (otherwise plan size
+grows linearly and the scheduler collapses long before data size matters)
+and carries the convergence probe on the same job.
 
 A round is written as ONE parsed statement (``spark.sql`` with the state
 and the static operand bound as frames, ``{state}`` and ``{e}``; the
@@ -57,11 +59,17 @@ def _sql_round(spark: SparkSession, sql: str):
 
 
 # One sssp round over the bound frames {state} (node, dist, improved) and
-# {e} (src, dst, weight): the frontier relaxes its out-edges, broadcast
-# because it is typically tiny next to the edges, so the edge table never
-# shuffles; state rows and candidates union into one min-aggregate behind
-# the one REPARTITION({n}, node) exchange.  _old is the min over the state-tagged
-# rows; a node improved if it is new (_old null) or its dist fell.
+# {e} (src, dst, weight), reading {state} once: each state row left-joins
+# its out-edges when it improved, and every joined row emits itself
+# (is_state) and the candidate it relaxes; a state row with no edge to
+# relax emits a null candidate, which is dropped.  Both feed one
+# min-aggregate behind the one REPARTITION({n}, node) exchange — a state
+# row repeated once per out-edge changes no min.  _old is the min over the
+# state-tagged rows; a node improved if it is new (_old null) or its dist
+# fell.  The join's build side is the static edge operand: sssp binds it
+# with a broadcast hint when the driver sized it under the session's
+# broadcast threshold (Static.broadcast), and as it is the same in every
+# round, one broadcast serves a whole probe window.
 _SSSP_ROUND_SQL = """
 SELECT node, dist, _old IS NULL OR dist < _old AS improved
 FROM (
@@ -69,13 +77,14 @@ FROM (
            min(CASE WHEN is_state THEN cand END) AS _old
     FROM (
         SELECT /*+ REPARTITION({n}, node) */ * FROM (
-            SELECT node, dist AS cand, true AS is_state FROM {state}
-            UNION ALL
-            SELECT /*+ BROADCAST(f) */ e.dst AS node,
-                   f.dist + e.weight AS cand, false AS is_state
-            FROM (SELECT node, dist FROM {state} WHERE improved) f
-            JOIN {e} e ON f.node = e.src
+            SELECT inline(array(
+                named_struct('node', s.node, 'cand', s.dist, 'is_state', true),
+                named_struct('node', e.dst, 'cand', s.dist + e.weight,
+                             'is_state', false)
+            ))
+            FROM {state} s LEFT JOIN {e} e ON s.improved AND s.node = e.src
         )
+        WHERE node IS NOT NULL
     )
     GROUP BY node
 )
@@ -97,15 +106,18 @@ def sssp(
     as absence — unreachable nodes simply have no row.
 
     Per-round dataflow (one MapReduce round of the reference):
-      candidates = broadcast(frontier) ⋈ edges on node==src  (map: relax B3)
-                   → (dst, frontier.dist + weight)
-      state'     = min per node over state ∪ candidates      (reduce: min B2)
+      relaxed    = state ⟕ edges on improved ∧ node==src     (map: relax B3)
+                   → per joined row, the state row and the candidate
+                     (dst, dist + weight)
+      state'     = min per node over both                    (reduce: min B2)
       frontier'  = the improved rows of state'
 
-    The merge has no join: state rows and candidates union into one
-    aggregation per round, one exchange.  The min over everything is the
-    new dist, the min over the state-tagged rows the old one; improved ≡
-    new < old, or a newly reached node.
+    A round reads its state once and merges with no union: the min over
+    everything is the new dist, the min over the state-tagged rows the
+    old one; improved ≡ new < old, or a newly reached node.  The edges
+    are the join's build side, broadcast when the driver measured them
+    under the session's broadcast threshold (``Static.broadcast``) and
+    shuffled otherwise.
 
     A round is the one statement ``_SSSP_ROUND_SQL``.  The start row is
     built in the JVM (``range`` + literals): a frame from a Python list
@@ -126,8 +138,13 @@ def sssp(
         F.lit(0.0).alias("dist"),
         F.lit(True).alias("improved"),
     )
+
+    def relax(state: DataFrame, static: Static) -> DataFrame:
+        e = static.df.hint("broadcast") if static.broadcast else static.df
+        return spark.sql(_SSSP_ROUND_SQL, state=state, e=e, n=static.partitions)
+
     state = iterate_until_fixpoint(
-        _sql_round(spark, _SSSP_ROUND_SQL),
+        relax,
         lambda _: start,
         edges,
         max_iterations,
@@ -213,10 +230,9 @@ def sssp_syn18k(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the improved nodes send their label along their out-edges, the messages
 # min-aggregate behind the one REPARTITION({n}, node) exchange, and every
 # node keeps the least of its label and its best message.  NO broadcast
-# hint on the frontier: unlike sssp's, whose frontier starts at one node,
-# min-label propagation's round-1 frontier is EVERY node, and a forced
-# broadcast there ships |V| rows to each executor, an OOM on a
-# billion-node graph.  AQE sees the real frontier size at runtime and
+# hint on the frontier: min-label propagation's round-1 frontier is EVERY
+# node, and a forced broadcast there ships |V| rows to each executor, an
+# OOM on a billion-node graph.  AQE sees the real frontier size at runtime and
 # broadcasts the later (shrunken) frontiers on its own; the large early
 # rounds take the shuffle join they need.
 _CC_ROUND_SQL = """

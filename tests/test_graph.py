@@ -64,6 +64,54 @@ def test_sssp_small_graph(spark, source, checkpoint_every):
     assert result == dijkstra(SMALL_GRAPH_EDGES, source)
 
 
+@pytest.mark.parametrize("source", [2, 7])
+def test_sssp_job_budget(spark, source):
+    """A solve's job count on the reference's small graph (a frame from a
+    Python list, so its checkpoint carries no size statistics): 12 jobs
+    for these sources' 2 probe windows — the edge and start-row
+    checkpoints; per window one edge broadcast (two in window 1, whose
+    literal start row narrows round 1's edge side), one shuffle map per
+    round and the probing checkpoint; and the collect.  A round that
+    read its state twice, or an edge side left to a sort-merge join,
+    costs more jobs."""
+    sc = spark.sparkContext
+    edges = undirected(
+        spark.createDataFrame(SMALL_GRAPH_EDGES, "src INT, dst INT, weight DOUBLE")
+    )
+    group = f"sssp-job-budget-{source}"
+    sc.setJobGroup(group, "sssp job budget")
+    try:
+        sssp(spark, edges, source).collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 12
+
+
+@pytest.mark.parametrize("source", [0, 2, 7])
+@pytest.mark.parametrize("checkpoint_every", [1, 2])
+def test_sssp_shuffled_edges(spark, source, checkpoint_every):
+    """With broadcasts switched off in the session, the round joins the
+    edges through a shuffle (no broadcast hint is emitted) and still
+    reaches the Dijkstra fixpoint."""
+    from firebird_mapreduce_spark.plans import plan_string
+    from firebird_mapreduce_spark.session import session_confs
+
+    edges = undirected(
+        spark.createDataFrame(SMALL_GRAPH_EDGES, "src INT, dst INT, weight DOUBLE")
+    )
+    with session_confs(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+        one_round = sssp(spark, edges, source, max_iterations=1, checkpoint_every=2)
+        plan = plan_string(one_round, "simple")
+        result = {
+            r["node"]: r["dist"]
+            for r in sssp(
+                spark, edges, source, checkpoint_every=checkpoint_every
+            ).collect()
+        }
+    assert "Join" in plan and "BroadcastHashJoin" not in plan, plan
+    assert result == dijkstra(SMALL_GRAPH_EDGES, source)
+
+
 def test_sssp_builds_no_frame_from_python_data(spark, monkeypatch, tmp_path):
     """An sssp solve builds every frame in the JVM: a frame from Python-side
     data plans as a scan over a Python RDD, whose checkpoint job waits on

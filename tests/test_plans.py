@@ -242,12 +242,15 @@ def test_cc_round1_no_forced_frontier_broadcast(spark):
     assert "ResolvedHint" not in plan and "UnresolvedHint" not in plan, plan
 
 
-def test_sssp_round_is_one_union_aggregate(spark):
-    """An SSSP round merges with no join: state and candidates union into
-    one aggregate behind exactly one ``repartition(n, node)`` exchange.
-    The relax join (broadcast frontier ⋈ edges) is the round's only join,
-    and it never sort-merges.  The fixpoint is Dijkstra-checked in
-    test_graph.py."""
+def test_sssp_round_reads_state_once(spark):
+    """An SSSP round reads its state once: the state left-joins its
+    out-edges (the relax) and every joined row feeds one aggregate behind
+    exactly one ``repartition(n, node)`` exchange, with no union of two
+    state reads.  The nation graph is far under the broadcast threshold,
+    so the join broadcasts its build side, the edges, and never
+    sort-merges.  The fixpoint is Dijkstra-checked in test_graph.py."""
+    import re
+
     from firebird_mapreduce_spark.operators.graph import (
         derived_nation_graph,
         sssp,
@@ -255,9 +258,18 @@ def test_sssp_round_is_one_union_aggregate(spark):
 
     edges = derived_nation_graph(spark, SF_SMOKE)
     plan = plan_string(sssp(spark, edges, source=0, max_iterations=1), "simple")
-    assert "Union" in plan, plan
-    for join in ("LeftAnti", "LeftOuter", "FullOuter", "SortMergeJoin"):
-        assert join not in plan, (join, plan)
+    state_scans = re.findall(
+        r"Scan ExistingRDD\[node#\d+L?,dist#\d+,improved#\d+\]", plan
+    )
+    assert len(state_scans) == 1, plan
+    joins = re.findall(r"\w+Join \[[^\n]*", plan)
+    assert len(joins) == 1, plan
+    assert re.match(r"BroadcastHashJoin .*LeftOuter, BuildRight", joins[0]), plan
+    # the build side is the last subtree printed
+    build = plan[plan.index("BroadcastExchange") :]
+    assert re.search(r"Scan ExistingRDD\[src#\d+L?,dst#", build), plan
+    for absent in ("SortMergeJoin", "Union"):
+        assert absent not in plan, (absent, plan)
     assert len(_round_agg_partitions(plan)) == 1, plan
 
 
