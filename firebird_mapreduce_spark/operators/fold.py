@@ -43,7 +43,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .layout import maybe_compact_bucketed_table
-from .relational import ensure_layout_table, warehouse_path
+from .relational import (
+    drop_warehouse_entries,
+    ensure_layout_table,
+    warehouse_path,
+)
 
 N_BUCKETS = 8
 
@@ -200,15 +204,17 @@ def _ensure_folded_state(
     rebuild path (the table is briefly absent; the marker is never
     touched by compaction), and a ``<tbl>__compact`` stranded by a crash
     before compaction's DROP is swept here, the one gate every consumer
-    passes through."""
+    passes through.  A rebuild also removes every marker of the prefix,
+    so no marker outlives its table."""
     tbl = f"{prefix}{tag}"
     marker = os.path.join(warehouse_path(spark), f"_{tbl}_folded")
     spark.sql(f"DROP TABLE IF EXISTS {tbl}__compact")
     if spark.catalog.tableExists(tbl) and not os.path.exists(marker):
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
     if not spark.catalog.tableExists(tbl):
-        if os.path.exists(marker):
-            os.unlink(marker)  # stale marker from a dropped/stale table
+        # every tag's marker goes: this tag's is stale, and the build
+        # below drops every other tag's table of the prefix
+        drop_warehouse_entries(spark, (f"_{prefix}",))
         ensure_layout_table(
             spark,
             prefix,

@@ -32,13 +32,6 @@ from ..sources import load_table
 from ..sources.fixtures import materialise
 from ..sources.readers import read_binary_dir
 
-# Schema for a multimodal asset table: metadata columns first (queryable
-# without touching bytes), payload last.
-ASSET_SCHEMA = (
-    "asset_id bigint, modality string, media_type string, "
-    "width int, height int, duration_ms int, content binary"
-)
-
 
 def decoder_available(modality: str) -> bool:
     """True when a real codec for ``modality`` is importable on executors.

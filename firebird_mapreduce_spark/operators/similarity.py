@@ -486,9 +486,6 @@ def embedding_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-N_TABLES = 4
-
-
 def _srp_weights_table(table_idx: int) -> list[list[float]]:
     """±1 hyperplane matrix for one of L independent SRP tables —
     md5-derived like ``_srp_weights`` but salted with the table index, so
@@ -1336,8 +1333,8 @@ FROM a{it} a LEFT JOIN matched m USING (vec_id)
 """
 
 
-def _probe_cells(emb: DataFrame, cent: DataFrame, nprobe: int) -> DataFrame:
-    """The multiprobe scheduler: the ``nprobe`` cells whose persisted
+def _probe_cells(emb: DataFrame, cent: DataFrame) -> DataFrame:
+    """The multiprobe scheduler: the ``IVF_NPROBE`` cells whose persisted
     final centroids are nearest the query vector by exact-decimal
     squared distance, ties to the smaller cluster id."""
     qdist = (
@@ -1354,20 +1351,18 @@ def _probe_cells(emb: DataFrame, cent: DataFrame, nprobe: int) -> DataFrame:
     )
     return (
         qdist.orderBy(F.col("dist2").asc(), F.col("cluster").asc())
-        .limit(nprobe)
+        .limit(IVF_NPROBE)
         .select("cluster")
     )
 
 
-def embedding_knn_ivf_multiprobe(
-    spark: SparkSession, sf_dir: str, nprobe: int = IVF_NPROBE
-) -> DataFrame:
+def embedding_knn_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-probe fitted IVF — the standard cure for the r5 honest
     finding that SINGLE-probe recall on this near-isotropic corpus is
     0.2-0.4 (SCALE.md): instead of scanning only the cluster that owns
     the query's vector, score the query against the FINAL fitted
     centroids (the c_{KMEANS_ITERATIONS+1} table, exact-decimal distances so
-    the probe choice is engine-reproducible) and scan the ``nprobe``
+    the probe choice is engine-reproducible) and scan the ``IVF_NPROBE``
     nearest clusters, then exact-cosine rerank the union.  Measured on
     this corpus (tools/measure_ivf_fitted.py sweep, full surface in
     SCALE.md): recall@10 at nprobe 1/2/3/4/6/8 is 0.4/0.5/0.5/0.7/0.8/
@@ -1377,7 +1372,7 @@ def embedding_knn_ivf_multiprobe(
     structure), so they scatter across many cells — on a corpus whose
     neighbors are actual near-duplicates the first few probes capture
     nearly everything, which is why nprobe is the standard IVF dial.
-    The registered default ``IVF_NPROBE`` = 3 keeps the declared query a strict
+    The registered ``IVF_NPROBE`` = 3 keeps the declared query a strict
     probe-scheduler demonstration rather than a recall promise.
 
     Everything stays oracle-backed like ``embedding_knn_ivf_fitted``:
@@ -1400,7 +1395,7 @@ def embedding_knn_ivf_multiprobe(
     # a corpus-sized centroid aggregate per query
     assign = ensure_kmeans_exact_table(spark, sf_dir, "raw", emb)
     cent = ensure_centroid_table(spark, sf_dir, "raw", emb, assign)
-    probes = _probe_cells(emb, cent, nprobe)
+    probes = _probe_cells(emb, cent)
     probed = assign.filter(F.col("vec_id") != QUERY_VEC_ID).join(
         F.broadcast(probes), "cluster"
     )
@@ -1649,12 +1644,7 @@ def encode_pq_batch(
     )
 
 
-def embedding_knn_ivfpq(
-    spark: SparkSession,
-    sf_dir: str,
-    nprobe: int = IVF_NPROBE,
-    n_candidates: int = PQ_CANDIDATES,
-) -> DataFrame:
+def embedding_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF + PRODUCT QUANTIZATION ANN — the memory-bounded serving path
     (Jégou et al., "Product Quantization for Nearest Neighbor Search",
     2011): at 100 TB the IVF candidate payload cannot be float64 arrays
@@ -1666,7 +1656,7 @@ def embedding_knn_ivfpq(
     ASYMMETRIC DISTANCE
     (ADC): the query precomputes its exact distance to every sub-centroid
     (an m·ksub-row table), a candidate's approximate distance is the SUM
-    of m lookups, and only the top-``n_candidates`` survivors are
+    of m lookups, and only the top-``PQ_CANDIDATES`` survivors are
     exact-cosine reranked against their full vectors.
 
     Composition of persisted index artifacts, all exact-decimal so the
@@ -1674,7 +1664,7 @@ def embedding_knn_ivfpq(
 
       coarse   the SAME raw k-means index as every IVF query
                (``ensure_kmeans_exact_table``) + the multiprobe
-               scheduler picks ``nprobe`` cells by (dist2, cluster);
+               scheduler picks ``IVF_NPROBE`` cells by (dist2, cluster);
       codes    ONE exact fit over the DETERMINISTIC HASH-SAMPLE's
                sub-vector relation trains all m sub-codebooks
                (``_pq_subvectors``'s indicator trick keeps clusters
@@ -1700,7 +1690,7 @@ def embedding_knn_ivfpq(
     # coarse index + probe scheduler (shared with embedding_knn_ivf_multiprobe)
     coarse = ensure_kmeans_exact_table(spark, sf_dir, "raw", emb)
     cent = ensure_centroid_table(spark, sf_dir, "raw", emb, coarse)
-    probes = _probe_cells(emb, cent, nprobe)
+    probes = _probe_cells(emb, cent)
     in_probes = (
         coarse.filter(F.col("vec_id") != QUERY_VEC_ID)
         .join(F.broadcast(probes), "cluster")
@@ -1739,7 +1729,7 @@ def embedding_knn_ivfpq(
         .agg(F.sum("dist2").alias("adc"))
     )
     cand = adc.orderBy(F.col("adc").asc(), F.col("ovec").asc()).limit(
-        n_candidates
+        PQ_CANDIDATES
     )
     return cosine_topk(
         cand.join(emb.select("vec_id", "embedding"), cand["ovec"] == F.col("vec_id")),

@@ -203,8 +203,9 @@ def unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("token"))
     # Materialize the vocab-sized model once: without this, the grand
     # total's lineage re-derives the model and the corpus is scanned a
-    # third time (plan-audited in PLANS.md) — at 100 TB that extra full
-    # scan is the dominant cost of the query.
+    # third time (the plan's exchange budget is pinned in
+    # tests/test_shuffle_budget.py) — at 100 TB that extra full scan is
+    # the dominant cost of the query.
     model = (
         toks.groupBy("token")
         .agg(F.count(F.lit(1)).alias("cnt"))

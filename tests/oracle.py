@@ -29,7 +29,7 @@ def duckdb_conn(sf_dir: str) -> duckdb.DuckDBPyConnection:
     return conn
 
 
-def _normalize(df: pd.DataFrame) -> pd.DataFrame:
+def normalize(df: pd.DataFrame) -> pd.DataFrame:
     """Canonical form: columns sorted by name, values stringified (floats via
     repr of float64, timestamps via ISO), rows sorted."""
     out = pd.DataFrame()
@@ -55,8 +55,8 @@ def compare(spark_df, oracle_pdf: pd.DataFrame, name: str = "?") -> None:
     assert sorted(spark_pdf.columns) == sorted(oracle_pdf.columns), (
         f"{name}: columns {sorted(spark_pdf.columns)} != oracle {sorted(oracle_pdf.columns)}"
     )
-    left = _normalize(spark_pdf)
-    right = _normalize(oracle_pdf)
+    left = normalize(spark_pdf)
+    right = normalize(oracle_pdf)
     if not left.equals(right):
         diff_mask = (left != right).any(axis=1)
         sample = pd.concat(

@@ -513,7 +513,9 @@ def test_compact_bucketed_table_one_file_per_bucket(spark):
     left multiple file waves per bucket; post-compaction exactly one
     file per non-empty bucket, rows identical, bucketing metadata
     intact (zero-exchange group-by), and the fold-complete marker
-    untouched — the crash-guard semantics survive compaction."""
+    untouched — the crash-guard semantics survive compaction.  The
+    build also removes another tag's marker of the same prefix, whose
+    table the build drops, so no marker outlives its table."""
     import os
 
     from firebird_mapreduce_spark.operators.dedup import (
@@ -533,6 +535,8 @@ def test_compact_bucketed_table_one_file_per_bucket(spark):
     marker = os.path.join(warehouse_path(spark), "_cmpt_h_t9_folded")
     if os.path.exists(marker):
         os.unlink(marker)
+    other_marker = os.path.join(warehouse_path(spark), "_cmpt_h_t8_folded")
+    open(other_marker, "w").close()
     _ensure_folded_state(
         spark,
         "cmpt_h_",
@@ -541,6 +545,9 @@ def test_compact_bucketed_table_one_file_per_bucket(spark):
         ["h"],
         lambda: docs.filter("is_base").select("h"),
         lambda: docs.filter("NOT is_base").select("h"),
+    )
+    assert not os.path.exists(other_marker), (
+        "another tag's marker outlived its table"
     )
     pre = bucketed_table_file_count(spark, "cmpt_h_t9")
     assert pre > 8, f"fixture not fragmented: {pre} files"

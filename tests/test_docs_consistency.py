@@ -3,24 +3,32 @@ query counts that have gone stale three times already this round."""
 
 from __future__ import annotations
 
+import os
 import re
 
 import __spark_entry__ as entrymod
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_coverage_counts_match_registry():
     n_queries = len(entrymod.queries())
     n_oracle = len(entrymod.oracle_sql())
-    text = open("/root/repo/COVERAGE.md").read()
+    text = open(os.path.join(ROOT, "COVERAGE.md")).read()
     match = re.search(r"(\d+) queries in `queries\(\)`; (\d+) oracle-backed", text)
     assert match, "COVERAGE.md totals line missing"
     assert int(match.group(1)) == n_queries, "COVERAGE.md query count stale"
     assert int(match.group(2)) == n_oracle, "COVERAGE.md oracle count stale"
-    readme = open("/root/repo/README.md").read()
+    readme = open(os.path.join(ROOT, "README.md")).read()
     match = re.search(r"\((\d+) registered queries, (\d+) oracle-backed", readme)
     assert match and int(match.group(1)) == n_queries, "README count stale"
     assert int(match.group(2)) == n_oracle
-    survey = open("/root/repo/SURVEY.md").read()
+    running = readme.split("## Running", 1)[1].split("```")[1]
+    scripts = re.findall(r"\btools/\S+\.py\b", running)
+    assert scripts, "README Running block names no tools/ script"
+    for path in scripts:
+        assert os.path.exists(os.path.join(ROOT, path)), f"README names missing {path}"
+    survey = open(os.path.join(ROOT, "SURVEY.md")).read()
     match = re.search(r"(\d+) queries, (\d+) oracle-backed", survey)
     assert match and int(match.group(1)) == n_queries, "SURVEY count stale"
     assert int(match.group(2)) == n_oracle, "SURVEY oracle count stale"
@@ -36,7 +44,7 @@ def test_every_query_named_in_coverage():
     """COVERAGE.md is the inventory→query map: every registered query name
     must literally appear in it (backticked), so the map cannot silently
     omit an operator."""
-    text = open("/root/repo/COVERAGE.md").read()
+    text = open(os.path.join(ROOT, "COVERAGE.md")).read()
     for name in entrymod.queries():
         assert f"`{name}`" in text, f"COVERAGE.md does not mention `{name}`"
 
@@ -62,7 +70,7 @@ def test_driver_window_covers_every_query():
     assert window == entrymod._DRIVER_WINDOW
     assert len(set(window)) == 50
     rounds = [
-        json.load(open(f"/root/repo/CORRECTNESS_r{n:02d}.json"))
+        json.load(open(os.path.join(ROOT, f"CORRECTNESS_r{n:02d}.json")))
         for n in (8, 9, 10)
     ]
     driver_rows = set().union(*rounds)

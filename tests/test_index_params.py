@@ -1,7 +1,6 @@
 """The persisted index tier's parameters are module constants of
 ``operators.similarity``, not per-call arguments: its entry points take
-only their data arguments (plus the few dials two callers really set to
-different values), and the table-name segments derive from the
+only their data arguments, and the table-name segments derive from the
 constants.  Pure signature/string checks — no Spark session."""
 
 from __future__ import annotations
@@ -25,8 +24,8 @@ DATA_ONLY = {
     "embedding_knn_ivf_fitted": ("spark", "sf_dir"),
     "dedup_semantic": ("spark", "sf_dir", "nassign"),
     "dedup_semantic_incremental": ("spark", "sf_dir"),
-    "embedding_knn_ivf_multiprobe": ("spark", "sf_dir", "nprobe"),
-    "embedding_knn_ivfpq": ("spark", "sf_dir", "nprobe", "n_candidates"),
+    "embedding_knn_ivf_multiprobe": ("spark", "sf_dir"),
+    "embedding_knn_ivfpq": ("spark", "sf_dir"),
     "embedding_knn_ivfpq_incremental": ("spark", "sf_dir"),
     "semantic_index_drift": ("spark", "sf_dir"),
     "semantic_index_refit": ("spark", "sf_dir"),
@@ -44,8 +43,8 @@ KNOBS = {
 }
 # (function, defaulted knob) pairs that stay: the two exact-k-means
 # schedules serve the coarse fit (10x3) and the PQ fit (256x3); the
-# recall dials are swept by tools/measure_ivf*.py; the rest are generic
-# operators
+# rest are generic operators (the IVF recall dials are the constants
+# IVF_NPROBE and PQ_CANDIDATES)
 KEPT = {
     ("cosine_topk", "k"),
     ("kmeans_fit", "k"),
@@ -54,9 +53,6 @@ KEPT = {
     ("_kmeans_exact_fit", "iterations"),
     ("_kmeans_exact_cte_chain", "k"),
     ("_kmeans_exact_cte_chain", "iterations"),
-    ("embedding_knn_ivf_multiprobe", "nprobe"),
-    ("embedding_knn_ivfpq", "nprobe"),
-    ("embedding_knn_ivfpq", "n_candidates"),
 }
 
 

@@ -15,27 +15,10 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb  # noqa: E402
-import pandas as pd  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
-from firebird_mapreduce_spark.sources.readers import TABLES  # noqa: E402
-
-
-def canon(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = pd.DataFrame()
-    for col in sorted(pdf.columns):
-        series = pdf[col]
-        if pd.api.types.is_datetime64_any_dtype(series):
-            out[col] = pd.to_datetime(series).dt.strftime("%Y-%m-%d %H:%M:%S.%f")
-        elif pd.api.types.is_float_dtype(series):
-            out[col] = series.astype("float64").map(repr)
-        else:
-            out[col] = series.map(lambda v: "NULL" if v is None else str(v))
-    return out.sort_values(by=list(out.columns), kind="mergesort").reset_index(
-        drop=True
-    )
+from tests.oracle import duckdb_conn, normalize  # noqa: E402
 
 
 def main() -> int:
@@ -52,13 +35,7 @@ def main() -> int:
         )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    conn = duckdb.connect()
-    for table in TABLES:
-        path = os.path.join(sf_dir, f"{table}.parquet")
-        if os.path.exists(path):
-            conn.execute(
-                f"CREATE VIEW {table} AS SELECT * FROM read_parquet('{path}')"
-            )
+    conn = duckdb_conn(sf_dir)
 
     print("entry rows:", len(entrymod.entry(spark).collect()), flush=True)
     oracles = entrymod.oracle_sql()
@@ -70,9 +47,8 @@ def main() -> int:
             zero_rows.append(name)
         if name in oracles:
             oracle_pdf = conn.execute(oracles[name]).fetchdf()
-            ok = len(spark_pdf) == len(oracle_pdf) and canon(spark_pdf).equals(
-                canon(oracle_pdf)
-            )
+            left, right = normalize(spark_pdf), normalize(oracle_pdf)
+            ok = len(spark_pdf) == len(oracle_pdf) and left.equals(right)
             print(
                 f"{name}: spark={len(spark_pdf)} oracle={len(oracle_pdf)} match={ok}",
                 flush=True,
