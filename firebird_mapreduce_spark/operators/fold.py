@@ -34,7 +34,6 @@ never name two entities.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable, Iterable
 from concurrent.futures import ThreadPoolExecutor
 from typing import NamedTuple
@@ -43,11 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .layout import maybe_compact_bucketed_table
-from .relational import (
-    drop_warehouse_entries,
-    ensure_layout_table,
-    warehouse_path,
-)
+from .relational import ensure_layout_table, hadoop_fs, warehouse_entry
 
 N_BUCKETS = 8
 
@@ -204,17 +199,16 @@ def _ensure_folded_state(
     rebuild path (the table is briefly absent; the marker is never
     touched by compaction), and a ``<tbl>__compact`` stranded by a crash
     before compaction's DROP is swept here, the one gate every consumer
-    passes through.  A rebuild also removes every marker of the prefix,
-    so no marker outlives its table."""
+    passes through.  A rebuild passes ``ensure_layout_table`` with the
+    table absent, whose sweep (``drop_generations``) removes every
+    marker of the prefix, so no marker outlives its table.  The marker
+    is checked and created through the warehouse's Hadoop FileSystem."""
     tbl = f"{prefix}{tag}"
-    marker = os.path.join(warehouse_path(spark), f"_{tbl}_folded")
+    fs, marker = hadoop_fs(spark, warehouse_entry(spark, f"_{tbl}_folded"))
     spark.sql(f"DROP TABLE IF EXISTS {tbl}__compact")
-    if spark.catalog.tableExists(tbl) and not os.path.exists(marker):
+    if spark.catalog.tableExists(tbl) and not fs.exists(marker):
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
     if not spark.catalog.tableExists(tbl):
-        # every tag's marker goes: this tag's is stale, and the build
-        # below drops every other tag's table of the prefix
-        drop_warehouse_entries(spark, (f"_{prefix}",))
         ensure_layout_table(
             spark,
             prefix,
@@ -223,7 +217,7 @@ def _ensure_folded_state(
             lambda w: w.bucketBy(n_buckets, *key_cols).sortBy(*key_cols),
         )
         append_bucketed(build_delta(), tbl, n_buckets, key_cols)
-        open(marker, "w").close()
+        fs.create(marker, True).close()
         settle(spark, n_buckets, {tbl: key_cols})
     return spark.table(tbl)
 

@@ -1982,13 +1982,8 @@ def ingest_tworound_multimodal(
         _phash_state_tables,
     )
     from .relational import corpus_tag
-    from .similarity import (
-        _drift_trigger_frame,
-        _drop_retired_tables,
-        _semantic_state_tables,
-    )
+    from .similarity import _drift_trigger_frame, _semantic_state_tables
 
-    _drop_retired_tables(spark)
     tag = corpus_tag(sf_dir, "documents")
     b1 = ingest_batch_docs(spark, sf_dir)
     b2 = ingest2_batch_docs(spark, sf_dir)
@@ -2026,8 +2021,8 @@ def ingest_tworound_multimodal(
     # (r11's mmr2_) and on the folded media asset-id rule (doc_id*10+3,
     # shared with the streaming twin) — a warehouse holding an older
     # generation must not satisfy the idempotence guard (the
-    # all-parameters keying discipline; retired generations are swept
-    # by _drop_retired_tables)
+    # all-parameters keying discipline; retired generations are in
+    # relational.RETIRED_STEMS)
     fh, fb, fih, fib, fah, fab, fsemb, fsemv, fsems = fold_batch(
         spark,
         tag,

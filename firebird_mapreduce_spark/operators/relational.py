@@ -337,43 +337,71 @@ def warehouse_uri(spark: SparkSession) -> str:
 
 
 def warehouse_path(spark: SparkSession) -> str:
-    """Local filesystem path of ``spark.sql.warehouse.dir`` — the one
-    place layout tables AND the embedded JDBC endpoint resolve it, so
-    any future hardening lands everywhere at once.  Drops the scheme:
-    only for local-file writers; remote-aware code uses
-    ``warehouse_uri``."""
+    """Local filesystem path of ``spark.sql.warehouse.dir``.  Drops the
+    scheme: only for local-file code (the embedded JDBC endpoint, the
+    versioned index tables, the bucket file counters); remote-aware code
+    uses ``warehouse_uri`` and ``warehouse_entry``."""
     from urllib.parse import urlparse
 
     return urlparse(warehouse_uri(spark)).path
 
 
-def drop_warehouse_entries(
-    spark: SparkSession, prefixes: tuple[str, ...], keep: str | None = None
-) -> None:
-    """Delete every local warehouse entry whose name starts with one of
-    ``prefixes``, except ``keep`` — directories and regular files
-    alike.  A stale entry outlives the in-memory catalog: a fresh session
-    does not list it, and ``saveAsTable`` onto it fails with
-    LOCATION_ALREADY_EXISTS.  Best-effort: an entry a concurrent run
-    removes first is skipped."""
-    import contextlib
-    import shutil
+# Stems of RETIRED generations, which no build writes again: the r8
+# sampled-fit redesign retired the full-corpus-fit PQ code table and its
+# centroid artifact, and the shared folded media asset-id rule retired
+# the tworound crawl's mmr2_ fold generation.  Every sweep drops them.
+RETIRED_STEMS = ("kmx_pq_", "kmxc_pq16x16_", "mmr2_")
 
-    root = warehouse_path(spark)
-    if not os.path.isdir(root):
-        return
-    for name in os.listdir(root):
-        if name.startswith(prefixes) and name != keep:
-            path = os.path.join(root, name)
-            if os.path.isdir(path):
-                shutil.rmtree(path, ignore_errors=True)
-            else:
-                with contextlib.suppress(FileNotFoundError):
-                    os.remove(path)
+
+def hadoop_fs(spark: SparkSession, uri: str):
+    """``(FileSystem, Path)`` of ``uri`` through Hadoop — the filesystem
+    Spark itself reads and writes ``uri`` with, on ``file:`` and remote
+    warehouses alike.  On ``file:`` it is the raw local filesystem, so a
+    marker written through it gets no ``.crc`` sibling."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(uri)
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    return (fs.getRawFileSystem() if fs.getScheme() == "file" else fs), path
+
+
+def warehouse_entry(spark: SparkSession, name: str) -> str:
+    """URI of the warehouse entry ``name``, with the warehouse's scheme."""
+    return f"{warehouse_uri(spark).rstrip('/')}/{name}"
+
+
+def drop_generations(
+    spark: SparkSession, stem: str, keep: str | None = None
+) -> None:
+    """The one sweep of persisted generations ``<stem><corpus tag>``.
+
+    Drops every catalog table named ``stem*`` except ``keep``, and every
+    warehouse entry named ``stem*`` or ``_stem*`` — tables, fold
+    ``_…_folded`` and jdbc ``._loaded`` markers, ``__compact``
+    leftovers, report sinks — whose name, without one leading ``_``,
+    does not start with ``keep``.  A stale entry outlives the in-memory
+    catalog: a fresh session does not list it, and ``saveAsTable`` onto
+    it fails with LOCATION_ALREADY_EXISTS.  Entries are listed and
+    deleted through the Hadoop FileSystem of ``warehouse_uri``, so one
+    rule holds on ``file:`` and on ``hdfs://``.  Every sweep also drops
+    ``RETIRED_STEMS`` whole.
+
+    Runs on the calling thread only: never from ``fold_trigger``'s pool
+    or a ``foreachBatch`` callback (``_apply_trigger``), which would
+    race the catalog with the stream's own writes."""
+    stems = (stem, *RETIRED_STEMS)
+    tables = spark.catalog.listTables(pattern="|".join(f"{s}*" for s in stems))
+    for t in tables:
+        if t.name.startswith(stems) and t.name != keep:
+            spark.sql(f"DROP TABLE IF EXISTS {t.name}")
+    names = ",".join(f"{u}{s}*" for s in stems for u in ("", "_"))
+    fs, pattern = hadoop_fs(spark, warehouse_entry(spark, f"{{{names}}}"))
+    for path in (e.getPath() for e in fs.globStatus(pattern) or []):
+        name = path.getName().removeprefix("_")
+        if keep is None or not name.startswith(keep):
+            fs.delete(path, True)
 
 
 # (applicationId, table) pairs this process has already built-or-found:
-# skip the per-call catalog sweep (listTables + tableExists RPCs —
+# skip the per-call sweep (``drop_generations``; its catalog listing
 # measured ~1.8 s/query on the r8 PQ serving path, which makes 7 ensure
 # calls).  The fast path still confirms the
 # table EXISTS (one cheap RPC), so an in-process drop — the folded-state
@@ -394,18 +422,15 @@ def ensure_layout_table(
     layout (bucketed, Hive-partitioned): write ``build()`` as
     ``{prefix}{tag}`` with ``configure_writer`` applied if it does not
     exist, dropping stale same-prefix tables from older corpora and
-    orphaned warehouse entries (``drop_warehouse_entries``)."""
+    orphaned warehouse entries (``drop_generations``)."""
     tbl = f"{prefix}{tag}"
     key = (spark.sparkContext.applicationId, tbl)
     if key in _LAYOUT_READY:
         if spark.catalog.tableExists(tbl):
             return spark.table(tbl)
         _LAYOUT_READY.discard(key)  # dropped in-process — rebuild below
-    for t in spark.catalog.listTables():
-        if t.name.startswith(prefix) and t.name != tbl:
-            spark.sql(f"DROP TABLE IF EXISTS {t.name}")
     exists = spark.catalog.tableExists(tbl)
-    drop_warehouse_entries(spark, (prefix,), keep=tbl if exists else None)
+    drop_generations(spark, prefix, keep=tbl if exists else None)
     if not exists:
         configure_writer(build().write.mode("overwrite")).saveAsTable(tbl)
     _LAYOUT_READY.add(key)

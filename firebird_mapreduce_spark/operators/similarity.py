@@ -1534,33 +1534,6 @@ def _pq_assign_arrays(sub: DataFrame, cent: DataFrame) -> DataFrame:
     )
 
 
-# Warehouse prefixes of RETIRED table generations.  The standard
-# stale-layout sweep only matches a CURRENT prefix, so without this list
-# a warehouse that ran an older generation keeps its dead tables forever:
-# the r8 sampled-fit redesign retired the full-corpus-fit PQ code table
-# and its centroid artifact, and the shared folded media asset-id rule
-# retired the tworound crawl's mmr2_ fold generation (tables, warehouse
-# directories and their _mmr2_*_folded markers).  Swept once per session
-# by ensure_pq_centroid_table and ingest_tworound_multimodal.
-_RETIRED_PREFIXES = ("kmx_pq_", "kmxc_pq16x16_", "mmr2_", "_mmr2_")
-_RETIRED_SWEPT: set[str] = set()
-
-
-def _drop_retired_tables(spark: SparkSession) -> None:
-    from .relational import drop_warehouse_entries
-
-    app = spark.sparkContext.applicationId
-    if app in _RETIRED_SWEPT:
-        return
-    for t in spark.catalog.listTables():
-        if t.name.startswith(_RETIRED_PREFIXES):
-            spark.sql(f"DROP TABLE IF EXISTS {t.name}")
-    # a fresh session's in-memory catalog does not list a PREVIOUS
-    # session's saveAsTable output, so also sweep the warehouse itself
-    drop_warehouse_entries(spark, _RETIRED_PREFIXES)
-    _RETIRED_SWEPT.add(app)
-
-
 def ensure_pq_centroid_table(
     spark: SparkSession, sf_dir: str, emb: DataFrame
 ) -> DataFrame:
@@ -1571,7 +1544,6 @@ def ensure_pq_centroid_table(
     2011 — at 100 TB codebook training must not scale with the corpus),
     its assignment is persisted bucketed (``kmx_pqfit_``), and the
     centroid recompute reads sample-sized inputs only."""
-    _drop_retired_tables(spark)
     sample_sub = _pq_subvectors(_pq_fit_sample(emb))
     k = PQ_M * PQ_KSUB
     fit = _index_table(
@@ -2666,18 +2638,18 @@ def _versioned_index_table(
     key_cols: list[str] | None = None,
 ):
     """The refit queries' shared VERSIONED INDEX handle: sweep
-    same-prefix version directories left by an OLDER corpus (the
-    ``ensure_layout_table`` stale-layout discipline — a refit index is
-    corpus-sized, so an orphan is real disk), then open the
-    content-tagged ``VersionedParquetTable`` whose commit log is the
-    consumer-facing version pointer."""
+    same-prefix version directories left by an OLDER corpus
+    (``drop_generations`` — a refit index is corpus-sized, so an orphan
+    is real disk), then open the content-tagged
+    ``VersionedParquetTable`` whose commit log is the consumer-facing
+    version pointer."""
     import os
 
     from ..sources.versioned import VersionedParquetTable
-    from .relational import corpus_tag, drop_warehouse_entries, warehouse_path
+    from .relational import corpus_tag, drop_generations, warehouse_path
 
     tbl = f"{prefix}{corpus_tag(sf_dir, 'embeddings')}"
-    drop_warehouse_entries(spark, (prefix,), keep=tbl)
+    drop_generations(spark, prefix, keep=tbl)
     return VersionedParquetTable(
         os.path.join(warehouse_path(spark), tbl),
         key_cols=key_cols or ["cluster", "d"],

@@ -35,22 +35,15 @@ _DERBY_DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
 
 
 def _jdbc_url(spark: SparkSession, tag: str) -> str:
-    from ..operators.relational import warehouse_path
+    from ..operators.relational import drop_generations, warehouse_path
 
     warehouse = warehouse_path(spark)
     os.makedirs(warehouse, exist_ok=True)
-    # prune stale endpoints from regenerated corpora — the same orphan
-    # hygiene ensure_layout_table applies to layout tables
-    import shutil
-
-    keep = f"_jdbc_dim_{tag}"
-    for d in os.listdir(warehouse):
-        if d.startswith("_jdbc_dim_") and not d.startswith(keep):
-            full = os.path.join(warehouse, d)
-            shutil.rmtree(full, ignore_errors=True)
-            if os.path.isfile(full):
-                os.remove(full)
-    return f"jdbc:derby:{os.path.join(warehouse, keep)};create=true"
+    # the endpoint and its ._loaded marker are one generation of the
+    # jdbc_dim_ stem: other corpora's go
+    keep = f"jdbc_dim_{tag}"
+    drop_generations(spark, "jdbc_dim_", keep=keep)
+    return f"jdbc:derby:{os.path.join(warehouse, '_' + keep)};create=true"
 
 
 def ensure_jdbc_nation(spark: SparkSession, sf_dir: str) -> tuple[str, str]:

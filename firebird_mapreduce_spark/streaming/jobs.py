@@ -1125,8 +1125,11 @@ def _apply_trigger(
       batch_id + 1`` before any append mutates state, which pins the
       screen to pre-fold state and keeps per-doc rows executor-side (no
       driver collect); the fold reads the committed report back."""
-    bdir = os.path.join(report_dir, f"batch_{batch_id:05d}")
-    if os.path.exists(os.path.join(bdir, "_SUCCESS")):
+    from ..operators.relational import hadoop_fs
+
+    bdir = f"{report_dir}/batch_{batch_id:05d}"
+    fs, success = hadoop_fs(spark, f"{bdir}/_SUCCESS")
+    if fs.exists(success):
         return
     rep, fold = step(batch_df.localCheckpoint(eager=True))
     (
@@ -1147,32 +1150,33 @@ def _crawl_replay(
     apply,
     columns: tuple[str, ...],
 ) -> DataFrame:
-    """The replay driver both streaming crawls share: seed every state
-    table as a file-level snapshot of its day-0 base (one file per
-    bucket, so replay-0 fragmentation starts at 1 and the compaction
-    threshold counts ingests; ``_snapshot_bucketed_state``), reset the
-    report sink (it lives in the warehouse beside the state tables),
-    replay the split one file per trigger (``maxFilesPerTrigger=1``)
-    through ``apply(batch_df, batch_id, report_dir)`` under ``_drain``,
-    and read the committed reports back lazily — only what the CALLER
-    collects ever crosses to the driver."""
-    import shutil
+    """The replay driver both streaming crawls share: drop every
+    generation of each state stem and of the ``<name>_report_`` sink
+    stem (``drop_generations``: a replay on one corpus leaves nothing of
+    another behind), seed every state table as a file-level snapshot of
+    its day-0 base (one file per bucket, so replay-0 fragmentation
+    starts at 1 and the compaction threshold counts ingests;
+    ``_snapshot_bucketed_state``), replay the split one file per
+    trigger (``maxFilesPerTrigger=1``) through ``apply(batch_df,
+    batch_id, report_dir)`` under ``_drain``, and read the committed
+    reports back lazily — only what the CALLER collects ever crosses to
+    the driver.  The sink is a warehouse entry with the warehouse's
+    scheme, beside the state tables."""
+    from ..operators.relational import drop_generations, warehouse_entry
 
-    from ..operators.relational import warehouse_path
-
+    stems = [tbl.removesuffix(tag) for tbl in state] + [f"{name}_report_"]
+    for stem in stems:
+        drop_generations(spark, stem)
     for (tbl, tier), base in zip(state.items(), bases):
         _snapshot_bucketed_state(spark, base, tbl, tier.keys)
-    report_dir = os.path.join(warehouse_path(spark), f"{name}_report_{tag}")
-    shutil.rmtree(report_dir, ignore_errors=True)
+    report_dir = warehouse_entry(spark, f"{name}_report_{tag}")
     stream = (
         spark.readStream.schema("doc_id bigint, text string")
         .option("maxFilesPerTrigger", 1)
         .parquet(split_dir)
     )
     _drain(stream, lambda df, bid: apply(df, bid, report_dir), f"fb_{name}_")
-    return spark.read.parquet(os.path.join(report_dir, "batch_*")).select(
-        *columns
-    )
+    return spark.read.parquet(f"{report_dir}/batch_*").select(*columns)
 
 
 def _strinc_apply_batch(
@@ -1289,10 +1293,11 @@ def _snapshot_bucketed_state(
       100 TB posture), with the plain ``shutil`` fast path kept for
       local paths.  The empty table is created by DDL (``CLUSTERED
       BY``), not an empty-DataFrame write — no Spark job per table.
-    - The destination keeps the warehouse URI's scheme
-      (``warehouse_uri``): the stale table directory is deleted through
-      the Hadoop FileSystem API on a non-local warehouse (``shutil``
-      only for ``file:``), and the copy gets the full-scheme path.
+    - The caller has dropped every generation of the table's stem
+      (``_crawl_replay``'s ``drop_generations``), so the catalog name
+      and the warehouse directory are free.  The destination keeps the
+      warehouse URI's scheme (``warehouse_entry``), and the copy gets
+      the full-scheme path.
     - What is checked: every copied file must parse a writer bucket id
       below ``n_buckets`` from its ``inputFiles()`` name, so an
       unbucketed base or one bucketed wider fails loudly.  Nothing
@@ -1303,7 +1308,7 @@ def _snapshot_bucketed_state(
     import shutil
     from urllib.parse import urlparse
 
-    from ..operators.relational import warehouse_uri
+    from ..operators.relational import warehouse_entry
 
     global _BUCKET_FILE_PAT
     if _BUCKET_FILE_PAT is None:
@@ -1319,16 +1324,9 @@ def _snapshot_bucketed_state(
                 "be a bare scan of a table bucketed with the same spec "
                 "as the snapshot"
             )
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    dst = f"{warehouse_uri(spark).rstrip('/')}/{tbl}"
+    dst = warehouse_entry(spark, tbl)
     dst_path = urlparse(dst).path
     local_dst = urlparse(dst).scheme in ("", "file")
-    # the warehouse DIRECTORY outlives the in-memory catalog (the
-    # ensure_layout_table discipline)
-    if local_dst:
-        shutil.rmtree(dst_path, ignore_errors=True)
-    else:
-        _hadoop_delete(spark, dst)
     cols = ", ".join(
         f"`{f.name}` {f.dataType.simpleString()}" for f in base.schema.fields
     )
@@ -1346,14 +1344,6 @@ def _snapshot_bucketed_state(
     else:
         _hadoop_copy_files(spark, src_files, dst)
     spark.catalog.refreshTable(tbl)
-
-
-def _hadoop_delete(spark: SparkSession, uri: str) -> None:
-    """Recursively delete ``uri`` (absent is fine) through the Hadoop
-    FileSystem API — ``shutil.rmtree``'s counterpart on a non-local
-    warehouse, where a POSIX call would target the driver's disk."""
-    path = spark._jvm.org.apache.hadoop.fs.Path(uri)
-    path.getFileSystem(spark._jsc.hadoopConfiguration()).delete(path, True)
 
 
 def _hadoop_copy_files(

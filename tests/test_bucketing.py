@@ -566,7 +566,10 @@ def test_compact_bucketed_table_one_file_per_bucket(spark):
 def test_layout_sweep_removes_stale_dirs_and_files(spark, monkeypatch):
     """``ensure_layout_table``'s warehouse sweep removes every stale
     same-prefix entry, a leftover regular file as well as a directory,
-    and keeps the current table when a new session first meets it."""
+    and another tag's ``_<prefix>…_folded`` and ``._loaded`` markers.
+    The current table's own marker goes when the table does not exist
+    and survives while it does, and a sibling stem that only shares the
+    prefix's letters survives: the rule matches whole stems."""
     import os
     import shutil
 
@@ -576,19 +579,27 @@ def test_layout_sweep_removes_stale_dirs_and_files(spark, monkeypatch):
     root = R.warehouse_path(spark)
     stale_dir = os.path.join(root, f"{prefix}olddir")
     stale_file = os.path.join(root, f"{prefix}oldfile")
+    old_marker = os.path.join(root, f"_{prefix}old_folded")
+    old_loaded = os.path.join(root, f"_{prefix}old._loaded")
+    own_marker = os.path.join(root, f"_{prefix}cur_folded")
+    sibling = os.path.join(root, "fb_sweep_tx_cur")
     os.makedirs(stale_dir, exist_ok=True)
     with open(os.path.join(stale_dir, "part-0.parquet"), "w") as fh:
         fh.write("stale")
-    with open(stale_file, "w") as fh:
-        fh.write("stale")
+    for path in (stale_file, old_marker, old_loaded, own_marker, sibling):
+        with open(path, "w") as fh:
+            fh.write("stale")
     try:
         R.ensure_layout_table(spark, prefix, "cur", lambda: spark.range(3), lambda w: w)
-        assert not os.path.exists(stale_dir)
-        assert not os.path.exists(stale_file)
+        for path in (stale_dir, stale_file, old_marker, old_loaded):
+            assert not os.path.exists(path), path
+        assert not os.path.exists(own_marker), "a marker outlived its table"
+        assert os.path.exists(sibling), "the sweep crossed a stem boundary"
         # a new session's first encounter sweeps again with the table live
         monkeypatch.setattr(R, "_LAYOUT_READY", set())
-        with open(stale_file, "w") as fh:
-            fh.write("stale")
+        for path in (stale_file, own_marker):
+            with open(path, "w") as fh:
+                fh.write("stale")
 
         def no_rebuild():
             raise AssertionError("the current table must be kept")
@@ -596,11 +607,14 @@ def test_layout_sweep_removes_stale_dirs_and_files(spark, monkeypatch):
         kept = R.ensure_layout_table(spark, prefix, "cur", no_rebuild, lambda w: w)
         assert kept.count() == 3
         assert not os.path.exists(stale_file)
+        assert os.path.exists(own_marker), "the live table's marker went"
+        assert os.path.exists(sibling)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {prefix}cur")
         shutil.rmtree(stale_dir, ignore_errors=True)
-        if os.path.exists(stale_file):
-            os.remove(stale_file)
+        for path in (stale_file, old_marker, old_loaded, own_marker, sibling):
+            if os.path.exists(path):
+                os.remove(path)
 
 
 def test_ingest_screen_exchanges_batch_side_only(spark):

@@ -1187,7 +1187,15 @@ def test_strinc_report_sink_immune_to_fold(spark):
     not change when the state tables are folded again afterwards
     (write -> fold -> read == write -> read).  A lazily-captured report
     would re-screen against the mutated state here and differ — the
-    exact read-your-own-writes hazard the sink exists to close."""
+    exact read-your-own-writes hazard the sink exists to close.
+
+    The replay also drops every generation of its state and report
+    stems first: a state table, fold marker and report sink planted
+    under another corpus tag are gone afterwards, and the report rows
+    still equal the batch twin's."""
+    from firebird_mapreduce_spark.operators.dedup import (
+        dedup_incremental_tworound,
+    )
     from firebird_mapreduce_spark.operators.relational import corpus_tag
     from firebird_mapreduce_spark.streaming.jobs import (
         stream_dedup_incremental_query,
@@ -1195,8 +1203,26 @@ def test_strinc_report_sink_immune_to_fold(spark):
     from pyspark.sql import functions as F
     from tests.conftest import SF_SMOKE
 
+    root = R.warehouse_path(spark)
+    table, marker, sink = (
+        os.path.join(root, name)
+        for name in (
+            "strinc_hash_16x4_deadbeef",
+            "_strinc_hash_16x4_deadbeef_folded",
+            "strinc_report_deadbeef",
+        )
+    )
+    os.makedirs(table, exist_ok=True)
+    os.makedirs(sink, exist_ok=True)
+    open(os.path.join(table, "part-0.parquet"), "w").close()
+    open(marker, "w").close()
     df = stream_dedup_incremental_query(spark, SF_SMOKE)
     before = sorted(map(tuple, df.collect()))
+    for path in (table, marker, sink):
+        assert not os.path.exists(path), f"{path} outlived the replay"
+    assert before == sorted(
+        map(tuple, dedup_incremental_tworound(spark, SF_SMOKE).collect())
+    )
     # an out-of-band "fold": append a synthetic hash row to the state
     # table the screens probed — if the report were lazy over state,
     # re-collecting df would recompute against this mutated table
@@ -1214,13 +1240,15 @@ def test_strinc_report_sink_immune_to_fold(spark):
     assert after == before
 
 
-def test_strinc_retry_batch_is_noop(spark):
+@pytest.mark.parametrize("scheme", ["", "file:"], ids=["path", "file_uri"])
+def test_strinc_retry_batch_is_noop(spark, scheme):
     """A foreachBatch RETRY of an already-committed batch_id must be a
     complete no-op: no re-screen (it would read post-fold state and
     produce wrongly-screened report rows) and no re-fold.  Proven by
     re-invoking ``_strinc_apply_batch`` with the same batch_id but a
     DIFFERENT batch — if the guard failed, the report content and the
-    state row counts would both move."""
+    state row counts would both move.  The guard holds for a report dir
+    given as a plain path and as a URI with its scheme."""
     import os
     import shutil
 
@@ -1229,8 +1257,9 @@ def test_strinc_retry_batch_is_noop(spark):
     from pyspark.sql import functions as F
 
     htbl, btbl = "test_strinc_retry_hash", "test_strinc_retry_bands"
-    report_dir = os.path.join(warehouse_path(spark), "test_strinc_retry_rep")
-    shutil.rmtree(report_dir, ignore_errors=True)
+    local_dir = os.path.join(warehouse_path(spark), "test_strinc_retry_rep")
+    report_dir = scheme + local_dir
+    shutil.rmtree(local_dir, ignore_errors=True)
     docs = spark.createDataFrame(
         [(i, f"seed document {i} " + "tok " * 20) for i in range(20)],
         "doc_id bigint, text string",
@@ -1272,7 +1301,7 @@ def test_strinc_retry_batch_is_noop(spark):
     assert spark.table(btbl).count() == b_n, "retry re-folded bands"
     for tbl in (htbl, btbl):
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    shutil.rmtree(report_dir, ignore_errors=True)
+    shutil.rmtree(local_dir, ignore_errors=True)
 
 
 def test_stream_ingest_multimodal_equals_batch_twin(spark):
@@ -1456,11 +1485,11 @@ def test_snapshot_seeder_contract_and_hadoop_copy_path(spark, tmp_path):
 
 def test_snapshot_seeder_keeps_remote_warehouse_scheme(spark, monkeypatch, tmp_path):
     """On a non-``file:`` warehouse the seeder's destination keeps the
-    URI scheme: the stale table directory is deleted and the files are
-    copied through the Hadoop FileSystem API at ``hdfs://…/<table>``, not
-    at a scheme-less path that would resolve against ``fs.defaultFS`` or
-    the driver's local disk.  The Hadoop calls are recorded, not run; the
-    delete helper itself is exercised on a ``file:`` directory."""
+    URI scheme: the files are copied through the Hadoop FileSystem API
+    at ``hdfs://…/<table>``, not at a scheme-less path that would
+    resolve against ``fs.defaultFS`` or the driver's local disk.  The
+    seeder deletes nothing (its caller's ``drop_generations`` clears
+    the table first); the Hadoop calls are recorded, not run."""
     from firebird_mapreduce_spark.streaming import jobs
 
     calls = []
@@ -1468,9 +1497,6 @@ def test_snapshot_seeder_keeps_remote_warehouse_scheme(spark, monkeypatch, tmp_p
     # writes there, not at the host's root
     warehouse = f"hdfs://namenode:8020{tmp_path}/warehouse"
     monkeypatch.setattr(R, "warehouse_uri", lambda spark: warehouse + "/")
-    monkeypatch.setattr(
-        jobs, "_hadoop_delete", lambda spark, uri: calls.append(("delete", uri))
-    )
     monkeypatch.setattr(
         jobs,
         "_hadoop_copy_files",
@@ -1489,21 +1515,62 @@ def test_snapshot_seeder_keeps_remote_warehouse_scheme(spark, monkeypatch, tmp_p
         base = spark.table("snap_uri_base")
         jobs._snapshot_bucketed_state(spark, base, "snap_uri_probe", ("h",))
         dst = f"{warehouse}/snap_uri_probe"
-        assert calls == [
-            ("delete", dst),
-            ("copy", sorted(base.inputFiles()), dst),
-        ]
+        assert calls == [("copy", sorted(base.inputFiles()), dst)]
     finally:
         spark.sql("DROP TABLE IF EXISTS snap_uri_probe")
         spark.sql("DROP TABLE IF EXISTS snap_uri_base")
 
-    monkeypatch.undo()
-    stale = tmp_path / "stale"
-    (stale / "sub").mkdir(parents=True)
-    (stale / "sub" / "part-0.parquet").write_bytes(b"x")
-    jobs._hadoop_delete(spark, f"file:{stale}")
-    assert not stale.exists()
-    jobs._hadoop_delete(spark, f"file:{stale}")  # absent is fine
+
+def test_generation_sweep_deletes_through_remote_warehouse_fs(
+    spark, monkeypatch, tmp_path
+):
+    """On a non-``file:`` warehouse ``drop_generations`` lists and
+    deletes through the warehouse URI's own Hadoop FileSystem: every
+    delete targets ``hdfs://…``, and a local file at the scheme-stripped
+    path survives.  The FileSystem calls are recorded, not run; the
+    recorded listing holds another tag's table and marker, which go,
+    and the kept tag's table and marker, which stay."""
+    warehouse = f"hdfs://namenode:8020{tmp_path}/warehouse"
+    prefix = "fb_remote_t_"
+    local = tmp_path / "warehouse" / f"{prefix}old"
+    local.parent.mkdir()
+    local.write_bytes(b"local disk")
+    listing = [
+        f"{prefix}old",
+        f"_{prefix}old_folded",
+        f"{prefix}cur",
+        f"_{prefix}cur_folded",
+    ]
+    fs_uris, deletes = [], []
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+
+    class Status:
+        def __init__(self, name):
+            self.path = Path(f"{warehouse}/{name}")
+
+        def getPath(self):
+            return self.path
+
+    class RecordingFs:
+        def globStatus(self, pattern):
+            return [Status(name) for name in listing]
+
+        def delete(self, path, recursive):
+            deletes.append(path.toString())
+
+    def hadoop_fs(spark, uri):
+        fs_uris.append(uri)
+        return RecordingFs(), uri
+
+    monkeypatch.setattr(R, "warehouse_uri", lambda spark: warehouse + "/")
+    monkeypatch.setattr(R, "hadoop_fs", hadoop_fs)
+    R.drop_generations(spark, prefix, keep=f"{prefix}cur")
+    assert fs_uris and all(u.startswith(f"{warehouse}/") for u in fs_uris)
+    assert deletes == [
+        f"{warehouse}/{prefix}old",
+        f"{warehouse}/_{prefix}old_folded",
+    ]
+    assert local.read_bytes() == b"local disk"
 
 
 def test_doc_split_fixture_tracks_world_function_source(spark):
