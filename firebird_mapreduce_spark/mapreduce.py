@@ -151,7 +151,9 @@ class Static(NamedTuple):
     once per solve: the checkpointed frame, its row count, and what
     ``_static`` derives from its size for every round — the shuffle
     partition count of the round's aggregation, and whether the operand
-    is small enough to broadcast."""
+    is small enough to broadcast.  A step may use both: an sssp round
+    whose operand is broadcast at one partition coalesces instead of
+    shuffling (``operators.graph``)."""
 
     df: DataFrame
     rows: int

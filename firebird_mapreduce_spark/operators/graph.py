@@ -23,17 +23,21 @@ from the materialised edge bytes (1 for small graphs,
 ``spark.sql.shuffle.partitions`` at scale).  From the same bytes the
 driver decides whether the edges fit the session's broadcast threshold;
 if they do, an sssp round broadcasts them, and since the edge operand is
-the same in every round, one broadcast serves a whole probe window.  The
-driver's periodic eager checkpoint truncates lineage (otherwise plan size
-grows linearly and the scheduler collapses long before data size matters)
-and carries the convergence probe on the same job.
+the same in every round, one broadcast serves a whole probe window.  An
+sssp round whose edges are broadcast and size to one partition shuffles
+nothing: it coalesces to one partition instead, so a whole probe window
+runs as the edge broadcast plus one checkpoint stage.  The driver's
+periodic eager checkpoint truncates lineage (otherwise plan size grows
+linearly and the scheduler collapses long before data size matters) and
+carries the convergence probe on the same job.
 
 A round is written as ONE parsed statement (``spark.sql`` with the state
 and the static operand bound as frames, ``{state}`` and ``{e}``; the
-shuffle width goes in through a ``REPARTITION`` hint).  On small graphs a
-round's cost is driver time, not data: the same round spelled as a dozen
-DataFrame calls is a few hundred py4j round trips, each new Dataset
-analysed eagerly, ~75 ms per round on 4 cores.  ``spark.sql`` binds each
+shuffle width goes in through a ``REPARTITION`` hint, or sssp's
+one-partition ``COALESCE``).  On small graphs a round's cost is driver
+time, not data: the same round spelled as a dozen DataFrame calls is a
+few hundred py4j round trips, each new Dataset analysed eagerly, ~75 ms
+per round on 4 cores.  ``spark.sql`` binds each
 frame as a uniquely named temporary view and drops it once the statement
 is analysed, so no view outlives the call.
 """
@@ -63,20 +67,25 @@ def _sql_round(spark: SparkSession, sql: str):
 # its out-edges when it improved, and every joined row emits itself
 # (is_state) and the candidate it relaxes; a state row with no edge to
 # relax emits a null candidate, which is dropped.  Both feed one
-# min-aggregate behind the one REPARTITION({n}, node) exchange — a state
-# row repeated once per out-edge changes no min.  _old is the min over the
-# state-tagged rows; a node improved if it is new (_old null) or its dist
-# fell.  The join's build side is the static edge operand: sssp binds it
-# with a broadcast hint when the driver sized it under the session's
-# broadcast threshold (Static.broadcast), and as it is the same in every
-# round, one broadcast serves a whole probe window.
+# min-aggregate behind the {exchange} hint — a state row repeated once per
+# out-edge changes no min.  _old is the min over the state-tagged rows; a
+# node improved if it is new (_old null) or its dist fell.  The join's
+# build side is the static edge operand: sssp binds it with a broadcast
+# hint when the driver sized it under the session's broadcast threshold
+# (Static.broadcast), and as it is the same in every round, one broadcast
+# serves a whole probe window.  {exchange} is REPARTITION({n}, node), the
+# one shuffle, unless the broadcast edges size to one partition: then it
+# is COALESCE(1), whose SinglePartition output already satisfies the
+# aggregate, so the round plans no exchange and every round of a window
+# runs in the checkpoint's one stage.  At n = 1 a repartition funnels the
+# round through one reducer too, so coalescing loses no parallelism.
 _SSSP_ROUND_SQL = """
 SELECT node, dist, _old IS NULL OR dist < _old AS improved
 FROM (
     SELECT node, min(cand) AS dist,
            min(CASE WHEN is_state THEN cand END) AS _old
     FROM (
-        SELECT /*+ REPARTITION({n}, node) */ * FROM (
+        SELECT /*+ {exchange} */ * FROM (
             SELECT inline(array(
                 named_struct('node', s.node, 'cand', s.dist, 'is_state', true),
                 named_struct('node', e.dst, 'cand', s.dist + e.weight,
@@ -117,12 +126,18 @@ def sssp(
     old one; improved ≡ new < old, or a newly reached node.  The edges
     are the join's build side, broadcast when the driver measured them
     under the session's broadcast threshold (``Static.broadcast``) and
-    shuffled otherwise.
+    shuffled otherwise.  The min-aggregate shuffles on ``node`` into
+    ``Static.partitions`` partitions, except when the edges are broadcast
+    and size to one partition: then the round coalesces to one partition
+    and shuffles nothing.
 
     A round is the one statement ``_SSSP_ROUND_SQL``.  The start row is
     built in the JVM (``range`` + literals): a frame from a Python list
     plans as a scan over a Python RDD, and checkpointing it runs a job
     whose tasks wait on forked Python workers — an sssp solve forks none.
+    Its ``node`` is ``range``'s ``id``, not a literal: a literal ``node``
+    lets constraint propagation add ``src <=> source`` to round 1's edge
+    side, and window 1 would build a second edge broadcast.
 
     The loop, the checkpoint/probe cadence (``checkpoint_every``) and the
     ``trace`` hook are the driver's: see ``mapreduce.iterate_until_fixpoint``.
@@ -133,15 +148,18 @@ def sssp(
         F.col("weight").cast("double"),
     )
 
-    start = spark.range(1, numPartitions=1).select(
-        F.lit(source).cast("long").alias("node"),
+    start = spark.range(source, source + 1, numPartitions=1).select(
+        F.col("id").alias("node"),
         F.lit(0.0).alias("dist"),
         F.lit(True).alias("improved"),
     )
 
     def relax(state: DataFrame, static: Static) -> DataFrame:
         e = static.df.hint("broadcast") if static.broadcast else static.df
-        return spark.sql(_SSSP_ROUND_SQL, state=state, e=e, n=static.partitions)
+        one = static.broadcast and static.partitions == 1
+        exchange = "COALESCE(1)" if one else "REPARTITION({n}, node)"
+        sql = _SSSP_ROUND_SQL.replace("{exchange}", exchange)
+        return spark.sql(sql, state=state, e=e, n=static.partitions)
 
     state = iterate_until_fixpoint(
         relax,

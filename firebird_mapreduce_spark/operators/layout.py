@@ -290,19 +290,30 @@ def compact_files(
         os.unlink(lock)
 
 
+def _table_parquet_files(spark: SparkSession, tbl: str) -> list[str]:
+    """Names of the parquet files under managed table ``tbl``'s warehouse
+    directory, listed recursively through the warehouse's own Hadoop
+    FileSystem (``relational.hadoop_fs``), so the counters below read the
+    same files on ``file:`` and on ``hdfs://`` warehouses.  A table with
+    no directory has no files."""
+    from .relational import hadoop_fs, warehouse_entry
+
+    fs, root = hadoop_fs(spark, warehouse_entry(spark, tbl.lower()))
+    if not fs.exists(root):
+        return []
+    files, names = fs.listFiles(root, True), []
+    while files.hasNext():
+        name = files.next().getPath().getName()
+        if name.endswith(".parquet"):
+            names.append(name)
+    return names
+
+
 def bucketed_table_file_count(spark: SparkSession, tbl: str) -> int:
     """Parquet file count of a managed bucketed table — the fragmentation
     metric ``compact_bucketed_table`` exists to bound (and the number the
     compaction test asserts on)."""
-    import os
-
-    from .relational import warehouse_path
-
-    root = os.path.join(warehouse_path(spark), tbl.lower())
-    n = 0
-    for _dir, _sub, files in os.walk(root):
-        n += sum(1 for f in files if f.endswith(".parquet"))
-    return n
+    return len(_table_parquet_files(spark, tbl))
 
 
 def bucket_fragmentation(spark: SparkSession, tbl: str) -> int:
@@ -312,20 +323,14 @@ def bucket_fragmentation(spark: SparkSession, tbl: str) -> int:
     files; the worst bucket bounds the tail).  Bucket ids parse from
     the writer's ``_NNNNN.cNNN`` filename component; files without one
     (none, for a bucketed writer) pool under a sentinel bucket."""
-    import os
     import re
 
-    from .relational import warehouse_path
-
-    root = os.path.join(warehouse_path(spark), tbl.lower())
     pat = re.compile(r"_(\d{5})\.c\d+")
     counts: dict[int, int] = {}
-    for _dir, _sub, files in os.walk(root):
-        for f in files:
-            if f.endswith(".parquet"):
-                m = pat.search(f)
-                b = int(m.group(1)) if m else -1
-                counts[b] = counts.get(b, 0) + 1
+    for f in _table_parquet_files(spark, tbl):
+        m = pat.search(f)
+        b = int(m.group(1)) if m else -1
+        counts[b] = counts.get(b, 0) + 1
     return max(counts.values(), default=0)
 
 

@@ -339,8 +339,8 @@ def warehouse_uri(spark: SparkSession) -> str:
 def warehouse_path(spark: SparkSession) -> str:
     """Local filesystem path of ``spark.sql.warehouse.dir``.  Drops the
     scheme: only for local-file code (the embedded JDBC endpoint, the
-    versioned index tables, the bucket file counters); remote-aware code
-    uses ``warehouse_uri`` and ``warehouse_entry``."""
+    versioned index tables); remote-aware code uses ``warehouse_uri`` and
+    ``warehouse_entry``."""
     from urllib.parse import urlparse
 
     return urlparse(warehouse_uri(spark)).path

@@ -743,6 +743,65 @@ def test_maybe_compact_threshold_paths(spark):
     os.unlink(marker)
 
 
+def test_bucket_counters_list_through_remote_warehouse_fs(
+    spark, monkeypatch, tmp_path
+):
+    """On a non-``file:`` warehouse the bucket file counters list the
+    table through the warehouse URI's own Hadoop FileSystem, not the
+    scheme-stripped local path, so a fragmented remote table compacts.
+    The FileSystem calls are recorded, not run: the recorded listing
+    holds five files of bucket 0 and one of bucket 1, past the
+    threshold; the local directory at the stripped path holds one."""
+    from firebird_mapreduce_spark.operators import layout
+    from firebird_mapreduce_spark.operators import relational as R
+
+    warehouse = f"hdfs://namenode:8020{tmp_path}/warehouse"
+    tbl = "fb_remote_frag"
+    local = tmp_path / "warehouse" / tbl
+    local.mkdir(parents=True)
+    (local / "part-00000-l_00000.c000.snappy.parquet").write_bytes(b"local")
+    listing = [f"part-0000{i}-r_00000.c000.snappy.parquet" for i in range(5)]
+    listing += ["part-00000-r_00001.c000.snappy.parquet", "_SUCCESS"]
+    fs_uris, compactions = [], []
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+
+    class Files:
+        def __init__(self, root):
+            self.paths = [Path(f"{root}/{name}") for name in listing]
+
+        def hasNext(self):
+            return bool(self.paths)
+
+        def next(self):
+            path = self.paths.pop(0)
+            return type("Status", (), {"getPath": lambda self: path})()
+
+    class RecordingFs:
+        def exists(self, path):
+            return True
+
+        def listFiles(self, path, recursive):
+            assert recursive
+            return Files(path)
+
+    def hadoop_fs(spark, uri):
+        fs_uris.append(uri)
+        return RecordingFs(), uri
+
+    monkeypatch.setattr(R, "warehouse_uri", lambda spark: warehouse + "/")
+    monkeypatch.setattr(R, "hadoop_fs", hadoop_fs)
+    monkeypatch.setattr(
+        layout,
+        "compact_bucketed_table",
+        lambda spark, t, n, keys: compactions.append((t, n, keys)),
+    )
+    assert layout.bucketed_table_file_count(spark, tbl) == 6
+    assert layout.bucket_fragmentation(spark, tbl) == 5
+    assert layout.maybe_compact_bucketed_table(spark, tbl, 8, ["h"]) is True
+    assert compactions == [(tbl, 8, ["h"])]
+    assert fs_uris == [f"{warehouse}/{tbl}"] * 3
+
+
 def test_state_append_adds_at_most_one_file_per_bucket(spark):
     """The r10 append discipline: a fold delta is repartitioned to the
     bucket spec before the bucketed write, so an append adds AT MOST

@@ -67,13 +67,14 @@ def test_sssp_small_graph(spark, source, checkpoint_every):
 @pytest.mark.parametrize("source", [2, 7])
 def test_sssp_job_budget(spark, source):
     """A solve's job count on the reference's small graph (a frame from a
-    Python list, so its checkpoint carries no size statistics): 12 jobs
+    Python list, so its checkpoint carries no size statistics): 7 jobs
     for these sources' 2 probe windows — the edge and start-row
-    checkpoints; per window one edge broadcast (two in window 1, whose
-    literal start row narrows round 1's edge side), one shuffle map per
-    round and the probing checkpoint; and the collect.  A round that
-    read its state twice, or an edge side left to a sort-merge join,
-    costs more jobs."""
+    checkpoints; per window one edge broadcast and the probing
+    checkpoint, which runs both rounds in its one stage (the edges fit
+    one broadcast partition, so no round shuffles); and the collect.  A
+    round that read its state twice, shuffled, narrowed its edge side
+    by the start node, or left the edges to a sort-merge join costs
+    more jobs."""
     sc = spark.sparkContext
     edges = undirected(
         spark.createDataFrame(SMALL_GRAPH_EDGES, "src INT, dst INT, weight DOUBLE")
@@ -84,7 +85,7 @@ def test_sssp_job_budget(spark, source):
         sssp(spark, edges, source).collect()
     finally:
         sc._jsc.clearJobGroup()
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 12
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 7
 
 
 @pytest.mark.parametrize("source", [0, 2, 7])

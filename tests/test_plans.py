@@ -244,11 +244,13 @@ def test_cc_round1_no_forced_frontier_broadcast(spark):
 
 def test_sssp_round_reads_state_once(spark):
     """An SSSP round reads its state once: the state left-joins its
-    out-edges (the relax) and every joined row feeds one aggregate behind
-    exactly one ``repartition(n, node)`` exchange, with no union of two
-    state reads.  The nation graph is far under the broadcast threshold,
-    so the join broadcasts its build side, the edges, and never
-    sort-merges.  The fixpoint is Dijkstra-checked in test_graph.py."""
+    out-edges (the relax) and every joined row feeds one aggregate, with
+    no union of two state reads.  The nation graph is far under the
+    broadcast threshold and sizes to one partition, so the join
+    broadcasts its build side, the edges, and never sort-merges, and the
+    aggregate sits behind one ``Coalesce 1`` with no shuffle: the edge
+    ``BroadcastExchange`` is the plan's only exchange.  The fixpoint is
+    Dijkstra-checked in test_graph.py."""
     import re
 
     from firebird_mapreduce_spark.operators.graph import (
@@ -270,12 +272,16 @@ def test_sssp_round_reads_state_once(spark):
     assert re.search(r"Scan ExistingRDD\[src#\d+L?,dst#", build), plan
     for absent in ("SortMergeJoin", "Union"):
         assert absent not in plan, (absent, plan)
-    assert len(_round_agg_partitions(plan)) == 1, plan
+    exchanges = re.findall(r"\w*Exchange ", plan)
+    assert exchanges == ["BroadcastExchange "], plan
+    assert plan.count("Coalesce 1") == 1, plan
 
 
 def _round_agg_partitions(plan: str) -> list[int]:
     """Partition counts of the plan's explicit ``repartition(n, node)``
-    exchanges (n = 1 plans as ``SinglePartition``)."""
+    exchanges (n = 1 plans as ``SinglePartition``).  An sssp round plans
+    one only when its edges span more than one partition or are not
+    broadcast; a one-partition broadcast round coalesces instead."""
     import re
 
     found = re.findall(
@@ -295,7 +301,8 @@ def test_sssp_round_reads_materialised_edges_and_sizes_its_shuffle(
     partition count the size rule gives — materialised edge bytes (rows ×
     32: an 8-byte row header plus src, dst and weight at 8 bytes each)
     over the advisory partition size, clamped to [1, shuffle partitions] —
-    whatever the core count."""
+    whatever the core count.  At one partition the broadcast round needs
+    no shuffle at all: it coalesces to one partition instead."""
     import math
 
     from firebird_mapreduce_spark.operators.graph import sssp
@@ -332,7 +339,14 @@ def test_sssp_round_reads_materialised_edges_and_sizes_its_shuffle(
             plan = plan_string(df, "simple")
             assert "FileScan" not in plan, plan
             assert "Scan ExistingRDD" in plan, plan
-            assert set(_round_agg_partitions(plan)) == {want}, (advisory, plan)
+            if advisory is None:
+                assert want == 1, want
+                assert _round_agg_partitions(plan) == [], plan
+            else:
+                assert set(_round_agg_partitions(plan)) == {want}, (
+                    advisory,
+                    plan,
+                )
     finally:
         if prev is None:
             spark.conf.unset(key)
@@ -341,6 +355,67 @@ def test_sssp_round_reads_materialised_edges_and_sizes_its_shuffle(
     # the sizes exercised: the default keeps a small graph on one
     # partition, and the clamp holds at the session's cap
     assert want == cap
+
+
+def _broadcast_subtrees(plan: str) -> set[str]:
+    """The distinct ``BroadcastExchange`` subtrees of a plan, with
+    expression and plan ids stripped."""
+    import re
+
+    lines = plan.splitlines()
+    found = set()
+    for i, line in enumerate(lines):
+        col = line.find("BroadcastExchange")
+        if col < 0:
+            continue
+        subtree = [line[col:]]
+        for below in lines[i + 1 :]:
+            if len(below) - len(below.lstrip(" :")) < col:
+                break
+            subtree.append(below[col:])
+        found.add(re.sub(r"#\d+L?|plan_id=\d+", "", "\n".join(subtree)))
+    return found
+
+
+def test_sssp_window_plans_no_shuffle(spark, monkeypatch):
+    """A 2-round probe window over the nation graph (one broadcast
+    partition) is one stage: the window statement the driver checkpoints
+    plans no shuffle exchange, and both rounds broadcast the same edge
+    subtree, so one broadcast serves the window.  Sized past one
+    partition (a 1-byte advisory size) the same solve keeps its
+    ``repartition(n, node)`` exchange."""
+    from firebird_mapreduce_spark import mapreduce
+    from firebird_mapreduce_spark.operators.graph import (
+        derived_nation_graph,
+        sssp,
+    )
+    from firebird_mapreduce_spark.session import session_confs
+
+    edges = derived_nation_graph(spark, SF_SMOKE)
+    checkpoint = mapreduce._observed_checkpoint
+
+    def window_plan(confs: dict) -> str:
+        plans = []
+
+        def record(df, metric):
+            plans.append(plan_string(df, "simple"))
+            return checkpoint(df, metric)
+
+        monkeypatch.setattr(mapreduce, "_observed_checkpoint", record)
+        with session_confs(spark, confs):
+            sssp(spark, edges, source=0, max_iterations=2, checkpoint_every=2)
+        # plans[0] is the edge checkpoint, plans[1] the probed window
+        assert len(plans) == 2, plans
+        return plans[1]
+
+    plan = window_plan({})
+    assert "Exchange " not in plan.replace("BroadcastExchange ", ""), plan
+    assert plan.count("BroadcastExchange ") == 2, plan
+    assert len(_broadcast_subtrees(plan)) == 1, plan
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    plan = window_plan({key: "1b"})
+    assert len(_round_agg_partitions(plan)) == 2, plan
+    assert "REPARTITION_BY_NUM" in plan, plan
 
 
 def test_kmeans_seed_init_scale_safe(spark):
