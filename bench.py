@@ -14,7 +14,7 @@ identical commit), and min-of-N is the standard noise-robust point
 estimate of what the code actually costs.  Round 2's min-of-2 was too
 noisy to compare rounds (its recorded ``dedup_minhash_lsh`` 6.26 s was
 re-measured in round 3 at median 3.79 s / min 3.76 s over 5 runs —
-tools/measure_minhash.py); the per-run arrays (``queries_runs``, first
+CHANGES_r3.md, item 1); the per-run arrays (``queries_runs``, first
 run ≈ cold cache, rest warm) and the medians (``queries_median``) let
 future regressions be separated from load spikes without re-running.
 
@@ -119,6 +119,9 @@ HEADLINE = [
     # re-entered from RETIRED: its parameter slots became similarity
     # module constants, so its source changed (its plan did not)
     "dedup_semantic",
+    # re-entered from RETIRED: its MinHash parameter slots became dedup
+    # module constants, so its source changed (its plan did not)
+    "dedup_incremental",
     # r6: two-ingest incremental dedup with the state fold — run 0 pays
     # the one-time state-table writes, runs 1+ are the amortized screens
     "dedup_incremental_tworound",
@@ -220,7 +223,6 @@ RETIRED = {
     "audio_decode": "image_decode + dedup_audio_fingerprint cover the codec path",
     "batch_session_window": "range_join_sessionize covers sessionization",
     "bigram_logprob": "unigram_logprob covers the LM-scoring shape",
-    "dedup_incremental": "dedup_incremental_bucketed is the at-scale spelling",
     "dedup_ngram_jaccard": "dedup_minhash_lsh covers shingle-based near-dup",
     "heavy_hitters_tokens": "heavy_hitters_mixed is the forced-compression case",
     "quality_filter_c4": "both curation funnels run the same rule gate",
@@ -250,7 +252,6 @@ RETIRED_SOURCE_MD5 = {
     "audio_decode": "69fe038d49bbbb6de9696859dceec81b",
     "batch_session_window": "66d2a927a0dfa927249567e060cbff10",
     "bigram_logprob": "cafd33af145842e2b155f2cf53ce5cb6",
-    "dedup_incremental": "90f1f64a082f9283574449857ee2aa65",
     "dedup_ngram_jaccard": "9410e20b3ea2ee8765a0fab823c783d7",
     "heavy_hitters_tokens": "450a42d559fa8771a54e6ee8c606311a",
     "quality_filter_c4": "ed98c0a2f688520a8169d30dbf3d15bc",

@@ -16,8 +16,8 @@ Scale design:
   distributed, no skew by construction.
 - MinHash-LSH: signatures are per-row expressions (no shuffle); candidate
   generation shuffles once on (band, band_signature) — the classic
-  band-bucket join.  Cost is tuned by (k, bands): here 16 hashes / 4 bands
-  of 4 rows ⇒ pairs with Jaccard ~0.9 are caught with high probability
+  band-bucket join.  ``MINHASH_K`` = 16 hashes in ``MINHASH_BANDS`` = 4
+  bands of 4 rows ⇒ pairs with Jaccard ~0.9 are caught with high probability
   while ~0.2-similar pairs almost never collide.
 - n-gram Jaccard: *exact* verification, joined only on shared shingles
   (candidate pruning), never all-pairs.
@@ -37,6 +37,15 @@ from ..functions.hashing import exploded_word_shingles, simhash16, tokens
 from ..sources import load_table, undirected
 # re-exported: the bucketing tests drive the folded-state primitive here
 from .fold import _ensure_folded_state  # noqa: F401
+
+# The text tier's one MinHash parameter set: 16 hashes (4 seeded md5s,
+# 8 hex characters each) banded into 4 bands of 4.  The signature kernel
+# and the DuckDB oracle's ``_MINHASH_CTES`` spell exactly these values,
+# and the text state stems carry ``_MINHASH_TAG`` so signatures built
+# under other values could never be probed by these.
+MINHASH_K = 16
+MINHASH_BANDS = 4
+_MINHASH_TAG = f"{MINHASH_K}x{MINHASH_BANDS}"
 
 # SQL fragment shared with the oracles in __spark_entry__.py: the augmented
 # corpus (original ∪ near-copy ∪ exact copy).
@@ -117,11 +126,11 @@ def dedup_exact_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _doc_shingles(docs: DataFrame, n: int = 3) -> DataFrame:
-    """(doc_id, shingle) distinct pairs — the relational form used by the
-    Jaccard join path (window-lead generation; docs with < n tokens have no
-    shingles and correctly cannot pair)."""
-    return exploded_word_shingles(docs, "doc_id", "text", n).distinct()
+def _doc_shingles(docs: DataFrame) -> DataFrame:
+    """(doc_id, word-3-gram) distinct pairs — the relational form used by
+    the Jaccard join path (window-lead generation; docs with < 3 tokens
+    have no shingles and correctly cannot pair)."""
+    return exploded_word_shingles(docs, "doc_id", "text", 3).distinct()
 
 
 def dedup_ngram_jaccard(
@@ -205,11 +214,12 @@ def ngram_jaccard_pairs(
     return jacc.filter(F.col("jaccard") >= threshold)
 
 
-def minhash_signatures(docs: DataFrame, k: int = 16) -> DataFrame:
-    """(doc_id, minhash array<string>[k]) — one Arrow-batched map pass.
+def minhash_signatures(docs: DataFrame) -> DataFrame:
+    """(doc_id, minhash array<string>[MINHASH_K]) — one Arrow-batched map
+    pass.
 
     r11 optimization (guide §4.2: hand whole batches to native code): the
-    whole signature — tokenize, 3-shingle, ``k/4`` seeded md5s, per-slice
+    whole signature — tokenize, 3-shingle, 4 seeded md5s, per-slice
     mins — runs inside one ``mapInPandas`` kernel per partition, replacing
     the explode → md5 projection → 16-way groupBy-min pipeline
     (``_minhash_signatures_sql``, kept below as the differential
@@ -224,7 +234,7 @@ def minhash_signatures(docs: DataFrame, k: int = 16) -> DataFrame:
     under-split local inputs), where the old shape always paid the
     groupBy shuffle; only (doc_id, text) crosses the Python boundary.
     """
-    n_md5 = k // 4
+    n_md5 = MINHASH_K // 4
     spark = docs.sparkSession
     par = spark.sparkContext.defaultParallelism
 
@@ -246,16 +256,16 @@ def minhash_signatures(docs: DataFrame, k: int = 16) -> DataFrame:
                 # the SQL spelling and the DuckDB oracle both lowercase
                 toks = text.lower().split(" ") if text is not None else []
                 if len(toks) < 3:
-                    # < 3 tokens ⇒ no shingles ⇒ an array of k NULLs
+                    # < 3 tokens ⇒ no shingles ⇒ an array of NULLs
                     # (NOT a NULL array) — the oracle's
                     # list_min-over-empty contract
-                    sigs.append([None] * k)
+                    sigs.append([None] * MINHASH_K)
                     continue
-                mins = [None] * k
+                mins = [None] * MINHASH_K
                 for i in range(len(toks) - 2):
                     sh = " ".join(toks[i : i + 3]).encode()
                     hm = "".join(md5(p + sh).hexdigest() for p in seeds)
-                    for j in range(k):
+                    for j in range(MINHASH_K):
                         v = hm[j * 8 : j * 8 + 8]
                         m = mins[j]
                         if m is None or v < m:
@@ -273,7 +283,7 @@ def minhash_signatures(docs: DataFrame, k: int = 16) -> DataFrame:
     return src.mapInPandas(gen, "doc_id bigint, mh array<string>")
 
 
-def _minhash_signatures_sql(docs: DataFrame, k: int = 16) -> DataFrame:
+def _minhash_signatures_sql(docs: DataFrame) -> DataFrame:
     """The pure-JVM relational spelling of :func:`minhash_signatures` —
     kept as the engine-side differential (test_properties.py pins the two
     row-identical) and as documentation of the shape the DuckDB oracle
@@ -283,11 +293,11 @@ def _minhash_signatures_sql(docs: DataFrame, k: int = 16) -> DataFrame:
     on the *interpreted* expression path (higher-order functions never enter
     whole-stage codegen) and Catalyst re-inlines multi-referenced lambda
     projections, so the per-seed-lambda formulation cost 28-70 s at sf0.1.
-    Exploding shingles first makes the ``k/4`` md5 calls a flat projection
+    Exploding shingles first makes the 4 md5 calls a flat projection
     (codegen, ~10x faster) and the per-seed mins a partially-aggregated
     groupBy — each doc is reduced map-side before the one shuffle.
     """
-    n_md5 = k // 4
+    n_md5 = MINHASH_K // 4
     # window-lead shingles (codegen; see functions.hashing) — another 4x
     # over exploding the array expression
     sh = exploded_word_shingles(docs, "doc_id", "text", 3)
@@ -304,16 +314,18 @@ def _minhash_signatures_sql(docs: DataFrame, k: int = 16) -> DataFrame:
     mins = material.groupBy("doc_id").agg(
         *[
             F.min(F.substring(F.col("hm"), j * 8 + 1, 8)).alias(f"_h{j}")
-            for j in range(k)
+            for j in range(MINHASH_K)
         ]
     )
     sigs = mins.select(
-        "doc_id", F.array(*[f"_h{j}" for j in range(k)]).alias("mh")
+        "doc_id", F.array(*[f"_h{j}" for j in range(MINHASH_K)]).alias("mh")
     )
     # docs with < 3 tokens emit no shingle rows; reintroduce them with an
-    # array of k NULLs (NOT a NULL array) — the oracle's list_min-over-empty
-    # yields k NULLs, and the banded join treats those alike on both sides
-    null_sig = F.array(*[F.lit(None).cast("string") for _ in range(k)])
+    # array of NULLs (NOT a NULL array) — the oracle's list_min-over-empty
+    # yields NULLs, and the banded join treats those alike on both sides
+    null_sig = F.array(
+        *[F.lit(None).cast("string") for _ in range(MINHASH_K)]
+    )
     return (
         docs.select("doc_id")
         .join(sigs, "doc_id", "left")
@@ -321,15 +333,12 @@ def _minhash_signatures_sql(docs: DataFrame, k: int = 16) -> DataFrame:
     )
 
 
-def dedup_minhash_lsh(
-    spark: SparkSession, sf_dir: str, k: int = 16, bands: int = 4
-) -> DataFrame:
-    """MinHash-LSH candidate pairs: band the k-hash signature into
-    ``bands`` groups of k/bands rows; documents colliding on any full band
+def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash-LSH candidate pairs: band the ``MINHASH_K``-hash signature
+    into ``MINHASH_BANDS`` groups; documents colliding on any full band
     signature become candidates.  Output is the distinct candidate pair
     set (dedup pipelines then verify candidates with exact Jaccard —
     ``dedup_ngram_jaccard`` is that verifier)."""
-    rows = k // bands
     # the signature table is consumed twice (both sides of the band
     # self-join); Catalyst's ReuseExchange recovers the groupBy shuffle
     # but still replays the banding explode and join-side projections from
@@ -337,16 +346,15 @@ def dedup_minhash_lsh(
     # table once instead.  Re-measured after the round-2 bench recorded a
     # 6.26 s outlier (min-of-2): over 5 runs at sf0.1 the checkpointed
     # form is median 3.79 s / min 3.76 s vs 4.44 / 4.04 without
-    # (tools/measure_minhash.py) — the regression was host noise, the
+    # (CHANGES_r3.md item 1) — the regression was host noise, the
     # checkpoint is a real ~15% win and stays.
-    return minhash_pairs(augmented_documents(spark, sf_dir), k, bands)
+    return minhash_pairs(augmented_documents(spark, sf_dir))
 
 
-def banded_signatures(
-    docs: DataFrame, k: int = 16, bands: int = 4, checkpoint: bool = True
-) -> DataFrame:
+def banded_signatures(docs: DataFrame, checkpoint: bool = True) -> DataFrame:
     """(doc_id, band, sig): the LSH banding of ``minhash_signatures`` —
-    each signature split into ``bands`` groups of ``k/bands`` hashes joined
+    each signature split into ``MINHASH_BANDS`` groups of
+    ``MINHASH_K / MINHASH_BANDS`` hashes joined
     into one bucket string.  Shared by the self-join pair miner
     (``minhash_pairs``) and the corpus-vs-batch membership probe
     (``dedup_incremental``) so the bucketing rule cannot drift between
@@ -357,15 +365,15 @@ def banded_signatures(
     pass ``checkpoint=False`` (r12): the boundary there only
     SERIALIZED the kernel in front of the consuming job — without it
     the kernel rides that job and overlaps its other stages."""
-    rows = k // bands
-    sigs = minhash_signatures(docs, k)
+    rows = MINHASH_K // MINHASH_BANDS
+    sigs = minhash_signatures(docs)
     if checkpoint:
         sigs = sigs.localCheckpoint(eager=False)
     return sigs.select(
         "doc_id",
         F.explode(
             F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
+                F.sequence(F.lit(0), F.lit(MINHASH_BANDS - 1)),
                 lambda band: F.struct(
                     band.alias("band"),
                     F.array_join(
@@ -377,12 +385,12 @@ def banded_signatures(
     ).select("doc_id", "bs.band", "bs.sig")
 
 
-def minhash_pairs(docs: DataFrame, k: int = 16, bands: int = 4) -> DataFrame:
+def minhash_pairs(docs: DataFrame) -> DataFrame:
     """The banded MinHash pair miner over an ARBITRARY documents frame —
     extracted so compositions (``split_leakage_after_dedup`` runs it on
     the RAW corpus) share one implementation with ``dedup_minhash_lsh``
     (which runs it on the augmented corpus)."""
-    banded = banded_signatures(docs, k, bands)
+    banded = banded_signatures(docs)
     a = banded.select(F.col("doc_id").alias("a_id"), "band", "sig")
     b = banded.select(F.col("doc_id").alias("b_id"), "band", "sig")
     return (
@@ -483,7 +491,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Production-width SimHash — codegen tier (registered) + UDF-tier demo.
 # ---------------------------------------------------------------------------
 
-def simhash64_signatures(df: DataFrame, text_col: str = "text") -> DataFrame:
+def simhash64_signatures(df: DataFrame) -> DataFrame:
     """64-bit SimHash as a pure JVM codegen pipeline — the production
     spelling, zero Python in the kernel (re-tiered from the pandas form
     per VERDICT r3 item 2, the same explode→``F.md5``-flat-projection→
@@ -505,10 +513,10 @@ def simhash64_signatures(df: DataFrame, text_col: str = "text") -> DataFrame:
 
     Bit-for-bit equal to ``simhash64_pandas`` (differential test) and to
     the DuckDB oracle's per-nibble recomputation.  A/B at sf0.1
-    (tools/measure_simhash64.py): see SCALE.md — the per-doc·per-token
+    in SCALE.md "Dedup / sketches" — the per-doc·per-token
     Python md5 loop this replaces was the last row-at-a-time kernel in a
     registered dedup query."""
-    toked = df.select("doc_id", F.explode(tokens(F.col(text_col))).alias("tok"))
+    toked = df.select("doc_id", F.explode(tokens(F.col("text"))).alias("tok"))
     halves = toked.select(
         "doc_id", F.md5(F.col("tok")).alias("hx")
     ).select(
@@ -535,7 +543,7 @@ def simhash64_signatures(df: DataFrame, text_col: str = "text") -> DataFrame:
     return agg.select("doc_id", packed.alias("simhash64"))
 
 
-def simhash64_pandas(df: DataFrame, text_col: str = "text") -> DataFrame:
+def simhash64_pandas(df: DataFrame) -> DataFrame:
     """64-bit SimHash via ``mapInPandas`` — kept as the documented
     UDF-TIER DEMO (how you'd express the kernel when the hash genuinely
     isn't SQL-expressible); the registered ``dedup_simhash64`` query runs
@@ -556,7 +564,7 @@ def simhash64_pandas(df: DataFrame, text_col: str = "text") -> DataFrame:
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             out = np.zeros(len(pdf), dtype=np.int64)
-            for row_idx, text in enumerate(pdf[text_col].astype(str)):
+            for row_idx, text in enumerate(pdf["text"].astype(str)):
                 votes = np.zeros(64, dtype=np.int64)
                 for tok in text.lower().split(" "):
                     digest = hashlib.md5(tok.encode()).digest()[:8]
@@ -694,9 +702,7 @@ def dedup_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def dedup_incremental(
-    spark: SparkSession, sf_dir: str, k: int = 16, bands: int = 4
-) -> DataFrame:
+def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental ingest dedup: screen a NEW batch against the EXISTING
     corpus — the shape every production pipeline actually runs (a fresh
     crawl lands daily; re-deduplicating the whole corpus from scratch is
@@ -739,7 +745,7 @@ def dedup_incremental(
         "doc_id", F.md5("text").alias("h")
     ).join(corpus_hashes.withColumn("exact_hit", F.lit(True)), "h", "left")
 
-    banded = banded_signatures(aug, k, bands)
+    banded = banded_signatures(aug)
     corpus_banded = banded.filter(F.col("doc_id") < 100000).select(
         "band", "sig"
     )
@@ -767,9 +773,7 @@ def _disposition_report(exact: DataFrame, near: DataFrame) -> DataFrame:
     )
 
 
-def dedup_incremental_bucketed(
-    spark: SparkSession, sf_dir: str, k: int = 16, bands: int = 4
-) -> DataFrame:
+def dedup_incremental_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``dedup_incremental`` with the corpus-side state MATERIALIZED the
     way its docstring prescribes for 100 TB: the content-hash set and the
     banded-signature table are written ONCE as bucketed+sorted warehouse
@@ -797,8 +801,8 @@ def dedup_incremental_bucketed(
     """
     aug = augmented_documents(spark, sf_dir)
     new_batch = aug.filter(F.col("doc_id") >= 100000)
-    corpus_hashes, corpus_bands = _text_state_tables(spark, sf_dir, k, bands)
-    return _screen_batch(new_batch, corpus_hashes, corpus_bands, k, bands)
+    corpus_hashes, corpus_bands = _text_state_tables(spark, sf_dir)
+    return _screen_batch(new_batch, corpus_hashes, corpus_bands)
 
 
 def _delete_char(name, pos):
@@ -845,11 +849,7 @@ def fuzzy_matching_names(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _screen_batch(
-    batch: DataFrame,
-    corpus_hashes: DataFrame,
-    corpus_bands: DataFrame,
-    k: int,
-    bands: int,
+    batch: DataFrame, corpus_hashes: DataFrame, corpus_bands: DataFrame
 ) -> DataFrame:
     """The shared incremental-dedup screen: one batch against one
     corpus-state pair (hash set + banded-signature set) → disposition
@@ -859,7 +859,7 @@ def _screen_batch(
         corpus_hashes.withColumn("exact_hit", F.lit(True)), "h", "left"
     )
     near = (
-        banded_signatures(batch, k, bands, checkpoint=False)
+        banded_signatures(batch, checkpoint=False)
         .join(corpus_bands.select("band", "sig"), ["band", "sig"])
         .select("doc_id")
         .distinct()
@@ -869,11 +869,11 @@ def _screen_batch(
 
 
 def _text_state_tables(
-    spark: SparkSession, sf_dir: str, k: int = 16, bands: int = 4
+    spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """The TEXT tier's persisted day-0 corpus state — the content-hash
     set (``corpus_hash_``) and the banded-signature set
-    (``corpus_bands_{k}x{bands}_``) as bucketed tables, ONE builder for
+    (``corpus_bands_{_MINHASH_TAG}_``) as bucketed tables, ONE builder for
     every consumer (``dedup_incremental_bucketed``, the tworound fold
     bases, both unified ingest queries) so the screening rule cannot
     drift between them — the ``_phash_state_tables`` discipline on the
@@ -890,17 +890,17 @@ def _text_state_tables(
         ["h"],
         lambda: docs.select(F.md5("text").alias("h")).distinct(),
     )
-    # the table prefix carries (k, bands): signatures built with one
-    # parameterization must never be probed by another — a
+    # the table prefix carries the MinHash parameters: signatures built
+    # with one parameterization must never be probed by another — a
     # stale-parameter reuse would make every band lookup miss and
     # silently report kept=true
     bands_tbl = ensure_bucketed_table(
         spark,
-        f"corpus_bands_{k}x{bands}_",
+        f"corpus_bands_{_MINHASH_TAG}_",
         tag,
         8,
         ["band", "sig"],
-        lambda: banded_signatures(docs, k, bands, checkpoint=False)
+        lambda: banded_signatures(docs, checkpoint=False)
         .select("band", "sig")
         .distinct(),
     )
@@ -933,9 +933,7 @@ TWOROUND_DOCS_SQL = AUGMENTED_DOCS_SQL + """
 """
 
 
-def dedup_incremental_tworound(
-    spark: SparkSession, sf_dir: str, k: int = 16, bands: int = 4
-) -> DataFrame:
+def dedup_incremental_tworound(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TWO consecutive ingests with the corpus state FOLDED between them
     — closing the loop ``dedup_incremental_bucketed`` leaves open (it
     reads corpus-side state but never updates it, so a second ingest
@@ -981,23 +979,21 @@ def dedup_incremental_tworound(
     )
     batch2 = world.filter(F.col("doc_id") >= 200000)
     tag = corpus_tag(sf_dir, "documents")
-    v1_hashes, v1_bands = _text_state_tables(spark, sf_dir, k, bands)
+    v1_hashes, v1_bands = _text_state_tables(spark, sf_dir)
     # lazy (r12): the folds write inc2_* tables, never read by r1's
     # day-0 probe plan — no hazard, and eager only serialized the job
-    r1 = _screen_batch(batch1, v1_hashes, v1_bands, k, bands).localCheckpoint(
-        eager=False
-    )
+    r1 = _screen_batch(batch1, v1_hashes, v1_bands).localCheckpoint(eager=False)
     # the fold: the day-0 tables plus the survivors' hashes and bands
     # (they cannot overlap day-0 state — a doc whose hash or band was
     # already present would not have been kept)
     v2_hashes, v2_bands = fold_batch(
         spark,
         tag,
-        zip(prefixes("inc2_", TEXT, k, bands), TEXT, (v1_hashes, v1_bands)),
-        Delivery.text(batch1, k, bands),
+        zip(prefixes("inc2_", TEXT), TEXT, (v1_hashes, v1_bands)),
+        Delivery.text(batch1),
         r1.filter(F.col("kept")).select("doc_id"),
     )
-    r2 = _screen_batch(batch2, v2_hashes, v2_bands, k, bands)
+    r2 = _screen_batch(batch2, v2_hashes, v2_bands)
     return r1.select(F.lit(1).alias("ingest"), "*").unionByName(
         r2.select(F.lit(2).alias("ingest"), "*")
     )
@@ -1057,7 +1053,7 @@ def fuzzy_match_names_k2(spark: SparkSession, sf_dir: str) -> DataFrame:
     two edited positions from each side).  Output carries the verified
     distance so the two tiers are distinguishable downstream.
 
-    The HONEST cost curve (tools/measure_fastss.py, table in SCALE.md):
+    The HONEST cost curve (table in SCALE.md "Dedup / sketches"):
     keys/name grow from L+1 to ~L²/2 — 172 raw / ~105 distinct for these
     18-char names, vs ~15 at k=1 — and the blocked join's Σ|bucket|²
     grows with neighborhood density, which is exactly FastSS's published

@@ -53,8 +53,6 @@ class Delivery(NamedTuple):
     id_base``; a vector's ``vec_id`` is its doc id."""
 
     docs: DataFrame | None  # (doc_id, text)
-    k: int
-    bands: int
     id_base: int
     img: DataFrame | None  # (asset_id, phash)
     aud: DataFrame | None  # (asset_id, phash)
@@ -63,18 +61,18 @@ class Delivery(NamedTuple):
     sem_keys: DataFrame | None  # SRP band keys (vec_id, blk, tbl, sig)
 
     @classmethod
-    def text(cls, docs: DataFrame, k: int, bands: int) -> Delivery:
-        return cls(docs, k, bands, 0, None, None, None, None, None)
+    def text(cls, docs: DataFrame) -> Delivery:
+        return cls(docs, 0, None, None, None, None, None)
 
     @classmethod
     def vectors(
         cls, vecs: DataFrame, assign: DataFrame, sem_keys: DataFrame
     ) -> Delivery:
-        return cls(None, 0, 0, 0, None, None, vecs, assign, sem_keys)
+        return cls(None, 0, None, None, vecs, assign, sem_keys)
 
 
 class Tier(NamedTuple):
-    stem: str  # formatted with k, bands and the semantic parameter tag
+    stem: str  # formatted with the MinHash and semantic parameter tags
     keys: tuple[str, ...]
     delta: Callable[[Delivery, DataFrame], DataFrame]
 
@@ -86,9 +84,9 @@ def _kept_docs(d: Delivery, ids: DataFrame) -> DataFrame:
 def _text_bands(d: Delivery, ids: DataFrame) -> DataFrame:
     from .dedup import banded_signatures
 
-    return banded_signatures(
-        _kept_docs(d, ids), d.k, d.bands, checkpoint=False
-    ).select("band", "sig")
+    return banded_signatures(_kept_docs(d, ids), checkpoint=False).select(
+        "band", "sig"
+    )
 
 
 def _folded_assets(fps: DataFrame, d: Delivery, ids: DataFrame) -> DataFrame:
@@ -110,11 +108,11 @@ def _kept_vectors(frame: DataFrame, ids: DataFrame) -> DataFrame:
 
 TIERS = (
     Tier(
-        "hash_{k}x{bands}",
+        "hash_{minhash}",
         ("h",),
         lambda d, ids: _kept_docs(d, ids).select(F.md5("text").alias("h")),
     ),
-    Tier("bands_{k}x{bands}", ("band", "sig"), _text_bands),
+    Tier("bands_{minhash}", ("band", "sig"), _text_bands),
     Tier("imgh", ("asset_id",), lambda d, ids: _folded_assets(d.img, d, ids)),
     Tier("imgb", ("band", "bval"), lambda d, ids: _asset_bands(d.img, d, ids)),
     Tier("audh", ("asset_id",), lambda d, ids: _folded_assets(d.aud, d, ids)),
@@ -131,24 +129,26 @@ TEXT = TIERS[:2]
 SEMANTIC = TIERS[6:]
 
 
-def prefixes(gen: str, tiers: Iterable[Tier], k: int, bands: int) -> list[str]:
+def prefixes(gen: str, tiers: Iterable[Tier]) -> list[str]:
     """Table prefixes of a crawl generation (``inc2_``, ``mmr3_``,
     ``strinc_``, ``strmm_``).  The stems carry every parameter that
-    determines a folded table's contents — text (k, bands), the semantic
-    tier's ``semantic_param_tag`` — so a changed constant renames the
-    state instead of reusing state folded under the old one."""
+    determines a folded table's contents — the text tier's
+    ``dedup._MINHASH_TAG``, the semantic tier's ``semantic_param_tag`` —
+    so a changed constant renames the state instead of reusing state
+    folded under the old one."""
+    from .dedup import _MINHASH_TAG
     from .similarity import semantic_param_tag
 
     sem = semantic_param_tag()
-    return [f"{gen}{t.stem.format(k=k, bands=bands, sem=sem)}_" for t in tiers]
+    return [
+        f"{gen}{t.stem.format(minhash=_MINHASH_TAG, sem=sem)}_" for t in tiers
+    ]
 
 
-def tables(
-    gen: str, tag: str, tiers: Iterable[Tier], k: int, bands: int
-) -> dict[str, Tier]:
+def tables(gen: str, tag: str, tiers: Iterable[Tier]) -> dict[str, Tier]:
     """Full table name → tier for one crawl generation over one corpus."""
     tiers = tuple(tiers)
-    return {p + tag: t for p, t in zip(prefixes(gen, tiers, k, bands), tiers)}
+    return {p + tag: t for p, t in zip(prefixes(gen, tiers), tiers)}
 
 
 def append_bucketed(

@@ -5,12 +5,13 @@ The reference engine has no storage layer (in-memory vectors,
 operator — the difference between a scan touching 2% or 100% of row
 groups for the same predicate.  This module provides the Z-order
 (Morton-interleave) layout write and the declared key-computation
-query; ``tools/measure_zorder.py`` measures the row-group pruning it
-buys and SCALE.md records the numbers.
+query; SCALE.md "Storage layout: Z-order writes" records the row-group
+pruning it buys.
 """
 
 from __future__ import annotations
 
+import re
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
@@ -23,6 +24,9 @@ _AUTO_BUCKETED_SCAN_LOCK = threading.Lock()
 # the most files any one bucket of a folded state table may hold before
 # maybe_compact_bucketed_table rewrites it to one file per bucket
 COMPACTION_THRESHOLD = 4
+
+# the writer bucket id in a bucketed part file's name (``_NNNNN.cNNN``)
+BUCKET_FILE_PAT = re.compile(r"_(\d{5})\.c\d+")
 
 from ..functions.zorder import z2, z3, z4
 from ..session import session_confs
@@ -57,7 +61,7 @@ def zorder3_key_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchanges; the DuckDB oracle recomputes the identical bit pipeline via
     ``functions.zorder.z3_sql``.  Measured 3-D pruning table (each
     dimension's selectivity under the 3-D layout vs a linear sort) in
-    SCALE.md via ``tools/measure_zorder.py --three``."""
+    SCALE.md "Storage layout: Z-order writes"."""
     events = load_table(spark, sf_dir, "events")
     type_bucket = F.conv(
         F.substring(F.md5(F.col("event_type")), 1, 4), 16, 10
@@ -323,12 +327,9 @@ def bucket_fragmentation(spark: SparkSession, tbl: str) -> int:
     files; the worst bucket bounds the tail).  Bucket ids parse from
     the writer's ``_NNNNN.cNNN`` filename component; files without one
     (none, for a bucketed writer) pool under a sentinel bucket."""
-    import re
-
-    pat = re.compile(r"_(\d{5})\.c\d+")
     counts: dict[int, int] = {}
     for f in _table_parquet_files(spark, tbl):
-        m = pat.search(f)
+        m = BUCKET_FILE_PAT.search(f)
         b = int(m.group(1)) if m else -1
         counts[b] = counts.get(b, 0) + 1
     return max(counts.values(), default=0)

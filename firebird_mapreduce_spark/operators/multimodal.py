@@ -71,7 +71,7 @@ class FakeDecoder:
         return width, height, brightness
 
 
-def extract_image_features(df: DataFrame, content_col: str = "content") -> DataFrame:
+def extract_image_features(df: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads.
 
     Real pipeline shape: ``mapInPandas`` so each task streams batches —
@@ -99,7 +99,7 @@ def extract_image_features(df: DataFrame, content_col: str = "content") -> DataF
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            feats = [decode(c) for c in pdf[content_col]]
+            feats = [decode(c) for c in pdf["content"]]
             yield pd.DataFrame(
                 {
                     "asset_id": pdf["asset_id"],
@@ -237,7 +237,7 @@ def _png_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
     return _asset_fixture("png", sf_dir, ".png", payloads, _png_payload, png)
 
 
-def decode_png_features(df: DataFrame, content_col: str = "content") -> DataFrame:
+def decode_png_features(df: DataFrame) -> DataFrame:
     """REAL decode over PNG payloads: parse → inflate → unfilter → pixel
     stats, Arrow-batched via ``mapInPandas`` (same bounded-batch shape as
     ``extract_image_features``).  Pillow is used when importable on the
@@ -275,7 +275,7 @@ def decode_png_features(df: DataFrame, content_col: str = "content") -> DataFram
                 return w, h, sum(rgb) // len(rgb)
 
         for pdf in batches:
-            feats = [decode(bytes(c)) for c in pdf[content_col]]
+            feats = [decode(bytes(c)) for c in pdf["content"]]
             yield pd.DataFrame(
                 {
                     "asset_id": pdf["asset_id"],
@@ -552,7 +552,7 @@ def _phash_assets_dir(
     return _asset_fixture(kind, sf_dir, ".png", payloads, _phash_payload, png)
 
 
-def phash_hashes(assets: DataFrame, content_col: str = "content") -> DataFrame:
+def phash_hashes(assets: DataFrame) -> DataFrame:
     """(asset_id, phash): the 56-bit dHash computed FROM DECODED PIXELS —
     binary payload → PNG parse/inflate/unfilter → per-pixel gray
     ((r+g+b)//3) → 4x4 mean pooling to the 8x8 grid (integer sum//16) →
@@ -592,19 +592,19 @@ def phash_hashes(assets: DataFrame, content_col: str = "content") -> DataFrame:
             yield pd.DataFrame(
                 {
                     "asset_id": pdf["asset_id"],
-                    "phash": [hash_one(c) for c in pdf[content_col]],
+                    "phash": [hash_one(c) for c in pdf["content"]],
                 }
             )
 
     return assets.mapInPandas(run, schema="asset_id bigint, phash bigint")
 
 
-def phash_pairs(hashes: DataFrame, threshold: int = _PHASH_THRESHOLD) -> DataFrame:
-    """All asset pairs at Hamming distance <= ``threshold`` WITHOUT an
-    all-pairs join: the 56-bit hash splits into ``_PHASH_BANDS`` disjoint
-    14-bit bands (``_phash_band_keys`` — the ONE banding rule, shared
-    with the incremental probe) and candidates must collide on at least
-    one whole band — with threshold 3 < 4 bands the pigeonhole
+def phash_pairs(hashes: DataFrame) -> DataFrame:
+    """All asset pairs at Hamming distance <= ``_PHASH_THRESHOLD`` WITHOUT
+    an all-pairs join: the 56-bit hash splits into ``_PHASH_BANDS``
+    disjoint 14-bit bands (``_phash_band_keys`` — the ONE banding rule,
+    shared with the incremental probe) and candidates must collide on at
+    least one whole band — with threshold 3 < 4 bands the pigeonhole
     guarantees a true pair has some untouched band, so recall is 100% by
     construction (the ``dedup_simhash`` blocking argument at 56 bits).
     Distinct candidates are then exactly verified with
@@ -637,7 +637,7 @@ def phash_pairs(hashes: DataFrame, threshold: int = _PHASH_THRESHOLD) -> DataFra
             .cast("int")
             .alias("hamming"),
         )
-        .filter(F.col("hamming") <= threshold)
+        .filter(F.col("hamming") <= _PHASH_THRESHOLD)
     )
 
 
@@ -652,8 +652,8 @@ def dedup_images_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     shift-invariant — the property that makes it perceptual) and the
     one-block retouch at distance <= 2; unrelated images sit near
     distance 28 (56 Bernoulli(~.5) bits), so threshold 3 separates
-    cleanly — measured, with banding recall vs brute force, in
-    tools/measure_phash.py / SCALE.md.
+    cleanly — measured, with banding recall vs brute force, in SCALE.md
+    "Text / multimodal pipelines".
 
     Oracle-checkable end to end because the fixture pixels derive from
     doc_id arithmetic (``_phash_grid``): the DuckDB twin re-derives every
@@ -729,9 +729,9 @@ def _media_state_tables(
     """One media tier's persisted corpus state — the (asset_id, phash)
     hash table bucketed by id and the exploded (band, bval, asset_id)
     banding table bucketed by its join key — built from ONE corpus
-    decode+fingerprint pass (memoized + checkpointed, the
-    measure_afp.py discipline, so a cold warehouse never decodes the
-    corpus assets twice) and shared by the incremental screens and the
+    decode+fingerprint pass (memoized + checkpointed, so a cold
+    warehouse never decodes the corpus assets twice) and shared by the
+    incremental screens and the
     unified ingest queries, so they all probe literally the same
     tables.  One helper for both modalities: the image and audio tiers
     differ only in fixture, codec and table names."""
@@ -1116,7 +1116,7 @@ def _afp_assets_dir(
     return _asset_fixture(kind, sf_dir, ".wav", payloads, _afp_payload, wav)
 
 
-def audio_fingerprints(assets: DataFrame, content_col: str = "content") -> DataFrame:
+def audio_fingerprints(assets: DataFrame) -> DataFrame:
     """(asset_id, phash): the 56-bit band-energy fingerprint computed
     FROM DECODED PCM — RIFF chunk walk → 16-bit frames → per-window mean
     |sample| (integer) → adjacent-window energy comparisons packed
@@ -1152,7 +1152,7 @@ def audio_fingerprints(assets: DataFrame, content_col: str = "content") -> DataF
             yield pd.DataFrame(
                 {
                     "asset_id": pdf["asset_id"],
-                    "phash": [fingerprint(c) for c in pdf[content_col]],
+                    "phash": [fingerprint(c) for c in pdf["content"]],
                 }
             )
 
@@ -1460,19 +1460,15 @@ WHERE bit_count(xor(a.phash, b.phash)) <= {_PHASH_THRESHOLD}
 """
 
 
-def sample_frames(
-    df: DataFrame,
-    frame_len: int = 64,
-    stride: int = 256,
-    content_col: str = "content",
-) -> DataFrame:
+def sample_frames(df: DataFrame) -> DataFrame:
     """Frame sampling over video payloads — the 1→N multimodal explode
     (decode a container, emit every k-th frame) with the real pipeline's
     batch shape: ``mapInPandas`` streams Arrow batches and yields multiple
     output rows per asset, so memory is bounded by batch size × frame
     size, never by a whole video.  With no codec in the container the
-    "frames" are deterministic byte windows (offset i·stride, length
-    frame_len) and the per-frame feature is their md5 — the plumbing
+    "frames" are deterministic byte windows (offset i·256, length 64 —
+    the oracle's ``substr`` window) and the per-frame feature is their
+    md5 — the plumbing
     (schema, fan-out, batching) is exactly what a real decoder drops into.
     """
     out_schema = "asset_id bigint, frame_idx int, frame_md5 string"
@@ -1480,9 +1476,10 @@ def sample_frames(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib
 
+        frame_len, stride = 64, 256
         for pdf in batches:
             ids, idxs, digests = [], [], []
-            for asset_id, content in zip(pdf["asset_id"], pdf[content_col]):
+            for asset_id, content in zip(pdf["asset_id"], pdf["content"]):
                 blob = bytes(content or b"")
                 n_frames = max((len(blob) - frame_len) // stride + 1, 0)
                 for i in range(n_frames):

@@ -80,11 +80,9 @@ def pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def contamination_check(
-    spark: SparkSession, sf_dir: str, n: int = 8
-) -> DataFrame:
+def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Declared query: benchmark-contamination detection — count, per
-    corpus document, the distinct word ``n``-grams it shares with a probe
+    corpus document, the distinct word 8-grams it shares with a probe
     (benchmark) document.  The standard decontamination step before
     training (e.g. 8-13-gram overlap against eval suites).
 
@@ -111,7 +109,7 @@ def contamination_check(
         )
     )
     return ngram_overlap(
-        corpus, probe.select(F.lit(0).alias("doc_id"), F.col("probe_text").alias("text")), n
+        corpus, probe.select(F.lit(0).alias("doc_id"), F.col("probe_text").alias("text")), 8
     )
 
 
@@ -229,12 +227,10 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def pack_training_chunks(
-    spark: SparkSession, sf_dir: str, context: int = 2048
-) -> DataFrame:
+def pack_training_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Declared query: concat-then-chunk sequence packing — the final step
     that turns a curated corpus into fixed-context training blocks (concat
-    all docs in a shard, slice into ``context``-token chunks).
+    all docs in a shard, slice into 2048-token chunks).
 
     Sharding is a hash prefix (first hex char of md5 → 16 shards), packing
     order inside a shard is doc_id — both deterministic, so the (shard,
@@ -247,7 +243,7 @@ def pack_training_chunks(
     independent (shards ≫ executors keeps them balanced) and streams —
     state is one running sum.  This is exactly how production packers
     shard: hash-partition, sort within shard, emit sequentially."""
-    return pack_chunks(load_table(spark, sf_dir, "documents"), context)
+    return pack_chunks(load_table(spark, sf_dir, "documents"), 2048)
 
 
 def pack_chunks(docs: DataFrame, context: int) -> DataFrame:
@@ -275,8 +271,8 @@ def pack_chunks(docs: DataFrame, context: int) -> DataFrame:
     )
 
 
-def quality_topk_per_lang(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
-    """Declared query: the top-``k`` documents per language by the
+def quality_topk_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Declared query: the top-3 documents per language by the
     ``text_quality`` heuristic score — per-group quality filtering, the
     selection step that follows scoring in a curation pipeline.  Windowed
     row_number with a doc_id tie-break; one shuffle on lang."""
@@ -290,7 +286,7 @@ def quality_topk_per_lang(spark: SparkSession, sf_dir: str, k: int = 3) -> DataF
     )
     return (
         scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
+        .filter(F.col("rn") <= 3)
         .select("lang", "doc_id", "quality_score", F.col("rn").alias("rank"))
     )
 
@@ -1292,9 +1288,9 @@ def curation_pipeline_full_oracle_sql(
     """
 
 
-def split_leakage_check(spark: SparkSession, sf_dir: str, n: int = 8) -> DataFrame:
+def split_leakage_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train→test SPLIT-LEAKAGE audit: for every test-split document,
-    how many of its distinct word ``n``-grams also occur anywhere in the
+    how many of its distinct word 8-grams also occur anywhere in the
     train split — the self-contamination check a pipeline runs after
     splitting (near-duplicate documents landing on opposite sides of a
     hash split are the classic eval-inflation bug; dedup-then-split is
@@ -1307,12 +1303,12 @@ def split_leakage_check(spark: SparkSession, sf_dir: str, n: int = 8) -> DataFra
     shuffle join on both sides (no broadcast: at 100 TB BOTH gram sets
     are corpus-scale; the join key is the gram so co-partitioning is
     free), then one per-doc count.  Reports n_grams / n_leaked per test
-    doc (docs with < n tokens have no grams and drop out, mirrored by
+    doc (docs with < 8 tokens have no grams and drop out, mirrored by
     the oracle)."""
-    return _leakage_over(load_table(spark, sf_dir, "documents"), n)
+    return _leakage_over(load_table(spark, sf_dir, "documents"))
 
 
-def _leakage_over(docs: DataFrame, n: int) -> DataFrame:
+def _leakage_over(docs: DataFrame) -> DataFrame:
     """The leakage core over an arbitrary (doc_id, text) frame — shared
     by the raw-corpus detector and the after-dedup twin."""
     from ..functions.hashing import shingles, tokens
@@ -1328,7 +1324,7 @@ def _leakage_over(docs: DataFrame, n: int) -> DataFrame:
     grams = docs.select(
         "doc_id",
         split.alias("split"),
-        F.explode(shingles(tokens(F.col("text")), n)).alias("g"),
+        F.explode(shingles(tokens(F.col("text")), 8)).alias("g"),
     )
     train_g = (
         grams.filter(F.col("split") == "train")
@@ -1349,9 +1345,7 @@ def _leakage_over(docs: DataFrame, n: int) -> DataFrame:
     )
 
 
-def split_leakage_after_dedup(
-    spark: SparkSession, sf_dir: str, n: int = 8
-) -> DataFrame:
+def split_leakage_after_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The CURE, quantified: near-dup cluster dedup (MinHash-LSH pairs →
     connected components → keep the min-doc_id survivor per cluster)
     applied BEFORE the hash split, then the same leakage audit as
@@ -1380,7 +1374,7 @@ def split_leakage_after_dedup(
         )
     )
     survivors = clusters.select(F.col("cluster_id").alias("doc_id")).distinct()
-    return _leakage_over(docs.join(survivors, "doc_id"), n)
+    return _leakage_over(docs.join(survivors, "doc_id"))
 
 
 # The unified ingest batch: one crawl delivery per corpus doc d, re-idded
@@ -1599,9 +1593,7 @@ def _crawl_semantic_parts(
     return assign, keys, rep
 
 
-def ingest_screen_multimodal(
-    spark: SparkSession, sf_dir: str, k: int = 16, bands: int = 4
-) -> DataFrame:
+def ingest_screen_multimodal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The DAILY-CRAWL integration query (VERDICT r8 item 4; SEMANTIC
     tier added r11 — VERDICT r10 item 2): ONE batch of multimodal
     documents runs EVERY tier's incremental screen in one pass — exact
@@ -1659,7 +1651,7 @@ def ingest_screen_multimodal(
     from .similarity import _drift_trigger_frame, _semantic_state_tables
 
     batch = ingest_batch_docs(spark, sf_dir)
-    corpus_hashes, corpus_bands = _text_state_tables(spark, sf_dir, k, bands)
+    corpus_hashes, corpus_bands = _text_state_tables(spark, sf_dir)
     img_fps = _media_batch_fps(
         spark, _ingest_image_batch_fixture_dir(spark, sf_dir), "png"
     )
@@ -1679,8 +1671,6 @@ def ingest_screen_multimodal(
         _afp_state_tables(spark, sf_dir),
         img_fps,
         aud_fps,
-        k,
-        bands,
         600000,
         sem_rep=sem_rep,
     ).crossJoin(drift)
@@ -1713,8 +1703,6 @@ def _multimodal_screen(
     aud_state: tuple[DataFrame, DataFrame],
     img_fps: DataFrame,
     aud_fps: DataFrame,
-    k: int,
-    bands: int,
     id_base: int,
     sem_rep: DataFrame | None = None,
 ) -> DataFrame:
@@ -1735,7 +1723,7 @@ def _multimodal_screen(
     from .dedup import _screen_batch
     from .multimodal import _hash_incremental_screen
 
-    text_rep = _screen_batch(batch, text_state[0], text_state[1], k, bands)
+    text_rep = _screen_batch(batch, text_state[0], text_state[1])
     img_rep = _hash_incremental_screen(
         img_state[0], img_state[1], img_fps
     ).select(
@@ -1915,9 +1903,7 @@ def ingest_deliveries_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def ingest_tworound_multimodal(
-    spark: SparkSession, sf_dir: str, k: int = 16, bands: int = 4
-) -> DataFrame:
+def ingest_tworound_multimodal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The unified crawl LOOP — ``ingest_screen_multimodal`` is day 1's
     screen; this query runs TWO consecutive multimodal deliveries with
     the per-tier state FOLDED between them, all NINE state tables
@@ -1988,7 +1974,7 @@ def ingest_tworound_multimodal(
     b1 = ingest_batch_docs(spark, sf_dir)
     b2 = ingest2_batch_docs(spark, sf_dir)
     # day-0 states (the shared corpus-only tables)
-    th, tb = _text_state_tables(spark, sf_dir, k, bands)
+    th, tb = _text_state_tables(spark, sf_dir)
     ih, ib = _phash_state_tables(spark, sf_dir)
     ah, ab = _afp_state_tables(spark, sf_dir)
     _, _, cent, semb, semv, sems = _semantic_state_tables(spark, sf_dir)
@@ -2007,8 +1993,6 @@ def ingest_tworound_multimodal(
         (ah, ab),
         img1,
         aud1,
-        k,
-        bands,
         600000,
         sem_rep=sem_rep1,
         # lazy (r12): the folds write mmr3_* tables, never read by r1's
@@ -2027,11 +2011,11 @@ def ingest_tworound_multimodal(
         spark,
         tag,
         zip(
-            prefixes("mmr3_", TIERS, k, bands),
+            prefixes("mmr3_", TIERS),
             TIERS,
             (th, tb, ih, ib, ah, ab, semb, semv, sems),
         ),
-        Delivery(b1, k, bands, 600000, img1, aud1, b1v, a1, keys1),
+        Delivery(b1, 600000, img1, aud1, b1v, a1, keys1),
         r1.filter(F.col("disposition") == "kept").select("doc_id"),
     )
     img2 = _media_batch_fps(
@@ -2049,8 +2033,6 @@ def ingest_tworound_multimodal(
         (fah, fab),
         img2,
         aud2,
-        k,
-        bands,
         700000,
         sem_rep=sem_rep2,
     )

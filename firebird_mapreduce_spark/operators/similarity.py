@@ -201,9 +201,9 @@ def embedding_neardup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT within-block all-pairs top-50 — the recall baseline for
     ``embedding_neardup_topk``, kept UNREGISTERED because it is Σ_b |b|²
     in the block sizes: at 100 TB it is only runnable on a sample, which
-    is how recall is measured in principle (``tools/measure_neardup.py``
-    carries its own independent NumPy all-pairs baseline for that
-    measurement; THIS function's only caller is tests/test_llm_ops.py,
+    is how recall is measured in principle (the sweep in SCALE.md
+    "Similarity search" used its own independent NumPy all-pairs
+    baseline; THIS function's only caller is tests/test_llm_ops.py,
     which pins it against the banded operator)."""
     emb = load_table(spark, sf_dir, "embeddings")
     normed = emb.select(
@@ -348,8 +348,8 @@ def embedding_neardup_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     targets sim ≥ 0.8-0.9, where the default (L=8 tables, one 8-bit band
     each) retrieves a true pair with p = 1-(1-p_bit⁸)⁸ ≈ 0.93 at
     cosine 0.9 while generating only **3.7% of within-block pairs** as
-    candidates on this corpus (27× reduction, measured at sf0.001-0.1 by
-    ``tools/measure_neardup.py``; recall/candidate surface in SCALE.md).
+    candidates on this corpus (27× reduction, measured at sf0.001-0.1;
+    recall/candidate surface in SCALE.md "Similarity search").
 
     At 100 TB: candidates ≈ Σ_buckets |bucket|² with buckets of expected
     size N_block/256; planes-per-table scales with log N (16-24 bits at
@@ -608,7 +608,7 @@ def embedding_lsh_ann_multi(
     retrieves it with ≈1−(1−P)^L (measured on this corpus: recall@10
     0.116 at L=1 → 0.342 at L=4 → 0.572 at L=8 at sf0.01, tracking the
     formula slightly below independence — full sweep with per-L scan
-    cost in SCALE.md, reproduced by tools/measure_lsh_recall.py).
+    cost in SCALE.md "Similarity search").
 
     REGISTERED DEFAULT (r4): ``L=8, probe_radius=2`` — picked FROM the
     measured surface: recall@10 **0.94** at sf0.01 (0.978 at sf0.1),
@@ -635,9 +635,9 @@ def embedding_lsh_ann_multi(
     ``|acc − 5e-7| ≤ 1e-12`` tie window — parity proven by an
     exhaustive ±1000-ulp walk across the threshold plus a hypothesis
     sweep (test_properties.py), and the two-tier kernel measured 3.2×
-    the per-element-Decimal one at a 200k-row batch
-    (tools/measure_sig_kernel.py --micro; full-corpus signature
-    bit-parity asserted by the same tool before timing).  Still no shuffle and no training step — LSH's scale
+    the per-element-Decimal one at a 200k-row batch, with full-corpus
+    signature bit-parity checked before timing (SCALE.md "Similarity
+    search").  Still no shuffle and no training step — LSH's scale
     advantage over IVF.  The query's L signatures + hamming-≤r probes
     are derived on the driver, and the candidate filter is an OR of
     per-table ``isin`` membership on the signature columns.
@@ -1038,7 +1038,7 @@ def embedding_knn_ivf_fitted(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTE chain with the probe + rerank), so unlike a float-centroid fit
     this IVF variant is hash-verified end to end.
 
-    Measured vs brute force (`tools/measure_ivf_fitted.py`, in SCALE.md):
+    Measured vs brute force (SCALE.md "Similarity search"):
     recall@10 with probe-cost (bucket fraction scanned) — the fitted
     quantizer's recall/cost point alongside the stand-in-centroid
     `embedding_knn_ivf` and the LSH surface.
@@ -1154,8 +1154,8 @@ def dedup_semantic(
     identical md5-parity hyperplane banding, the same rounded-cosine
     threshold.  Banding is part of the declared semantics (the
     ``dedup_minhash_lsh`` contract); recall vs the within-cluster
-    brute force is measured, not assumed — tools/measure_semantic_dedup.py,
-    surface in SCALE.md.
+    brute force is measured, not assumed — surface in SCALE.md
+    "Dedup / sketches".
 
     At 100 TB: the fit is the one-time index build; assignment and
     signatures are per-row projections; the only data-sized shuffles
@@ -1364,10 +1364,10 @@ def embedding_knn_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids (the c_{KMEANS_ITERATIONS+1} table, exact-decimal distances so
     the probe choice is engine-reproducible) and scan the ``IVF_NPROBE``
     nearest clusters, then exact-cosine rerank the union.  Measured on
-    this corpus (tools/measure_ivf_fitted.py sweep, full surface in
-    SCALE.md): recall@10 at nprobe 1/2/3/4/6/8 is 0.4/0.5/0.5/0.7/0.8/
-    1.0 at sf0.01 and 0.2/0.3/0.3/0.3/0.6/0.7 at sf0.1, each probe
-    costing ~1/k more of the corpus.  The slope is HONESTLY shallow
+    this corpus (full sweep in SCALE.md "Similarity search"): recall@10
+    at nprobe 1/2/3/4/6/8 is 0.4/0.5/0.5/0.7/0.8/1.0 at sf0.01 and
+    0.2/0.3/0.3/0.3/0.6/0.7 at sf0.1, each probe costing ~1/k more of
+    the corpus.  The slope is HONESTLY shallow
     here: true neighbors sit at cosine ≈ 0.45 (no real cluster
     structure), so they scatter across many cells — on a corpus whose
     neighbors are actual near-duplicates the first few probes capture
@@ -1651,7 +1651,7 @@ def embedding_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
       rerank   exact cosine on the C survivors only, top-10.
 
     Measured recall@10 vs brute force and vs plain multiprobe IVF, with
-    the candidate-budget curve, in tools/measure_ivfpq.py → SCALE.md —
+    the candidate-budget curve, in SCALE.md "Similarity search" —
     the honest cost of 256× index compression on this corpus.
 
     At 100 TB: codes live with the coarse index partition
@@ -3612,9 +3612,9 @@ def sq8_codes(emb: DataFrame) -> DataFrame:
     array lambdas (whole-stage codegen, no UDF, no shuffle); zero
     vectors (max|x| = 0) are excluded — their cosine is undefined.  ONE
     spelling shared by ``embedding_sq8_knn``, the persisted serving tier
-    (``ensure_sq8_codes_table``), and tools/measure_sq8.py, so the
-    measured recall evidence can never drift from the registered query
-    (ADVICE r10)."""
+    (``ensure_sq8_codes_table``), and the recall measurement in SCALE.md
+    "Similarity search", so that evidence can never drift from the
+    registered query (ADVICE r10)."""
     return (
         emb.select(
             "vec_id",
@@ -3761,7 +3761,8 @@ def ensure_sq8_codes_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ANN-served RRF: the SQ8 arm over-fetches 2x the fusion depth as
 # CANDIDATES, then reranks them with the exact cosine — so whenever the
 # exact top-RRF_DEPTH survives in the SQ8 top-RRF_ANN_CAND (measured:
-# every probe at every SF, tools/measure_sq8.py's miss ranks all <= 12),
+# every probe at every SF, miss ranks all <= 12 — SCALE.md "Similarity
+# search"),
 # the served arm is BIT-EQUAL to the brute arm and the brute oracle
 # stays the served query's oracle.  test_llm_ops pins the containment.
 RRF_ANN_CAND = 2 * RRF_DEPTH

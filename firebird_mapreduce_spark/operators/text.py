@@ -140,7 +140,7 @@ _PROFILES = {
 }
 
 
-def lang_id_chargram_pandas(df: DataFrame, text_col: str = "text") -> DataFrame:
+def lang_id_chargram_pandas(df: DataFrame) -> DataFrame:
     """Char-trigram profile scoring via ``mapInPandas`` (Arrow batches;
     vectorized pandas ``str.count`` — never row-at-a-time Python).
 
@@ -155,7 +155,7 @@ def lang_id_chargram_pandas(df: DataFrame, text_col: str = "text") -> DataFrame:
 
     def score_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            padded = " " + pdf[text_col].str.lower() + " "
+            padded = " " + pdf["text"].str.lower() + " "
             best_lang = pd.Series("und", index=pdf.index)
             best_score = pd.Series(0.0, index=pdf.index)
             for lang, grams in _PROFILES.items():

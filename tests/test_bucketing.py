@@ -274,7 +274,7 @@ def test_tworound_fold_appends_delta_and_stays_corpus_shuffle_free(spark):
     kept1 = tworound_documents(spark, SF_SMOKE).join(kept1_ids, "doc_id")
     n_kept_hashes = kept1.select(F.md5("text")).distinct().count()
     n_kept_bands = (
-        banded_signatures(kept1, 16, 4).select("band", "sig").distinct().count()
+        banded_signatures(kept1).select("band", "sig").distinct().count()
     )
     assert n_kept_hashes > 0, "no survivors — the fold is vacuous"
     assert (

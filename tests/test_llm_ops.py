@@ -1645,7 +1645,7 @@ def test_ingest_tworound_fold_proofs_all_tiers(spark):
         "folded ingest-1 vectors were not flagged"
     )
     tag = corpus_tag(SF_SMOKE, "documents")
-    folded = fold.tables("mmr3_", tag, fold.TIERS, 16, 4)
+    folded = fold.tables("mmr3_", tag, fold.TIERS)
     assert len(folded) == 9
     for t in folded:
         frag = bucket_fragmentation(spark, t)
@@ -1781,8 +1781,8 @@ def test_hybrid_rrf_ann_bit_equal_via_candidate_containment(spark):
     """The ANN-served RRF's correctness argument (r11), both halves:
     (a) CONTAINMENT — the exact dense top-RRF_DEPTH ids are all inside
     the SQ8 top-RRF_ANN_CAND candidate cut (recall@20-in-40 = 1.0 on
-    this corpus: the sq8 misses sit within rank 12 per
-    tools/measure_sq8.py), which is the precondition under which the
+    this corpus: the sq8 misses sit within rank 12 per the measurement
+    in SCALE.md "Similarity search"), which is the precondition under which the
     exact rerank makes the served arm bit-equal to the brute arm; and
     (b) the consequence — ``hybrid_retrieval_rrf_ann`` returns EXACTLY
     ``hybrid_retrieval_rrf``'s rows, so the brute oracle legitimately

@@ -538,9 +538,9 @@ def test_minhash_arrow_kernel_matches_sql_spelling(spark):
             "doc_id bigint, text string",
         )
     )
-    old = _minhash_signatures_sql(docs, 16)
+    old = _minhash_signatures_sql(docs)
     for variant in (docs, docs.repartition(7)):
-        new = minhash_signatures(variant, 16)
+        new = minhash_signatures(variant)
         assert new.count() == old.count()
         mismatches = (
             old.alias("o")

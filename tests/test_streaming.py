@@ -1271,7 +1271,7 @@ def test_strinc_retry_batch_is_noop(spark, scheme):
         (
             btbl,
             ["band", "sig"],
-            banded_signatures(docs, 16, 4).select("band", "sig").distinct(),
+            banded_signatures(docs).select("band", "sig").distinct(),
         ),
     ):
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
@@ -1283,7 +1283,7 @@ def test_strinc_retry_batch_is_noop(spark, scheme):
         [(100, "fresh document alpha " + "tok " * 20)],
         "doc_id bigint, text string",
     )
-    _strinc_apply_batch(spark, batch, 0, report_dir, htbl, btbl, 16, 4)
+    _strinc_apply_batch(spark, batch, 0, report_dir, htbl, btbl)
     rep_path = os.path.join(report_dir, "batch_00000")
     first = sorted(map(tuple, spark.read.parquet(rep_path).collect()))
     h_n, b_n = spark.table(htbl).count(), spark.table(btbl).count()
@@ -1293,7 +1293,7 @@ def test_strinc_retry_batch_is_noop(spark, scheme):
         [(999, "a different retry payload " + "tok " * 20)],
         "doc_id bigint, text string",
     )
-    _strinc_apply_batch(spark, retry, 0, report_dir, htbl, btbl, 16, 4)
+    _strinc_apply_batch(spark, retry, 0, report_dir, htbl, btbl)
     assert (
         sorted(map(tuple, spark.read.parquet(rep_path).collect())) == first
     ), "retry re-screened: report content moved"
@@ -1380,7 +1380,7 @@ def test_strinc_long_crawl_cadence_and_fragmentation(spark):
         (
             btbl,
             ["band", "sig"],
-            banded_signatures(docs, 16, 4).select("band", "sig").distinct(),
+            banded_signatures(docs).select("band", "sig").distinct(),
         ),
     ):
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
@@ -1404,7 +1404,7 @@ def test_strinc_long_crawl_cadence_and_fragmentation(spark):
             ],
             "doc_id bigint, text string",
         )
-        _strinc_apply_batch(spark, batch, day, report_dir, htbl, btbl, 16, 4)
+        _strinc_apply_batch(spark, batch, day, report_dir, htbl, btbl)
         frag_curve.append(bucket_fragmentation(spark, htbl))
     # threshold 4: 1-file seed → 2,3,4 (skip: not past threshold),
     # 5 → rewrite → 1; then 2,3,4, 5 → rewrite → 1
@@ -1481,27 +1481,24 @@ def test_snapshot_seeder_contract_and_hadoop_copy_path(spark, tmp_path):
     )
     copied = dst_dir / "part-0_00003.c000.parquet"
     assert copied.read_bytes() == b"payload"
+    assert not list(dst_dir.glob("*.crc"))  # raw local FileSystem
 
 
 def test_snapshot_seeder_keeps_remote_warehouse_scheme(spark, monkeypatch, tmp_path):
-    """On a non-``file:`` warehouse the seeder's destination keeps the
-    URI scheme: the files are copied through the Hadoop FileSystem API
-    at ``hdfs://…/<table>``, not at a scheme-less path that would
-    resolve against ``fs.defaultFS`` or the driver's local disk.  The
-    seeder deletes nothing (its caller's ``drop_generations`` clears
-    the table first); the Hadoop calls are recorded, not run."""
+    """The seeder picks its copy path from the URI scheme, and its
+    destination keeps the warehouse URI's scheme: on an ``hdfs://``
+    warehouse the files are copied through the Hadoop FileSystem API to
+    ``hdfs://…/<table>``, not to a scheme-less path that would resolve
+    against ``fs.defaultFS`` or the driver's local disk; a ``file:``
+    warehouse copies with ``shutil`` and makes no Hadoop copy call.
+    The seeder deletes nothing (its caller's ``drop_generations`` clears
+    the table first); the Hadoop calls are recorded, not run.  A real
+    seed on the session's ``file:`` warehouse then copies every file
+    and row and writes no ``.crc`` sibling."""
+    from urllib.parse import urlparse
+
     from firebird_mapreduce_spark.streaming import jobs
 
-    calls = []
-    # the path part sits under tmp_path, so a scheme-dropping regression
-    # writes there, not at the host's root
-    warehouse = f"hdfs://namenode:8020{tmp_path}/warehouse"
-    monkeypatch.setattr(R, "warehouse_uri", lambda spark: warehouse + "/")
-    monkeypatch.setattr(
-        jobs,
-        "_hadoop_copy_files",
-        lambda spark, files, dst: calls.append(("copy", sorted(files), dst)),
-    )
     spark.sql("DROP TABLE IF EXISTS snap_uri_base")
     (
         spark.range(16)
@@ -1513,9 +1510,41 @@ def test_snapshot_seeder_keeps_remote_warehouse_scheme(spark, monkeypatch, tmp_p
     )
     try:
         base = spark.table("snap_uri_base")
+        files = sorted(base.inputFiles())
+        # the path part sits under tmp_path, so a scheme-dropping
+        # regression writes there, not at the host's root
+        hdfs = f"hdfs://namenode:8020{tmp_path}/hwarehouse"
+        local = f"file:{tmp_path}/lwarehouse"
+        for warehouse, want in (
+            (hdfs, [("copy", files, f"{hdfs}/snap_uri_probe")]),
+            (local, []),
+        ):
+            calls = []
+            with monkeypatch.context() as m:
+                m.setattr(R, "warehouse_uri", lambda spark: warehouse + "/")
+                m.setattr(
+                    jobs,
+                    "_hadoop_copy_files",
+                    lambda spark, files, dst: calls.append(
+                        ("copy", sorted(files), dst)
+                    ),
+                )
+                jobs._snapshot_bucketed_state(
+                    spark, base, "snap_uri_probe", ("h",)
+                )
+            spark.sql("DROP TABLE IF EXISTS snap_uri_probe")
+            assert calls == want, warehouse
+        assert not (tmp_path / "hwarehouse").exists()
+        assert sorted(os.listdir(tmp_path / "lwarehouse" / "snap_uri_probe")) == [
+            os.path.basename(f) for f in files
+        ]
+
         jobs._snapshot_bucketed_state(spark, base, "snap_uri_probe", ("h",))
-        dst = f"{warehouse}/snap_uri_probe"
-        assert calls == [("copy", sorted(base.inputFiles()), dst)]
+        seeded = urlparse(R.warehouse_entry(spark, "snap_uri_probe")).path
+        names = os.listdir(seeded)
+        assert sorted(names) == sorted(os.path.basename(f) for f in files)
+        assert not [n for n in names if n.endswith(".crc")], names
+        assert spark.table("snap_uri_probe").count() == 16
     finally:
         spark.sql("DROP TABLE IF EXISTS snap_uri_probe")
         spark.sql("DROP TABLE IF EXISTS snap_uri_base")
