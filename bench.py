@@ -242,27 +242,27 @@ RETIRED = {
 
 # The re-entry half of the rotation policy, made MECHANICAL (r10 —
 # VERDICT r9 item 7: the rule said "re-enters when its code next
-# changes" but nothing detected a change): each retiree's query source
-# is hashed at retirement time; ``stale_retirees`` compares the live
-# source against the recorded hash, and test_docs_consistency FAILS the
-# build when a retiree's code changed without it re-entering HEADLINE —
-# re-entering (and re-recording the hash after the next retirement
-# review) is the documented fix.
+# changes" but nothing detected a change): each retiree's query code
+# is hashed (``code_md5``) at retirement time; ``stale_retirees``
+# compares the live code against the recorded hash, and
+# test_docs_consistency FAILS the build when a retiree's code changed
+# without it re-entering HEADLINE — re-entering (and re-recording the
+# hash after the next retirement review) is the documented fix.
 RETIRED_SOURCE_MD5 = {
-    "audio_decode": "69fe038d49bbbb6de9696859dceec81b",
-    "batch_session_window": "66d2a927a0dfa927249567e060cbff10",
-    "bigram_logprob": "cafd33af145842e2b155f2cf53ce5cb6",
-    "dedup_ngram_jaccard": "9410e20b3ea2ee8765a0fab823c783d7",
-    "heavy_hitters_tokens": "450a42d559fa8771a54e6ee8c606311a",
-    "quality_filter_c4": "ed98c0a2f688520a8169d30dbf3d15bc",
-    "skewed_rank_events": "797c9ddcab6d8547382e87a096dc09c8",
-    "broadcast_join": "9d1d8213c14fe19919f8e50a643a69fd",
-    "filter_predicate": "87d49d50abfde4aad24dfdec065efd19",
-    "inverted_index": "8645deb78a127308da9b0252112b0754",
-    "dedup_exact_bucketed": "9253aa80872507515c221e22eb707963",
-    "curation_pipeline_full": "d646ef09241c5fd9209dce11320e89ea",
-    "tpch_q18_topk": "59f794e77c402ea402c5d4b412fd733b",
-    "curation_pipeline_multimodal": "fe37cb6ad75ac5dd722d1586c7e9ac01",
+    "audio_decode": "da37823a2209366eb55e68d836c5ac99",
+    "batch_session_window": "ebd4087519e59522138981ecd52677f0",
+    "bigram_logprob": "e1fd3b6b4fce0fbdf4a2dc8330515c37",
+    "dedup_ngram_jaccard": "87d545497a552056b210de25f811e0a9",
+    "heavy_hitters_tokens": "a50efacd87b6be92f92e51fac1037b6a",
+    "quality_filter_c4": "d2b2b8efeecd4dcf8b79602d7b3832f7",
+    "skewed_rank_events": "d8fa88991ae60df1c31b363e7cb769a8",
+    "broadcast_join": "8c1878ae9e7240eb3c06baa78c95a0e2",
+    "filter_predicate": "289d18e7880ff72c565a9a93270a8d21",
+    "inverted_index": "5b662e727161f4ba00eb52589a6c81b7",
+    "dedup_exact_bucketed": "8bbb40707ada7ff08dbcdf72ba49f4d3",
+    "curation_pipeline_full": "ece971191c85344faaffec62b6b7e046",
+    "tpch_q18_topk": "2bf349ccee6df420f8898f2d61b2c905",
+    "curation_pipeline_multimodal": "903d880f211e2b9c9c73ae4d5b12c7ff",
 }
 
 # Designated UNCHANGED control queries (r11, VERDICT r10 item 3): their
@@ -288,21 +288,32 @@ CONTROLS = {
 # invalidates its pinned reference time, so the build fails until the
 # reference is re-pinned (tests/test_docs_consistency.py).
 CONTROL_SOURCE_MD5 = {
-    "dpp_join_events": "53901f92c46b51b6b3d6145eb5bf2194",
-    "tpch_q1_pricing": "6e89460252f3258312deaea8896a42a0",
-    "dedup_audio_fingerprint": "b8dd77562cbc3681bb8d44f336ca39da",
+    "dpp_join_events": "53f8b72e526eb243970261fe7bde1f52",
+    "tpch_q1_pricing": "bbb98d3d04aaab04543d9a2b60a846cc",
+    "dedup_audio_fingerprint": "bae05af1f3a934792147f23a08f4943d",
 }
 
 
-def query_source_md5(name: str) -> str:
-    """md5 of a registered query's function source — the change signal
-    the retirement policy's re-entry branch watches."""
+def code_md5(source: str) -> str:
+    """md5 of one function's code: ``ast.dump`` of the ``def`` in
+    ``source`` with its docstring removed, so a docstring or comment edit
+    is not a code change; a signature or body edit is."""
+    import ast
     import hashlib
+    import textwrap
+
+    fn = ast.parse(textwrap.dedent(source)).body[0]
+    if ast.get_docstring(fn, clean=False) is not None:
+        fn.body = fn.body[1:]
+    return hashlib.md5(ast.dump(fn).encode()).hexdigest()
+
+
+def query_source_md5(name: str) -> str:
+    """``code_md5`` of a registered query's function — the change signal
+    the retirement policy's re-entry branch watches."""
     import inspect
 
-    return hashlib.md5(
-        inspect.getsource(entrymod.queries()[name]).encode()
-    ).hexdigest()
+    return code_md5(inspect.getsource(entrymod.queries()[name]))
 
 
 def stale_retirees(hashes: dict[str, str] | None = None) -> list[str]:

@@ -1,12 +1,14 @@
-"""Storage-layout operators: Z-order writes and the pruning they buy.
+"""Storage-layout operators: Z-order keys, partitioned layouts and
+bucketed-table compaction.
 
 The reference engine has no storage layer (in-memory vectors,
 ``firebird.h:174-179``); at the 100 TB target, file layout IS a query
 operator — the difference between a scan touching 2% or 100% of row
-groups for the same predicate.  This module provides the Z-order
-(Morton-interleave) layout write and the declared key-computation
-query; SCALE.md "Storage layout: Z-order writes" records the row-group
-pruning it buys.
+groups for the same predicate.  This module provides the declared
+Z-order (Morton-interleave) key queries, the Hive-partitioned events
+layout behind the DPP join, and the compaction of the folded bucketed
+state tables; SCALE.md "Storage layout: Z-order writes" records the
+row-group pruning a Z-ordered write buys.
 """
 
 from __future__ import annotations
@@ -193,107 +195,6 @@ def dpp_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def compact_files(
-    spark: SparkSession,
-    path: str,
-    target_bytes: int = 128 * 1024 * 1024,
-    preserve_sort: list[str] | None = None,
-) -> int:
-    """Compact a small-files parquet directory to ~``target_bytes`` files.
-
-    The small-files problem is the silent scan killer at 100 TB: a
-    streaming sink or over-parallel write leaves thousands of KB-sized
-    files, and every query then pays per-file open/footer costs that
-    dwarf the data read (plus driver memory for the file index).
-    Compaction = read → ``repartition(ceil(bytes/target))`` → rewrite.
-
-    The new file count comes from the CURRENT on-disk byte size (cheap
-    driver-side tree walk, no data read — subdirectories count too, so
-    Hive-partitioned layouts size correctly), so the pass sizes itself.
-    With ``preserve_sort`` the rewrite range-partitions + sorts on those
-    columns instead of round-robin, keeping row-group min/max clustering
-    (e.g. after a Z-order write, pass the z-key-producing columns'
-    sort to keep pruning).  Returns the new file count.
-
-    Swap semantics are SINGLE-WRITER, NO-CONCURRENT-READER: the rewrite
-    lands in ``<path>_compact_tmp`` and is swapped in via two renames,
-    between which ``path`` briefly does not exist (local filesystems have
-    no atomic directory exchange; a production lakehouse does this swap
-    through a table-format commit instead).  The pass is crash-safe for
-    the *data*: on entry it recovers a ``<path>_compact_old`` stranded by
-    a prior crash (restoring it if the second rename never landed,
-    deleting it if it did) — though a crash that ALSO orphans the lock
-    below needs that lock removed first (the error reports whether its
-    holder is still alive, so that is an informed delete).
-    Single-writer is ENFORCED, not assumed: the whole pass — including
-    the crash recovery, which would otherwise race a concurrent
-    invocation's in-flight tmp/old directories — runs under an
-    ``O_EXCL`` ``<path>_compact.lock`` (the ``versioned.py`` pattern:
-    pid@host recorded, holder liveness probed by the shared
-    ``_describe_lock_holder``), so a second concurrent compaction of
-    the same path fails loudly with ``ConcurrentCommitError`` instead
-    of corrupting the first one's recovery state.
-    """
-    import math
-    import os
-    import shutil
-    import socket
-
-    from ..sources.versioned import (
-        ConcurrentCommitError,
-        VersionedParquetTable,
-    )
-
-    lock = path.rstrip("/") + "_compact.lock"
-    try:
-        lock_fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        raise ConcurrentCommitError(
-            f"another compaction holds {lock} "
-            f"({VersionedParquetTable._describe_lock_holder(lock)}); "
-            "compact_files is single-writer per path — delete the lock "
-            "only if the holder is dead"
-        ) from None
-    try:
-        os.write(lock_fd, f"{os.getpid()}@{socket.gethostname()}".encode())
-
-        old = path.rstrip("/") + "_compact_old"
-        tmp = path.rstrip("/") + "_compact_tmp"
-        if os.path.exists(old):
-            if os.path.exists(path):
-                # Prior run completed the swap but died before cleanup.
-                shutil.rmtree(old)
-            else:
-                # Prior run crashed between the two renames: restore.
-                os.rename(old, path)
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
-
-        total = 0
-        for root, _dirs, files in os.walk(path):
-            total += sum(
-                os.path.getsize(os.path.join(root, f))
-                for f in files
-                if f.endswith(".parquet")
-            )
-        n_out = max(1, math.ceil(total / target_bytes))
-        df = spark.read.parquet(path)
-        if preserve_sort:
-            out = df.repartitionByRange(
-                n_out, *preserve_sort
-            ).sortWithinPartitions(*preserve_sort)
-        else:
-            out = df.repartition(n_out)
-        out.write.mode("overwrite").parquet(tmp)
-        os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old)
-        return n_out
-    finally:
-        os.close(lock_fd)
-        os.unlink(lock)
-
-
 def _table_parquet_files(spark: SparkSession, tbl: str) -> list[str]:
     """Names of the parquet files under managed table ``tbl``'s warehouse
     directory, listed recursively through the warehouse's own Hadoop
@@ -358,8 +259,7 @@ def compact_bucketed_table(
 ) -> int:
     """Compact a managed BUCKETED table to one file per bucket,
     preserving the bucketing metadata its consumers' zero-exchange plans
-    depend on — ``compact_files``'s discipline for the
-    ``saveAsTable``-managed case.
+    depend on.
 
     The folded incremental state tables (``operators.fold``) grow
     by O(batch) bucket files per ingest: after K ingests every bucket is
@@ -414,45 +314,3 @@ def compact_bucketed_table(
     spark.sql(f"DROP TABLE {tbl}")
     spark.sql(f"ALTER TABLE {tmp} RENAME TO {tbl}")
     return bucketed_table_file_count(spark, tbl)
-
-
-def write_zordered(
-    df: DataFrame,
-    a_col: str,
-    b_col: str,
-    path: str,
-    num_files: int = 8,
-) -> None:
-    """Write ``df`` Z-ordered on ``(a_col, b_col)``: range-partition by
-    the interleaved key (so each output file owns a contiguous Z-range —
-    an axis-aligned rectangle family of the 2-D space), sort within
-    partitions (so row groups inside a file cluster too), drop the key.
-
-    This is the write-side half of Z-order pruning: parquet min/max
-    stats per row group do the read-side half for free in ANY engine
-    (Spark scan pushdown, DuckDB zone maps), no index structure needed.
-    """
-    write_zordered_nd(df, [a_col, b_col], path, num_files)
-
-
-def write_zordered_nd(
-    df: DataFrame,
-    cols: list[str],
-    path: str,
-    num_files: int = 8,
-) -> None:
-    """N-dimensional Z-order write (2-4 columns): same
-    range-partition-by-interleaved-key + sort-within recipe as the 2-D
-    form, with the Morton key picked by arity (``z2``/``z3``/``z4`` —
-    note ``z4`` keeps 15 bits per dimension; see its docstring)."""
-    keyers = {2: z2, 3: z3, 4: z4}
-    if len(cols) not in keyers:
-        raise ValueError(f"z-order supports 2-4 columns, got {len(cols)}")
-    keyed = df.withColumn("__zkey", keyers[len(cols)](*[F.col(c) for c in cols]))
-    (
-        keyed.repartitionByRange(num_files, "__zkey")
-        .sortWithinPartitions("__zkey")
-        .drop("__zkey")
-        .write.mode("overwrite")
-        .parquet(path)
-    )

@@ -2,11 +2,11 @@
 payloads as opaque ``binary`` columns with typed metadata, processed by
 Arrow-batched pandas functions over ``mapInPandas``.
 
-The decode step itself is STUBBED — the container has no image/audio
-codecs — behind ``decoder_available()`` / ``FakeDecoder``: the Spark-side
-plumbing (schema, partitioning, UDF signature, Arrow batch shape) is real
-and tested; swapping the fake for Pillow/ffmpeg is a one-function change
-on executors.
+The decode step is real: PNG through the engine's pure-stdlib codec
+(``functions.png``; Pillow when importable on executors) and WAV PCM
+through ``functions.wav``, over on-disk fixtures read by the
+``binaryFile`` source.  Formats with no in-container codec (JPEG, MP3,
+video) are not decoded; ``frame_sample`` samples raw byte windows.
 
 Scale notes: binary payloads dominate row size, so (a) metadata-only
 queries must never deserialize ``content`` — keep metadata in ordinary
@@ -31,85 +31,6 @@ from ..functions import png, wav
 from ..sources import load_table
 from ..sources.fixtures import materialise
 from ..sources.readers import read_binary_dir
-
-
-def decoder_available(modality: str) -> bool:
-    """True when a real codec for ``modality`` is importable on executors.
-
-    ``"png"`` is always available: the engine ships a pure-stdlib PNG
-    codec (``functions.png`` — zlib inflate + full unfilter), so PNG
-    decode is real even in a container with no image libraries.  The
-    ``"image"`` gate remains Pillow (arbitrary formats)."""
-    if modality == "png":
-        return True
-    try:
-        if modality == "image":
-            import PIL  # noqa: F401
-            return True
-        if modality in ("audio", "video"):
-            import av  # noqa: F401
-            return True
-    except ImportError:
-        return False
-    return False
-
-
-class FakeDecoder:
-    """Deterministic stand-in decoder: derives pseudo-features from the
-    byte content so the full pipeline (schema, batching, grouping) runs and
-    is testable without codecs.  Raises for modalities it cannot fake."""
-
-    @staticmethod
-    def image_features(content: bytes) -> tuple[int, int, float]:
-        if content is None:
-            raise NotImplementedError("real image decode requires Pillow on executors")
-        # fake width/height/brightness from byte stats — deterministic
-        n = len(content)
-        width = 16 + (n % 64)
-        height = 16 + ((n // 64) % 64)
-        brightness = (sum(content[:256]) % 256) / 255.0 if n else 0.0
-        return width, height, brightness
-
-
-def extract_image_features(df: DataFrame) -> DataFrame:
-    """Arrow-batched feature extraction over binary payloads.
-
-    Real pipeline shape: ``mapInPandas`` so each task streams batches —
-    constant memory regardless of table size.  Uses the real decoder when
-    available, the deterministic fake otherwise.
-    """
-    out_schema = "asset_id bigint, width int, height int, brightness double"
-
-    # NOTE: the closure must be fully self-contained — cloudpickle
-    # serializes module-level classes/functions from importable modules by
-    # *reference*, and executors may not have this repo on sys.path when
-    # the driver runs from another cwd.  Nested functions serialize by
-    # value, so the decode logic is duplicated here from
-    # FakeDecoder.image_features (kept in sync by test_multimodal_*).
-    def decode(content: bytes) -> tuple[int, int, float]:
-        if content is None:
-            raise NotImplementedError(
-                "real image decode requires Pillow on executors"
-            )
-        n = len(content)
-        width = 16 + (n % 64)
-        height = 16 + ((n // 64) % 64)
-        brightness = (sum(content[:256]) % 256) / 255.0 if n else 0.0
-        return width, height, brightness
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [decode(c) for c in pdf["content"]]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "width": [f[0] for f in feats],
-                    "height": [f[1] for f in feats],
-                    "brightness": [f[2] for f in feats],
-                }
-            )
-
-    return df.mapInPandas(run, schema=out_schema)
 
 
 def synthetic_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -197,17 +118,6 @@ def binary_file_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def fake_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The FakeDecoder pipeline over the synthetic image subset — kept as
-    the documented plumbing demo for modalities with NO in-container
-    codec (JPEG/MP3/video): schema, batching, and grouping are real,
-    only the decode kernel is the deterministic stand-in.  The declared
-    ``image_features`` query runs the REAL PNG decoder below (r4,
-    VERDICT r3 item 3)."""
-    assets = synthetic_assets(spark, sf_dir).filter(F.col("modality") == "image")
-    return extract_image_features(assets)
-
-
 # ---------------------------------------------------------------------------
 # REAL image decode: deterministic PNG fixtures + an actual decoder
 # (pure-stdlib PNG codec always; Pillow preferred when importable)
@@ -239,16 +149,16 @@ def _png_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
 
 def decode_png_features(df: DataFrame) -> DataFrame:
     """REAL decode over PNG payloads: parse → inflate → unfilter → pixel
-    stats, Arrow-batched via ``mapInPandas`` (same bounded-batch shape as
-    ``extract_image_features``).  Pillow is used when importable on the
-    executor (arbitrary formats); otherwise the engine's pure-stdlib PNG
-    codec decodes — so this path never needs the fake.
+    stats, Arrow-batched via ``mapInPandas`` (bounded batches, constant
+    task memory).  Pillow is used when importable on the executor
+    (arbitrary formats); otherwise the engine's pure-stdlib PNG codec
+    decodes.
 
     The codec travels BY VALUE inside the serialized closure
     (``cloudpickle.register_pickle_by_value`` on ``functions.png``), so
     executors need neither this repo on sys.path nor any image library —
-    the same self-containment discipline as the inline closures above,
-    without duplicating a 150-line codec."""
+    the self-containment a nested closure gets by value, without
+    duplicating a 150-line codec."""
     out_schema = "asset_id bigint, width int, height int, mean_level int"
 
     from pyspark import cloudpickle
@@ -312,19 +222,17 @@ def image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Declared query (oracle-backed since r4, previously the FakeDecoder
-    stub): image FEATURE EXTRACTION over real on-disk PNGs — binaryFile
-    scan → actual decode (zlib inflate + all-five unfilter via the
-    pure-stdlib codec, Pillow when importable) → per-image features:
-    decoded dimensions, brightness (mean 8-bit RGB level / 255), and
-    aspect ratio.  Every feature is computed FROM THE DECODED PIXELS, and
-    the fixture's pixels derive from doc_id arithmetic (``_png_dims``),
-    so the DuckDB oracle re-derives the expected features relationally —
-    a decoder that misparsed IHDR, mis-inflated, or skipped an unfilter
-    pass hash-mismatches.  The FakeDecoder pipeline survives only as
-    ``fake_image_features``, the plumbing demo for formats with no
-    in-container codec.  At 100 TB this is the canonical
-    training-data image pass: split-parallel binary scan, bounded Arrow
+    """Declared query (oracle-backed since r4): image FEATURE
+    EXTRACTION over real on-disk PNGs — binaryFile scan → actual decode
+    (zlib inflate + all-five unfilter via the pure-stdlib codec, Pillow
+    when importable) → per-image features: decoded dimensions,
+    brightness (mean 8-bit RGB level / 255), and aspect ratio.  Every
+    feature is computed FROM THE DECODED PIXELS, and the fixture's
+    pixels derive from doc_id arithmetic (``_png_dims``), so the DuckDB
+    oracle re-derives the expected features relationally — a decoder
+    that misparsed IHDR, mis-inflated, or skipped an unfilter pass
+    hash-mismatches.  At 100 TB this is the canonical training-data
+    image pass: split-parallel binary scan, bounded Arrow
     decode batches, features land in ordinary columns for downstream
     filtering without re-touching payload bytes."""
     feats = image_decode(spark, sf_dir)
@@ -1171,7 +1079,7 @@ def dedup_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     GAIN shift lands at distance 0 (energy contour is scale-invariant)
     and the one-window edit at distance <= 2; unrelated clips sit near
     distance 28 (56 Bernoulli(~.5) bits), measured with banding recall
-    vs brute force in tools/measure_afp.py / SCALE.md.
+    vs brute force in SCALE.md "Text / multimodal pipelines".
 
     Oracle-checkable end to end because the fixture amplitudes derive
     from doc_id arithmetic (``_afp_amplitudes``): the DuckDB twin

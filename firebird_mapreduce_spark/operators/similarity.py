@@ -2141,14 +2141,14 @@ def _semantic_screen(
 
 def _drift_trigger_frame(fit_side: DataFrame, batch_side: DataFrame) -> DataFrame:
     """The stored-dist2 DRIFT TRIGGER as a 1-row frame (drift_ratio,
-    refit_recommended) — the ``pq_index_refit``/``semantic_index_drift``
-    trigger expression factored out so the incremental LOOPS evaluate it
-    after every fold (VERDICT r9 item 3: in production the crawl IS what
-    surfaces drift; a trigger nobody evaluates catches nothing).  Both
-    inputs carry STORED enrollment/encode dist2 — never a re-encode per
-    report: mean(batch dist2) / mean(fit-side dist2), rounded 6 dp, then
-    flagged past ``REFIT_RATIO``.  Two driver-sized aggregates + a 1×1
-    cross join (the drift-ratio pattern every refit query uses)."""
+    refit_recommended) — the refit queries' trigger expression factored
+    out so the incremental LOOPS evaluate it after every fold (VERDICT
+    r9 item 3: in production the crawl IS what surfaces drift; a
+    trigger nobody evaluates catches nothing).  Both inputs carry STORED
+    enrollment/encode dist2 — never a re-encode per report: mean(batch
+    dist2) / mean(fit-side dist2), rounded 6 dp, then flagged past
+    ``REFIT_RATIO``.  Two driver-sized aggregates + a 1×1 cross join
+    (the drift-ratio pattern every refit query uses)."""
 
     def mean(df: DataFrame, name: str) -> DataFrame:
         return df.agg(
@@ -2256,7 +2256,7 @@ def dedup_semantic_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest 2 vs the FOLDED score state = corpus ∪ ingest-1 survivors'
     stored enrollments), so a drifted delivery surfaces
     ``refit_recommended`` in the crawl's own report instead of waiting
-    for someone to run ``semantic_index_drift``.  The trigger reads
+    for someone to run a separate drift check.  The trigger reads
     stored dist2 only — the corpus is never re-scored per report (the
     ``pq_index_refit`` pay-once discipline; the corpus score table is a
     one-time artifact like the centroid table).
@@ -2561,51 +2561,6 @@ FROM top1 CROSS JOIN drift d
 """
 
 
-def semantic_index_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The REFIT TRIGGER for the assign-only regime: compare the mean
-    squared enrollment distance of an incoming batch against the
-    fit-time mean stored in the persisted index.  A batch drawn from the
-    fit distribution enrolls at ≈ the fit mean; a drifted batch enrolls
-    farther, and past ``REFIT_RATIO`` the answer is a refit, not more
-    enrollment.  HONEST magnitude on THIS corpus (measured at sf0.1):
-    ingest 1's near-copy half enrolls at 0.9492 vs fit 0.9487 (ratio
-    1.0005 — in-distribution, as it should) and the negated half at
-    0.9596 (ratio 1.011) — the direction is right but the signal is
-    small because the corpus is near-isotropic: centroids carry little
-    directional mass, so even a SIGN FLIP barely raises dist2.  On an
-    embedding distribution with real cluster structure (tight cells —
-    the case where assign-only enrollment is trusted in the first
-    place) an out-of-distribution batch blows the ratio out;
-    ``REFIT_RATIO`` is calibrated for that regime, not this fixture.
-    Unregistered helper (the declared query is the dedup); asserted
-    directionally in test_llm_ops.py and quantified in SCALE.md."""
-    _, b1, _ = incremental_embedding_batches(spark, sf_dir)
-    # the fit-side baseline is the STORED corpus enrollment against the
-    # persisted FINAL centroids (semv_score_), not the fit table's
-    # dist2 — that measured distances to the PREVIOUS round's centroids
-    # c_it while the batch enrolls against c_{it+1}, and mixing the two
-    # generations gave an in-distribution batch a drift_ratio != 1 by
-    # construction.  Both means reference the same centroid generation.
-    _, _, cent, _, _, corpus_score = _semantic_state_tables(spark, sf_dir)
-    a1 = _assign_to_centroids_arrays(b1, cent)
-    fit = corpus_score.agg(
-        F.count(F.lit(1)).alias("n_fit"),
-        F.avg(F.col("dist2").cast("double")).alias("fit_mean_dist2"),
-    )
-    batch = a1.agg(
-        F.count(F.lit(1)).alias("n_batch"),
-        F.avg(F.col("dist2").cast("double")).alias("batch_mean_dist2"),
-    )
-    return (
-        fit.crossJoin(batch)
-        .withColumn(
-            "drift_ratio",
-            F.round(F.col("batch_mean_dist2") / F.col("fit_mean_dist2"), 6),
-        )
-        .withColumn("refit_recommended", F.col("drift_ratio") > REFIT_RATIO)
-    )
-
-
 def drifted_embedding_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A GENUINELY drifted ingest: every corpus vector mean-shifted by
     +0.5 on every component, re-idded +500000 — textbook covariate
@@ -2613,7 +2568,7 @@ def drifted_embedding_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     On the near-isotropic test corpus this shifts squared enrollment
     distance by ≈ d·0.25 ≈ 16 — an unmistakable drift signal, unlike
     the negated-batch fixture whose honest ratio is only ~1.01
-    (``semantic_index_drift``'s docstring).  Must stay
+    (SCALE.md "Dedup / sketches").  Must stay
     expression-for-expression equivalent to ``DRIFTED_BATCH_SQL``."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     shifted = F.transform(
@@ -2658,7 +2613,7 @@ def _versioned_index_table(
 
 def semantic_index_refit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DRIFT → REFIT → SWAP: the index lifecycle closed (VERDICT r7
-    item 3 — ``semantic_index_drift`` fired and nothing consumed it).
+    item 3 — a drift trigger fired and nothing consumed it).
     One oracle-backed query demonstrating the full loop on the
     versioned-table machinery:
 
@@ -2695,7 +2650,8 @@ def semantic_index_refit(spark: SparkSession, sf_dir: str) -> DataFrame:
     pin a version for a whole job — enrollment-only maintenance between
     refits is ``dedup_semantic_incremental``/
     ``embedding_knn_ivfpq_incremental``; this query is the escape hatch
-    when ``semantic_index_drift`` says assign-only has decayed."""
+    when the drift trigger (``_drift_trigger_frame``) says assign-only
+    has decayed."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     corpus = emb.select(
         "vec_id",

@@ -70,26 +70,6 @@ def salted_agg(
     return partial.groupBy(*key_cols).agg(*stage2_exprs)
 
 
-def salted_collect_list(
-    df: DataFrame,
-    key_cols: list[str],
-    value_col: str,
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Skew-safe ``collect_list``: per-salt partial lists flattened in
-    stage 2 — the canonical case where plain partial aggregation does NOT
-    help (lists don't compress map-side) and one hot key otherwise lands
-    on one task.  Order within the list is unspecified, matching the
-    engine's unordered-output contract."""
-    salted = df.withColumn("_salt", _salt(df, salt_buckets))
-    partial = salted.groupBy(*key_cols, "_salt").agg(
-        F.collect_list(value_col).alias("_part")
-    )
-    return partial.groupBy(*key_cols).agg(
-        F.flatten(F.collect_list("_part")).alias(f"{value_col}_list")
-    )
-
-
 def skewed_event_fact(
     spark: SparkSession, sf_dir: str, pad_blocks: int = 0
 ) -> DataFrame:

@@ -1,5 +1,5 @@
-"""Sources and sinks: typed table readers over the test corpus plus
-generic parquet/csv/json/binary connectors.
+"""Sources: typed table readers over the test corpus, the
+reference's edge-list format, and a binary-file connector for media.
 
 The reference's only "source" is a caller-owned typed C array
 (``/root/reference/firebird.h:167-170``; ``README.txt:53-54``).  Here the
@@ -10,23 +10,13 @@ predicate pushdown, and column pruning for free.
 from .readers import (
     TABLES,
     load_table,
-    load_tables,
     read_binary_dir,
-    read_csv,
-    read_json,
-    read_parquet,
     undirected,
-    write_parquet,
 )
 
 __all__ = [
     "TABLES",
     "load_table",
-    "load_tables",
     "read_binary_dir",
-    "read_csv",
-    "read_json",
-    "read_parquet",
     "undirected",
-    "write_parquet",
 ]

@@ -1,4 +1,5 @@
-"""Table readers / writers.
+"""Table readers: the corpus tables, the reference's edge-list format
+and raw binary files.
 
 Design notes for 100 TB:
 
@@ -7,9 +8,9 @@ Design notes for 100 TB:
   materialize on the driver.
 - ``load_table`` returns the *unprojected* DataFrame; callers project
   (``select``) so pruning reaches the parquet scan (verify with
-  ``plans.assert_pushed_filters``).
-- Writers default to snappy parquet; partition columns are caller-chosen
-  because a good partition key (date, tenant) is workload knowledge.
+  ``plans.has_pushed_filter``).
+- Other formats need no wrapper here: ``spark.read``/``DataFrame.write``
+  already take csv, json, orc and parquet with their options.
 """
 
 from __future__ import annotations
@@ -18,7 +19,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from ..session import session_confs
 
@@ -129,41 +129,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    """Read several corpus tables at once; defaults to all of them."""
-    wanted = names or TABLES
-    return {name: load_table(spark, sf_dir, name) for name in wanted}
-
-
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema: StructType | str | None = None,
-    sep: str = ",",
-    header: bool = True,
-) -> DataFrame:
-    """CSV scan.  An explicit schema skips the inference pass — mandatory at
-    scale (inference reads the data twice)."""
-    reader = spark.read.option("sep", sep).option("header", str(header).lower())
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", "true")
-    return reader.csv(path)
-
-
-def read_json(spark: SparkSession, path: str, schema: StructType | str | None = None) -> DataFrame:
-    """JSON-lines scan; explicit schema for the same reason as CSV."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
 def undirected(edges: DataFrame) -> DataFrame:
     """Mirror every edge: ``edges`` union its src/dst swap, every other
     column carried through — the reference loader's undirected doubling
@@ -193,25 +158,6 @@ def read_edge_list(spark: SparkSession, path: str) -> DataFrame:
     return undirected(raw.filter(F.col("weight").isNotNull()))
 
 
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan — same DataSource V2 path as parquet (predicate pushdown,
-    column pruning, split by stripe); the second columnar format a lake
-    migration typically has to read in place."""
-    return spark.read.orc(path)
-
-
-def write_orc(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> None:
-    writer = df.write.mode(mode).option("compression", "snappy")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.orc(path)
-
-
 def read_binary_dir(spark: SparkSession, path: str, glob: str | None = None) -> DataFrame:
     """Multimodal raw-bytes source: one row per file with ``path``,
     ``modificationTime``, ``length``, ``content:binary``.
@@ -224,15 +170,3 @@ def read_binary_dir(spark: SparkSession, path: str, glob: str | None = None) -> 
     if glob:
         reader = reader.option("pathGlobFilter", glob)
     return reader.load(path)
-
-
-def write_parquet(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> None:
-    writer = df.write.mode(mode).option("compression", "snappy")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)

@@ -271,10 +271,10 @@ def user_running_counts_stream(events: DataFrame) -> DataFrame:
 
 
 def make_session_fold(gap_us: int):
-    """The sessionizer's per-key per-batch fold, shared by BOTH stateful
-    API spellings (``applyInPandasWithState`` and the
-    ``transformWithStateInPandas`` v2 processor) so the session logic
-    exists once.  Returned as closures DEFINED INSIDE this factory so
+    """The sessionizer's per-key per-batch fold behind
+    ``custom_session_stream``'s ``applyInPandasWithState`` update, built
+    by a factory so tests drive it directly on plain lists.  Returned as
+    closures DEFINED INSIDE this factory so
     cloudpickle ships them to executors BY VALUE — a module-level helper
     would pickle by *reference* and require this repo on executor
     sys.path (same discipline as ``operators.multimodal``).
@@ -397,99 +397,6 @@ def custom_session_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     result = run_stream_to_memory(
         custom_session_stream(stream_events_multibatch(spark, sf_dir)),
         f"q_stream_custom_sessions_{_REPLAY_COUNTER}",
-        output_mode="update",
-    )
-    return result.groupBy("user_id", "session_start").agg(
-        F.max("session_end").alias("session_end"),
-        F.max("n_events").alias("n_events"),
-    )
-
-
-def tws_session_stream(events: DataFrame, gap_minutes: int = 10) -> DataFrame:
-    """The SAME sessionizer spelled in Spark 4's successor stateful API,
-    ``transformWithStateInPandas`` (SPARK-40434 "arbitrary stateful
-    processing v2"): a ``StatefulProcessor`` holding the open session in
-    a typed ``ValueState`` instead of ``applyInPandasWithState``'s single
-    state tuple.  Same emission contract as ``custom_session_stream``
-    (closed sessions once, the open session re-emitted per batch), so
-    the SAME DuckDB oracle certifies it — three independent
-    implementations (built-in session_window, GroupState,
-    StatefulProcessor), one external answer.
-
-    The v2 API is the forward surface for custom operators at scale:
-    composable named state variables (value/list/map), per-key timers,
-    state TTL — and it REQUIRES the RocksDB state store provider, which
-    ``run_stream_to_memory`` defaults to.
-
-    ENVIRONMENT GATE: the v2 state IPC speaks protobuf
-    (``pyspark.sql.streaming.proto``); in a container without
-    ``google.protobuf`` the query fails at start with
-    STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE (verified), so this
-    spelling is NOT a registered driver query here — the shared fold is
-    unit-tested directly (``tests/test_streaming.py``) and the E2E
-    parity test skips unless protobuf is importable."""
-    out_schema = (
-        "user_id bigint, session_start timestamp, session_end timestamp, "
-        "n_events bigint"
-    )
-    gap_us = gap_minutes * 60 * 1_000_000
-    processor = make_session_processor(gap_us)
-
-    return (
-        events.select("user_id", "ts")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=processor,
-            outputStructType=out_schema,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
-def make_session_processor(gap_us: int):
-    """Build the ``StatefulProcessor`` for :func:`tws_session_stream` —
-    exposed separately so its ``handleInputRows`` can be driven directly
-    by a unit test with a fake ValueState (the container lacks the
-    protobuf runtime the real handle needs)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    fold, frame = make_session_fold(gap_us)
-
-    class SessionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._open = handle.getValueState(
-                "open_session", "start_us long, last_us long, n long"
-            )
-
-        def handleInputRows(self, key, rows, timer_values):
-            ts_us: list[int] = []
-            for pdf in rows:
-                ts_us.extend(int(t.value // 1000) for t in pdf["ts"])
-            prev = self._open.get() if self._open.exists() else None
-            out, new_state = fold(ts_us, prev)
-            self._open.update(new_state)
-            yield frame(key[0], out)
-
-        def close(self) -> None:
-            pass
-
-    return SessionProcessor()
-
-
-def tws_session_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver query: the transformWithStateInPandas sessionizer replayed
-    over 4 micro-batches, reduced to final sessions exactly like
-    ``custom_session_query`` and hash-compared against the same
-    relational oracle."""
-    global _REPLAY_COUNTER
-    _REPLAY_COUNTER += 1
-    result = run_stream_to_memory(
-        tws_session_stream(stream_events_multibatch(spark, sf_dir)),
-        f"q_stream_tws_sessions_{_REPLAY_COUNTER}",
         output_mode="update",
     )
     return result.groupBy("user_id", "session_start").agg(

@@ -117,9 +117,10 @@ def test_session_window_gap_boundary(spark):
 
 
 def test_custom_session_fold_matches_builtin_boundary():
-    """make_session_fold (shared by the GroupState and v2 stateful
-    sessionizers) must implement the SAME closed-boundary rule as the
-    built-in session_window: an exact-gap tie merges, gap+1µs splits."""
+    """make_session_fold (behind the GroupState sessionizer
+    ``stream_session_custom``) must implement the SAME closed-boundary
+    rule as the built-in session_window: an exact-gap tie merges,
+    gap+1µs splits."""
     from firebird_mapreduce_spark.streaming.jobs import make_session_fold
 
     gap_us = 30 * 60 * 1_000_000

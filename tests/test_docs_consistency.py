@@ -220,3 +220,28 @@ def test_bench_retirement_reentry_branch():
     assert bench.stale_retirees(planted) == [victim], (
         "the re-entry detector failed to flag a changed retiree"
     )
+
+
+def test_bench_code_hash_ignores_docstrings_and_comments():
+    """The staleness hash watches code, not prose: a docstring- or
+    comment-only edit of a control's function hashes equal, and changing
+    one literal in its body hashes different."""
+    import inspect
+
+    import bench
+
+    fn = entrymod.queries()["dedup_audio_fingerprint"]
+    src = inspect.getsource(fn)
+    first = inspect.getdoc(fn).splitlines()[0]
+    body = "    fixture = _afp_fixture_dir(spark, sf_dir)\n"
+    group = r'\.wav$", 1)'
+    variants = {
+        "docstring": src.replace(first, "A reworded docstring line.", 1),
+        "comment": src.replace(body, "    # an added comment\n" + body, 1),
+        "literal": src.replace(group, group.replace("1", "2"), 1),
+    }
+    assert all(v != src for v in variants.values())
+    assert bench.query_source_md5("dedup_audio_fingerprint") == bench.code_md5(src)
+    assert bench.code_md5(variants["docstring"]) == bench.code_md5(src)
+    assert bench.code_md5(variants["comment"]) == bench.code_md5(src)
+    assert bench.code_md5(variants["literal"]) != bench.code_md5(src)

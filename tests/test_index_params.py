@@ -36,7 +36,6 @@ DATA_ONLY = {
     "embedding_knn_ivf_multiprobe": ("spark", "sf_dir"),
     "embedding_knn_ivfpq": ("spark", "sf_dir"),
     "embedding_knn_ivfpq_incremental": ("spark", "sf_dir"),
-    "semantic_index_drift": ("spark", "sf_dir"),
     "semantic_index_refit": ("spark", "sf_dir"),
     "pq_index_refit": ("spark", "sf_dir"),
     "embedding_sq8_knn_incremental": ("spark", "sf_dir"),
@@ -183,7 +182,6 @@ def test_dedup_ladder_slots_are_constants():
     """The dedup ladder's never-set column, window and n-gram slots are
     gone: each function takes only its data arguments."""
     data_only = {
-        M.extract_image_features: ("df",),
         M.decode_png_features: ("df",),
         M.phash_hashes: ("assets",),
         M.audio_fingerprints: ("assets",),

@@ -154,18 +154,6 @@ def test_lang_id_chargram_runs_vectorized(spark):
     assert {r["lang_pred"] for r in rows} <= {"en", "fr", "de", "und"}
 
 
-def test_multimodal_pipeline_stub(spark):
-    """The FakeDecoder plumbing demo (codec-less formats) — the declared
-    image_features query now runs the REAL PNG decoder, covered by
-    test_image_features_real_decode below."""
-    feats = M.fake_image_features(spark, SF_SMOKE).collect()
-    assert len(feats) > 100
-    assert all(16 <= r["width"] < 80 and 16 <= r["height"] < 80 for r in feats)
-    # deterministic fake: same input -> same features
-    feats2 = M.fake_image_features(spark, SF_SMOKE).collect()
-    assert sorted(map(tuple, feats)) == sorted(map(tuple, feats2))
-
-
 def test_image_features_real_decode(spark):
     """image_features (oracle-backed r4) must derive every feature from
     the DECODED pixels of the real PNG fixtures: dimensions equal the
@@ -282,13 +270,6 @@ def test_fixture_rebuilds_after_a_failed_write(tmp_path, monkeypatch):
             assert fh.read() == good
     finally:
         shutil.rmtree(out, ignore_errors=True)
-
-
-def test_multimodal_decoder_gate():
-    assert M.decoder_available("image") is False  # no PIL in container
-    assert M.decoder_available("png") is True  # pure-stdlib codec always ships
-    with pytest.raises(NotImplementedError):
-        M.FakeDecoder.image_features(None)
 
 
 def test_png_codec_roundtrip_all_filters():
@@ -1101,19 +1082,6 @@ def test_semantic_incremental_fold_flags_survivor_copies(spark):
     assert all(
         r["dup_of"] < 100000 or r["dup_of"] in kept1_ids for r in even_flagged
     )
-
-
-def test_semantic_index_drift_detects_distribution_flip(spark):
-    """The refit trigger: batch1 carries the negated half (a worst-case
-    distribution flip vs the fitted corpus), so its mean enrollment
-    dist2 must sit measurably above the fit-time mean."""
-    row = S.semantic_index_drift(spark, SF_SMOKE).first()
-    assert row["n_fit"] > 0 and row["n_batch"] > 0
-    assert row["batch_mean_dist2"] > row["fit_mean_dist2"], (
-        f"drift invisible: batch {row['batch_mean_dist2']} "
-        f"vs fit {row['fit_mean_dist2']}"
-    )
-    assert row["drift_ratio"] > 1.0
 
 
 def test_semantic_index_refit_swap_and_time_travel(spark):

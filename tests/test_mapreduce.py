@@ -409,15 +409,6 @@ def test_salt_spreads_hot_keys(spark):
     assert all(n > 1 for n in per_key.values()), per_key
 
 
-def test_salted_collect_list_complete(spark):
-    df = spark.createDataFrame(
-        [("a", i) for i in range(100)] + [("b", 1)], "k string, v int"
-    )
-    out = {r["k"]: sorted(r["v_list"]) for r in K.salted_collect_list(df, ["k"], "v").collect()}
-    assert out["a"] == list(range(100))
-    assert out["b"] == [1]
-
-
 def test_merge_upsert_three_outcomes(spark):
     """MERGE semantics: matched keys take update values, unmatched base
     rows pass through untouched, update-only keys insert."""

@@ -494,115 +494,6 @@ def test_runtime_bloom_filter_prunes_big_join_side(spark):
                 spark.conf.set(k, v)
 
 
-def test_zorder_layout_prunes_second_dimension(spark, tmp_path):
-    """Z-order layout buys row-group pruning on the dimension a linear
-    sort cannot prune AT ALL: events written sorted by user_id leave a
-    value-range predicate touching every row group (its min/max spans
-    the whole domain in every group), while the Morton-interleaved
-    layout clusters both dimensions, so the same predicate's min/max
-    check skips most groups.  The honest trade — single-dim pruning on
-    the formerly-sorted column gets worse — is asserted too, not hidden.
-    Pruning here is nothing engine-specific: it falls out of parquet
-    row-group statistics, which every reader applies."""
-    import glob
-
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from firebird_mapreduce_spark.operators.layout import write_zordered
-    from firebird_mapreduce_spark.sources import load_table
-
-    ev = load_table(spark, SF_SMOKE, "events").withColumn(
-        "value_bucket", F.floor("value").cast("long")
-    )
-    linear = str(tmp_path / "linear")
-    zordered = str(tmp_path / "zorder")
-    (
-        ev.repartitionByRange(16, "user_id")
-        .sortWithinPartitions("user_id")
-        .write.mode("overwrite")
-        .parquet(linear)
-    )
-    write_zordered(ev, "user_id", "value_bucket", zordered, num_files=16)
-
-    def overlapping_groups(path: str, col: str, lo: int, hi: int):
-        hit = total = 0
-        for f in glob.glob(path + "/*.parquet"):
-            meta = pq.ParquetFile(f).metadata
-            names = [
-                meta.row_group(0).column(i).path_in_schema
-                for i in range(meta.num_columns)
-            ]
-            j = names.index(col)
-            for g in range(meta.num_row_groups):
-                st = meta.row_group(g).column(j).statistics
-                total += 1
-                if st.min <= hi and st.max >= lo:
-                    hit += 1
-        return hit, total
-
-    # same rows either way
-    assert (
-        spark.read.parquet(zordered).count()
-        == spark.read.parquet(linear).count()
-        == ev.count()
-    )
-    lin_v, lin_total = overlapping_groups(linear, "value_bucket", 64, 127)
-    z_v, z_total = overlapping_groups(zordered, "value_bucket", 64, 127)
-    assert lin_v == lin_total, "linear layout should prune nothing on dim 2"
-    assert z_v <= z_total // 2, (z_v, z_total)
-    # the trade: user_id pruning worsens vs the dedicated sort but must
-    # still beat a random layout (strictly fewer than all groups)
-    lin_u, _ = overlapping_groups(linear, "user_id", 10, 19)
-    z_u, _ = overlapping_groups(zordered, "user_id", 10, 19)
-    assert lin_u <= z_u < z_total, (lin_u, z_u, z_total)
-
-
-def test_compact_files_merges_small_files_and_keeps_rows(spark, tmp_path):
-    """Small-files compaction: 64 tiny files collapse to the byte-sized
-    target count, rows survive exactly, and ``preserve_sort`` keeps the
-    per-file min/max clustering a later range predicate prunes on."""
-    import glob
-    import os
-
-    import pyarrow.parquet as pq
-
-    from firebird_mapreduce_spark.operators.layout import compact_files
-    from firebird_mapreduce_spark.sources import load_table
-
-    ev = load_table(spark, SF_SMOKE, "events").select("event_id", "user_id")
-    path = str(tmp_path / "frag")
-    ev.repartition(64).write.mode("overwrite").parquet(path)
-    n_before = len(glob.glob(path + "/*.parquet"))
-    assert n_before == 64
-    total_bytes = sum(
-        os.path.getsize(f) for f in glob.glob(path + "/*.parquet")
-    )
-    rows = ev.count()
-
-    n_out = compact_files(spark, path, target_bytes=total_bytes // 3 + 1,
-                          preserve_sort=["user_id"])
-    files = glob.glob(path + "/*.parquet")
-    assert len(files) == n_out <= 4
-    assert spark.read.parquet(path).count() == rows
-    # preserve_sort: per-file user_id ranges must not all span the domain
-    spans = []
-    for f in files:
-        meta = pq.ParquetFile(f).metadata
-        names = [
-            meta.row_group(0).column(i).path_in_schema
-            for i in range(meta.num_columns)
-        ]
-        j = names.index("user_id")
-        st = meta.row_group(0).column(j).statistics
-        spans.append((st.min, st.max))
-    spans.sort()
-    # range partitioning gives (near) disjoint spans: each file's min is
-    # >= the previous file's max - allow equality at boundaries
-    for (lo1, hi1), (lo2, _) in zip(spans, spans[1:]):
-        assert lo2 >= hi1, spans
-
-
 def test_sql_surface_q5_matches_dataframe_plan_and_values(spark):
     """The spark.sql spelling of the Q5 flagship must land on the same
     physical shape as the DataFrame spelling (broadcast dims, shuffled
@@ -649,24 +540,6 @@ def test_sql_surface_q5_matches_dataframe_plan_and_values(spark):
     assert rows == want
 
 
-def test_compact_files_round_robin_branch(spark, tmp_path):
-    """compact_files without preserve_sort: plain repartition —
-    row-exact, byte-sized file count, no ordering promise."""
-    import glob
-
-    from firebird_mapreduce_spark.operators.layout import compact_files
-    from firebird_mapreduce_spark.sources import load_table
-
-    ev = load_table(spark, SF_SMOKE, "events").select("event_id")
-    path = str(tmp_path / "rr")
-    ev.repartition(32).write.mode("overwrite").parquet(path)
-    rows = ev.count()
-    n_out = compact_files(spark, path, target_bytes=10**12)  # everything fits
-    assert n_out == 1
-    assert len(glob.glob(path + "/*.parquet")) == 1
-    assert spark.read.parquet(path).count() == rows
-
-
 def test_lateral_decorrelates_to_window_group_limit(spark):
     """The correlated LATERAL must not execute as a per-row subquery:
     Catalyst rewrites it to a ranked join whose WindowGroupLimit prunes
@@ -680,77 +553,6 @@ def test_lateral_decorrelates_to_window_group_limit(spark):
     assert count_exchanges(df) == 1
     rows = df.collect()
     assert len(rows) == 50  # 25 nations x top-2
-
-
-def test_compact_files_recovers_from_crash_and_sizes_partitioned_dirs(
-    spark, tmp_path
-):
-    """Crash-safety + partitioned sizing for compact_files:
-
-    (a) a ``_compact_old`` stranded by a crash BETWEEN the two swap
-    renames (path missing) is restored on the next run; (b) one stranded
-    AFTER the swap (path present) is deleted so the rename can land; and
-    (c) a Hive-partitioned layout (data in subdirectories) sums its real
-    byte size, so the output file count respects target_bytes instead of
-    collapsing to 1."""
-    import glob
-    import os
-    import shutil
-
-    from firebird_mapreduce_spark.operators.layout import compact_files
-    from firebird_mapreduce_spark.sources import load_table
-
-    ev = load_table(spark, SF_SMOKE, "events").select("event_id", "user_id")
-    rows = ev.count()
-
-    # (a) crash between renames: only _compact_old exists
-    path = str(tmp_path / "crashed_mid")
-    ev.repartition(8).write.mode("overwrite").parquet(path)
-    os.rename(path, path + "_compact_old")
-    assert not os.path.exists(path)
-    n_out = compact_files(spark, path, target_bytes=10**12)
-    assert n_out == 1
-    assert spark.read.parquet(path).count() == rows
-    assert not os.path.exists(path + "_compact_old")
-
-    # (b) crash after swap, before cleanup: both dirs exist
-    path2 = str(tmp_path / "crashed_post")
-    ev.repartition(8).write.mode("overwrite").parquet(path2)
-    shutil.copytree(path2, path2 + "_compact_old")
-    compact_files(spark, path2, target_bytes=10**12)
-    assert spark.read.parquet(path2).count() == rows
-    assert not os.path.exists(path2 + "_compact_old")
-
-    # (c) Hive-partitioned input: bytes live under user_id=*/ subdirs
-    part = str(tmp_path / "partitioned")
-    ev.write.mode("overwrite").partitionBy("user_id").parquet(part)
-    nested = glob.glob(part + "/user_id=*/*.parquet")
-    assert nested, "precondition: partitioned layout"
-    total = sum(os.path.getsize(f) for f in nested)
-    n_out = compact_files(spark, part, target_bytes=max(1, total // 4))
-    assert n_out >= 2, "partitioned bytes must be counted, not sized as 0"
-    assert spark.read.parquet(part).count() == rows
-
-    # (d) single-writer enforcement (ADVICE r5): a held lock makes a
-    # second compaction of the same path fail loudly BEFORE it touches
-    # the first one's tmp/old recovery state, and the loser releases
-    # nothing it does not own — the path itself stays intact
-    import pytest as _pytest
-
-    from firebird_mapreduce_spark.sources.versioned import (
-        ConcurrentCommitError,
-    )
-
-    lock = path2 + "_compact.lock"
-    with open(lock, "w") as fh:
-        fh.write("99999@elsewhere")
-    with _pytest.raises(ConcurrentCommitError, match="single-writer"):
-        compact_files(spark, path2, target_bytes=10**12)
-    os.unlink(lock)
-    # lock is released on the success path → a rerun lands
-    compact_files(spark, path2, target_bytes=10**12)
-    assert spark.read.parquet(path2).count() == rows
-    assert not os.path.exists(lock)
 
 
 def test_z3_z4_match_reference_interleave_in_both_engines(spark):

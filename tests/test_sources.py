@@ -1,5 +1,5 @@
-"""Source/sink connector tests: CSV, JSON, edge-list text (the reference's
-graph format), binary-file ingestion, and partitioned parquet round-trip."""
+"""Source connector tests: edge-list text (the reference's graph
+format), binary-file ingestion, and the corpus table reader."""
 
 from __future__ import annotations
 
@@ -7,12 +7,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from firebird_mapreduce_spark.sources import (
-    read_binary_dir,
-    read_csv,
-    read_json,
-    write_parquet,
-)
+from firebird_mapreduce_spark.sources import read_binary_dir
 from firebird_mapreduce_spark.sources.readers import read_edge_list
 
 # the reference's checked-in small.graph, byte for byte
@@ -31,20 +26,6 @@ def test_read_edge_list_reference_format(spark, tmp_path):
     assert edges.filter((F.col("src") == 0) & (F.col("dst") == 2)).count() == 2
 
 
-def test_csv_round_trip(spark, tmp_path):
-    path = str(tmp_path / "t.csv")
-    (tmp_path / "t.csv").write_text("a,b\n1,x\n2,y\n")
-    df = read_csv(spark, path, schema="a INT, b STRING")
-    assert {(r["a"], r["b"]) for r in df.collect()} == {(1, "x"), (2, "y")}
-
-
-def test_json_lines(spark, tmp_path):
-    path = str(tmp_path / "t.jsonl")
-    (tmp_path / "t.jsonl").write_text('{"a": 1, "b": "x"}\n{"a": 2, "b": "y"}\n')
-    df = read_json(spark, path, schema="a INT, b STRING")
-    assert df.count() == 2
-
-
 def test_binary_dir_source(spark, tmp_path):
     (tmp_path / "img1.bin").write_bytes(b"\x00\x01\x02")
     (tmp_path / "img2.bin").write_bytes(b"\x03\x04")
@@ -54,41 +35,6 @@ def test_binary_dir_source(spark, tmp_path):
     assert set(rows) == {"img1.bin", "img2.bin"}
     assert rows["img1.bin"]["length"] == 3
     assert bytes(rows["img2.bin"]["content"]) == b"\x03\x04"
-
-
-def test_partitioned_parquet_write(spark, tmp_path):
-    df = spark.createDataFrame(
-        [(1, "a", 10.0), (2, "b", 20.0), (3, "a", 30.0)],
-        "id bigint, part string, v double",
-    )
-    out = str(tmp_path / "out")
-    write_parquet(df, out, partition_by=["part"])
-    # partition directories exist -> partition pruning is possible
-    assert sorted(
-        d for d in os.listdir(out) if d.startswith("part=")
-    ) == ["part=a", "part=b"]
-    back = spark.read.parquet(out)
-    assert back.count() == 3
-    assert {r["v"] for r in back.filter(F.col("part") == "a").collect()} == {10.0, 30.0}
-
-
-def test_orc_round_trip(spark, tmp_path):
-    """ORC sink → ORC scan reproduces the table (the second columnar
-    format; same V2 reader path as parquet)."""
-    from firebird_mapreduce_spark.sources.readers import read_orc, write_orc
-
-    src = spark.range(100).select(
-        F.col("id"),
-        (F.col("id") % 7).alias("grp"),
-        F.md5(F.col("id").cast("string")).alias("tag"),
-    )
-    path = str(tmp_path / "orc_rt")
-    write_orc(src, path, partition_by=["grp"])
-    back = read_orc(spark, path)
-    assert back.count() == 100
-    want = {(r["id"], r["tag"]) for r in src.collect()}
-    got = {(r["id"], r["tag"]) for r in back.collect()}
-    assert got == want
 
 
 def test_nanos_conf_restored_after_load(spark):

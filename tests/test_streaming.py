@@ -842,104 +842,6 @@ def test_rocksdb_and_hdfs_state_stores_produce_identical_sessions(spark):
     assert len(out["rocksdb"]) > 100  # non-vacuous
 
 
-def test_tws_processor_matches_independent_sessionization():
-    """The transformWithStateInPandas SessionProcessor's
-    ``handleInputRows``, driven directly with a fake ValueState across
-    THREE micro-batches (the protobuf runtime its real handle needs is
-    absent in this container), must reproduce an independently computed
-    single-pass sessionization — including a session spanning a batch
-    boundary, an exactly-at-gap MERGE (closed boundary, matching the
-    built-in session_window — see tests/test_analytics.py), and a
-    gap+1µs split."""
-    import pandas as pd
-
-    from firebird_mapreduce_spark.streaming.jobs import (
-        make_session_processor,
-    )
-
-    gap_us = 10 * 60 * 1_000_000
-    base = 1_700_000_000_000_000  # event-time micros
-
-    class FakeValueState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-    class FakeHandle:
-        def getValueState(self, name, schema, ttlDurationMs=None):
-            return FakeValueState()
-
-    proc = make_session_processor(gap_us)
-    proc.init(FakeHandle())
-
-    batches = [
-        [base, base + gap_us - 1],          # one open session
-        [base + 2 * gap_us - 2],            # extends it across the boundary
-        # == gap still MERGES (closed boundary); the +1 then SPLITS
-        [base + 3 * gap_us - 2, base + 4 * gap_us - 1],
-    ]
-    emitted = []
-    for b in batches:
-        pdf = pd.DataFrame({"ts": [pd.Timestamp(t * 1000) for t in b]})
-        for out in proc.handleInputRows((7,), iter([pdf]), None):
-            emitted.append(out)
-    final = (
-        pd.concat(emitted)
-        .sort_values(["session_start", "session_end"])
-        .groupby(["user_id", "session_start"], as_index=False)
-        .last()
-    )
-    # independent expectation: single pass over ALL events
-    all_ts = sorted(t for b in batches for t in b)
-    sessions, cur = [], [all_ts[0]]
-    for t in all_ts[1:]:
-        if t - cur[-1] <= gap_us:  # closed boundary, like the built-in
-            cur.append(t)
-        else:
-            sessions.append(cur)
-            cur = [t]
-    sessions.append(cur)
-    expect = [
-        (7, s[0], s[-1] + gap_us, len(s)) for s in sessions
-    ]
-    got = [
-        (
-            r.user_id,
-            r.session_start.value // 1000,
-            r.session_end.value // 1000,
-            r.n_events,
-        )
-        for r in final.itertuples(index=False)
-    ]
-    assert got == expect
-    # the boundary cases actually fired: batch 2 EXTENDED the carried
-    # session, the ==gap delta MERGED (4 events), the +1µs delta SPLIT
-    assert [n for _, _, _, n in expect] == [4, 1]
-
-
-def test_tws_sessionizer_matches_groupstate_e2e(spark):
-    """Full-replay parity of the v2 transformWithStateInPandas
-    sessionizer against the GroupState spelling — runs only where the
-    v2 state IPC's protobuf runtime exists."""
-    pytest.importorskip("google.protobuf")
-    from firebird_mapreduce_spark.streaming.jobs import (
-        custom_session_query,
-        tws_session_query,
-    )
-
-    a = _rows(tws_session_query(spark, SF_SMOKE))
-    b = _rows(custom_session_query(spark, SF_SMOKE))
-    assert a == b and len(a) > 100
-
-
 def test_versioned_table_schema_evolution_per_snapshot(spark, tmp_path):
     """Schema evolution across versions: each version is a self-contained
     snapshot, so a later commit may ADD a column — the latest read serves
