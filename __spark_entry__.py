@@ -256,7 +256,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # declarative twin of the driver-looped fixpoint operators
         "recursive_cte_reachability": G.recursive_cte_reachability,
         # r5: incremental materialized-view maintenance (foreachBatch
-        # additive merge into the versioned aggregate table)
+        # additive merge into a scratch versioned aggregate table)
         "stream_incremental_agg": SJ.stream_incremental_agg_query,
         # r5: train->test n-gram leakage audit over the hash split
         "split_leakage_check": P.split_leakage_check,
@@ -358,10 +358,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # r8: drift -> refit -> swap — the index lifecycle closed: the
         # mean-shifted batch blows out enrollment distance against the
         # v1 corpus index (ratio ~18, trigger fires), v2 refits over
-        # corpus ∪ batch alongside the live index and cuts over via ONE
-        # atomic versioned-table commit, and the batch re-enrolls
-        # in-distribution (ratio ~1); both index versions stay readable
-        # (time travel + idempotence pinned in test_llm_ops.py)
+        # corpus ∪ batch alongside the live index as one more index
+        # table, and the batch re-enrolls in-distribution (ratio ~1);
+        # both index versions stay readable (pinned in test_llm_ops.py)
         "semantic_index_refit": S.semantic_index_refit,
         # r8: the multimodal funnel — curation_pipeline_full's six text
         # stages plus an image near-dup screen (real PNG decode +
@@ -386,8 +385,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the persisted code table's encode dist2, the mean-shifted
         # batch blows it out against v1 (ratio ~31), v2 sub-codebooks
         # refit over corpus ∪ batch under the SAME sampled-fit
-        # discipline and cut over via ONE atomic versioned-table commit,
-        # and the batch re-encodes in-distribution (ratio ~1.08)
+        # discipline into one more index table, and the batch re-encodes
+        # in-distribution (ratio ~1.08)
         "pq_index_refit": S.pq_index_refit,
         # r9 (semantic tier r11): the daily-crawl integration — ONE
         # multimodal batch runs every tier's incremental screen (exact

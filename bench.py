@@ -154,8 +154,8 @@ HEADLINE = [
     "embedding_knn_ivfpq_incremental",
     # r8: the audio tier — map-only WAV decode + fingerprint, band join
     "dedup_audio_fingerprint",
-    # r8: drift -> refit -> swap; run 0 pays the v2 fit + both commits,
-    # runs 1+ are the versioned-read + four enrollment scores
+    # r8: drift -> refit -> swap; run 0 pays the v2 fit + its table
+    # write, runs 1+ read both index tables + four enrollment scores
     "semantic_index_refit",
     # r11: the NINE-stage funnel (SemDeDup + image + audio screens) —
     # supersets curation_pipeline_multimodal, which retires to it
@@ -163,9 +163,9 @@ HEADLINE = [
     # r8: the audio ingest screen — run 0 pays the state writes, runs
     # 1+ are the batch-vs-state membership probe
     "dedup_audio_fingerprint_incremental",
-    # r9: the PQ codebook refit — run 0 pays the v2 sampled fit + both
-    # versioned commits, runs 1+ are the four encode means (the v2 fit
-    # side re-encodes corpus ∪ batch — the refit's real steady cost)
+    # r9: the PQ codebook refit — run 0 pays the v2 sampled fit + the
+    # encode tables' writes, runs 1+ are the four encode means over the
+    # stored encode tables
     "pq_index_refit",
     # r9: the daily-crawl integration — run 0 pays the six state tables
     # + both media fixture writes, runs 1+ are one batch through all

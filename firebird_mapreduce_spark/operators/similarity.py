@@ -2586,52 +2586,26 @@ DRIFTED_BATCH_SQL = """
 """
 
 
-def _versioned_index_table(
-    spark: SparkSession,
-    sf_dir: str,
-    prefix: str,
-    key_cols: list[str] | None = None,
-):
-    """The refit queries' shared VERSIONED INDEX handle: sweep
-    same-prefix version directories left by an OLDER corpus
-    (``drop_generations`` — a refit index is corpus-sized, so an orphan
-    is real disk), then open the content-tagged
-    ``VersionedParquetTable`` whose commit log is the consumer-facing
-    version pointer."""
-    import os
-
-    from ..sources.versioned import VersionedParquetTable
-    from .relational import corpus_tag, drop_generations, warehouse_path
-
-    tbl = f"{prefix}{corpus_tag(sf_dir, 'embeddings')}"
-    drop_generations(spark, prefix, keep=tbl)
-    return VersionedParquetTable(
-        os.path.join(warehouse_path(spark), tbl),
-        key_cols=key_cols or ["cluster", "d"],
-    )
-
-
 def semantic_index_refit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DRIFT → REFIT → SWAP: the index lifecycle closed (VERDICT r7
     item 3 — a drift trigger fired and nothing consumed it).
     One oracle-backed query demonstrating the full loop on the
-    versioned-table machinery:
+    persisted index tables:
 
-      v1       the corpus k-means centroids (the SAME exact-decimal fit
-               every IVF consumer reads) committed as VERSION 1 of a
-               ``VersionedParquetTable`` — the commit log is the
-               consumer-facing pointer;
+      v1       the corpus k-means centroids — the shared
+               ``ensure_centroid_table`` every IVF consumer reads, not
+               a copy of it;
       drift    the mean-shifted batch (``drifted_embedding_batch``)
                enrolls against v1: its mean squared enrollment distance
                blows out vs the corpus's own mean (ratio ≈ 17 on this
                fixture — d·0.25 of shift against a ~0.95 fit mean), so
                ``refit_recommended`` fires;
       refit    v2 = the same exact-decimal Lloyd's schedule over
-               corpus ∪ batch, committed as VERSION 2 — write-alongside
-               + atomic log append (``os.replace``), so a reader never
-               sees a half-swapped index and v1 stays readable (time
-               travel — pinned in test_llm_ops.py, with idempotence:
-               re-running the query commits nothing new);
+               corpus ∪ batch, written beside v1 as one more index
+               table (``semidx_<tag>``, ``_index_table``): content-tagged,
+               written once per corpus and swept with every other
+               generation, so v1 stays readable and re-running the
+               query writes nothing (pinned in test_llm_ops.py);
       after    the batch re-enrolls against v2 back in-distribution
                (its vectors are inside the v2 fit), ratio ≈ 1.
 
@@ -2641,17 +2615,14 @@ def semantic_index_refit(spark: SparkSession, sf_dir: str) -> DataFrame:
     same-generation discipline the r7 advice fixed in the drift
     helper).  The DuckDB oracle replays both fits as side-by-side CTE
     chains (the IVFPQ two-chain trick) plus the four enrollment scores
-    — the refit SEMANTICS are hash-verified; the swap MECHANICS
-    (atomic cutover, old-version readability) are the versioned table's
-    tested contract.
+    — the refit SEMANTICS are hash-verified.
 
-    At 100 TB: the refit runs alongside the live index (content-tagged
-    tables coexist), the cutover is one commit-log append, and consumers
-    pin a version for a whole job — enrollment-only maintenance between
-    refits is ``dedup_semantic_incremental``/
-    ``embedding_knn_ivfpq_incremental``; this query is the escape hatch
-    when the drift trigger (``_drift_trigger_frame``) says assign-only
-    has decayed."""
+    At 100 TB: the refit runs alongside the live index (the two tables
+    coexist under different names) and a consumer swaps by reading the
+    v2 table — enrollment-only maintenance between refits is
+    ``dedup_semantic_incremental``/``embedding_knn_ivfpq_incremental``;
+    this query is the escape hatch when the drift trigger
+    (``_drift_trigger_frame``) says assign-only has decayed."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     corpus = emb.select(
         "vec_id",
@@ -2660,21 +2631,16 @@ def semantic_index_refit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     batch = drifted_embedding_batch(spark, sf_dir)
-    vtab = _versioned_index_table(spark, sf_dir, f"semidx_{_COARSE_TAG}_")
-    latest = vtab.latest_version()  # commit-log versions are 0-based
-    if latest is None:
-        # v1 = the shared corpus index artifacts, committed (log v0)
-        assign = ensure_kmeans_exact_table(spark, sf_dir, "raw", emb)
-        vtab.commit(ensure_centroid_table(spark, sf_dir, "raw", emb, assign))
-        latest = 0
-    if latest == 0:
-        # the refit: fit v2 over corpus ∪ batch ALONGSIDE the live v1,
-        # then one atomic commit is the cutover (resumable: a crash
-        # before the commit leaves v1 live and this branch re-runs)
-        union = corpus.unionByName(batch)
+    union = corpus.unionByName(batch)
+    assign = ensure_kmeans_exact_table(spark, sf_dir, "raw", emb)
+    v1 = ensure_centroid_table(spark, sf_dir, "raw", emb, assign)
+
+    def refit() -> DataFrame:
+        # v2 over corpus ∪ batch, fitted ALONGSIDE the live v1
         fit2, comp2 = _kmeans_exact_fit(union)
-        cent2 = _exact_centroids(comp2, fit2.select("vec_id", "cluster"))
-        vtab.commit(cent2)
+        return _exact_centroids(comp2, fit2.select("vec_id", "cluster"))
+
+    v2 = _index_table(spark, sf_dir, f"semidx_{_COARSE_TAG}_", ["d"], refit)
 
     def score(frame: DataFrame, cent: DataFrame, version: int):
         enrolled = _assign_to_centroids_arrays(frame, cent)
@@ -2685,8 +2651,7 @@ def semantic_index_refit(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("mean_dist2"),
         ).select(F.lit(version).alias("version"), "n", "mean_dist2")
 
-    def report(version: int, fit_frame: DataFrame) -> DataFrame:
-        cent = vtab.read(spark, version=version - 1)
+    def report(version: int, fit_frame: DataFrame, cent: DataFrame):
         fit_side = score(fit_frame, cent, version).select(
             "version",
             F.col("n").alias("n_fit"),
@@ -2709,9 +2674,7 @@ def semantic_index_refit(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return report(1, corpus).unionByName(
-        report(2, corpus.unionByName(batch))
-    )
+    return report(1, corpus, v1).unionByName(report(2, union, v2))
 
 
 def pq_index_refit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2720,8 +2683,8 @@ def pq_index_refit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the one maintenance loop still open after r8):
 
       v1       the sampled-fit sub-codebook centroids every IVFPQ
-               consumer reads (``ensure_pq_centroid_table``) committed
-               as VERSION 1 of a ``VersionedParquetTable``;
+               consumer reads — the shared ``ensure_pq_centroid_table``,
+               not a copy of it;
       drift    the mean-shifted batch (``drifted_embedding_batch``)
                PQ-encodes ASSIGN-ONLY against v1 (``encode_pq_batch``'s
                arithmetic — ``_pq_assign_arrays`` over the batch's
@@ -2733,10 +2696,10 @@ def pq_index_refit(spark: SparkSession, sf_dir: str) -> DataFrame:
       refit    v2 sub-codebooks over corpus ∪ batch under the SAME
                sampled-fit discipline (``_pq_fit_sample`` of the union
                → one subspace-pure exact fit — codebook training stays
-               bounded even when the refit input doubles), committed as
-               VERSION 2 — write-alongside + atomic log append, v1
-               stays readable (time travel; swap atomicity +
-               idempotence pinned in test_llm_ops.py);
+               bounded even when the refit input doubles), written
+               beside v1 as one more index table (``pqidx_<tag>``,
+               ``_index_table``), so v1 stays readable and re-running
+               the query writes nothing (pinned in test_llm_ops.py);
       after    the batch re-encodes against v2 back in-distribution
                (both drift modes now have sub-centroids), ratio ≈ 1.
 
@@ -2756,15 +2719,14 @@ def pq_index_refit(spark: SparkSession, sf_dir: str) -> DataFrame:
     second encode).  The DuckDB oracle replays BOTH sampled
     sub-codebook fits as side-by-side CTE chains (the
     ``_pq_fit_cte_chain`` source/prefix parameterization) plus the four
-    encode means — refit SEMANTICS hash-verified; swap MECHANICS are
-    the versioned table's tested contract.
+    encode means — refit SEMANTICS hash-verified.
 
     At 100 TB: codebook training is sample-bounded on BOTH sides of the
     cutover, the full re-encode is the one corpus-scale pass (map-only
     against broadcast centroids — embarrassingly parallel, materialized
-    once as the new serving artifact), and the commit-log append means
-    ADC servers never see a half-swapped codebook; between refits the
-    tier runs assign-only (``embedding_knn_ivfpq_incremental``)."""
+    once as the new serving artifact), and ADC servers swap by reading
+    the v2 codebook table once its write has finished; between refits
+    the tier runs assign-only (``embedding_knn_ivfpq_incremental``)."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     corpus = emb.select(
         "vec_id",
@@ -2773,22 +2735,17 @@ def pq_index_refit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     batch = drifted_embedding_batch(spark, sf_dir)
-    vtab = _versioned_index_table(spark, sf_dir, f"pqidx_{_PQ_TAG}_")
-    latest = vtab.latest_version()  # commit-log versions are 0-based
-    if latest is None:
-        # v1 = the shared sampled-fit sub-codebooks, committed (log v0)
-        vtab.commit(ensure_pq_centroid_table(spark, sf_dir, emb))
-        latest = 0
-    if latest == 0:
-        # the refit: v2 sub-codebooks over corpus ∪ batch ALONGSIDE the
-        # live v1 — same sampled-fit discipline, then one atomic commit
-        # is the cutover (resumable: a crash before the commit leaves
-        # v1 live and this branch re-runs)
-        union = corpus.unionByName(batch)
+    union = corpus.unionByName(batch)
+    v1 = ensure_pq_centroid_table(spark, sf_dir, emb)
+
+    def refit() -> DataFrame:
+        # v2 sub-codebooks over corpus ∪ batch ALONGSIDE the live v1,
+        # under the same sampled-fit discipline
         sub2 = _pq_subvectors(_pq_fit_sample(union))
-        fit2, comp2 = _kmeans_exact_fit(sub2, PQ_M * PQ_KSUB, PQ_ITERATIONS)
-        cent2 = _exact_centroids(comp2, fit2.select("vec_id", "cluster"))
-        vtab.commit(cent2)
+        fit, comp = _kmeans_exact_fit(sub2, PQ_M * PQ_KSUB, PQ_ITERATIONS)
+        return _exact_centroids(comp, fit.select("vec_id", "cluster"))
+
+    v2 = _index_table(spark, sf_dir, f"pqidx_{_PQ_TAG}_", ["d"], refit)
     # the four encode passes, all persisted pay-once (the trigger reads
     # STORED encode dist2): v1-corpus = the shared code table; v1-batch
     # and v2-union written at cutover; v2-batch = a filter of the union
@@ -2798,19 +2755,14 @@ def pq_index_refit(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         f"pqr_b1_{_PQ_TAG}_",
         ["vec_id"],
-        lambda: _pq_assign_arrays(
-            _pq_subvectors(batch), vtab.read(spark, version=0)
-        ),
+        lambda: _pq_assign_arrays(_pq_subvectors(batch), v1),
     )
     fit2 = _index_table(
         spark,
         sf_dir,
         f"pqr_f2_{_PQ_TAG}_",
         ["vec_id"],
-        lambda: _pq_assign_arrays(
-            _pq_subvectors(corpus.unionByName(batch)),
-            vtab.read(spark, version=1),
-        ),
+        lambda: _pq_assign_arrays(_pq_subvectors(union), v2),
     )
     bat2 = fit2.filter(F.col("vec_id") >= 500000 * PQ_M)
 

@@ -1,12 +1,18 @@
 """Versioned parquet table: atomic snapshot commits, time travel, and an
-idempotent CDC-apply streaming sink — the minimum table-format contract
+idempotent additive streaming sink — the minimum table-format contract
 (what Delta/Iceberg provide) built from plain parquet + an append-only
 JSON commit log, for environments without a lakehouse format.
 
 Reference parity note: the reference engine has no persistent sink at
 all (results live in ``std::vector``, ``firebird.h:174-179``); this
-module exists for the production streaming posture — `foreachBatch`
-upsert with exactly-once semantics under batch retries.
+module exists for the streaming posture — an additive `foreachBatch`
+sink with exactly-once semantics under batch retries.
+
+SCRATCH-LOCAL BY CONTRACT: every I/O on the log and the lock is a local
+``os`` call, so a table lives in a driver-local scratch directory (the
+additive replays of ``streaming.jobs`` open it under
+``tempfile.mkdtemp``), never in the warehouse.  Persisted index
+artifacts are warehouse tables (``relational.ensure_layout_table``).
 
 Design (all driver-side metadata, all data distributed):
 - Each commit writes a FULL snapshot to ``<path>/v<version>/`` and then
@@ -17,18 +23,12 @@ Design (all driver-side metadata, all data distributed):
   the next commit overwrites.
 - Readers resolve the latest (or any historical) version from the log —
   snapshot isolation and time travel for free.
-- ``apply_cdc_batch`` records the micro-batch id in the commit line;
-  re-delivery of an already-applied batch (Structured Streaming retries
-  after a failure BEFORE the sink's effect was recorded) is detected and
-  skipped, which upgrades foreachBatch's at-least-once contract to
-  exactly-once — the idempotent-sink recipe from the Spark docs, made
-  concrete.
-
-At 100 TB a full-snapshot-per-commit is the right shape ONLY for
-dimension-sized tables (the CDC target here); fact-scale targets want
-partition-level rewrites (merge keys bucketed, rewrite only touched
-buckets) — the commit-log mechanics stay identical, the snapshot write
-narrows to changed buckets.
+- ``apply_additive_batch`` records the micro-batch id in the commit
+  line; re-delivery of an already-applied batch (Structured Streaming
+  retries after a failure BEFORE the sink's effect was recorded) is
+  detected and skipped, which upgrades foreachBatch's at-least-once
+  contract to exactly-once — the idempotent-sink recipe from the Spark
+  docs, made concrete.
 """
 
 from __future__ import annotations
@@ -42,8 +42,6 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as _F
 
-from ..operators.relational import merge_upsert
-
 
 class ConcurrentCommitError(RuntimeError):
     """A second committer raced the single-writer commit log."""
@@ -56,16 +54,14 @@ class VersionedParquetTable:
     snapshot N.  The log is the source of truth — orphan snapshot dirs
     (crash between data write and log append) are invisible to readers.
 
-    CONCURRENCY CONTRACT: one writer per table.  Every mutating method
-    (``commit``, ``apply_cdc_batch``, ``vacuum``) holds an ``O_EXCL``
-    lock file for its ENTIRE read-modify-write — version selection,
-    dedupe check, snapshot data write/delete, and log rewrite all happen
-    under the lock, not just the final log append.  A second committer
-    raises ``ConcurrentCommitError`` loudly: lost history is the one
-    failure the batch-id dedupe contract cannot survive, and a
-    lock-scoped-to-the-log-write-only would still let two committers
-    pick the same version or let a vacuum erase a commit that landed
-    between its log read and log rewrite.  (Real table formats solve
+    CONCURRENCY CONTRACT: one writer per table.  The one mutating method
+    (``apply_additive_batch``) holds an ``O_EXCL`` lock file for its
+    ENTIRE read-modify-write — dedupe check, version selection, snapshot
+    data write, and log rewrite all happen under the lock, not just the
+    final log append.  A second committer raises ``ConcurrentCommitError``
+    loudly: lost history is the one failure the batch-id dedupe contract
+    cannot survive, and a lock-scoped-to-the-log-write-only would still
+    let two committers pick the same version.  (Real table formats solve
     this with optimistic-concurrency commit protocols; a second
     foreachBatch query targeting the same table should use its own
     table path or serialize through one query.)
@@ -102,15 +98,11 @@ class VersionedParquetTable:
         log = self.commits()
         if not log:
             raise ValueError(f"versioned table at {self.path} has no commits")
-        by_version = {c["version"]: c for c in log}
+        versions = [c["version"] for c in log]
         if version is None:
-            version = log[-1]["version"]
-        elif version not in by_version:
-            raise ValueError(
-                f"version {version} not in commit log {sorted(by_version)}"
-            )
-        if by_version[version].get("vacuumed"):
-            raise ValueError(f"version {version} was vacuumed; data removed")
+            version = versions[-1]
+        elif version not in versions:
+            raise ValueError(f"version {version} not in commit log {versions}")
         return spark.read.parquet(os.path.join(self.path, f"v{version}"))
 
     @contextmanager
@@ -188,49 +180,6 @@ class VersionedParquetTable:
                 fh.write(json.dumps(e) + "\n")
         os.replace(tmp, self._log_path)
 
-    def _commit_locked(self, df: DataFrame, batch_id: int | None) -> int:
-        # version selection AND data write under the caller's lock: a
-        # lock scoped to the log append alone would let two committers
-        # pick the same version and overwrite each other's snapshot dir
-        latest = self.latest_version()
-        version = 0 if latest is None else latest + 1
-        df.write.mode("overwrite").parquet(os.path.join(self.path, f"v{version}"))
-        self._rewrite_log(
-            self.commits() + [{"version": version, "batch_id": batch_id}]
-        )
-        return version
-
-    def commit(self, df: DataFrame, batch_id: int | None = None) -> int:
-        """Write ``df`` as the next snapshot and log it. Returns the new
-        version number."""
-        with self._commit_lock("commit"):
-            return self._commit_locked(df, batch_id)
-
-    def apply_cdc_batch(self, updates: DataFrame, batch_id: int) -> bool:
-        """foreachBatch body: merge ``updates`` into the latest snapshot
-        (update-wins on ``key_cols``) and commit — SKIPPING batches whose
-        id is already in the log, so sink retries cannot double-apply.
-        Returns True if applied, False if skipped as a duplicate.  The
-        dedupe check, merge read, and commit run under ONE lock scope so
-        a racing committer cannot slip between check and apply."""
-        with self._commit_lock(f"apply batch {batch_id}"):
-            if batch_id in self.applied_batch_ids():
-                return False
-            spark = updates.sparkSession
-            if self.latest_version() is None:
-                merged = updates
-                if self.key_cols:
-                    merged = merge_upsert(
-                        updates.limit(0), updates, self.key_cols
-                    )
-            else:
-                merged = merge_upsert(self.read(spark), updates, self.key_cols)
-            # the merge reads the CURRENT snapshot and writes the NEXT
-            # dir, so there is no read-overwrite hazard and no
-            # checkpoint/localCheckpoint is needed before the write
-            self._commit_locked(merged, batch_id=batch_id)
-            return True
-
     def apply_additive_batch(
         self, updates: DataFrame, batch_id: int, sum_cols: list[str]
     ) -> bool:
@@ -239,11 +188,11 @@ class VersionedParquetTable:
         count/sum columns) into the stored aggregate via
         ``merge_additive`` — the foreachBatch body that keeps a
         materialized view fresh with aggregate-sized state instead of
-        replaying event history.  Same exactly-once contract as
-        ``apply_cdc_batch``: duplicate batch ids are skipped under the
-        single-writer lock, so a sink retry cannot double-add a delta —
-        which for an ADDITIVE merge would silently corrupt every total
-        rather than merely rewrite a row."""
+        replaying event history.  Exactly-once: duplicate batch ids are
+        skipped under the single-writer lock, so a sink retry cannot
+        double-add a delta — which for an ADDITIVE merge would silently
+        corrupt every total rather than merely rewrite a row.  Returns
+        True if applied, False if skipped as a duplicate."""
         from ..operators.relational import merge_additive
 
         with self._commit_lock(f"apply additive batch {batch_id}"):
@@ -264,56 +213,21 @@ class VersionedParquetTable:
                     for c in sum_cols
                 ]
             )
-            if self.latest_version() is None:
+            latest = self.latest_version()
+            if latest is None:
                 merged = updates
             else:
                 merged = merge_additive(
                     self.read(spark), updates, self.key_cols, sum_cols
                 )
-            self._commit_locked(merged, batch_id=batch_id)
-            return True
-
-    def vacuum(self, keep_last: int = 2) -> list[int]:
-        """Drop snapshot DATA for all but the newest ``keep_last``
-        versions (every table format's retention story: full history in
-        the log forever, bounded bytes on disk).  Vacuumed versions stay
-        in the commit log flagged ``vacuumed`` — the batch-id dedupe
-        contract is unaffected, and a time-travel read of a vacuumed
-        version raises a clear error instead of returning a half-state.
-        Returns the versions whose data was removed.  The log read, data
-        deletion, and log rewrite run under ONE lock scope — a commit
-        landing mid-vacuum can neither lose its log line nor have its
-        fresh snapshot deleted."""
-        import shutil
-
-        with self._commit_lock("vacuum"):
-            log = self.commits()
-            if len(log) <= keep_last:
-                return []
-            # keep_last=0 must keep NOTHING — log[-0:] slices the WHOLE
-            # log, the classic negative-slice footgun
-            keep = (
-                {c["version"] for c in log[-keep_last:]}
-                if keep_last > 0
-                else set()
+            # version selection AND data write under the lock: a lock
+            # scoped to the log append alone would let two committers
+            # pick the same version and overwrite each other's snapshot
+            version = 0 if latest is None else latest + 1
+            merged.write.mode("overwrite").parquet(
+                os.path.join(self.path, f"v{version}")
             )
-            removed = []
-            new_log = []
-            for c in log:
-                if c["version"] not in keep and not c.get("vacuumed"):
-                    snap = os.path.join(self.path, f"v{c['version']}")
-                    if os.path.isdir(snap):
-                        shutil.rmtree(snap)
-                    removed.append(c["version"])
-                    c = {**c, "vacuumed": True}
-                new_log.append(c)
-            self._rewrite_log(new_log)
-        return removed
-
-    def foreach_batch_writer(self):
-        """The callable to hand to ``writeStream.foreachBatch``."""
-
-        def apply(batch_df: DataFrame, batch_id: int) -> None:
-            self.apply_cdc_batch(batch_df, batch_id)
-
-        return apply
+            self._rewrite_log(
+                self.commits() + [{"version": version, "batch_id": batch_id}]
+            )
+            return True

@@ -569,7 +569,10 @@ def test_layout_sweep_removes_stale_dirs_and_files(spark, monkeypatch):
     and another tag's ``_<prefix>…_folded`` and ``._loaded`` markers.
     The current table's own marker goes when the table does not exist
     and survives while it does, and a sibling stem that only shares the
-    prefix's letters survives: the rule matches whole stems."""
+    prefix's letters survives: the rule matches whole stems.  A stale
+    directory at the table's own name (the ``_commits`` + ``v0/`` shape
+    an older build left for the refit index) is replaced by the table
+    on the first call."""
     import os
     import shutil
 
@@ -583,6 +586,10 @@ def test_layout_sweep_removes_stale_dirs_and_files(spark, monkeypatch):
     old_loaded = os.path.join(root, f"_{prefix}old._loaded")
     own_marker = os.path.join(root, f"_{prefix}cur_folded")
     sibling = os.path.join(root, "fb_sweep_tx_cur")
+    own_dir = os.path.join(root, f"{prefix}cur")
+    os.makedirs(os.path.join(own_dir, "v0"), exist_ok=True)
+    with open(os.path.join(own_dir, "_commits"), "w") as fh:
+        fh.write('{"version": 0, "batch_id": null}\n')
     os.makedirs(stale_dir, exist_ok=True)
     with open(os.path.join(stale_dir, "part-0.parquet"), "w") as fh:
         fh.write("stale")
@@ -590,7 +597,12 @@ def test_layout_sweep_removes_stale_dirs_and_files(spark, monkeypatch):
         with open(path, "w") as fh:
             fh.write("stale")
     try:
-        R.ensure_layout_table(spark, prefix, "cur", lambda: spark.range(3), lambda w: w)
+        built = R.ensure_layout_table(
+            spark, prefix, "cur", lambda: spark.range(3), lambda w: w
+        )
+        assert built.count() == 3
+        for stale in ("_commits", "v0"):
+            assert not os.path.exists(os.path.join(own_dir, stale)), stale
         for path in (stale_dir, stale_file, old_marker, old_loaded):
             assert not os.path.exists(path), path
         assert not os.path.exists(own_marker), "a marker outlived its table"
@@ -611,7 +623,8 @@ def test_layout_sweep_removes_stale_dirs_and_files(spark, monkeypatch):
         assert os.path.exists(sibling)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {prefix}cur")
-        shutil.rmtree(stale_dir, ignore_errors=True)
+        for path in (stale_dir, own_dir):
+            shutil.rmtree(path, ignore_errors=True)
         for path in (stale_file, old_marker, old_loaded, own_marker, sibling):
             if os.path.exists(path):
                 os.remove(path)

@@ -1087,20 +1087,14 @@ def test_semantic_incremental_fold_flags_survivor_copies(spark):
 def test_semantic_index_refit_swap_and_time_travel(spark):
     """The drift→refit lifecycle contract beyond the oracle: (a) the
     drifted batch fires the trigger against v1 and is back
-    in-distribution against v2; (b) the swap is a versioned-table
-    cutover — exactly two commits, re-running the query commits nothing
-    new (idempotent), BOTH versions stay readable after the cutover
-    (time travel) and hold different centroids (the refit actually
-    moved the index)."""
-    import os
-
-    from firebird_mapreduce_spark.operators.relational import (
-        corpus_tag,
-        warehouse_path,
-    )
-    from firebird_mapreduce_spark.sources.versioned import (
-        VersionedParquetTable,
-    )
+    in-distribution against v2; (b) v1 IS the shared corpus centroid
+    table (``ensure_centroid_table``) and v2 IS the refit's own index
+    table ``semidx_10x3_<tag>`` — re-scoring the batch against each
+    reproduces that version's reported mean; both stay readable after
+    the refit and hold different centroids (the refit actually moved
+    the index); and re-running the query writes nothing (idempotent)."""
+    from firebird_mapreduce_spark.operators.relational import corpus_tag
+    from firebird_mapreduce_spark.sources import load_table
 
     rows = {
         r["version"]: r
@@ -1109,17 +1103,25 @@ def test_semantic_index_refit_swap_and_time_travel(spark):
     assert rows[1]["refit_recommended"] and rows[1]["drift_ratio"] > 10
     assert not rows[2]["refit_recommended"]
     assert abs(rows[2]["drift_ratio"] - 1.0) < 0.05
-    tag = corpus_tag(SF_SMOKE, "embeddings")
-    vt = VersionedParquetTable(
-        os.path.join(warehouse_path(spark), f"semidx_10x3_{tag}"),
-        ["cluster", "d"],
-    )
-    assert len(vt.commits()) == 2
+    emb = load_table(spark, SF_SMOKE, "embeddings").select("vec_id", "embedding")
+    assign = S.ensure_kmeans_exact_table(spark, SF_SMOKE, "raw", emb)
+    v1 = S.ensure_centroid_table(spark, SF_SMOKE, "raw", emb, assign)
+    v2 = spark.table(f"semidx_10x3_{corpus_tag(SF_SMOKE, 'embeddings')}")
+    batch = S.drifted_embedding_batch(spark, SF_SMOKE)
+    for version, cent in ((1, v1), (2, v2)):
+        enrolled = S._assign_to_centroids_arrays(batch, cent)
+        mean = enrolled.agg(
+            F.round(F.sum("dist2").cast("double") / F.count(F.lit(1)), 6)
+        ).first()[0]
+        assert mean == rows[version]["batch_mean_dist2"], version
+    files = [sorted(t.inputFiles()) for t in (v1, v2)]
     S.semantic_index_refit(spark, SF_SMOKE).collect()
-    assert len(vt.commits()) == 2, "re-run must not re-commit"
-    v0 = {(r["cluster"], r["d"]): r["m"] for r in vt.read(spark, 0).collect()}
-    v1 = {(r["cluster"], r["d"]): r["m"] for r in vt.read(spark, 1).collect()}
-    assert v0 and v1 and v0 != v1, "refit did not change the centroids"
+    assert [sorted(t.inputFiles()) for t in (v1, v2)] == files, (
+        "re-run must not rewrite either index version"
+    )
+    c1 = {(r["cluster"], r["d"]): r["m"] for r in v1.collect()}
+    c2 = {(r["cluster"], r["d"]): r["m"] for r in v2.collect()}
+    assert c1 and c2 and c1 != c2, "refit did not change the centroids"
 
 
 def test_pq_codes_subspace_pure_and_rerank_exact(spark):
@@ -1386,24 +1388,20 @@ def test_pq_index_refit_swap_and_time_travel(spark):
     """The PQ codebook lifecycle contract beyond the oracle (the
     semantic_index_refit pins, PQ edition): (a) the mean-shifted batch
     fires the trigger against the v1 sub-codebooks and re-encodes
-    in-distribution against v2; (b) the swap is a versioned-table
-    cutover — exactly two commits, idempotent re-run, BOTH versions
-    readable after the cutover and holding different centroids; (c)
-    both versions' codebooks stay subspace-COVERING — every subspace
-    retains at least one centroid (a refit that emptied a whole
-    subspace would silently serve no ADC lookups for those code
-    positions) and every present centroid carries all d_sub+1 dims;
-    individual clusters MAY empty under the sampled fit (the graceful
-    degradation ensure_pq_centroid_table documents)."""
-    import os
-
-    from firebird_mapreduce_spark.operators.relational import (
-        corpus_tag,
-        warehouse_path,
-    )
-    from firebird_mapreduce_spark.sources.versioned import (
-        VersionedParquetTable,
-    )
+    in-distribution against v2; (b) v1 IS the shared sampled-fit
+    codebook table (``ensure_pq_centroid_table``) and v2 IS the refit's
+    own index table ``pqidx_16x16x3_<tag>`` — re-encoding the batch
+    against each reproduces that version's reported mean; both stay
+    readable after the refit and hold different centroids, and a re-run
+    writes nothing; (c) both versions' codebooks stay
+    subspace-COVERING — every subspace retains at least one centroid (a
+    refit that emptied a whole subspace would silently serve no ADC
+    lookups for those code positions) and every present centroid
+    carries all d_sub+1 dims; individual clusters MAY empty under the
+    sampled fit (the graceful degradation ensure_pq_centroid_table
+    documents)."""
+    from firebird_mapreduce_spark.operators.relational import corpus_tag
+    from firebird_mapreduce_spark.sources import load_table
 
     rows = {
         r["version"]: r for r in S.pq_index_refit(spark, SF_SMOKE).collect()
@@ -1413,16 +1411,23 @@ def test_pq_index_refit_swap_and_time_travel(spark):
     assert abs(rows[2]["drift_ratio"] - 1.0) < 0.15
     m, ksub = S.PQ_M, S.PQ_KSUB
     assert rows[1]["n_fit"] > 0 and rows[1]["n_batch"] % m == 0
+    emb = load_table(spark, SF_SMOKE, "embeddings").select("vec_id", "embedding")
+    t1 = S.ensure_pq_centroid_table(spark, SF_SMOKE, emb)
     tag = corpus_tag(SF_SMOKE, "embeddings")
-    vt = VersionedParquetTable(
-        os.path.join(warehouse_path(spark), f"pqidx_{m}x{ksub}x3_{tag}"),
-        ["cluster", "d"],
-    )
-    assert len(vt.commits()) == 2
+    t2 = spark.table(f"pqidx_{m}x{ksub}x3_{tag}")
+    sub = S._pq_subvectors(S.drifted_embedding_batch(spark, SF_SMOKE))
+    for version, cent in ((1, t1), (2, t2)):
+        mean = S._pq_assign_arrays(sub, cent).agg(
+            F.round(F.sum("dist2").cast("double") / F.count(F.lit(1)), 6)
+        ).first()[0]
+        assert mean == rows[version]["batch_mean_dist2"], version
+    files = [sorted(t.inputFiles()) for t in (t1, t2)]
     S.pq_index_refit(spark, SF_SMOKE).collect()
-    assert len(vt.commits()) == 2, "re-run must not re-commit"
-    v0 = {(r["cluster"], r["d"]): r["m"] for r in vt.read(spark, 0).collect()}
-    v1 = {(r["cluster"], r["d"]): r["m"] for r in vt.read(spark, 1).collect()}
+    assert [sorted(t.inputFiles()) for t in (t1, t2)] == files, (
+        "re-run must not rewrite either codebook version"
+    )
+    v0 = {(r["cluster"], r["d"]): r["m"] for r in t1.collect()}
+    v1 = {(r["cluster"], r["d"]): r["m"] for r in t2.collect()}
     assert v0 and v1 and v0 != v1, "refit did not move the codebooks"
     d_sub = 64 // m
     for v in (v0, v1):

@@ -10,8 +10,15 @@ identifiers (registries keyed by name).  Matching by bare name
 over-approximates reachability — a mention of ``count`` reaches every
 ``count`` — so the walk can miss dead code but never flags live code.
 
-A top-level function or class that no root reaches must be on
-``ALLOWED``, with the reason it stays.
+The methods of a package class with no base class are walked on
+their own: a mention of the method's name reaches it, the class's other
+statements reach nothing of it, and dunders (which Python calls
+implicitly) go with the class.  A class with a base is a Spark plug-in
+whose overrides Spark calls (``EdgeListReader.pushFilters``,
+``EventGenStreamReader.latestOffset``), so it is reached whole.
+
+A top-level function or class, or a walked method, that no root reaches
+must be on ``ALLOWED``, with the reason it stays.
 """
 
 from __future__ import annotations
@@ -42,9 +49,13 @@ ALLOWED = {
 }
 
 
-def _mentions(node: ast.AST) -> set[str]:
+_FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
+_DEFS = (*_FUNCS, ast.ClassDef)
+
+
+def _mentions(*nodes: ast.AST) -> set[str]:
     out = set()
-    for n in ast.walk(node):
+    for n in (sub for node in nodes for sub in ast.walk(node)):
         if isinstance(n, ast.Name):
             out.add(n.id)
         elif isinstance(n, ast.Attribute):
@@ -67,9 +78,22 @@ def _names_only(stmt: ast.stmt) -> bool:
     )
 
 
+def _methods(stmt: ast.stmt) -> list[ast.stmt]:
+    """The methods walked on their own: a base-less class's, dunders
+    aside."""
+    if not isinstance(stmt, ast.ClassDef) or stmt.bases:
+        return []
+    return [
+        m
+        for m in stmt.body
+        if isinstance(m, _FUNCS)
+        and not (m.name.startswith("__") and m.name.endswith("__"))
+    ]
+
+
 def unreached() -> set[str]:
-    """Package-relative names of the top-level functions and classes no
-    root reaches."""
+    """Package-relative names of the top-level functions and classes,
+    and of the walked methods, that no root reaches."""
     modules = {
         ".".join(p.relative_to(ROOT / PKG).with_suffix("").parts): ast.parse(
             p.read_text()
@@ -86,12 +110,20 @@ def unreached() -> set[str]:
         for n in ast.walk(tree):
             if isinstance(n, ast.alias) and n.asname:
                 aliases.setdefault(n.asname, set()).add(n.name.rsplit(".", 1)[-1])
-    defs: dict[str, list[tuple[str, ast.AST]]] = {}
+    # name -> (qualified name, what reaching it mentions)
+    defs: dict[str, list[tuple[str, set[str]]]] = {}
     todo: list[str] = []
     for module, tree in modules.items():
         for stmt in tree.body:
-            if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-                defs.setdefault(stmt.name, []).append((f"{module}.{stmt.name}", stmt))
+            if isinstance(stmt, _DEFS):
+                qual = f"{module}.{stmt.name}"
+                methods = _methods(stmt)
+                shell = [n for n in ast.iter_child_nodes(stmt) if n not in methods]
+                defs.setdefault(stmt.name, []).append((qual, _mentions(*shell)))
+                for m in methods:
+                    defs.setdefault(m.name, []).append(
+                        (f"{qual}.{m.name}", _mentions(m))
+                    )
                 for deco in stmt.decorator_list:
                     todo += _mentions(deco)
             elif not _names_only(stmt):
@@ -105,8 +137,8 @@ def unreached() -> set[str]:
             continue
         reached.add(name)
         todo += aliases.get(name, ())
-        for _, node in defs.get(name, ()):
-            todo += _mentions(node) - reached
+        for _, mentions in defs.get(name, ()):
+            todo += mentions - reached
     return {
         qual
         for name, found in defs.items()

@@ -501,87 +501,6 @@ def test_checkpoint_restart_resumes_exactly_once(spark, tmp_path):
     assert n_batches >= 4, "restart collapsed the replay into one batch"
 
 
-def test_versioned_cdc_sink_exactly_once_with_time_travel(spark, tmp_path):
-    """foreachBatch CDC apply into the versioned parquet table: the
-    4-batch event replay upserts one row per user (update-wins), so the
-    final snapshot must equal the batch argmax-by-(ts,…) answer over the
-    whole corpus; every micro-batch leaves a time-travelable snapshot;
-    and re-delivering an already-applied batch id (the Structured
-    Streaming retry case foreachBatch is documented to require
-    idempotence for) is a no-op — at-least-once upgraded to
-    exactly-once by the commit log."""
-    from firebird_mapreduce_spark.sources.versioned import VersionedParquetTable
-    from firebird_mapreduce_spark.streaming.jobs import (
-        _events_file_stream,
-        _events_split_dir,
-    )
-
-    split = _events_split_dir(spark, SF_SMOKE, n_files=4)
-    stream = _events_file_stream(
-        spark, split, "part_*.parquet", split, max_files_per_trigger=1
-    ).select("user_id", "ts", "value")
-
-    table = VersionedParquetTable(str(tmp_path / "users"), key_cols=["user_id"])
-    conf_key = "spark.sql.legacy.parquet.nanosAsLong"
-    prev = spark.conf.get(conf_key, None)
-    spark.conf.set(conf_key, "true")
-    try:
-        q = (
-            stream.writeStream.foreachBatch(table.foreach_batch_writer())
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if prev is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev)
-
-    assert table.latest_version() == 3  # one snapshot per micro-batch
-    final = table.read(spark)
-
-    # batch oracle: merge dedupe keeps the greatest (ts, value) tuple per
-    # user within a batch, and later batches overwrite — over event-time-
-    # ordered batches that composes to the global greatest (ts, value)
-    from pyspark.sql import Window
-
-    events = load_table(spark, SF_SMOKE, "events").select("user_id", "ts", "value")
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("ts").desc_nulls_last(), F.col("value").desc_nulls_last()
-    )
-    expect = (
-        events.withColumn("_rn", F.row_number().over(w))
-        .filter("_rn = 1")
-        .drop("_rn")
-    )
-    assert _rows(final, "user_id", "ts", "value") == _rows(
-        expect, "user_id", "ts", "value"
-    )
-
-    # time travel: every logged version is readable and row counts are
-    # monotone (upserts never drop users)
-    counts = [table.read(spark, v).count() for v in range(4)]
-    assert counts == sorted(counts) and counts[-1] == final.count()
-
-    # retry idempotence: re-deliver batch 0's data under its batch id
-    batch0 = spark.read.schema(final.schema).parquet(
-        os.path.join(split, "part_000.parquet")
-    )
-    assert table.apply_cdc_batch(batch0.select("user_id", "ts", "value"), 0) is False
-    assert table.latest_version() == 3  # nothing re-applied
-
-    # unknown version / empty table raise instead of returning half-state
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        table.read(spark, 99)
-    empty = VersionedParquetTable(str(tmp_path / "none"), key_cols=["user_id"])
-    with _pytest.raises(ValueError):
-        empty.read(spark)
-
-
 def test_custom_streaming_source_offsets_resume_exactly_once(spark, tmp_path):
     """Custom streaming source (Spark 4 DataSourceStreamReader) with real
     offset management: run 1 consumes the feed's first batch; a RESTART
@@ -635,37 +554,6 @@ def test_custom_streaming_source_offsets_resume_exactly_once(spark, tmp_path):
     )
 
 
-def test_versioned_table_vacuum_bounds_disk_and_keeps_dedupe(spark, tmp_path):
-    """Retention: vacuum removes old snapshots' DATA but keeps the full
-    commit history, so (a) disk is bounded, (b) batch-id retry dedupe
-    still sees vacuumed batches, and (c) time travel to a vacuumed
-    version raises a clear error rather than a half-state."""
-    import os as _os
-
-    from firebird_mapreduce_spark.sources.versioned import VersionedParquetTable
-
-    t = VersionedParquetTable(str(tmp_path / "t"), key_cols=["k"])
-    for b in range(4):
-        df = spark.createDataFrame([(b, b * 10)], "k LONG, v LONG")
-        assert t.apply_cdc_batch(df, b) is True
-    assert t.latest_version() == 3
-
-    removed = t.vacuum(keep_last=2)
-    assert removed == [0, 1]
-    dirs = {d for d in _os.listdir(str(tmp_path / "t")) if d.startswith("v")}
-    assert dirs == {"v2", "v3"}
-    # latest read unaffected; history intact; vacuumed read raises
-    assert t.read(spark).count() == 4
-    assert len(t.commits()) == 4
-    with pytest.raises(ValueError, match="vacuumed"):
-        t.read(spark, 0)
-    # retry of a vacuumed batch is STILL a no-op (log remembers it)
-    df0 = spark.createDataFrame([(0, 0)], "k LONG, v LONG")
-    assert t.apply_cdc_batch(df0, 0) is False
-    # vacuum is idempotent
-    assert t.vacuum(keep_last=2) == []
-
-
 def test_versioned_table_concurrent_commit_fails_loudly(spark, tmp_path):
     """The commit log is single-writer: a second committer racing the
     read-modify-write must raise ConcurrentCommitError (lost log lines
@@ -679,21 +567,22 @@ def test_versioned_table_concurrent_commit_fails_loudly(spark, tmp_path):
     )
 
     t = VersionedParquetTable(str(tmp_path / "t"), key_cols=["k"])
-    df = spark.createDataFrame([(1, 10)], "k LONG, v LONG")
-    assert t.apply_cdc_batch(df, 0) is True
+
+    def delta(k: int):
+        return spark.createDataFrame([(k, k * 10)], "k LONG, v LONG")
+
+    assert t.apply_additive_batch(delta(1), 0, ["v"]) is True
 
     lock = str(tmp_path / "t" / "_commits.lock")
     fd = _os.open(lock, _os.O_CREAT | _os.O_EXCL | _os.O_WRONLY)
     try:
         with pytest.raises(ConcurrentCommitError):
-            t.apply_cdc_batch(spark.createDataFrame([(2, 20)], "k LONG, v LONG"), 1)
-        with pytest.raises(ConcurrentCommitError):
-            t.vacuum(keep_last=0)
+            t.apply_additive_batch(delta(2), 1, ["v"])
     finally:
         _os.close(fd)
         _os.unlink(lock)
     # lock released by the raced committer's failure path → next commit lands
-    assert t.apply_cdc_batch(spark.createDataFrame([(2, 20)], "k LONG, v LONG"), 1)
+    assert t.apply_additive_batch(delta(2), 1, ["v"])
     assert len(t.commits()) == 2 and not _os.path.exists(lock)
 
     # staleness diagnosis: the error distinguishes a live holder from a
@@ -707,7 +596,7 @@ def test_versioned_table_concurrent_commit_fails_loudly(spark, tmp_path):
     # the message must hedge: os.kill(pid, 0) proves a process with that
     # pid exists, not that it is the recorded holder (pids recycle)
     with pytest.raises(ConcurrentCommitError, match="recycled pid"):
-        t.vacuum(keep_last=0)
+        t.apply_additive_batch(delta(3), 2, ["v"])
     with open(lock, "w") as fh:  # dead holder: pid from a spent fork
         pid = _os.fork()
         if pid == 0:
@@ -715,14 +604,18 @@ def test_versioned_table_concurrent_commit_fails_loudly(spark, tmp_path):
         _os.waitpid(pid, 0)
         fh.write(f"{pid}@{host}")
     with pytest.raises(ConcurrentCommitError, match="DEAD"):
-        t.vacuum(keep_last=0)
+        t.apply_additive_batch(delta(3), 2, ["v"])
     with open(lock, "w") as fh:  # remote holder: liveness unknowable here
         fh.write("12345@some-other-host")
     with pytest.raises(ConcurrentCommitError, match="liveness unknown"):
-        t.vacuum(keep_last=0)
+        t.apply_additive_batch(delta(3), 2, ["v"])
     _os.unlink(lock)
     # a REAL acquisition records this process as the holder
-    assert t.apply_cdc_batch(spark.createDataFrame([(3, 30)], "k LONG, v LONG"), 2)
+    assert t.apply_additive_batch(delta(3), 2, ["v"])
+    assert not _os.path.exists(lock)
+    # a failure inside the locked read-modify-write releases it too
+    with pytest.raises(KeyError):
+        t.apply_additive_batch(delta(4), 3, ["no_such_col"])
     assert not _os.path.exists(lock)
 
 
@@ -842,39 +735,13 @@ def test_rocksdb_and_hdfs_state_stores_produce_identical_sessions(spark):
     assert len(out["rocksdb"]) > 100  # non-vacuous
 
 
-def test_versioned_table_schema_evolution_per_snapshot(spark, tmp_path):
-    """Schema evolution across versions: each version is a self-contained
-    snapshot, so a later commit may ADD a column — the latest read serves
-    the new schema while time travel to an old version returns exactly
-    the schema that version was written with (no cross-version merge
-    surprises, the contract real table formats call per-snapshot
-    schema)."""
-    from firebird_mapreduce_spark.sources.versioned import (
-        VersionedParquetTable,
-    )
-
-    t = VersionedParquetTable(str(tmp_path / "t"), key_cols=["k"])
-    t.commit(spark.createDataFrame([(1, 10)], "k LONG, v LONG"), batch_id=0)
-    t.commit(
-        spark.createDataFrame(
-            [(1, 10, "x"), (2, 20, "y")], "k LONG, v LONG, tag STRING"
-        ),
-        batch_id=1,
-    )
-    latest = t.read(spark)
-    assert set(latest.columns) == {"k", "v", "tag"}
-    assert latest.count() == 2
-    v0 = t.read(spark, 0)
-    assert set(v0.columns) == {"k", "v"}
-    assert [tuple(r) for r in v0.collect()] == [(1, 10)]
-
-
 def test_additive_batch_retry_cannot_double_add(spark, tmp_path):
     """The additive merge's exactly-once contract is CORRECTNESS, not
     hygiene: re-delivering an applied batch id must be a no-op (a
     double-applied delta silently corrupts every total), a NEW batch id
     with the same data must add, keys only in the delta must appear,
-    and every refresh leaves a time-travelable snapshot."""
+    every refresh leaves a time-travelable snapshot, and a read of an
+    unknown version or of an empty table raises."""
     from firebird_mapreduce_spark.sources.versioned import (
         VersionedParquetTable,
     )
@@ -900,6 +767,12 @@ def test_additive_batch_retry_cannot_double_add(spark, tmp_path):
     # schema stays fixed across merges (no decimal widening drift)
     assert dict(t.read(spark).dtypes) == {"k": "string", "n": "bigint",
                                           "s": "double"}
+    # unknown version / empty table raise instead of returning half-state
+    with pytest.raises(ValueError, match="not in commit log"):
+        t.read(spark, 99)
+    empty = VersionedParquetTable(str(tmp_path / "none"), key_cols=["k"])
+    with pytest.raises(ValueError, match="no commits"):
+        empty.read(spark)
 
 
 def test_merge_additive_differential_vs_global_aggregate(spark):
@@ -1021,14 +894,12 @@ def test_eventgen_to_versioned_additive_sink_exactly_once_after_crash(
     assert [(k, a, float(b)) for k, a, b in got] == expect
 
 
-def test_vacuum_zero_and_additive_batch_normalization(spark, tmp_path):
-    """Two hardening pins from review: (a) vacuum(keep_last=0) must drop
-    EVERY version's data (log[-0:] slices the whole log — the classic
-    negative-slice footgun would make it a silent no-op); (b) the FIRST
-    additive batch is normalized like every later one — extra columns
-    projected away and duplicate keys collapsed additively — so v0's
-    shape cannot drift from later versions and a duplicate v0 key cannot
-    double-match every subsequent full-outer merge."""
+def test_additive_first_batch_normalization(spark, tmp_path):
+    """The FIRST additive batch is normalized like every later one —
+    extra columns projected away and duplicate keys collapsed
+    additively — so v0's shape cannot drift from later versions and a
+    duplicate v0 key cannot double-match every subsequent full-outer
+    merge."""
     from firebird_mapreduce_spark.sources.versioned import (
         VersionedParquetTable,
     )
@@ -1050,12 +921,6 @@ def test_vacuum_zero_and_additive_batch_normalization(spark, tmp_path):
         ("a", 4, 16.0),
         ("b", 1, 1.0),
     ]
-    removed = t.vacuum(keep_last=0)
-    assert removed == [0, 1], "keep_last=0 must vacuum EVERYTHING"
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="vacuumed"):
-        t.read(spark)
 
 
 def test_stream_dedup_incremental_equals_batch_twin(spark):
